@@ -100,10 +100,10 @@ object Bench {
       // checkpoint every compared frame ONCE: each intersect+count is an
       // action, and an un-materialized brute frame would re-run the full
       // O(n²) scoring per action
-      val brute = SparkEntry.queries("q22_knn_bruteforce")(spark, sfDir)
+      val brute = graft.gates.SimilarityGates.knnBruteforce.engine(spark, sfDir)
         .select("query_id", "neighbor_id").localCheckpoint()
       val bruteN = brute.count().toDouble
-      val ivfQ = SparkEntry.queries("q24_knn_ivf")(spark, sfDir)
+      val ivfQ = graft.gates.SimilarityGates.knnIvf.engine(spark, sfDir)
         .select("query_id", "neighbor_id")
       val em = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val trained = graft.operators.Similarity.trainCentroids(em, k = 40, iters = 3)

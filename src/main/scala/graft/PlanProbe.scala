@@ -5,7 +5,7 @@ package graft
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val name = if (args.length > 1) args(1) else "q131_lm_token_scores"
+    val name = if (args.length > 1) args(1) else graft.gates.LmGates.lmTokenScores.name
     val spark = GraftSession.local(4, "graft-plan-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,15 +1,19 @@
 package graft
 
-import graft.functions.{Enrich, Hashing, Text, TimeFeatures, Vec}
-import graft.operators.{Aggregates, Dedup, Multimodal, Similarity}
+import graft.gates._
+import graft.functions.{Enrich, Text, TimeFeatures}
+import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Driver contract: one `queries` entry per implemented operator from
- * SURVEY.md §2 (plus the training-data-pipeline extensions), each with a
- * DuckDB-equivalent `oracleSql` twin on the same parquet tables.
+ * Driver contract: one gate per implemented operator from SURVEY.md §2
+ * (plus the training-data-pipeline extensions), each a [[graft.gates.Gate]]
+ * pairing the engine frame with its DuckDB twin on the same parquet
+ * tables. The gates are defined in per-family files under `graft.gates`;
+ * this object keeps what several families share — the table reader, the
+ * per-session memo with the staged frames built on it, the shared oracle
+ * SQL fragments — and serves the registry as `queries` and `oracleSql`.
  *
  * Determinism rules that make the oracle hash-match possible:
  *  - double sums/avgs go through DECIMAL(28,6) (order-independent) on BOTH
@@ -42,7 +46,7 @@ object SparkEntry {
    *    identity, and DuckDB reads the same file as its (naive) TIMESTAMP,
    *    so both engines see identical values.
    */
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = s.read.parquet(s"$dir/$name.parquet")
     if (name == "events") {
       if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
@@ -76,10 +80,18 @@ object SparkEntry {
       (col("value") / 49.0).as("visibility_km"),
       floor(col("value") / 40.0).cast("int").as("uv_index"))
 
-  /** The six enrichment families over the synthetic reading (EP1 semantics,
-    * glue_weather_etl.py:200-430 re-expressed; see graft.functions.Enrich). */
-  private def enriched(events: DataFrame): DataFrame =
-    enrichedFull(events).drop("ts", "city")
+  /** Per-session memo of the shared artifacts, keyed by (session,
+    * sf-dir, artifact key): the staged frames, the capstone run and the
+    * perceptron model. */
+  private val memo =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), AnyRef]
+  private def memoized[A <: AnyRef](s: SparkSession, dir: String, key: String)(
+      build: => A): A = {
+    // evict entries of stopped sessions — otherwise the map pins dead
+    // SparkSessions (and their cached blocks) for the JVM lifetime
+    memo.keys.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
+    memo.getOrElseUpdate((s, dir, key), build).asInstanceOf[A]
+  }
 
   /**
    * Shared enrichment layer, materialized once per (session, sf-dir): seven
@@ -89,14 +101,8 @@ object SparkEntry {
    * downstream aggregate. persist() changes no semantics (the frame is
    * deterministic), only the number of times the lineage runs.
    */
-  private val stageMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private def staged(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
-    // evict entries of stopped sessions — otherwise the map pins dead
-    // SparkSessions (and their cached blocks) for the JVM lifetime
-    stageMemo.keys.filter(_._1.sparkContext.isStopped).foreach(stageMemo.remove)
-    stageMemo.getOrElseUpdate((s, dir, key), build.persist())
-  }
+  private def staged(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
+    memoized(s, dir, key)(build.persist())
 
   /** Materialize every staged frame in dependency order, returning
     * (short-key, build seconds). Bench reports these as explicit `stg`
@@ -153,37 +159,37 @@ object SparkEntry {
       tm("cap")(capstoneShared(s, dir)._1))
   }
 
-  /** Unpersist and forget every staged frame of `s`. Callers that know
-    * they are past the last consumer (Verify/Bench mains, a finished
+  /** Unpersist and forget every memoized artifact of `s`. Callers that
+    * know they are past the last consumer (Verify/Bench mains, a finished
     * pipeline run) release explicitly instead of pinning cache blocks for
     * the session's lifetime — at real scale a staging table's memory is
     * reclaimed the moment its final consumer commits. */
   def releaseStaged(s: SparkSession): Unit = {
-    stageMemo.keys.filter(_._1 == s).foreach { k =>
-      stageMemo.remove(k).foreach(_.unpersist(blocking = false))
+    memo.keys.filter(_._1 == s).foreach { k =>
+      memo.remove(k).foreach {
+        case df: org.apache.spark.sql.Dataset[_] => df.unpersist(blocking = false)
+        // the capstone result is localCheckpoint-backed (no persist to
+        // release; its blocks age out with the session) and the perceptron
+        // model is a driver-side value: dropping the entry is the release
+        case _ => ()
+      }
     }
-    // capstone results are localCheckpoint-backed (no persist to release);
-    // dropping the entry lets the checkpoint blocks age out with the session
-    capstoneMemo.keys.filter(_._1 == s).foreach(capstoneMemo.remove)
-    // the perceptron model is a driver-side value; drop the entry so a
-    // stopped session's key cannot pin the SparkSession object
-    pcptMemo.keys.filter(_._1 == s).foreach(pcptMemo.remove)
     // the LM scorer's per-model checkpoint cache (round 12) — entries are
     // localCheckpoint-backed like the capstone's; dropping them lets the
     // blocks age out with their RDDs
     graft.operators.NgramLm.clearModelCache(s)
   }
 
-  private def enrichedFullShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def enrichedFullShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "enriched")(enrichedFull(t(s, dir, "events")))
-  private def enrichedShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def enrichedShared(s: SparkSession, dir: String): DataFrame =
     enrichedFullShared(s, dir).drop("ts", "city")
 
   /** Dedup staging frames, same production rationale: signatures, candidate
     * pairs and verified near-dup pairs are materialized artifacts of a dedup
     * pipeline — computed once, consumed by banding (q20), verification
     * (q39), grouping (q36) and the operators' own gates. */
-  private def hashedShinglesShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def hashedShinglesShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "shingles")(
       Dedup.hashedShingles(t(s, dir, "documents"), "doc_id", "text", n = 3))
   // NOTE (round 3): the raw token-hash stream is deliberately NOT staged.
@@ -199,20 +205,20 @@ object SparkEntry {
   // shingle stream — same frame bit-for-bit (HashingSpec), but the build
   // no longer shuffles token-cardinality rows; shg keeps serving the
   // jaccard/overlap/candidate consumers that need shingle identity
-  private def minhashSigsShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def minhashSigsShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "mhsig")(
       Dedup.minhashSignatures(t(s, dir, "documents"), "doc_id", "text",
         n = 3, numHashes = 16))
-  private def lshCandidatesShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def lshCandidatesShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "mhcands")(
       Dedup.minhashLshCandidates(minhashSigsShared(s, dir), numHashes = 16, bands = 4))
-  private def jaccardPairsShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def jaccardPairsShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "jaccard")(
       Dedup.jaccardPairsFromHashed(hashedShinglesShared(s, dir),
         threshold = 0.5, maxBucket = Int.MaxValue))
   // ONE definition of the end-to-end minhash near-dup pipeline — q39 gates
   // it, q61 wraps it; a parameter change here moves both in lockstep
-  private def minhashNearDupShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def minhashNearDupShared(s: SparkSession, dir: String): DataFrame =
     Dedup.jaccardVerify(lshCandidatesShared(s, dir), t(s, dir, "documents"),
       "doc_id", "text", n = 3, threshold = 0.5)
   /** q62's merged duplicated-span ranges (uncapped) — unlike the
@@ -221,7 +227,7 @@ object SparkEntry {
     * exactly what the staging rule permits; shared by q62's gate and
     * q73's edit join (a production cleaner materializes the ranges table
     * once and both reports and cuts from it). */
-  private def spanRangesShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def spanRangesShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "spanranges")(
       Dedup.duplicatedSpanRanges(t(s, dir, "documents"), "doc_id", "text",
         window = SpanWindow, maxBucket = Int.MaxValue))
@@ -230,7 +236,7 @@ object SparkEntry {
     * stats) — pair-cardinality artifact shared by q103 (containment
     * filter) and q114 (threshold sweep), the way q18/q36 share the
     * jaccard pairs. */
-  private def overlapPairsShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def overlapPairsShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "ovpairs")(
       Dedup.overlapPairsFromHashed(hashedShinglesShared(s, dir),
         minOverlap = 0.0, maxBucket = Int.MaxValue))
@@ -240,7 +246,7 @@ object SparkEntry {
     * staging-rule compliant; a production passage-dedup pipeline
     * materializes the fingerprint index once and both the index gate and
     * the pair detector read it. */
-  private def winnowedShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def winnowedShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "winnow")(
       Dedup.winnowedFingerprints(t(s, dir, "documents"), "doc_id", "text",
         k = FpK, w = FpW))
@@ -248,7 +254,7 @@ object SparkEntry {
   /** Embedding near-dup pair frame (q23's parameters) — pair-cardinality
     * artifact shared by q23 and q67's component grouping, like the jaccard
     * pairs shared by q18/q36. */
-  private def embNearDupShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def embNearDupShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "embpairs") {
       val em = t(s, dir, "embeddings")
       Similarity.embeddingNearDupPairs(em, em.where(col("vec_id") % 50 === 0),
@@ -262,13 +268,13 @@ object SparkEntry {
     * — the standard IVF-PQ deployment shape, and the same amortized-
     * store rationale as the q129 fingerprint table. q85 stays the
     * from-scratch gate, so the one-shot build cost remains measured. */
-  private def pqCodesShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def pqCodesShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "pqcodes") {
       val em = t(s, dir, "embeddings")
       val cb = Similarity.pqCodebooks(em.where(col("vec_id") % 50 === 0), m = PqM)
       Similarity.pqEncode(em, cb, m = PqM)
     }
-  private def ivfPqIndexShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def ivfPqIndexShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "pqidx") {
       val em = t(s, dir, "embeddings")
       val cents = em.where(col("vec_id") % 50 === 0)
@@ -281,7 +287,7 @@ object SparkEntry {
     * staging rule permits (the trained LM is materialized once and every
     * scoring pass joins it); the token-grain SCORED stream is
     * deliberately not staged (the round-3 token-stream rule). */
-  private def lmCountsShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def lmCountsShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "lmcounts")(
       graft.operators.NgramLm.lmCounts(t(s, dir, "documents"), "text",
         n = 3, minCount = LmMinCount))
@@ -291,7 +297,7 @@ object SparkEntry {
     * staging rationale as the trigram artifact. The scorer's shape is
     * order-independent (two shuffles; the candidate stream widens from
     * 5 to 9 slots per token), which q143 pins at the production order. */
-  private def lmCounts5Shared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def lmCounts5Shared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "lmcounts5")(
       graft.operators.NgramLm.lmCounts(t(s, dir, "documents"), "text",
         n = 5, minCount = LmMinCount))
@@ -304,7 +310,7 @@ object SparkEntry {
     * it matters doubly here because the band assignment reads the score
     * table TWICE (edge census + assignment join), which is exactly why
     * CCNet ships per-shard score files rather than rescoring. */
-  private def lmFluencyShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] def lmFluencyShared(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "lmfluency") {
       val docs = t(s, dir, "documents")
       val cen = graft.operators.NgramLm.scoreTokens(docs,
@@ -324,12 +330,22 @@ object SparkEntry {
     * 2 drops hapax grams — on this corpus ~58% of trigrams — so the gate
     * exercises the whole backoff chain INCLUDING the 1/N OOV floor even
     * though the model scores its own training corpus. */
-  private val LmMinCount = 2L
+  private[graft] val LmMinCount = 2L
 
   /** Minimum-token cleaning bar of the capstone pipeline (q127/q128 and
     * their oracles) — drops ~9% of this corpus, so the funnel stage has
     * live data at every SF. */
-  private val CapMinTokens = 20
+  private[graft] val CapMinTokens = 20
+
+  /** The capstone cleaning funnel, in census order: the token bar, then
+    * the seven Gopher rules, then the thirteen repetition screens — ONE
+    * stage list shared by the gated pipeline run (q127/q128) and the
+    * first-failure attribution census (q136), so the two gates can
+    * never screen with different batteries. */
+  private[graft] def capstoneFunnelStages: Seq[(String, Column)] =
+    Seq("min_tokens" -> (Text.tokenCount(col("text")) >= CapMinTokens)) ++
+      graft.functions.Quality.gopherStages("text", Text.Stopwords) ++
+      graft.functions.Quality.repetitionStages("text")
 
   /**
    * The composed CorpusPipeline run gated by q127/q128 — ONE fixed,
@@ -349,22 +365,9 @@ object SparkEntry {
    * convention. `run` is eager (its Report counts execute inside), so
    * the memo holds finished results, not lineage.
    */
-  /** The capstone cleaning funnel, in census order: the token bar, then
-    * the seven Gopher rules, then the thirteen repetition screens — ONE
-    * stage list shared by the gated pipeline run (q127/q128) and the
-    * first-failure attribution census (q136), so the two gates can
-    * never screen with different batteries. */
-  private def capstoneFunnelStages: Seq[(String, Column)] =
-    Seq("min_tokens" -> (Text.tokenCount(col("text")) >= CapMinTokens)) ++
-      graft.functions.Quality.gopherStages("text", Text.Stopwords) ++
-      graft.functions.Quality.repetitionStages("text")
-
-  private val capstoneMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, graft.pipeline.CorpusPipeline.Report)]
-  private def capstoneShared(s: SparkSession, dir: String)
-      : (DataFrame, graft.pipeline.CorpusPipeline.Report) = {
-    capstoneMemo.keys.filter(_._1.sparkContext.isStopped).foreach(capstoneMemo.remove)
-    capstoneMemo.getOrElseUpdate((s, dir), {
+  private[graft] def capstoneShared(s: SparkSession, dir: String)
+      : (DataFrame, graft.pipeline.CorpusPipeline.Report) =
+    memoized(s, dir, "capstone") {
       val docs = t(s, dir, "documents")
       graft.pipeline.CorpusPipeline.run(
         docs.where(col("doc_id") % 10 =!= 0),
@@ -378,8 +381,7 @@ object SparkEntry {
         // integers, so the oracle recomposes it from the q132 census
         // fragments.
         fluencyMin = Some(CapFluencyNum -> CapFluencyDen))
-    })
-  }
+    }
 
   /** Fluency bar of the gated capstone config: keep docs with
     * (o3+o2)·den ≥ num·scored_tokens. The bar must read the POST-SCREEN
@@ -390,8 +392,8 @@ object SparkEntry {
     * at every SF (drops 4/4/6 docs at sf0.001/0.01/0.1), so the stage
     * has live casualties everywhere without gutting the corpus — the
     * CapMinTokens "live data at every SF" principle. */
-  private val CapFluencyNum = 49
-  private val CapFluencyDen = 50
+  private[graft] val CapFluencyNum = 49
+  private[graft] val CapFluencyDen = 50
 
   /** Enrichment keeping the event-time and city columns (for the analytics
     * layer: daily summary, current-status view). */
@@ -420,1637 +422,41 @@ object SparkEntry {
 
   // --------------------------------------------------- oracle SQL fragments
 
-  /** DuckDB twin of syntheticWeather (identical association order). */
-  private val synthSql =
-    """SELECT event_id, ts,
-      | CASE WHEN user_id%5=0 THEN 'Mumbai'
-      |      WHEN user_id%5=1 THEN 'Delhi'
-      |      WHEN user_id%5=2 THEN 'Bangalore'
-      |      WHEN user_id%5=3 THEN 'Chennai'
-      |      ELSE 'Kolkata' END AS city,
-      | value/10.0-5.0 AS temperature_celsius,
-      | value%100.0 AS humidity_percent,
-      | value/5.0+940.0 AS pressure_hpa,
-      | value/5.0 AS wind_speed_kmh,
-      | value/8.0 AS precipitation_mm,
-      | value/49.0 AS visibility_km,
-      | CAST(floor(value/40.0) AS INTEGER) AS uv_index
-      |FROM events""".stripMargin
-
-  /** DuckDB twin of the full enrichment chain (layered so tf/simple/hi
-    * subexpressions are shared exactly like the Spark Column tree).
-    * `extra` prepends pass-through columns (city/ts for the analytics layer). */
-  private def enrichedSqlWith(extra: String): String = {
-    val full = "-42.379+2.04901523*tf+10.14333127*humidity_percent" +
-      "-0.22475541*tf*humidity_percent-0.00683783*tf*tf" +
-      "-0.05481717*humidity_percent*humidity_percent" +
-      "+0.00122874*tf*tf*humidity_percent" +
-      "+0.00085282*tf*humidity_percent*humidity_percent" +
-      "-0.00000199*tf*tf*humidity_percent*humidity_percent"
-    s"""SELECT ${extra}event_id, temperature_celsius, humidity_percent, pressure_hpa,
-       | wind_speed_kmh, precipitation_mm, visibility_km, uv_index,
-       | floor((temperature_celsius*9.0/5.0+32.0)*10.0+0.5)/10.0 AS temperature_fahrenheit,
-       | floor((temperature_celsius+273.15)*10.0+0.5)/10.0 AS temperature_kelvin,
-       | heat_index_celsius,
-       | CASE WHEN heat_index_celsius<27.0 THEN 'Comfortable'
-       |      WHEN heat_index_celsius<32.0 THEN 'Caution'
-       |      WHEN heat_index_celsius<41.0 THEN 'Extreme Caution'
-       |      WHEN heat_index_celsius<54.0 THEN 'Danger'
-       |      ELSE 'Extreme Danger' END AS comfort_level,
-       | CASE WHEN precipitation_mm>50.0 THEN 'Extreme'
-       |      WHEN precipitation_mm>25.0 THEN 'Severe'
-       |      WHEN wind_speed_kmh>60.0 THEN 'Severe'
-       |      WHEN visibility_km<1.0 THEN 'Severe'
-       |      WHEN precipitation_mm>10.0 OR wind_speed_kmh>40.0 OR visibility_km<3.0 THEN 'Moderate'
-       |      WHEN uv_index>10.0 THEN 'Moderate'
-       |      ELSE 'Normal' END AS weather_severity,
-       | CASE WHEN heat_index_celsius>54.0 OR precipitation_mm>50.0 OR wind_speed_kmh>80.0 THEN 'CRITICAL'
-       |      WHEN heat_index_celsius>41.0 OR precipitation_mm>25.0 OR wind_speed_kmh>60.0 OR visibility_km<2.0 OR uv_index>10.0 THEN 'WARNING'
-       |      WHEN heat_index_celsius>32.0 OR precipitation_mm>10.0 OR wind_speed_kmh>40.0 OR uv_index>8.0 THEN 'WATCH'
-       |      ELSE 'NORMAL' END AS alert_level,
-       | CAST(hour(ts) AS INTEGER) AS hour_of_day,
-       | CAST(dayofweek(ts)+1 AS INTEGER) AS day_of_week,
-       | (dayofweek(ts)+1) IN (1,7) AS is_weekend,
-       | CASE WHEN hour(ts) BETWEEN 6 AND 11 THEN 'Morning'
-       |      WHEN hour(ts) BETWEEN 12 AND 17 THEN 'Afternoon'
-       |      WHEN hour(ts) BETWEEN 18 AND 21 THEN 'Evening'
-       |      ELSE 'Night' END AS time_of_day,
-       | CASE WHEN month(ts) IN (12,1,2) THEN 'Winter'
-       |      WHEN month(ts) IN (3,4,5) THEN 'Spring'
-       |      WHEN month(ts) IN (6,7,8) THEN 'Summer'
-       |      ELSE 'Autumn' END AS season,
-       | CAST(ts AS DATE) AS reading_date,
-       | temperature_celsius BETWEEN -50 AND 60 AS is_valid_temperature,
-       | humidity_percent BETWEEN 0 AND 100 AS is_valid_humidity,
-       | pressure_hpa BETWEEN 950 AND 1050 AS is_valid_pressure,
-       | CAST(CAST(temperature_celsius BETWEEN -50 AND 60 AS INTEGER)
-       |    + CAST(humidity_percent BETWEEN 0 AND 100 AS INTEGER)
-       |    + CAST(pressure_hpa BETWEEN 950 AND 1050 AS INTEGER) AS DOUBLE)/3.0*100.0 AS data_quality_score
-       |FROM (
-       |  SELECT *, CASE WHEN tf<80.0 THEN temperature_celsius
-       |                 ELSE floor((CASE WHEN simple>79.0 THEN $full ELSE simple END-32.0)*5.0/9.0*10.0+0.5)/10.0
-       |            END AS heat_index_celsius
-       |  FROM (
-       |    SELECT *, 0.5*(tf+61.0+(tf-68.0)*1.2+humidity_percent*0.094) AS simple
-       |    FROM (SELECT *, temperature_celsius*9.0/5.0+32.0 AS tf FROM ($synthSql))
-       |  )
-       |)""".stripMargin
-  }
-
-  private val enrichedSql = enrichedSqlWith("")
-  private val enrichedFullSql = enrichedSqlWith("city, ts, ")
-
   /** Portable md5-derived 60-bit hash in DuckDB (twin of Hashing.stableHash60). */
-  private def duckHash(expr: String): String =
+  private[graft] def duckHash(expr: String): String =
     s"CAST(('0x' || substr(md5($expr),1,15)) AS BIGINT)"
 
   /** DuckDB twin of Text.shingles (word n-grams WITH multiplicity). */
-  private def duckShingles(textCol: String, n: Int): String =
+  private[graft] def duckShingles(textCol: String, n: Int): String =
     s"""CASE WHEN len(string_split($textCol,' ')) < $n THEN []
        | ELSE list_transform(range(1, len(string_split($textCol,' '))-${n - 1}+1),
        |   i -> array_to_string(list_slice(string_split($textCol,' '), i, i+${n - 1}), ' '))
        | END""".stripMargin
 
   /** DuckDB twin of Text.shingleSet (distinct word 3-grams). */
-  private def duckShingleSet(textCol: String, n: Int): String =
+  private[graft] def duckShingleSet(textCol: String, n: Int): String =
     s"list_distinct(${duckShingles(textCol, n)})"
-
-  /** DuckDB twin of the q89/q90 hashed-bigram feature pipeline: views fs
-    * (per-doc features with the English-target flag), bu (hash buckets),
-    * ft (the bucket → target/raw count table). Sums CAST to BIGINT — a
-    * bare DuckDB sum() is HUGEINT and would hash-mismatch (the q50
-    * lesson). */
-  private lazy val featTableCte: String =
-    s"""fs AS (SELECT doc_id, (lang = 'en') AS t,
-       |        unnest(${duckShingles("text", 2)}) AS f
-       |       FROM documents),
-       |bu AS (SELECT doc_id, t, ${duckHash("f")} % $FeatBuckets AS bucket FROM fs),
-       |ft AS (SELECT bucket,
-       |        CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS tgt_count,
-       |        count(*) AS raw_count
-       |       FROM bu GROUP BY bucket)""".stripMargin
 
   // ---------------------------------------------------------------- queries
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- relational core (SURVEY §2.4-2.7) ----
-
-    // A1-style wide aggregation with exact (order-independent) sums.
-    "q01_pricing_summary" -> ((s, dir) => {
-      import Aggregates._
-      t(s, dir, "lineitem")
-        .where(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          exactSum(col("l_quantity")).as("sum_qty"),
-          exactSum(col("l_extendedprice")).as("sum_base_price"),
-          exactSum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-          exactAvg(col("l_quantity")).as("avg_qty"),
-          exactAvg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // Multi-way join: fact ⋈ dim ⋈ tiny dim (broadcast), grouped revenue.
-    "q02_revenue_by_nation" -> ((s, dir) => {
-      import Aggregates._
-      t(s, dir, "orders")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(exactSum(col("o_totalprice")).as("revenue"), count(lit(1)).as("order_count"))
-    }),
-
-    // Top-k with deterministic tie-break (O1/O2).
-    "q03_top_customers" -> ((s, dir) => {
-      import Aggregates._
-      t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(exactSum(col("o_totalprice")).as("revenue"), count(lit(1)).as("order_count"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .orderBy(col("revenue").desc, col("o_custkey").asc)
-        .limit(10)
-        .select("o_custkey", "c_name", "revenue", "order_count")
-    }),
-
-    // J1/W2: latest-per-group via single-shuffle window (not agg+self-join).
-    "q04_latest_event_per_user" -> ((s, dir) =>
-      Aggregates.latestPerGroup(t(s, dir, "events"), Seq("user_id"), "ts", "event_id")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_timestamp(col("ts")).as("ts_epoch"), col("value"))),
-
-    // A4: deterministic MODE() WITHIN GROUP (ties → smallest value).
-    "q05_mode_event_type" -> ((s, dir) =>
-      Aggregates.deterministicMode(t(s, dir, "events"), Seq("user_id"), "event_type", "mode_event")),
-
-    // A1+A2+A3: daily summary with conditional counts and pct-of-group.
-    "q06_daily_event_summary" -> ((s, dir) => {
-      import Aggregates._
-      t(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("reading_date"))
-        .agg(
-          count(lit(1)).as("event_count"),
-          exactAvg(col("value")).as("avg_value"),
-          exactSum(col("value")).as("sum_value"),
-          countIf(col("value") > 400.0).as("high_count"),
-          pctIf(col("value") > 400.0).as("high_pct"),
-          countDistinct(col("user_id")).as("distinct_users"))
-    }),
-
-    // A6/W1: distribution with percent-of-total window.
-    "q07_event_type_distribution" -> ((s, dir) =>
-      Aggregates.distributionWithPct(t(s, dir, "events"), "event_type")),
-
-    // D1: keyed dedup keeping deterministic first (min event_id).
-    "q08_dedup_first_event" -> ((s, dir) =>
-      Dedup.keepFirst(t(s, dir, "events"), Seq("user_id", "event_type"), "event_id")
-        .select("user_id", "event_type", "event_id")),
-
-    // D2: anti-join (customers with no order above threshold).
-    "q09_anti_join_quiet_customers" -> ((s, dir) => {
-      val bigOrders = t(s, dir, "orders").where(col("o_totalprice") > 300000.0)
-      t(s, dir, "customer")
-        .join(bigOrders, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name", "c_mktsegment")
-    }),
-
-    // D4: union-all of two tagged subsets.
-    "q10_union_tagged_events" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val hi = ev.where(col("event_type") === "purchase" && col("value") > 450.0)
-        .select(col("user_id"), col("event_id"), lit("high_purchase").as("tag"))
-      val er = ev.where(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"), lit("error").as("tag"))
-      hi.unionByName(er)
-    }),
-
-    // ---- enrichment families P6-P17 ----
-
-    "q11_weather_enrichment" -> ((s, dir) => enrichedShared(s, dir)),
-
-    // P4/P5: alert filter + column-subset projection.
-    "q12_alert_filter" -> ((s, dir) =>
-      enrichedShared(s, dir)
-        .filter(col("alert_level").isin("WARNING", "CRITICAL"))
-        .select("event_id", "alert_level", "weather_severity", "heat_index_celsius",
-          "precipitation_mm", "wind_speed_kmh", "visibility_km", "uv_index")),
-
-    // A6 over the derived alert level.
-    "q13_alert_distribution" -> ((s, dir) =>
-      Aggregates.distributionWithPct(enrichedShared(s, dir), "alert_level")),
-
-    // ---- text analysis (training-data extensions) ----
-
-    "q14_doc_token_stats" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        Text.tokenCount(col("text")).as("token_count"),
-        Text.avgTokenLength(col("text")).as("avg_token_len"),
-        Text.stopwordRatio(col("text")).as("stopword_ratio"))),
-
-    "q15_doc_quality_langid" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        Text.docQualityScore(col("text")).as("quality_score"),
-        Text.langIdHeuristic(col("text")).as("lang_pred"))),
-
-    // Corpus vocabulary: top-100 tokens by occurrences with document
-    // frequency (tokenizer-training / IDF inputs).
-    "q47_vocab_topk" -> ((s, dir) =>
-      graft.operators.CorpusStats.topVocabulary(t(s, dir, "documents"), "text", k = 100)),
-
-    // Per-document characteristic terms by tf·idf (exact-ratio idf).
-    "q48_tfidf_top_terms" -> ((s, dir) =>
-      graft.operators.CorpusStats.tfIdfTopTerms(t(s, dir, "documents"), "doc_id", "text", k = 5)),
-
-    // Exact dedup groups by content hash.
-    "q16_exact_text_dedup" -> ((s, dir) =>
-      Dedup.exactTextGroups(t(s, dir, "documents"), "doc_id", "text")),
-
-    // Exact dedup on the CANONICAL form — case/punctuation/spacing variants
-    // collapse into one group (the normalize-then-hash production shape).
-    "q46_normalized_dedup" -> ((s, dir) =>
-      Dedup.exactTextGroups(
-        t(s, dir, "documents")
-          .withColumn("norm_text", Text.normalizeForDedup(col("text"))),
-        "doc_id", "norm_text")),
-
-    // Order-sensitive rolling-hash fingerprint.
-    "q17_doc_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"), Text.fingerprint(col("text")).as("fingerprint"))),
-
-    // Exact n-gram Jaccard near-dup pairs via shingle inverted index.
-    "q18_ngram_jaccard_pairs" -> ((s, dir) => jaccardPairsShared(s, dir)),
-
-    // MinHash signatures (16 portable universal hashes).
-    "q19_minhash_signatures" -> ((s, dir) => minhashSigsShared(s, dir)),
-
-    // MinHash+LSH candidate pairs (4 bands × 4 rows).
-    "q20_minhash_lsh_candidates" -> ((s, dir) => lshCandidatesShared(s, dir)),
-
-    // End-to-end MinHash near-dup: LSH candidates verified by exact Jaccard
-    // (the operator a dedup consumer actually calls).
-    "q39_minhash_neardup_pairs" -> ((s, dir) => minhashNearDupShared(s, dir)),
-
-    // Cross-split leakage audit: the q39 near-dup pairs whose sides land in
-    // DIFFERENT hash splits (80/10/10 on doc_id, same assignment as q43) —
-    // the duplicate-shaped train/test contamination that split assignment
-    // alone cannot prevent. The split label is a pure function of the id,
-    // so this adds zero joins/shuffles over the pair pipeline.
-    "q61_split_leakage" -> ((s, dir) =>
-      graft.operators.Sampling.crossSplitLeakage(minhashNearDupShared(s, dir),
-        "id_a", "id_b", Seq("train" -> 8, "val" -> 1, "test" -> 1))),
-
-    // End-to-end SimHash near-dup: 60-bit signatures (full informative
-    // width of the 60-bit token hash → four uniform 15-bit chunks),
-    // pigeonhole chunk candidates, exact Hamming ≤ 3 filter (pigeonhole
-    // makes the bucketed plan EXACT, so the brute-force oracle matches
-    // bit-for-bit).
-    "q40_simhash_neardup_pairs" -> ((s, dir) =>
-      Dedup.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
-        maxDist = 3, bits = 60)),
-
-    // Capped-jaccard twin of q18: the stop-shingle cap (maxBucket) IS the
-    // 100 TB plan — hot shingles above the cap are dropped before the pair
-    // expansion; the oracle applies the same cap.
-    "q41_ngram_jaccard_capped" -> ((s, dir) =>
-      Dedup.jaccardPairsFromHashed(hashedShinglesShared(s, dir),
-        threshold = 0.5, maxBucket = 5)),
-
-    // SimHash 32-bit signatures (token stream recomputed, not staged — see
-    // the staging note above).
-    "q21_simhash_signatures" -> ((s, dir) =>
-      Dedup.simhashSignatures(t(s, dir, "documents"), "doc_id", "text", bits = 32)),
-
-    // ---- similarity search (embeddings) ----
-
-    // Brute-force exact top-5 cosine neighbors for queries vec_id<10.
-    "q22_knn_bruteforce" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      Similarity.bruteForceKnn(em, em.where(col("vec_id") < 10), k = 5)
-    }),
-
-    // Bucketed-approximate near-dup pairs (the 100 TB plan): cosine ≥ 0.4
-    // among vectors sharing one of their 2 nearest centroids. The oracle
-    // expresses the same bucketed contract (see Similarity scaladoc — on
-    // this corpus the 0.4-cosine pairs are isotropic-noise coincidences no
-    // sub-quadratic method can enumerate; exactNearDupPairs stays the
-    // spec-level exhaustive baseline).
-    "q23_embedding_neardup_pairs" -> ((s, dir) => embNearDupShared(s, dir)),
-
-    // IVF ANN (10 deterministic centroids, nprobe=1) — rows-only check.
-    "q24_knn_ivf" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      Similarity.ivfKnn(em, em.where(col("vec_id") < 10),
-        em.where(col("vec_id") % 50 === 0), k = 5)
-    }),
-
-    // ---- analytics layer (A1-A5, views) ----
-
-    // The reference's flagship daily aggregation incl. deterministic modes.
-    "q25_daily_weather_summary" -> ((s, dir) =>
-      graft.analytics.DailySummary.compute(enrichedFullShared(s, dir))),
-
-    // current_weather_status view: latest enriched reading per city (J1/W2).
-    "q26_current_weather_status" -> ((s, dir) =>
-      graft.analytics.Views.currentStatus(
-        enrichedFullShared(s, dir), "city", "ts", tieBreak = "event_id")
-        .select(col("city"), col("event_id"), unix_timestamp(col("ts")).as("ts_epoch"),
-          col("temperature_celsius"), col("alert_level"), col("comfort_level"))),
-
-    // ---- multimodal plumbing ----
-
-    // Binary payload + stub metadata decode (deterministic pseudo-header).
-    "q27_media_metadata" -> ((s, dir) =>
-      Multimodal.decodeMetadata(
-        Multimodal.withBinaryPayload(t(s, dir, "documents"), "text"))
-        .select("doc_id", "byte_len", "content_md5", "width", "height", "n_frames")),
-
-    // Frame fan-out: one row per fixed-size byte window.
-    "q28_frame_sample" -> ((s, dir) =>
-      Multimodal.sampleFrames(
-        Multimodal.withBinaryPayload(t(s, dir, "documents"), "text"), frameBytes = 100)
-        .select("doc_id", "frame_idx", "frame_md5")),
-
-    // mapPartitions feature extraction (byte histogram) — rows-only check.
-    "q29_media_features" -> ((s, dir) =>
-      Multimodal.byteHistogramFeatures(
-        Multimodal.withBinaryPayload(t(s, dir, "documents"), "text"), "doc_id")),
-
-    // Per-group top-k with deterministic tie-break (WindowGroupLimit path).
-    "q30_top_events_per_user" -> ((s, dir) =>
-      Aggregates.topKPerGroup(t(s, dir, "events"), Seq("user_id"), "value", "event_id", k = 3)
-        .select("user_id", "rank", "event_id", "value")),
-
-    // Gap-based sessionization (30-minute inactivity gap).
-    "q31_user_sessions" -> ((s, dir) =>
-      Aggregates.sessionize(t(s, dir, "events"), "user_id", "ts", gapSeconds = 1800)),
-
-    // Point-in-time (as-of) join: each event sees the latest purchase of
-    // the same user at-or-before its own time — the label-leakage-safe
-    // feature lookup (one keyed window, not a range join).
-    "q42_asof_last_purchase" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("p_event"), col("value").as("p_value"))
-      graft.operators.AsOf.asOfJoin(
-        ev.select("user_id", "ts", "event_id"), purchases,
-        key = "user_id", time = "ts",
-        payload = Seq("p_event", "p_value"), tieBreak = "p_event")
-        .select(col("user_id"), col("event_id"),
-          unix_timestamp(col("ts")).as("ts_epoch"), col("p_event"), col("p_value"))
-    }),
-
-    // Rolling point-in-time features: each event's strictly-before one-hour
-    // activity window per user (leakage-free rolling aggregates).
-    "q44_rolling_user_features" -> ((s, dir) =>
-      Aggregates.rollingFeatures(t(s, dir, "events"), "user_id", "ts", "value",
-        lookbackSec = 3600)),
-
-    // Batch interval/range join: overlapping per-user campaign windows
-    // (derived deterministically from each user's event span) joined to
-    // events as an equi-join on (user, time-bucket) + residual range
-    // predicate. The fact side never amplifies — only intervals replicate,
-    // by ceil(span/bucket) each (see RangeJoin scaladoc).
-    "q49_range_join_campaigns" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), unix_timestamp(col("ts")).as("ts_epoch"))
-      val bounds = ev.groupBy("user_id")
-        .agg(min(col("ts_epoch")).as("mn"), max(col("ts_epoch")).as("mx"))
-      // three overlapping windows of length 2·len starting every len
-      // (len = ceil(span/3)) — integer math only, bit-identical cross-engine
-      val len = expr("(mx - mn + 3) DIV 3")
-      val iv = bounds
-        .select(col("user_id"), explode(sequence(lit(0L), lit(2L))).as("campaign_id"),
-          col("mn"), col("mx"))
-        .select(col("user_id"), col("campaign_id"),
-          (col("mn") + col("campaign_id") * len).as("start_epoch"),
-          least(col("mn") + (col("campaign_id") + 2) * len, col("mx") + 1).as("end_epoch"))
-      graft.operators.RangeJoin.joinByRange(ev, iv, Seq("user_id"),
-        "ts_epoch", "start_epoch", "end_epoch", bucketWidth = 7L * 86400)
-        .select("user_id", "event_id", "ts_epoch", "campaign_id", "start_epoch", "end_epoch")
-    }),
-
-    // Repetition stats (Gopher/C4-style quality signal): duplicate-3gram
-    // fraction per document — narrow projection, no shuffle.
-    "q51_repetition_stats" -> ((s, dir) => {
-      val total = greatest(Text.tokenCount(col("text")) - 2, lit(0)).cast("long")
-      val distinctN = size(Text.shingleSet(col("text"), 3)).cast("long")
-      t(s, dir, "documents").select(
-        col("doc_id"), total.as("total_3grams"), distinctN.as("distinct_3grams"),
-        when(total > 0,
-          lit(1.0) - distinctN.cast("double") / total.cast("double"))
-          .otherwise(0.0).as("repetition_ratio"))
-    }),
-
-    // Benchmark decontamination: max train-set Jaccard per test doc
-    // (test = doc_id % 10 == 0). Gates the BLOOM-PREFILTERED plan — the
-    // 100 TB shape (broadcast eval-set bitmap drops train shingles before
-    // the posting-list shuffle) — which is bit-identical to the exact
-    // cross-set inverted index (DedupSpec pins the equality; jaccard > 0
-    // requires a shared shingle, so the prefilter can't change any score),
-    // letting the plain cross-join argmax oracle verify the scale plan.
-    "q52_contamination" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.bloomContamination(
-        docs.where(col("doc_id") % 10 =!= 0), docs.where(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 3)
-    }),
-
-    // Sequence packing: concat-then-chunk into 512-token training
-    // sequences, 4 independent shards (shard count = the parallelism knob
-    // for the inherently sequential per-shard cumsum; see Packing).
-    "q50_sequence_packing" -> ((s, dir) =>
-      graft.operators.Packing.packSequences(t(s, dir, "documents"), "doc_id",
-        Text.tokenCount(col("text")), shards = 4, maxTokens = 512)),
-
-    // Class balancing: at most 300 events per event_type, drawn by
-    // hash-of-key rank (deterministic, not partition order).
-    "q45_class_balanced_sample" -> ((s, dir) =>
-      graft.operators.Sampling.capPerGroup(
-        t(s, dir, "events").select("event_type", "event_id", "user_id"),
-        groupCol = "event_type", keyCol = "event_id", maxPerGroup = 300)),
-
-    // Deterministic hash-based train/val/test split (80/10/10) — stable
-    // under any partitioning/engine, summarized per split.
-    "q43_train_split" -> ((s, dir) => {
-      import Aggregates._
-      graft.operators.Sampling.assignSplits(t(s, dir, "events"), "event_id",
-        Seq("train" -> 8, "val" -> 1, "test" -> 1))
-        .groupBy("split", "event_type")
-        .agg(count(lit(1)).as("event_count"), exactSum(col("value")).as("sum_value"))
-    }),
-
-    // Trend analytics: day-over-day delta + lag-based 3-day moving average
-    // per city (lead/lag + frame semantics over aggregated rows — windows
-    // run on daily cardinality, never raw readings).
-    "q38_city_trends" -> ((s, dir) => {
-      import Aggregates._
-      val daily = enrichedFullShared(s, dir)
-        .groupBy(col("city"), col("reading_date"))
-        .agg(Enrich.roundAt(exactAvg(col("temperature_celsius")), 2).as("avg_t"))
-      val w = Window.partitionBy("city").orderBy("reading_date")
-      val l1 = lag(col("avg_t"), 1).over(w)
-      val l2 = lag(col("avg_t"), 2).over(w)
-      daily.select(col("city"), col("reading_date"), col("avg_t"),
-        (col("avg_t") - l1).as("delta"),
-        ((col("avg_t") + coalesce(l1, lit(0.0)) + coalesce(l2, lit(0.0))) /
-          (lit(1) + l1.isNotNull.cast("int") + l2.isNotNull.cast("int"))).as("ma3"))
-    }),
-
-    // Data-quality checks: one aggregation pass, one row per check.
-    "q37_quality_checks" -> ((s, dir) => {
-      import graft.analytics.QualityChecks
-      val weather = enrichedShared(s, dir)
-        .withColumn("station_id", concat(lit("E"), col("event_id")))
-        .withColumn("timestamp", lit("x"))
-      QualityChecks.run(weather, QualityChecks.weatherChecks(weather))
-    }),
-
-    // Dedup groups: near-dup pairs → connected components → keeper per
-    // cluster (the decision step of a dedup pipeline).
-    "q36_dedup_groups" -> ((s, dir) =>
-      graft.operators.Components.dedupGroups(jaccardPairsShared(s, dir))),
-
-    // A8: health/system stats — global counts, exact distinct, freshness.
-    "q35_health_stats" -> ((s, dir) => {
-      import Aggregates._
-      enrichedShared(s, dir).agg(
-        count(lit(1)).as("reading_count"),
-        countDistinct(col("uv_index")).as("distinct_uv_levels"),
-        max(col("event_id")).as("latest_event_id"),
-        exactAvg(col("data_quality_score")).as("avg_quality"),
-        countIf(col("alert_level") =!= "NORMAL").as("alerting_count"))
-    }),
-
-    // Exact interpolated percentiles per group (Spark `percentile` and
-    // DuckDB `quantile_cont` share the interpolation formula bit-for-bit).
-    "q33_value_percentiles" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(
-          expr("percentile(value, 0.5)").as("median_value"),
-          expr("percentile(value, 0.9)").as("p90_value"),
-          count(lit(1)).as("event_count"))),
-
-    // Random-hyperplane LSH signatures over embeddings (deterministic
-    // planes, externally verifiable).
-    "q34_rp_lsh_signatures" -> ((s, dir) =>
-      Similarity.rpLshSignatures(t(s, dir, "embeddings"), RpPlanes)),
-
-    // P1-family: schema-declared JSON payload parse (props column) + agg.
-    "q32_props_json_stats" -> ((s, dir) => {
-      import Aggregates._
-      t(s, dir, "events")
-        .withColumn("k", from_json(col("props"), lit("k INT")).getField("k"))
-        .groupBy("event_type")
-        .agg(
-          exactAvg(col("k").cast("double")).as("avg_k"),
-          countIf(col("k") > 50).as("high_k_count"),
-          count(lit(1)).as("event_count"))
-    }),
-
-    // PII redaction: scrub emails/IPs/phones from synthesized contact
-    // messages (the corpus has no organic PII — the fixture plants it
-    // deterministically from customer columns, same construction in the
-    // oracle). Narrow projection; counts audited on the ORIGINAL text.
-    "q53_pii_redaction" -> ((s, dir) => {
-      val msg = piiMessage(t(s, dir, "customer"))
-      msg.select(col("c_custkey"),
-        md5(Text.redactPii(col("msg"))).as("redacted_md5"),
-        Text.piiCount(col("msg"), Text.EmailPattern).as("n_emails"),
-        Text.piiCount(col("msg"), Text.IpPattern).as("n_ips"),
-        Text.piiCount(col("msg"), Text.PhonePattern).as("n_phones"),
-        Text.bpeishTokenCount(col("msg")).as("n_bpeish_tokens"))
-    }),
-
-    // Overlapping token chunks (RAG/context-window ingestion): 32-token
-    // windows advancing by 24 — zero-shuffle generator fan-out.
-    "q54_doc_chunks" -> ((s, dir) =>
-      graft.operators.Chunking.chunkByTokens(t(s, dir, "documents"),
-        "doc_id", "text", chunkSize = 32, stride = 24)),
-
-    // Quantile binning (feature discretization): decile of `value` from
-    // one percentile aggregation broadcast back — never a global-sort
-    // ntile. Gate aggregates per (event_type, bin).
-    "q55_value_deciles" -> ((s, dir) => {
-      import Aggregates._
-      withQuantileBins(t(s, dir, "events"), "value", DecileProbs)
-        .groupBy("event_type", "bin")
-        .agg(count(lit(1)).as("n_events"),
-          min("value").as("min_value"), max("value").as("max_value"))
-    }),
-
-    // Data-mixture construction: per-source quotas (up/down-sample blend),
-    // deterministic hash-of-key draw.
-    "q56_source_mixture" -> ((s, dir) =>
-      graft.operators.Sampling.mixtureSample(t(s, dir, "documents"),
-          "source", "doc_id", MixtureQuotas, defaultQuota = 3)
-        .select("source", "doc_id")),
-
-    // Vocabulary coverage: per-doc OOV rate against the corpus's own
-    // top-20 vocab (31 distinct tokens exist — the cutoff bites).
-    "q57_oov_rate" -> ((s, dir) =>
-      graft.operators.CorpusStats.oovStats(t(s, dir, "documents"),
-          "doc_id", "text", vocabSize = 20)
-        .select(col("id").as("doc_id"), col("n_tokens"),
-          col("oov_count"), col("oov_rate"))),
-
-    // Cleaning funnel: ordered quality cascade with first-failure
-    // attribution (thresholds chosen so every stage drops >0 docs at
-    // sf0.01: 58/17/27/1, 397 pass).
-    "q59_filter_funnel" -> ((s, dir) =>
-      graft.operators.Cleaning.funnelReport(t(s, dir, "documents"), funnelStages)),
-
-    // Label-noise screen: per-vector margin between the own-class centroid
-    // and the nearest other class (negative = probable mislabel).
-    "q60_label_margins" -> ((s, dir) =>
-      Similarity.labelMargins(t(s, dir, "embeddings"))),
-
-    // Embedding int8 quantization: per-vector symmetric scale; gate
-    // reduces the quantized array to scalar stats (position-weighted
-    // checksum pins every element and position).
-    "q58_embedding_quantize" -> ((s, dir) => {
-      val q = Similarity.quantizeInt8(t(s, dir, "embeddings"))
-      q.select(col("vec_id"), col("scale"),
-        size(col("qvec")).cast("long").as("n_dims"),
-        aggregate(transform(col("qvec"), (x, i) => x * (i.cast("long") + 1L)),
-          lit(0L), (acc, v) => acc + v).as("checksum"),
-        array_min(col("qvec")).as("q_min"),
-        array_max(col("qvec")).as("q_max"))
-    }),
-
-    // Substring/span-level dedup: merged token ranges covered by a
-    // 20-token passage that also appears in another document — the
-    // repeated-boilerplate class doc-level Jaccard never catches. Gate
-    // runs uncapped so the oracle is the plain HAVING-count shape.
-    "q62_dup_span_ranges" -> ((s, dir) =>
-      spanRangesShared(s, dir).withColumnRenamed("id", "doc_id")),
-
-    // Span-sharing pairs: shared distinct 20-token passages per doc pair
-    // plus the longest contiguous aligned token run.
-    "q63_dup_span_pairs" -> ((s, dir) =>
-      graft.operators.Dedup.duplicateSpanPairs(t(s, dir, "documents"),
-        "doc_id", "text", window = SpanWindow, minShared = 1,
-        maxBucket = Int.MaxValue)),
-
-    // Contrastive-training negatives: 3 deterministic pseudo-random
-    // non-self negatives per document (dense hash-ordered index + hash
-    // draws, reproducible on any partitioning).
-    "q64_negative_samples" -> ((s, dir) =>
-      graft.operators.Sampling.negativeSamples(t(s, dir, "documents"),
-          "doc_id", k = 3, seed = 7L)
-        .select(col("anchor"), col("neg_rank").cast("long").as("neg_rank"),
-          col("negative"))),
-
-    // Deterministic corpus shuffle: the seeded permutation materialized as
-    // a dense 1-based rank (zipWithIndex over the hash order — never a
-    // single-partition row_number window).
-    "q65_corpus_shuffle" -> ((s, dir) =>
-      graft.operators.Sampling.shuffleWithRank(
-        t(s, dir, "documents").select("doc_id"), "doc_id", seed = 42L)),
-
-    // Chunk→doc mean pooling, gated per element: label plays the doc key
-    // on the embeddings table; order-independent DECIMAL means → float,
-    // exploded to scalar rows so every element and position is pinned.
-    "q66_mean_pool" -> ((s, dir) =>
-      Similarity.meanPool(t(s, dir, "embeddings"), "label", "embedding")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "m")))
-        .select(col("label"), col("pos").cast("long").as("pos"), col("m"))),
-
-    // Semantic dedup groups: q23's bucketed pair contract → connected
-    // components → smallest-id keeper (the q36 machinery in embedding
-    // space; the API form is Similarity.semanticDedupGroups — the gate
-    // composes the staged pair frame so q23/q67 share one computation,
-    // exactly as q18/q36 share the jaccard pairs).
-    "q67_semantic_groups" -> ((s, dir) =>
-      graft.operators.Components.dedupGroups(embNearDupShared(s, dir))),
-
-    // Sentence-aware chunking (RAG ingestion): never cuts mid-sentence;
-    // chunk layout varies per row via the synthesized variable-length
-    // second sentence. Array output reduced to scalar rows (count, token
-    // sum, md5 of the joined sentences) for the oracle hash.
-    "q68_sentence_chunks" -> ((s, dir) =>
-      graft.operators.Chunking.chunkBySentences(
-          sentenceMessage(t(s, dir, "customer")), "c_custkey", "msg", maxTokens = 6)
-        .select(col("doc_id").as("c_custkey"), col("chunk_idx"),
-          size(col("sentences")).cast("long").as("n_sentences"),
-          col("chunk_tokens"),
-          md5(array_join(col("sentences"), " ")).as("sentences_md5"))),
-
-    // Sequence packing under TOKENIZER-FAITHFUL subword budgets: the q50
-    // machinery consuming Subword.countColumn (table lookup + char-count
-    // fallback) instead of whitespace counts — the budget a trainer
-    // actually sees. Vocabulary trained from constants so the oracle can
-    // inline the identical table (see SubwordGateFreqs).
-    "q69_subword_pack" -> ((s, dir) =>
-      graft.operators.Packing.packSequences(t(s, dir, "documents"), "doc_id",
-        graft.functions.Subword.countColumn(col("text"), SubwordGateVocab),
-        shards = 4, maxTokens = 256)),
-
-    // Bigram novelty (perplexity-proxy quality screen): rare-transition
-    // rate + mean bigram corpus count, exact integer/ratio arithmetic.
-    "q70_bigram_novelty" -> ((s, dir) =>
-      graft.operators.CorpusStats.bigramNovelty(t(s, dir, "documents"),
-          "doc_id", "text", rareThreshold = 1L)
-        .select(col("id").as("doc_id"), col("n_bigrams"),
-          col("rare_rate"), col("mean_bigram_count"))),
-
-    // Numeric column profile (pandas-describe/Deequ shape): one
-    // aggregation pass, long format — the pre-trust census over lineitem's
-    // measure columns.
-    "q71_table_profile" -> ((s, dir) =>
-      graft.analytics.QualityChecks.profileNumeric(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-
-    // Temperature-flattened mixture (τ=1/2): data-driven √-count quotas,
-    // exact integer arithmetic end-to-end (IEEE sqrt + integer floor-div
-    // — no libm drift), then the q56 hash-ordered per-source draw.
-    "q72_temperature_mixture" -> ((s, dir) =>
-      graft.operators.Sampling.temperatureMixture(t(s, dir, "documents"),
-          "source", "doc_id", totalOut = 100)
-        .select("source", "doc_id")),
-
-    // Boilerplate removal: q62's duplicated-span ranges CUT out of the
-    // text (every row rebuilt single-space-joined so text form is
-    // uniform). Gate runs uncapped like q62.
-    "q73_span_cut_docs" -> ((s, dir) =>
-      graft.operators.Dedup.cutSpanRangesFrom(t(s, dir, "documents"),
-          "doc_id", "text", spanRangesShared(s, dir))
-        .select("doc_id", "text")),
-
-    // Per-sequence document segment map (q50's layout → attention/loss
-    // mask input): one row per (shard, sequence, doc) overlap with the
-    // doc's in-sequence token range.
-    "q74_pack_segments" -> ((s, dir) =>
-      graft.operators.Packing.packSegments(t(s, dir, "documents"), "doc_id",
-        Text.tokenCount(col("text")), shards = 4, maxTokens = 512)),
-
-    // Surgical decontamination, q52's train/eval split: WHICH train
-    // tokens a verbatim eval passage covers (q75), and the train docs
-    // with those passages cut out (q76).
-    "q75_eval_span_ranges" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Dedup.crossSetSpanRanges(
-          docs.where(col("doc_id") % 10 =!= 0), docs.where(col("doc_id") % 10 === 0),
-          "doc_id", "text", window = EvalSpanWindow)
-        .withColumnRenamed("id", "doc_id")
-    }),
-    "q76_decontaminated_docs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Dedup.cutEvalPassages(
-          docs.where(col("doc_id") % 10 =!= 0), docs.where(col("doc_id") % 10 === 0),
-          "doc_id", "text", window = EvalSpanWindow)
-        .select("doc_id", "text")
-    }),
-
-    // Intra-document repetition: merged token ranges covered by a window
-    // that already occurred EARLIER in the same document (generation
-    // loops, stuttered crawls) — first occurrence never marked. Window 3
-    // because that's the repetition scale this corpus actually has (q51's
-    // duplicate-3gram signal); production de-stutter runs larger.
-    "q77_self_repeat_ranges" -> ((s, dir) =>
-      graft.operators.Dedup.selfRepeatedSpanRanges(t(s, dir, "documents"),
-          "doc_id", "text", window = SelfRepeatWindow)
-        .withColumnRenamed("id", "doc_id")),
-
-    // C4-style line-frequency boilerplate removal over a synthesized
-    // multi-line fixture (the corpus documents are single-line): every
-    // line appearing in >= 5 distinct docs is cut from every document;
-    // documents are kept and rebuilt, line-lossless.
-    "q78_line_dedup_docs" -> ((s, dir) =>
-      graft.operators.Cleaning.dropFrequentLines(
-          lineDoc(t(s, dir, "documents")), "doc_id", "text",
-          sep = "\n", minDocs = 5)
-        .select("doc_id", "text")),
-
-    // EXACT-quota stratified split by language: first ⌊n·10%⌋ of each
-    // stratum's seeded-hash order → test, next to ⌊n·20%⌋ → val, rest
-    // train — guaranteed per-stratum proportions where q43's
-    // hash-threshold split is only proportional in expectation. The
-    // bucketed two-phase rank is invisible to the oracle (bucket = hash
-    // prefix, so (bucket, hash, id) order IS (hash, id) order).
-    "q79_stratified_split" -> ((s, dir) =>
-      graft.operators.Sampling.stratifiedSplit(
-          t(s, dir, "documents").select("doc_id", "lang"),
-          "doc_id", "lang", quotas = Seq("test" -> 10, "val" -> 10), seed = 7L)
-        .select("doc_id", "lang", "split")),
-
-    // Dedup decision policy: within each near-dup group keep the BEST
-    // document by quality score (smallest id on ties) — q36's smallest-id
-    // keeper is the group NAME; the representative is a policy over
-    // member scores, kept separate so re-scoring never relabels groups.
-    "q80_dedup_best_rep" -> ((s, dir) => {
-      val scored = t(s, dir, "documents").select(
-        col("doc_id"), Text.docQualityScore(col("text")).as("score"))
-      graft.operators.Components.bestPerGroup(
-          graft.operators.Components.dedupGroups(jaccardPairsShared(s, dir)),
-          scored, "doc_id", "score")
-        .withColumnRenamed("id", "doc_id")
-    }),
-
-    // Corpus data card: the one-row release summary (docs, token stats,
-    // dup rate, language spread, mean quality) every published dataset
-    // ships — byte-identical under repartitioning (decimal sums,
-    // deterministic top-lang tie-break).
-    "q81_corpus_datacard" -> ((s, dir) =>
-      graft.operators.CorpusStats.corpusReport(
-        t(s, dir, "documents"), "doc_id", "text")),
-
-    // Leakage-proof splits: split key = dedup-group label, so near-dup
-    // members co-travel and q61's audit is zero by construction — the
-    // preventive twin of the leakage audit, for corpora that KEEP
-    // near-dups (partial dedup) but must not leak train paraphrases
-    // into eval.
-    "q82_group_split" -> ((s, dir) =>
-      graft.operators.Sampling.groupAwareSplits(
-          t(s, dir, "documents").select("doc_id"),
-          graft.operators.Components.dedupGroups(jaccardPairsShared(s, dir)),
-          "doc_id", Seq("train" -> 8, "val" -> 1, "test" -> 1))),
-
-    // Packing efficiency: per-shard utilization of q50's packed layout
-    // (the padding-waste metric; the only waste under concat-then-chunk
-    // is each shard's final partial sequence) plus the boundary-crossing
-    // doc count a trainer masks across.
-    "q83_packing_efficiency" -> ((s, dir) =>
-      graft.operators.Packing.packingEfficiency(
-        t(s, dir, "documents"), "doc_id",
-        Text.tokenCount(col("text")), shards = 4, maxTokens = 512)),
-
-    // Semantic (embedding-space) contamination screen: nearest EVAL vector
-    // per train vector, one-row broadcast eval array — zero train-side
-    // shuffles. The decontamination modality q52 (shingles) and q75/q76
-    // (verbatim spans) cannot see: paraphrased benchmark items.
-    "q84_semantic_screen" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      Similarity.semanticContamination(
-        em.where(col("vec_id") % 20 =!= 0), em.where(col("vec_id") % 20 === 0),
-        threshold = 0.45)
-    }),
-
-    // Product-quantization codes (m=4 subspaces of dim/4; codebooks from
-    // the q24 naive-centroid convention vec_id % 50 = 0, so the oracle can
-    // re-derive them — trained per-subspace k-means codebooks are the
-    // production path, spec-gated + fixture-benched like trainCentroids).
-    // Exploded to scalar rows for the gate.
-    "q85_pq_codes" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      val cb = Similarity.pqCodebooks(em.where(col("vec_id") % 50 === 0), m = PqM)
-      Similarity.pqEncode(em, cb, m = PqM)
-        .select(col("vec_id"), posexplode(col("code")).as(Seq("subspace", "cw_id")))
-    }),
-
-    // Asymmetric-distance PQ top-k: TRUE query vectors (vec_id<10, the q22
-    // convention) against the PQ-compressed corpus, reconstructed on the
-    // fly from the broadcast codebook.
-    "q86_pq_adc_topk" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      val cb = Similarity.pqCodebooks(em.where(col("vec_id") % 50 === 0), m = PqM)
-      // probes the STAGED code table (the ingest-time index build, like
-      // q129's fingerprint store); q85 keeps the from-scratch build cost
-      Similarity.pqAdcKnn(pqCodesShared(s, dir), cb,
-        em.where(col("vec_id") < 10), m = PqM, k = 5)
-    }),
-
-    // IVF-PQ composed search: the coarse inverted file (q24's %50 centroid
-    // convention) prunes to the query's bucket, PQ codes (q85's codebook
-    // convention) stand in for the floats — both layers externally
-    // re-derivable, so the COMPOSED index is oracle-checkable end to end.
-    "q87_ivfpq_topk" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      val cents = em.where(col("vec_id") % 50 === 0)
-      val cb = Similarity.pqCodebooks(cents, m = PqM)
-      // probes the STAGED composed index (ingest-time build)
-      Similarity.ivfPqKnn(ivfPqIndexShared(s, dir),
-        cents, cb, em.where(col("vec_id") < 10), m = PqM, k = 5)
-    }),
-
-    // Bucketed hard-negative mining: per anchor, top-3 most-similar
-    // DIFFERENT-label vectors among its 2 probed centroid buckets (labels
-    // ride the zero-shuffle assignment — never a corpus re-join).
-    "q88_hard_negatives" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      Similarity.hardNegatives(em, em.where(col("vec_id") % 50 === 0),
-        k = 3, nprobe = 2)
-    }),
-
-    // DSIR-style hashed-bigram feature distribution table (target =
-    // English docs, the in-domain exemplar set): per-bucket target/raw
-    // counts — the broadcast-sized model behind importance weighting.
-    "q89_feature_table" -> ((s, dir) =>
-      graft.operators.CorpusStats.hashedFeatureTable(
-        t(s, dir, "documents").withColumn("is_tgt", col("lang") === "en"),
-        "is_tgt", "text", n = 2, buckets = FeatBuckets)),
-
-    // Per-doc target-affinity masses: the exact-integer core of the DSIR
-    // importance weight (the libm log-ratio itself is spec-gated —
-    // importanceWeights sums per-bucket log-ratios in DECIMAL for
-    // partitioning-independence, with Scala-twin parity pinned).
-    "q90_target_affinity" -> ((s, dir) => {
-      val d = t(s, dir, "documents").withColumn("is_tgt", col("lang") === "en")
-      graft.operators.CorpusStats.targetAffinity(d,
-        graft.operators.CorpusStats.hashedFeatureTable(d, "is_tgt", "text",
-          n = 2, buckets = FeatBuckets),
-        "doc_id", "text", n = 2, buckets = FeatBuckets)
-    }),
-
-    // Salted skew join: fact side salted by a row-varying column, dim
-    // replicated per salt, equi-join on (key, salt) — the hot-key rows
-    // spread over 8 reducers. Result ≡ the plain join (the oracle).
-    "q91_salted_join" -> ((s, dir) => {
-      import Aggregates._
-      graft.operators.Skew.saltedJoin(
-          t(s, dir, "lineitem"),
-          t(s, dir, "part").withColumnRenamed("p_partkey", "l_partkey"),
-          Seq("l_partkey"), bigSaltCol = "l_orderkey", saltBuckets = 8)
-        .groupBy("p_brand")
-        .agg(
-          exactSum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-          count(lit(1)).as("n_items"))
-    }),
-
-    // Fuzzy (edit-distance ≤ 1) duplicate pairs via deletion-neighborhood
-    // blocking — record-linkage / typo detection. Exact: blocked ≡ naive
-    // all-pairs (DedupSpec); the oracle re-blocks in SQL over raw variant
-    // strings (no hashing), independently validating the hash path.
-    "q92_fuzzy_name_pairs" -> ((s, dir) =>
-      graft.operators.Dedup.editDistancePairs(
-        t(s, dir, "customer"), "c_custkey", "c_name")),
-
-    // Corpus snapshot diff: two releases synthesized deterministically
-    // from documents (old drops %10 ids and edits %7 texts; new drops
-    // %13 ids) → per-doc added/removed/changed/unchanged with digests.
-    "q93_snapshot_diff" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val oldSnap = d.where(col("doc_id") % 10 =!= 0)
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" v1"))).otherwise(col("text")))
-      val newSnap = d.where(col("doc_id") % 13 =!= 0)
-      graft.operators.Versioning.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
-    }),
-
-    // Media near-dup via frame-hash Jaccard (video-dedup shape): payloads
-    // fan out to fixed-size frames, near-dup = frame-set overlap ≥ 0.5.
-    // Uncapped here so the oracle is the plain set-overlap join.
-    "q94_frame_neardup" -> ((s, dir) =>
-      graft.operators.Multimodal.frameNearDupPairs(
-        graft.operators.Multimodal.withBinaryPayload(t(s, dir, "documents"), "text"),
-        "doc_id", "content", frameBytes = 100, threshold = 0.5,
-        maxBucket = Int.MaxValue)),
-
-    // Count-min sketch over the corpus token stream (depth 3 × width 64,
-    // long shape): CMS merges by addition, so the ENTIRE sketch is
-    // deterministic under any partitioning and the oracle recomputes it
-    // bit-for-bit.
-    "q95_cms_sketch" -> ((s, dir) =>
-      graft.operators.CorpusStats.cmsSketch(t(s, dir, "documents"), "text",
-        depth = 3, width = 64)),
-
-    // Curriculum interleave: deterministic 3:2:1 weighted fair-queueing
-    // order over three sources — integer virtual times (k·lcm/w), so the
-    // whole training order is exact and engine-portable.
-    "q96_curriculum_order" -> ((s, dir) =>
-      graft.operators.Sampling.curriculumInterleave(
-        t(s, dir, "documents").select("doc_id", "source"), "doc_id", "source",
-        Map("src0" -> 3, "src1" -> 2, "src2" -> 1), seed = 7L)),
-
-    // Deterministic HLL register table (p=6, 64 buckets) per language
-    // over the distinct-token stream: max-merge makes the FULL table
-    // partitioning-independent AND replay-idempotent — the distinct-count
-    // member of the oracle-able sketch family (q95 CMS = counts,
-    // SpaceSaving = heavy keys).
-    "q97_hll_registers" -> ((s, dir) =>
-      graft.operators.Aggregates.hllRegisters(
-        t(s, dir, "documents").select(col("lang"),
-          explode(Text.tokens(col("text"))).as("tok")),
-        Seq("lang"), "tok", p = 6)),
-
-    // Markup → text extraction over a synthesized HTML fixture (the
-    // corpus is already clean text): script/style/comment blocks die with
-    // their contents, tags strip to spaces, the six common entities
-    // decode (&amp; last), whitespace collapses. Same regexes run on both
-    // engines (backreference-free, lazy quantifiers only).
-    "q98_markup_strip" -> ((s, dir) => {
-      val html = markupDoc(t(s, dir, "documents"))
-      html.select(col("doc_id"),
-        Text.stripMarkup(col("html")).as("clean_text"),
-        Text.linkCount(col("html")).as("n_links"))
-    }),
-
-    // Join-key skew diagnostic: top-20 hottest event users with share of
-    // all rows and ratio-to-mean-key — the measurement that decides
-    // between broadcast, AQE and q91's salted join.
-    "q99_key_skew" -> ((s, dir) =>
-      graft.operators.Skew.keySkewReport(t(s, dir, "events"), "user_id",
-        topK = 20)),
-
-    // Source-overlap matrix: pairwise shingle-set Jaccard + overlap
-    // coefficient BETWEEN the 20 corpus sources — the census run before
-    // mixture weighting (high-overlap source pairs double-count shared
-    // text). Buckets bounded by source count; output is sources².
-    "q100_source_overlap" -> ((s, dir) =>
-      graft.operators.CorpusStats.sourceOverlap(t(s, dir, "documents"),
-        "source", "text", n = 3)),
-
-    // Length-bucketed batch assembly (padding minimizer): 16-token bins,
-    // batches of 8 in seeded-hash order within each bin — per-row pad
-    // waste < binWidth by construction.
-    "q101_length_batches" -> ((s, dir) =>
-      graft.operators.Sampling.lengthBucketBatches(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id",
-        Text.tokenCount(col("text")), binWidth = 16, batchSize = 8,
-        seed = 7L)),
-
-    // Contrastive two-view crops: two disjoint seeded-hash 8-token spans
-    // per eligible doc — the positive-pair generator for embedding
-    // pretraining, bit-reproducible on any partitioning.
-    "q102_span_views" -> ((s, dir) =>
-      graft.operators.Chunking.spanViews(t(s, dir, "documents"),
-        "doc_id", "text", viewLen = 8, seed = 7L)),
-
-    // Containment near-dup pairs: overlap coefficient |A∩B|/min(|A|,|B|)
-    // ≥ 0.5 — the snippet-inside-document class Jaccard's union
-    // denominator hides. Rides the SAME staged shingle frame as q18.
-    "q103_containment" -> ((s, dir) =>
-      overlapPairsShared(s, dir).where(col("overlap") >= 0.5)),
-
-    // T5-style span corruption (15% seeded-hash Bernoulli per position,
-    // consecutive masks merge into one sentinel span): input text with
-    // <extra_id_k> sentinels + the span targets — the denoising-objective
-    // pair, bit-reproducible across epochs/partitionings.
-    "q104_span_corruption" -> ((s, dir) =>
-      graft.operators.Augment.spanCorruption(t(s, dir, "documents"),
-          "doc_id", "text", noisePct = 15, seed = 7L)
-        .withColumnRenamed("id", "doc_id")),
-
-    // Token-proportional Poisson (PPS) sample: ~100 docs drawn with
-    // probability ∝ token count, inclusion tested in EXACT integer
-    // arithmetic (hash·Σw < target·w·2^60) — no float threshold anywhere;
-    // Horvitz-Thompson weights keep downstream stats unbiased.
-    "q105_pps_sample" -> ((s, dir) =>
-      graft.operators.Sampling.ppsSample(
-        t(s, dir, "documents").select("doc_id", "text"), "doc_id",
-        Text.tokenCount(col("text")), targetRows = 100L, seed = 7L)),
-
-    // JSONL export lines: compact RFC-8259 JSON per row, field order =
-    // column order — Spark's Jackson writer and DuckDB's to_json agree
-    // byte-for-byte on the minimal escape set, gated here with an
-    // escape-bearing synthesized field (newline, quote, tab, backslash).
-    "q106_jsonl" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.operators.Layout.jsonLine(Seq(
-          col("doc_id"), col("lang"),
-          concat(col("text"), lit("\n\"quoted\"\t\\end")).as("msg")))
-          .as("json_line"))),
-
-    // Winnowing fingerprints (MOSS, Schleimer et al. 2003): per-window
-    // rightmost-minimum k-gram hash — a 2/(w+1)-density span index that
-    // still catches EVERY verbatim cross-doc match of ≥ w+k−1 tokens.
-    // One doc-keyed frame window, then the distinct aggregation.
-    "q107_winnow_fingerprints" -> ((s, dir) =>
-      winnowedShared(s, dir).withColumnRenamed("id", "doc_id")),
-
-    // Fingerprint-overlap pairs: the sparse cross-doc passage detector
-    // over the winnowed index — q18's single-pass posting-list shape at
-    // ~(w+1)/2× fewer index entries; flagged candidates then feed the
-    // exact span-range machinery (q62/q73) for localization. Reads the
-    // SAME staged fingerprint table as q107.
-    "q108_fingerprint_pairs" -> ((s, dir) =>
-      graft.operators.Dedup.overlapPairsFromHashed(
-          winnowedShared(s, dir).select(col("id"), col("h")).distinct(),
-          minOverlap = 0.0, maxBucket = Int.MaxValue)
-        .where(col("shared") >= 2L)),
-
-    // Fill-in-the-middle transform (60% FIM rate): PSM reordering at two
-    // seeded token boundaries — infilling supervision from left-to-right
-    // training, bit-reproducible across epochs. Zero-shuffle projection.
-    "q109_fim" -> ((s, dir) =>
-      graft.operators.Augment.fimTransform(t(s, dir, "documents"),
-          "doc_id", "text", applyPct = 60, seed = 7L)
-        .withColumnRenamed("id", "doc_id")),
-
-    // Data-constrained epoch plan: per-source full-epoch repeats +
-    // remainder under a 1M-token budget, √-flattened integer quotas,
-    // repeats capped at 4 (Muennighoff et al. 2023). All-integer — the
-    // plan is bit-identical on any engine/partitioning.
-    "q110_epoch_plan" -> ((s, dir) =>
-      graft.operators.Sampling.epochPlan(t(s, dir, "documents"),
-        "source", Text.tokenCount(col("text")),
-        budgetTokens = 1000000L, maxEpochs = 4)),
-
-    // Epoch stream: the plan materialized — every doc × its source's full
-    // epochs, plus the seeded-prefix remainder pass. The training-order
-    // input a data loader actually consumes; bit-reproducible on restart.
-    "q112_epoch_stream" -> ((s, dir) =>
-      graft.operators.Sampling.expandEpochs(t(s, dir, "documents"),
-          "source", "doc_id", Text.tokenCount(col("text")),
-          budgetTokens = 1000000L, maxEpochs = 4, seed = 7L)
-        .withColumnRenamed("id", "doc_id")),
-
-    // Unigram drift census between the two doc_id-parity halves: top-30
-    // drifted tokens by the EXACT TV numerator |c_a·N_b − c_b·N_a| in
-    // DECIMAL(38,0) — double arithmetic would lose low bits at 100 TB
-    // and make the ranking partitioning-dependent.
-    "q111_token_drift" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.operators.CorpusStats.tokenDrift(
-          d.where(col("doc_id") % 2 === 0), d.where(col("doc_id") % 2 === 1),
-          "text", k = 30)
-        // ranking runs in DECIMAL(38,0) inside the operator; the gate
-        // emits BIGINT (values fit at every test SF) because DECIMAL
-        // materializes as decimal-object vs float64 across the two
-        // engines' parquet/pandas paths — the q50 HUGEINT lesson
-        .withColumn("drift_num", col("drift_num").cast("long"))
-    }),
-
-    // Interval×interval overlap join, bucketed: per-user synthetic
-    // segments (deterministic integer arithmetic off event_id), half-open
-    // overlap, each pair emitted once via the max-start-bucket rule —
-    // never a per-key cartesian. Oracle = the naive overlap predicate.
-    "q113_interval_overlap" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      def iv(m: Long, mult: Long, spanMod: Long) =
-        ev.where(col("event_id") % 3 === m)
-          .select(col("user_id").as("k"), col("event_id").as("id"),
-            ((col("event_id") * mult) % 2000).as("s"))
-          .withColumn("e", col("s") + 5 + (col("id") % spanMod))
-      graft.operators.RangeJoin.joinByOverlap(
-          iv(0, 37, 50), iv(1, 53, 30), Seq("k"), "s", "e", bucketWidth = 64)
-        .select("k", "a_id", "a_s", "a_e", "b_id", "b_s", "b_e")
-    }),
-
-    // Dedup threshold-sweep census: pairs fired + docs pulled into pairs
-    // per candidate jaccard threshold (zeros included) — the tuning table
-    // that turns threshold selection into a lookup instead of a pipeline
-    // re-run. Rides the SAME staged shingle frame as q18/q103.
-    "q114_dedup_sweep" -> ((s, dir) =>
-      graft.operators.Dedup.dedupSweep(overlapPairsShared(s, dir),
-        thresholds = Seq(0.25, 0.5, 0.75, 1.0))),
-
-    // Stratified PPS: per-source expected-row targets (⌊n_g/10⌋, data-
-    // driven) executed as ONE narrow pass — exact-integer per-group
-    // inclusion, per-group HT weights; the corpus never shuffles.
-    "q115_group_pps" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("w", Text.tokenCount(col("text")).cast("long"))
-        .where(col("w") > 0)
-      val targets = d.groupBy("source")
-        .agg(expr("CAST(count(1) div 10 AS BIGINT)").as("target"))
-      graft.operators.Sampling.ppsSampleByGroup(d, "source", "doc_id",
-        col("w"), targets, seed = 7L)
-    }),
-
-    // Scene/shot boundary detection over the frame stream: lag +
-    // bit_count(xor) Hamming screen + running scene ids, one doc-keyed
-    // window — the temporal-segmentation twin of q28's frame fan-out
-    // (perceptual hashes slot in where the stand-in hash sits).
-    "q116_scene_bounds" -> ((s, dir) =>
-      Multimodal.sceneBoundaries(
-        Multimodal.withBinaryPayload(t(s, dir, "documents"), "text"),
-        "doc_id", frameBytes = 100, maxHamming = 29)),
-
-    // Prefix-filtered set-similarity join (AllPairs/PPJoin): the
-    // sparse-index plan you'd ship at 100 TB for high thresholds, gated
-    // AT its design regime t=0.8 (r6; r5 gated it at the t=0.5 worst case
-    // where the prefix is half the stream — the judge asked for the
-    // production setting; ScaleProbe sweeps t=0.5..0.9 for the crossover).
-    // Index holds only each doc's prefix hashes — no false negatives by
-    // the prefix theorem; candidates verified exactly.
-    "q117_jaccard_prefix" -> ((s, dir) =>
-      graft.operators.Dedup.jaccardPairsPrefixFromHashed(
-        hashedShinglesShared(s, dir), threshold = 0.8,
-        maxBucket = Int.MaxValue)),
-
-    // Multi-level ROLLUP aggregation (corpus census by lang → lang×source
-    // with grand total): one Expand + one aggregation — Catalyst's native
-    // grouping-sets machinery, grouping_id() disambiguating subtotal
-    // nulls from data nulls.
-    "q118_rollup_census" -> ((s, dir) =>
-      t(s, dir, "documents").rollup("lang", "source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(Text.tokenCount(col("text")).cast("long")).as("n_tokens"),
-          grouping_id().as("lvl"))),
-
-    // Trailing RANGE-frame features: events in the PAST HOUR per user
-    // (count + exact cent sum) — value-range frames keep "last hour"
-    // meaning an hour on irregularly-spaced events, where ROWS frames
-    // (q44) would drift with density.
-    "q119_trailing_hour" -> ((s, dir) =>
-      graft.operators.Aggregates.trailingRange(
-        t(s, dir, "events").select(col("event_id"), col("user_id"),
-          unix_timestamp(col("ts")).as("ts_epoch"),
-          floor(col("value") * 100.0 + 0.5).cast("long").as("cents")),
-        keys = Seq("user_id"), orderCol = "ts_epoch", valueCol = col("cents"),
-        horizon = 3600L)),
-
-    // Winnow-accelerated span dedup: fingerprint candidates (sparse,
-    // full-corpus pass) → exact positional ranges on the flagged docs
-    // only — EXACTLY q62's output because fpK+fpW−1 = 11 ≤ 20 makes the
-    // winnowing guarantee cover every duplicated window. Same oracle.
-    "q120_span_ranges_sparse" -> ((s, dir) =>
-      graft.operators.Dedup.duplicatedSpanRangesSparse(
-          t(s, dir, "documents"), "doc_id", "text", window = SpanWindow,
-          fpK = FpK, fpW = FpW, maxBucket = Int.MaxValue)
-        .withColumnRenamed("id", "doc_id")),
-
-    // The AMORTIZED sparse-span path — the measured winner at scale
-    // (SCALE.md: the stored-fingerprint plan overtakes q120's one-shot
-    // extraction past ~100k docs): the q107 fingerprint table is a
-    // staged frame (`win` stg row, the ingest-time store), so detection
-    // pays only the pair probe + the exact stage on flagged docs. Same
-    // oracle as q62/q120 — exact because fpK+fpW−1 = 11 ≤ 20.
-    "q129_span_sparse_amortized" -> ((s, dir) =>
-      graft.operators.Dedup.duplicatedSpanRangesSparseFromFp(
-          winnowedShared(s, dir), t(s, dir, "documents"), "doc_id", "text",
-          window = SpanWindow, maxBucket = Int.MaxValue)
-        .withColumnRenamed("id", "doc_id")),
-
-    // Full CUBE over (event_type, weekday): all four grouping levels in
-    // one Expand + one aggregation — q118's rollup generalized to the
-    // complete grouping-sets lattice; exact cent sums.
-    "q121_cube_census" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(col("event_type"), dayofweek(col("ts")).as("weekday"),
-          floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
-        .cube("event_type", "weekday")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_sum"),
-          grouping_id().as("lvl"))),
-
-    // Exact re-rank over ADC proposals (the standard two-stage quantized
-    // search): top-RerankC asymmetric-distance candidates re-scored with
-    // the TRUE float vectors, final top-5 in exact cosine order — recovers
-    // exact-tier recall at ~C/n of brute-force cost while the corpus-side
-    // floats are touched only for candidate rows.
-    "q122_adc_rerank" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      val cb = Similarity.pqCodebooks(em.where(col("vec_id") % 50 === 0), m = PqM)
-      // staged code table (q86's rationale); re-rank floats read fresh
-      Similarity.pqAdcKnnReranked(pqCodesShared(s, dir), cb,
-        em, em.where(col("vec_id") < 10), m = PqM, k = 5, candC = RerankC)
-    }),
-
-    // IVF-PQ with the exact re-rank stage — the shippable composed index
-    // (q87's coarse pruning + q85's codes + q122's re-scoring) in one gate.
-    "q123_ivfpq_rerank" -> ((s, dir) => {
-      val em = t(s, dir, "embeddings")
-      val cents = em.where(col("vec_id") % 50 === 0)
-      val cb = Similarity.pqCodebooks(cents, m = PqM)
-      // nprobe = 1 / C = 50 is the GATE regime (the oracle's rn = 1
-      // assignment), not the shipped default — ivfPqKnnReranked defaults
-      // to the measured np8 × C200 knee (Similarity scaladoc)
-      Similarity.ivfPqKnnReranked(ivfPqIndexShared(s, dir),
-        cents, cb, em, em.where(col("vec_id") < 10), m = PqM, k = 5,
-        nprobe = 1, candC = RerankC)
-    }),
-
-    // Arbitrary GROUPING SETS — ((lang),(source),()) is NOT a rollup (no
-    // hierarchy) and NOT a cube (the (lang,source) cell is absent): the
-    // general grouping surface beyond q118/q121's canned forms. Still one
-    // Expand + one aggregation; grouping_id bitmask as q118.
-    "q124_grouping_sets" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupingSets(Seq(Seq(col("lang")), Seq(col("source")), Seq.empty),
-          col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(Text.tokenCount(col("text")).cast("long")).as("n_tokens"),
-          grouping_id().as("lvl"))),
-
-    // Per-epoch curriculum composition: q112's epoch stream (every doc ×
-    // its source's planned epochs + the seeded remainder pass) fed through
-    // q96's integer-WFQ interleave — the complete "what order does the
-    // trainer see" artifact. The interleave key is (doc, epoch), so each
-    // epoch's copies reshuffle independently within their source; exact
-    // 64-bit integers end to end, bit-reproducible on restart.
-    "q125_epoch_curriculum" -> ((s, dir) => {
-      val es = graft.operators.Sampling.expandEpochs(t(s, dir, "documents"),
-          "source", "doc_id", Text.tokenCount(col("text")),
-          budgetTokens = 1000000L, maxEpochs = 4, seed = 7L)
-        .withColumn("uid", col("id") * 8 + col("epoch"))
-      graft.operators.Sampling.curriculumInterleave(es, "uid", "source",
-          Map("src0" -> 3, "src1" -> 2, "src2" -> 1), seed = 7L)
-        .select(col("position"), col("source"), col("id").as("doc_id"),
-          col("epoch"), col("tokens"))
-    }),
-
-    // General dyadic-temperature mixture at τ = 3/4 (k=3, m=2): weight =
-    // ⌊sqrt(c)·sqrt(sqrt(c))⌋ — repeated CORRECTLY-ROUNDED square roots
-    // instead of pow (which drifts between libms), so the dyadic grid is
-    // the portable cross-engine temperature convention; the oracle
-    // mirrors the exact association order. τ=1/2 rides q72.
-    "q126_tau_mixture" -> ((s, dir) =>
-      graft.operators.Sampling.temperatureMixtureTau(t(s, dir, "documents"),
-          "source", "doc_id", totalOut = 120, tauNum = 3, tauDenLog2 = 2)
-        .select("source", "doc_id")),
-
-    // CorpusPipeline capstone, stage census: the COMPOSED end-to-end
-    // pipeline (clean → normalized exact dedup → minhash near-dedup →
-    // decontamination → split → pack) run once per (session, sf-dir);
-    // every per-stage attributable count + the split census + the packed
-    // train-sequence count as one (stage, n) frame, vs a DuckDB oracle
-    // that recomposes the already-gated stage SQL end to end. Each stage
-    // is hash/integer-deterministic, so the composition is too.
-    "q127_pipeline_capstone" -> ((s, dir) => {
-      import s.implicits._
-      val r = capstoneShared(s, dir)._2
-      Seq(
-        "input" -> r.input,
-        "cleaned" -> r.cleaned,
-        "after_exact_dedup" -> r.afterExactDedup,
-        "after_near_dedup" -> r.afterNearDedup,
-        "contaminated" -> r.contaminated,
-        "fluency_filtered" -> r.fluencyFiltered,
-        "after_fluency" -> r.afterFluency,
-        "corpus" -> r.corpus,
-        "split_train" -> r.splitCounts.getOrElse("train", 0L),
-        "split_val" -> r.splitCounts.getOrElse("val", 0L),
-        "split_test" -> r.splitCounts.getOrElse("test", 0L),
-        "train_sequences" -> r.trainSequences,
-      ).toDF("stage", "n")
-    }),
-
-    // Capstone membership: the final corpus's (doc_id, split) assignment —
-    // counts alone could match with the WRONG documents surviving; this
-    // row pins exactly WHICH documents ship and where they land.
-    "q128_pipeline_membership" -> ((s, dir) =>
-      capstoneShared(s, dir)._1.select(col("doc_id"), col("split"))),
-
-    // Corpus-TRAINED BPE tokenizer (Sennrich 2016 shape): the ordered
-    // merge table, trained on the live word-frequency table — one corpus
-    // aggregation + a vocabulary-bounded driver collect + deterministic
-    // merge rounds (count desc, pair lexicographic ties). The DuckDB
-    // oracle re-derives every round independently: unrolled
-    // count-argmax-merge CTEs with the greedy left-to-right non-overlap
-    // rule expressed as gaps-and-islands odd-rank selection.
-    "q130_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      val vocab = graft.functions.Subword.train(t(s, dir, "documents"),
-        "text", numMerges = BpeMerges, maxWords = BpeMaxWords)
-      vocab.merges.zipWithIndex.map { case ((a, b), i) =>
-        (i + 1, a, b, a + b)
-      }.toDF("rank", "a", "b", "merged")
-    }),
-
-    // Stupid Backoff n-gram LM, exact-integer token grain (Brants 2007;
-    // the CCNet-style fluency screen, Wenzek 2020): per corpus token, the
-    // matched backoff order, the backoff charge and the score fraction's
-    // BIGINT numerator/denominator — everything before the engine-local
-    // log is integer, so the whole lookup chain (count tables at
-    // minCount=LmMinCount, candidate join, order selection, 1/N OOV
-    // floor) is hash-gateable. The count table is the staged `lmc` model
-    // artifact; scoring is ONE equi-join + one (doc,pos) re-group.
-    "q131_lm_token_scores" -> ((s, dir) =>
-      graft.operators.NgramLm.scoreTokens(t(s, dir, "documents"),
-          lmCountsShared(s, dir),
-          graft.operators.NgramLm.lmTotals(t(s, dir, "documents"), "text"),
-          "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")),
-
-    // Per-document backoff census — the integer filter-grain artifact:
-    // how much of each document the LM recognizes at each order (a doc
-    // whose mass sits at matched_ord <= 1 is token salad regardless of
-    // its float perplexity). One keyed aggregation over q131's frame.
-    "q132_lm_backoff_census" -> ((s, dir) =>
-      graft.operators.NgramLm.backoffCensus(
-          graft.operators.NgramLm.scoreTokens(t(s, dir, "documents"),
-            lmCountsShared(s, dir),
-            graft.operators.NgramLm.lmTotals(t(s, dir, "documents"), "text"),
-            "doc_id", "text"))
-        .withColumnRenamed("id", "doc_id")),
-
-    // Gopher rule-based quality screen (Rae 2021 A1.1): per document,
-    // all seven named rule flags plus the conjunction — drops are
-    // attributable to a rule, unlike a blended score. Every threshold is
-    // exact-integer arithmetic (10·symbols < words, never a float ratio)
-    // so the flags are engine-independent at the boundary. Zero-shuffle
-    // narrow projection; the same rules plug into CorpusPipeline's stage
-    // funnel via Quality.gopherStages. The stop-word marker list is the
-    // per-language knob localized to THIS corpus's vocabulary
-    // (Text.Stopwords — only "the" from the canonical English list
-    // occurs here; QualitySpec pins the canonical list on an English
-    // fixture).
-    "q133_gopher_flags" -> ((s, dir) => {
-      val flags = graft.functions.Quality.gopherFlags(col("text"), Text.Stopwords)
-      t(s, dir, "documents").select(
-        col("doc_id") +:
-          flags.map { case (n, c) => c.cast("int").as(n) } :+
-          graft.functions.Quality.gopherKeep(col("text"), Text.Stopwords)
-            .cast("int").as("kept"): _*)
-    }),
-
-    // Gopher repetition screens (Rae 2021 A1.2): the full 13-metric
-    // battery as exact-integer character masses — duplicate line /
-    // paragraph fractions and char masses, top-{2,3,4}-gram char mass
-    // (ties on count → largest mass), duplicated-{5..10}-gram coverage
-    // (position mask: overlapping occurrences counted once). The n-gram
-    // inner loop is ONE compiled pass per document per n
-    // (expressions.NgramRepetition — hash-map count + mask, inside
-    // whole-stage codegen); denominators ride along so `kept` is a pure
-    // cross-multiplication at the canonical thresholds. Zero-shuffle
-    // scan-speed projection, like q133.
-    "q134_repetition_screens" -> ((s, dir) => {
-      import graft.functions.Quality
-      val txt = col("text")
-      val (dl, tl, dlc, tlc) = Quality.dupSegmentStats(txt, "\n")
-      val (dp, tp, dpc, tpc) = Quality.dupSegmentStats(txt, "\n\n")
-      t(s, dir, "documents").select(
-        Seq(col("doc_id"),
-          dl.as("dup_lines"), tl.as("total_lines"),
-          dlc.as("dup_line_chars"), tlc.as("total_line_chars"),
-          dp.as("dup_paras"), tp.as("total_paras"),
-          dpc.as("dup_para_chars"), tpc.as("total_para_chars"),
-          Quality.topNgramChars(txt, 2).as("top2_chars"),
-          Quality.topNgramChars(txt, 3).as("top3_chars"),
-          Quality.topNgramChars(txt, 4).as("top4_chars")) ++
-          (5 to 10).map(n => Quality.dupNgramChars(txt, n).as(s"dup${n}_chars")) ++
-          Seq(Quality.nonSpaceChars(txt).as("total_chars"),
-            Quality.repetitionKeep(txt).cast("int").as("kept")): _*)
-    }),
-
-    // Corpus-scale subword ENCODE (completes the tokenizer pipeline:
-    // q130 trains the merges, this gate applies them — the document's
-    // full unit sequence, table words expanding to their compiled
-    // segments, OOV words to per-character units, the same fallback q69
-    // charges). Vocabulary trained from the q69 constants so the oracle
-    // can inline the identical word→segments table. The segment table
-    // rides the expression as a literal map (plan-embedded broadcast);
-    // zero-shuffle scan-speed projection.
-    "q135_subword_encode" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        posexplode(graft.functions.Subword.unitsColumn(col("text"), SubwordGateVocab))
-          .as(Seq("pos", "unit")))),
-
-    // Funnel attribution over the capstone's own 21-stage screen battery
-    // (token bar → 7 Gopher rules → 13 repetition screens): per-rule
-    // FIRST-FAILURE drop census over the train pool — the report a
-    // corpus run ships ("12% too short, 8% low-stopword, …"). The whole
-    // cascade is one when-chain in a narrow projection plus a single
-    // stage-cardinality aggregation: cleaning 100 TB costs one scan.
-    "q136_funnel_attribution" -> ((s, dir) =>
-      graft.operators.Cleaning.funnelReport(
-        t(s, dir, "documents").where(col("doc_id") % 10 =!= 0),
-        capstoneFunnelStages)),
-
-    // Discriminative quality classifier — the third canonical filter
-    // family beside the Gopher rule battery (q133/q134) and the CCNet LM
-    // screen (q131/q132): an integer perceptron on the DSIR hashed-bigram
-    // space (q89/q90 conventions), trained to DISTILL the capstone screen
-    // battery (label: passes all 21 funnel stages — the GPT-3 pattern of
-    // training a cheap linear scorer on expensively-labeled exemplars)
-    // from the PcptSampleN smallest-id docs, PcptEpochs passes in id
-    // order. Every weight/margin is exact 64-bit integer arithmetic, so
-    // the DuckDB oracle REPLAYS training — labeling its own sample with
-    // the shared battery fragments, then 64 unrolled margin/update CTEs
-    // (the q130 convention) — and must land on the identical sparse
-    // weight table.
-    "q137_perceptron_model" -> ((s, dir) =>
-      pcptModel(s, dir).toDF(s)),
-
-    // Corpus-wide classifier inference: score = bias + Σ w·count,
-    // keep = score > 0 — the model is a ≤FeatBuckets-row broadcast, the
-    // corpus never shuffles anything wider than (doc_id, long). The
-    // oracle recomposes scores from its own replayed model.
-    "q138_classifier_scores" -> ((s, dir) => scoredDocs(s, dir)),
-
-    // Distillation-quality census: the student classifier (q137's model)
-    // against its teacher (the capstone battery verdict) over the WHOLE
-    // corpus — the confusion matrix a data team reads before letting the
-    // cheap linear scorer stand in for the 21-rule battery at 100 TB
-    // (precision/recall/accuracy all derive from these four cells). ONE
-    // corpus scan, zero joins: the score is a literal-map FOLD over the
-    // shingle array (Classifier.scoreColumn) evaluated beside the
-    // battery columns in the same projection — an exploded score would
-    // invite Catalyst to collapse the battery below the Generate and
-    // re-evaluate it once per shingle (measured 60×). The oracle replays
-    // training AND recomputes the battery from its own shared fragments,
-    // then recomposes the identical census.
-    "q139_classifier_census" -> ((s, dir) =>
-      graft.operators.Classifier.confusionCensus(
-        t(s, dir, "documents"), pcptModel(s, dir), "doc_id", "text",
-        capstoneFunnelStages.map(_._2).reduce(_ && _),
-        ns = PcptOrders, buckets = FeatBuckets, withStats = PcptStats)),
-
-    // Bottom-k (KMV) quantile sketch: per-source length percentiles from
-    // a fixed-size deterministic sample — every quantile at once, no
-    // global sort, constant map-side state (the sketch family's missing
-    // member beside CMS/SpaceSaving/HLL; the shape that sets screen-band
-    // thresholds like a CCNet perplexity tercile at 100 TB). The retained
-    // set is the k smallest (stableHash60(id), value) pairs — a pure set
-    // function, so partitioning/merge-order/engine independent; the
-    // oracle re-derives the identical sample with one row_number and
-    // reads the same integer nearest-rank-lower positions.
-    "q140_sketch_quantiles" -> ((s, dir) => {
-      import graft.expressions.BottomKSketchAgg.{sampleByHash, quantileFromSample}
-      t(s, dir, "documents")
-        .groupBy("source")
-        .agg(sampleByHash(Hashing.stableHash60(col("doc_id").cast("string")),
-          col("n_chars"), SketchK).as("smp"))
-        .select(col("source"),
-          quantileFromSample(col("smp"), 1, 4).as("p25"),
-          quantileFromSample(col("smp"), 1, 2).as("p50"),
-          quantileFromSample(col("smp"), 3, 4).as("p75"),
-          quantileFromSample(col("smp"), 9, 10).as("p90"),
-          size(col("smp")).cast("long").as("sample_n"))
-    }),
-
-    // Exact quantiles, histogram tier: when the value domain is bounded
-    // (lengths, token counts), exact per-group percentiles cost one
-    // map-side-combined (group, value) histogram + one window over
-    // histogram-sized frames — never a corpus sort, never a whole-group
-    // percentile buffer. Same nearest-rank-lower integer convention as
-    // q140, so sketch estimate and exact value compare cell-for-cell.
-    // The oracle is the ROW-grain formulation (row_number over all rows)
-    // — a genuinely different computation that must land on the same
-    // values.
-    "q141_exact_quantiles" -> ((s, dir) =>
-      graft.operators.CorpusStats.exactQuantilesByGroup(
-        t(s, dir, "documents"), "source", "n_chars",
-        Seq(("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p90", 9, 10)))),
-
-    // Weighted exact quantiles: "the doc length below which a quarter /
-    // half / ... of my TOKENS sit" — the packing-budget question. Same
-    // histogram machinery as q141 with Σweight masses (weight = token
-    // count); rank runs over cumulative weight. The oracle EXPANDS each
-    // doc into `weight` rows and ranks them — the obviously-correct
-    // formulation the histogram must reproduce.
-    "q142_weighted_quantiles" -> ((s, dir) =>
-      graft.operators.CorpusStats.exactQuantilesByGroup(
-        t(s, dir, "documents")
-          .withColumn("w", Text.tokenCount(col("text")).cast("long")),
-        "source", "n_chars",
-        Seq(("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p90", 9, 10)),
-        weightCol = Some("w"))),
-
-    // 5-gram Stupid Backoff token grain — the CCNet PRODUCTION order
-    // (Wenzek 2020 scores with KenLM 5-grams). Same two-shuffle scorer
-    // as q131 (one candidate equi-join + one (doc,pos) re-group — the
-    // order only widens the slot stream 5 → 9 rows per token, it never
-    // adds a join), against the staged `lm5` count tables. The oracle
-    // re-derives all five pruned count tables and the 9-slot lookup as
-    // explicit per-slot LEFT JOINs — independent formulation at the
-    // generalized order.
-    "q143_lm5_token_scores" -> ((s, dir) =>
-      graft.operators.NgramLm.scoreTokens(t(s, dir, "documents"),
-          lmCounts5Shared(s, dir),
-          graft.operators.NgramLm.lmTotals(t(s, dir, "documents"), "text"),
-          "doc_id", "text", n = 5)
-        .withColumnRenamed("id", "doc_id")),
-
-    // CCNet head/middle/tail corpus banding (Wenzek 2020 §4.3: split
-    // each language's corpus by LM score and sample preferentially from
-    // the head) at the repo's exact-integer grain: per-doc score = the
-    // order-≥2 match PERMILLE of the q132 census (the staged `lmf`
-    // score file), per-SOURCE band edges = exact histogram quantiles at
-    // 1/3 and 2/3 (the q141 nearest-rank-lower convention), band =
-    // value-vs-edge comparison (ties share a band — deterministic on
-    // any partitioning, unlike a rank tercile, which also cannot scale:
-    // a per-group row_number puts a whole language in one partition).
-    // The corpus never sorts; the edges broadcast back at source
-    // cardinality. Oracle: independent row_number-grain edge derivation
-    // over its own recomposed census.
-    "q144_fluency_bands" -> ((s, dir) => fluencyBanded(s, dir)),
-
-    // Backoff census at the production order — gates the GENERALIZED
-    // census path (one o<k> bucket per order k = 5..1, round 8): how much
-    // of each document the 5-gram model recognizes at each order. Same
-    // one-keyed-aggregation shape as q132; the oracle recomposes it over
-    // its own 9-slot lookup chain.
-    "q145_lm5_backoff_census" -> ((s, dir) =>
-      graft.operators.NgramLm.backoffCensus(
-          graft.operators.NgramLm.scoreTokens(t(s, dir, "documents"),
-            lmCounts5Shared(s, dir),
-            graft.operators.NgramLm.lmTotals(t(s, dir, "documents"), "text"),
-            "doc_id", "text", n = 5),
-          n = 5)
-        .withColumnRenamed("id", "doc_id")),
-
-    // CCNet banding, CONSUMED (Wenzek 2020 §4.3's downstream step:
-    // "sample preferentially from the head"): the gated band assignment
-    // (q144's exact chain, off the same staged score file) feeding the
-    // gated mixture draw (q56's hash-rank quota machinery) with
-    // head-heavy quotas — a pure composition gate, zero new operator
-    // surface, zero new float surface. Scale shape composes too: the
-    // banding never sorts the corpus, and the per-band rank is
-    // WindowGroupLimit-bounded (each partition forwards ≤ max-quota rows
-    // per band before the single band shuffle).
-    "q146_band_mixture" -> ((s, dir) =>
-      graft.operators.Sampling.mixtureSample(
-        fluencyBanded(s, dir), "band", "doc_id", BandQuotas,
-        defaultQuota = 0)),
-
-    // Classifier-weighted PPS draw (the FineWeb/DCLM shape: score every
-    // document with the cheap distilled classifier, keep a
-    // quality-weighted sample): q138's integer score chain feeding
-    // q105's exact-integer PPS inclusion with weight = score (ppsSample
-    // drops w ≤ 0, so classifier-rejected docs are excluded by the same
-    // rule as q138's `keep`). Composition of two gated families; the
-    // draw stays a narrow broadcast-total filter — the scored corpus
-    // never shuffles.
-    "q147_classifier_pps" -> ((s, dir) =>
-      graft.operators.Sampling.ppsSample(
-        scoredDocs(s, dir), "doc_id", col("score"),
-        targetRows = ClsPpsTarget, seed = ClsPpsSeed)),
-
-    // Band-preferential RATE admission — the 100 TB form of q146: where
-    // the quota draw ranks within each band (right for bounded mixes; a
-    // corpus-sized quota would funnel the corpus into |bands| window
-    // partitions), the rate draw keeps a per-band FRACTION via the
-    // hash-threshold test — a pure stateless per-row filter, no shuffle,
-    // no state, streamable under frozen edges. Same shared banded frame
-    // as q146; rates keep 9/10 of head, 1/2 of middle, 1/10 of tail.
-    "q148_band_rate_sample" -> ((s, dir) =>
-      graft.operators.Sampling.hashSampleByGroup(
-        fluencyBanded(s, dir), "band", "doc_id", BandRates)),
-
-    // Banded admission over the CAPSTONE corpus — the release-tier form
-    // of CCNet §4.3 (band the shipped corpus by its own self-trained
-    // model's fluency permille, admit head-preferentially; FineWeb-style
-    // quality-tier releases are this shape). The decision rule is
-    // NgramLm.bandRateAdmission — the SAME single implementation the
-    // CorpusPipeline stage 4a'' calls (PipelineSpec pins stage ≡
-    // composition-over-run-without), so the capstone's banded stage is
-    // thereby oracle-gated through this composition without running a
-    // second capstone. One global band set (single-language corpus);
-    // the oracle extends the composed capstone chain with a second
-    // census over the fluent pool.
-    "q149_capstone_banded" -> ((s, dir) => {
-      val flu = capstoneShared(s, dir)._1.select(col("doc_id"), col("text"))
-      graft.operators.NgramLm.bandRateAdmission(flu,
-        graft.operators.NgramLm.lmCounts(flu, "text", n = 3,
-          minCount = LmMinCount),
-        graft.operators.NgramLm.lmTotals(flu, "text"),
-        "doc_id", "text", BandRates)
-    }),
-
-    // The multilingual production shape of q149 (VERDICT r8 gap 3): the
-    // CCNet recipe bands PER LANGUAGE — each source's fluency
-    // distribution gets its own tercile edges, so a verbose source
-    // can't push a terse source's docs into the tail. Same composed
-    // capstone pool, same self-trained model, same rates and seed; the
-    // ONLY change from q149 is `groupCol = source`, so the q149/q150
-    // pair is a direct global-vs-grouped A/B of one argument. Scale
-    // shape unchanged: the edges frame grows to |sources|×2 values,
-    // still broadcast; the corpus still never sorts or shuffles.
-    "q150_capstone_banded_by_source" -> ((s, dir) => {
-      val flu = capstoneShared(s, dir)._1.select(col("doc_id"), col("text"))
-      // re-attach source to the memoized pool: both sides doc-cardinality,
-      // so hash the narrow (doc_id, source) side instead of sorting both
-      val docs = flu.join(
-        t(s, dir, "documents").select(col("doc_id"), col("source"))
-          .hint("shuffle_hash"),
-        Seq("doc_id"))
-      graft.operators.NgramLm.bandRateAdmission(docs,
-        graft.operators.NgramLm.lmCounts(flu, "text", n = 3,
-          minCount = LmMinCount),
-        graft.operators.NgramLm.lmTotals(flu, "text"),
-        "doc_id", "text", BandRates, groupCol = Some("source"))
-    }),
-  )
+    RelationalGates.pricingSummary.engine(spark, "/root/testdata/sf0.001")
+
+  /** Every gate of the driver contract, defined once in its family file
+    * under [[graft.gates]]: the engine frame beside its DuckDB oracle. */
+  lazy val gates: Seq[Gate] =
+    RelationalGates.gates ++ WeatherGates.gates ++ TextGates.gates ++
+      DedupGates.gates ++ SimilarityGates.gates ++ LmGates.gates ++
+      SamplingGates.gates ++ CapstoneGates.gates ++ MultimodalGates.gates
+
+  /** Gate name → engine frame. Builds no oracle SQL. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.engine).toMap
+
+  /** Gate name → DuckDB SQL over the same parquet tables. */
+  def oracleSql: Map[String, String] =
+    gates.map(g => g.name -> g.oracleSql).toMap
 
   /** Shared trainer for q137/q138/q139/q147. The label is the capstone
     * battery's own verdict — the one stage list shared with
@@ -2068,51 +474,17 @@ object SparkEntry {
     * carried by the `pcm` stage row (Bench stages run before any query),
     * so q137-q139/q147 report the per-probe marginal — the same
     * measurement contract as the pqe/pqi index rows. */
-  private val pcptMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.Classifier.PerceptronModel]
-  private def pcptModel(s: SparkSession, dir: String)
-      : graft.operators.Classifier.PerceptronModel = {
-    pcptMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pcptMemo.remove)
-    pcptMemo.getOrElseUpdate((s, dir),
+  private[graft] def pcptModel(s: SparkSession, dir: String)
+      : graft.operators.Classifier.PerceptronModel =
+    memoized(s, dir, "pcptmodel")(
       graft.operators.Classifier.trainPerceptron(
         t(s, dir, "documents").withColumn("is_pass",
           capstoneFunnelStages.map(_._2).reduce(_ && _)),
         "doc_id", "is_pass", "text", ns = PcptOrders, buckets = FeatBuckets,
         sampleN = PcptSampleN, epochs = PcptEpochs, withStats = PcptStats))
-  }
-
-  /** The gate-config scored corpus (doc_id, score, keep) — ONE engine-side
-    * copy shared by q138 and its PPS consumer q147, mirroring the oracle's
-    * shared `classifierScoreCtes` fragment: the gate score and the
-    * sampling weight can never drift on either side. */
-  private def scoredDocs(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Classifier.scoreDocs(
-        t(s, dir, "documents"), pcptModel(s, dir),
-        "doc_id", "text", ns = PcptOrders, buckets = FeatBuckets,
-        withStats = PcptStats)
-      .withColumnRenamed("id", "doc_id")
-
-  /** The gate-config banded corpus (doc_id, source, fluency_pm, band) —
-    * ONE engine-side copy shared by q144 and its mixture consumer q146,
-    * mirroring the oracle's shared `fluencyBandCtes` fragment. */
-  private def fluencyBanded(s: SparkSession, dir: String): DataFrame =
-    graft.operators.CorpusStats.bandByGroupQuantiles(
-      lmFluencyShared(s, dir), "source", "fluency_pm",
-      Seq(("p33", 1, 3), ("p66", 2, 3)), Seq("tail", "middle", "head"))
-
-  /** ADC candidate count for the re-rank gates (q122/q123 and oracles). */
-  private val RerankC = 50
-
-  /** BPE training depth / candidate-vocabulary bound for the trained-
-    * tokenizer gate (q130 and its oracle). 12 rounds stay well inside
-    * this corpus's merge capacity at every SF; 10000 words covers the
-    * whole vocabulary (31 distinct tokens), and the top-N cut is
-    * deterministic on both engines anyway (occurrences desc, word asc). */
-  private val BpeMerges = 12
-  private val BpeMaxWords = 10000
 
   /** Hash-bucket count for the DSIR feature table (q89/q90 and oracles). */
-  private val FeatBuckets = 4096
+  private[graft] val FeatBuckets = 4096
 
   /** Perceptron quality-classifier gate config (q137/q138 and oracles):
     * the 128 smallest-id docs, ONE pass — 128 update steps, each one
@@ -2121,8 +493,8 @@ object SparkEntry {
     * round 8 (sf0.01, majority 0.52): 128×1 beats 64×2 at every feature
     * space tried — the second pass re-walks docs the averaged vote has
     * already absorbed, while fresh docs carry new information. */
-  private val PcptSampleN = 128
-  private val PcptEpochs = 1
+  private[graft] val PcptSampleN = 128
+  private[graft] val PcptEpochs = 1
 
   /** Perceptron feature space (round 8, measured progression). The
     * oracle's superlinear unroll cost pins the step budget, so capacity
@@ -2137,230 +509,43 @@ object SparkEntry {
     * features let 128 steps place thresholds where 4096 sparse gram
     * buckets cannot. Gate config: stats-only. Full sweep in NOTES.md
     * round 8; the gram path stays API-live and spec-covered. */
-  private val PcptOrders = Seq.empty[Int]
-  private val PcptStats = true
-
-  /** The gate gram stream in DuckDB (when PcptOrders is nonempty): the
-    * same order union as PcptOrders (list concat — grams of different
-    * orders cannot collide pre-hash, the space-count argument). */
-  private def duckPcptGrams(textCol: String): String =
-    PcptOrders.map(k => s"(${duckShingles(textCol, k)})").mkString(" || ")
-
-  /** DuckDB twin of Classifier.statFeatureStrings over `src`, reading
-    * the `${p}wide` repetition CTE (must already be in scope — its
-    * top/dup masses and total_chars are the q134-gated twins of
-    * Quality.topNgramChars/dupNgramChars/nonSpaceChars). Emits
-    * `${p}sfx(doc_id, f)`. DuckDB `//` on non-negative BIGINTs matches
-    * Spark's `div`. */
-  private def duckStatFeats(src: String, p: String): String =
-    s"""${p}sfb AS (SELECT d.doc_id,
-       |  CAST(len(string_split(d.text,' ')) AS BIGINT) AS wcv,
-       |  w.total_chars AS nsc, w.top2_chars, w.top3_chars,
-       |  w.dup5_chars, w.dup9_chars
-       | FROM $src d JOIN ${p}wide w ON d.doc_id = w.doc_id),
-       |${p}sfx AS (SELECT doc_id, unnest([
-       |  'wc' || chr(10) || CAST(least(wcv // 5, 60) AS VARCHAR),
-       |  'mwl' || chr(10) || CAST(least((nsc * 10) // greatest(wcv, 1), 30) AS VARCHAR),
-       |  'top2' || chr(10) || CAST(least((top2_chars * 20) // greatest(nsc, 1), 20) AS VARCHAR),
-       |  'top3' || chr(10) || CAST(least((top3_chars * 20) // greatest(nsc, 1), 20) AS VARCHAR),
-       |  'dup5' || chr(10) || CAST(least((dup5_chars * 20) // greatest(nsc, 1), 20) AS VARCHAR),
-       |  'dup9' || chr(10) || CAST(least((dup9_chars * 20) // greatest(nsc, 1), 20) AS VARCHAR)]) AS f
-       | FROM ${p}sfb)""".stripMargin
-
-  /** Per-doc classifier feature stream over `src` (doc_id, f): the gram
-    * selects plus the stat strings, matching Classifier.featureStream at
-    * the gate config. */
-  private def duckPcptFeatSelects(src: String, p: String): String = {
-    val grams =
-      if (PcptOrders.isEmpty) Nil
-      else Seq(s"SELECT doc_id, unnest(${duckPcptGrams("text")}) AS f FROM $src")
-    val stats = if (PcptStats) Seq(s"SELECT doc_id, f FROM ${p}sfx") else Nil
-    (grams ++ stats).mkString("\n       UNION ALL ")
-  }
-
-  /** Bottom-k sketch size for the q140 quantile gate: rank error
-    * O(1/√k) ≈ 6% at 256 — the screen-band-threshold regime (SketchSpec
-    * pins the observed error), while the sample comfortably broadcasts. */
-  private val SketchK = 256
+  private[graft] val PcptOrders = Seq.empty[Int]
+  private[graft] val PcptStats = true
 
   /** PQ subspace count shared by q85-q87 and their oracles (dim 64 → four
     * 16-dim subspaces). */
-  private val PqM = 4
+  private[graft] val PqM = 4
 
   /** Span window (tokens) shared by q62/q63 and their oracles — 20 fits
     * this corpus's 10-100-token documents; production boilerplate removal
     * would run 50. */
-  private val SpanWindow = 20
-
-  /** Window for the surgical-decontamination gates (q75/q76) — shorter
-    * than SpanWindow so verbatim train↔eval overlaps exist across the
-    * mod-10 split at every SF (production decontamination runs 30-50). */
-  private val EvalSpanWindow = 12
-
-  /** Window for the intra-document repetition gate (q77) — the corpus
-    * repeats itself only at 3-gram scale (q51's duplicate-3gram signal;
-    * no document repeats a 5-token window at any SF), so 3 is the widest
-    * window with live data everywhere. */
-  private val SelfRepeatWindow = 3
+  private[graft] val SpanWindow = 20
 
   /** Winnowing parameters shared by q107/q108 and their oracles: k-gram
     * width 8 and winnow window 4 fit the 10-100-token corpus (guarantee
     * threshold w+k−1 = 11 tokens; production boilerplate hunting runs
     * k≈50, w≈25 for a ~13× sparser index). */
-  private val FpK = 8
-  private val FpW = 4
-
-  /** DuckDB twin of Sampling.epochPlan on `documents` grouped by source
-    * (budget 1M tokens, maxEpochs 4 — q110/q112's constants), ending in
-    * CTE `ep(source, avail, wt, quota, planned)`. */
-  private lazy val epochPlanCte: String =
-    s"""epa AS (SELECT source,
-       |  CAST(sum(len(string_split(text,' '))) AS BIGINT) AS avail
-       |  FROM documents WHERE source IS NOT NULL GROUP BY source),
-       |epw AS (SELECT *, CAST(floor(sqrt(CAST(avail AS DOUBLE))) AS BIGINT) AS wt
-       |  FROM epa WHERE avail > 0),
-       |epz AS (SELECT *, CAST(sum(wt) OVER () AS BIGINT) AS zz FROM epw),
-       |epq AS (SELECT *,
-       |  CAST((CAST(1000000 AS HUGEINT) * wt) // zz AS BIGINT) AS quota FROM epz),
-       |ep AS (SELECT source, avail, wt, quota,
-       |  least(quota, 4 * avail) AS planned FROM epq)""".stripMargin
-
-  /** Constant word-frequency table for the subword-budget gate (q69). A
-    * trained vocabulary is train-time STATE — not SQL-expressible — so
-    * the gate trains from these constants (a pure function of literals)
-    * and the oracle inlines the identical compiled word→units table.
-    * Real pipelines train from `Subword.train(corpus…)`; the counting and
-    * packing machinery under test is the same either way. */
-  private val SubwordGateFreqs: Seq[(String, Long)] = Seq(
-    "the" -> 100L, "and" -> 80L, "of" -> 70L, "to" -> 60L, "a" -> 55L,
-    "data" -> 50L, "with" -> 45L, "model" -> 30L, "training" -> 25L,
-    "pipeline" -> 20L, "document" -> 18L, "corpus" -> 15L, "tokens" -> 8L)
-  private lazy val SubwordGateVocab: graft.functions.Subword.Vocab =
-    graft.functions.Subword.trainFromFrequencies(SubwordGateFreqs, numMerges = 30)
-
-  /** Deterministic multi-sentence message synthesized from customer
-    * columns (the corpus documents carry no sentence punctuation, so the
-    * sentence-chunking gate synthesizes its fixture like q53's
-    * piiMessage): four sentences, the second with a custkey-dependent
-    * length so chunk layouts vary per row. */
-  private def sentenceMessage(customer: DataFrame): DataFrame =
-    customer.select(col("c_custkey"),
-      concat(lit("customer "), col("c_name"), lit(" ranks high. segment "),
-        lower(col("c_mktsegment")), lit(" moves "),
-        trim(lit("very very very very ")
-          .substr(lit(1), ((col("c_custkey") % 4 + 1) * 5).cast("int"))),
-        lit(" fast! account "), col("c_custkey").cast("string"),
-        lit(" closes. bye")).as("msg"))
-
-  /** Deterministic multi-LINE document synthesized from documents columns
-    * (the corpus text is single-line, like q68's sentence fixture): a
-    * global boilerplate line, a per-language line, the unique body, a
-    * per-source footer, and a 1-in-7 share line — the minDocs=5 threshold
-    * then splits them differently at each scale factor (per-source
-    * footers survive at sf0.001 where sources have <5 docs, die above). */
-  private def lineDoc(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      concat_ws("\n",
-        lit("subscribe to our newsletter"),
-        concat(col("lang"), lit(" language section")),
-        col("text"),
-        concat(lit("copyright "), col("source"), lit(" all rights reserved")),
-        when(col("doc_id") % 7 === 0, lit("share this article"))
-      ).as("text"))
-
-  /** Deterministic HTML wrapper around each document (the q98 fixture —
-    * corpus text is already markup-free): title/heading carry text the
-    * stripper must KEEP, style/script/comment carry text it must DROP,
-    * one entity-bearing paragraph exercises decode order, and doc_id%3
-    * link repetitions vary the link census per row. Single-line on
-    * purpose — the portable regexes run with DOTALL off. */
-  private def markupDoc(docs: DataFrame): DataFrame = {
-    val link = "<a href=\"https://example.com/x\">link</a>"
-    docs.select(col("doc_id"),
-      concat(
-        lit("<html><head><title>Doc "), col("doc_id").cast("string"),
-        lit("</title><style type=\"text/css\">p{margin:0}</style>"),
-        lit("<script>var d="), col("doc_id").cast("string"),
-        lit(";track(d);</script></head><body><!-- rendered -->"),
-        lit("<h1 class=\"t\">Doc "), col("doc_id").cast("string"),
-        lit("</h1><p>"), col("text"),
-        lit("</p><p>Tags &amp; entities: &lt;b&gt;&nbsp;&quot;q&quot; &#39;s&#39;</p>"),
-        when(col("doc_id") % 3 === 1, lit(link))
-          .when(col("doc_id") % 3 === 2, lit(link + link))
-          .otherwise(lit("")),
-        lit("</body></html>")
-      ).as("html"))
-  }
-
-  /** Deterministic PII-bearing message synthesized from customer columns —
-    * email always present, phone on 2/3 of rows, IP on 1/4 (concat_ws
-    * skips the NULL branches on both engines). */
-  private def piiMessage(customer: DataFrame): DataFrame =
-    customer.select(col("c_custkey"), col("c_nationkey"),
-      concat_ws(" ",
-        lit("user"), col("c_name"), lit("email"),
-        concat(lower(col("c_mktsegment")), lit("."),
-          col("c_custkey").cast("string"), lit("@corp.example")),
-        when(col("c_custkey") % 3 =!= 0,
-          concat(lit("phone 555-"),
-            lpad((col("c_custkey") % 10000).cast("string"), 4, "0"))),
-        when(col("c_custkey") % 4 === 0,
-          concat(lit("ip 10."), (col("c_custkey") % 223).cast("string"),
-            lit("."), (col("c_nationkey") % 250).cast("string"),
-            lit("."), ((col("c_custkey") * 7) % 250).cast("string")))
-      ).as("msg"))
-
-  /** Interior decile probabilities shared by q55's query and oracle. */
-  private val DecileProbs: Seq[Double] = (1 to 9).map(_ / 10.0)
-
-  /** q59's cleaning cascade (keep-predicates, first failure wins). The
-    * ratio predicates are built with the exact association order the
-    * oracle uses (int counts cast to double, one division). */
-  private def funnelStages: Seq[(String, Column)] = {
-    val ntok = Text.tokenCount(col("text"))
-    Seq(
-      "too_short" -> (col("n_chars") >= 120),
-      "too_few_tokens" -> (ntok >= 25),
-      "low_stopword" -> (Text.stopwordRatio(col("text")) > 0.02),
-      "high_repetition" -> (size(Text.shingleSet(col("text"), 3)).cast("double") /
-        (ntok - 2).cast("double") >= 0.97))
-  }
-
-  /** Source quotas shared by q56's query and oracle. */
-  private val MixtureQuotas: Map[String, Int] =
-    Map("src0" -> 12, "src1" -> 8, "src2" -> 5)
-
-  /** Band quotas shared by q146's query and oracle — head-preferential,
-    * the CCNet §4.3 usage ratio (most of the kept corpus from the head
-    * band, a thin slice of the tail for diversity). */
-  private val BandQuotas: Map[String, Int] =
-    Map("head" -> 60, "middle" -> 30, "tail" -> 10)
-
-  /** Target rows / hash seed for the classifier-weighted PPS gate
-    * (q147 and its oracle). */
-  private val ClsPpsTarget = 100L
-  private val ClsPpsSeed = 11L
+  private[graft] val FpK = 8
+  private[graft] val FpW = 4
 
   /** Per-band keep rates (num, denom) shared by q148's query and oracle —
     * the CCNet head-preferential mix as FRACTIONS (the form that scales:
     * a rate is a stateless per-row test, a quota is a rank). */
-  private val BandRates: Map[String, (Int, Int)] =
+  private[graft] val BandRates: Map[String, (Int, Int)] =
     Map("head" -> ((9, 10)), "middle" -> ((1, 2)), "tail" -> ((1, 10)))
 
   /** The per-band CASE arm of the rate draw's hash-threshold test — ONE
     * builder for both rate-draw oracles (q148, q149), deterministic
     * branch order (sorted band names). */
-  private def bandRateCaseSql(pick: ((Int, Int)) => Int, dflt: Int): String =
+  private[graft] def bandRateCaseSql(pick: ((Int, Int)) => Int, dflt: Int): String =
     BandRates.toSeq.sortBy(_._1)
       .map { case (g, r) => s"WHEN '$g' THEN ${pick(r)}" }
       .mkString("CASE band ", " ", s" ELSE $dflt END")
 
-  /** DuckDB twin of ngramJaccardPairs (n=3, threshold 0.5, uncapped);
-    * shared by q18 and q36's component oracle. */
   /** Per-document base frame shared by the quality/lang oracles (q15,
     * q80, q81): stopword ratio, avg token length, language hit counts —
     * ONE copy so the scorer and its consumers can't drift. */
-  private val docQualityBaseSql =
+  private[graft] lazy val docQualityBaseSql =
     """SELECT doc_id, text,
       |  CAST(len(list_filter(string_split(text,' '), x->x='the'))
       |     + len(list_filter(string_split(text,' '), x->x='a'))
@@ -2385,51 +570,10 @@ object SparkEntry {
       |FROM documents""".stripMargin
 
   /** Scalar quality-score expression over [[docQualityBaseSql]] columns. */
-  private val docQualitySql =
+  private[graft] lazy val docQualitySql =
     """CAST(CAST(length(text) BETWEEN 50 AND 5000 AS INTEGER)
       |    + CAST(swr > 0.01 AS INTEGER)
       |    + CAST(atl BETWEEN 2.0 AND 12.0 AS INTEGER) AS DOUBLE)/3.0*100.0""".stripMargin
-
-  /** Scalar language-id CASE over [[docQualityBaseSql]] columns. */
-  private val docLangSql =
-    """CASE WHEN fr_hits > en_hits AND fr_hits >= es_hits AND fr_hits >= de_hits THEN 'fr'
-      |     WHEN es_hits > en_hits AND es_hits >= de_hits THEN 'es'
-      |     WHEN de_hits > en_hits THEN 'de'
-      |     ELSE 'en' END""".stripMargin
-
-  private def jaccardPairsSqlAt(t: Double): String =
-    s"""WITH sh AS (
-       | SELECT doc_id, unnest(${duckShingleSet("text", 3)}) AS shingle FROM documents),
-       |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |pairs AS (
-       | SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS shared
-       | FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id
-       | GROUP BY a.doc_id, b.doc_id)
-       |SELECT id_a, id_b,
-       | CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) AS jaccard
-       |FROM pairs JOIN sz x ON id_a=x.doc_id JOIN sz y ON id_b=y.doc_id
-       |WHERE CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) >= $t""".stripMargin
-  private val jaccardPairsSql = jaccardPairsSqlAt(0.5)
-
-  /** DuckDB twin of Dedup.spanHashes on `documents` (window = SpanWindow):
-    * position-indexed sliding token windows as strings (span identity ≡
-    * hash identity), 0-based `pos` matching Spark's posexplode. Shared by
-    * q62 and q63. */
-  /** DuckDB twin of Packing.packSequences' layout on `documents` (shards=4,
-    * whitespace tokens): `d` (tokens, hash, shard) and `o` (+ the per-shard
-    * cumsum start_offset). Shared by q50 and q74 — one hand-maintained
-    * copy of the pack layout, like spanCte for the span family (q69
-    * re-derives `d` with subword token counts and cannot share it). */
-  private lazy val packCte: String = {
-    val h = duckHash("CAST(doc_id AS VARCHAR)")
-    s"""d AS (SELECT doc_id,
-       |  CAST(len(string_split(text,' ')) AS BIGINT) AS tokens,
-       |  $h AS h, $h % 4 AS shard FROM documents),
-       |o AS (SELECT doc_id, shard, tokens,
-       |  CAST(COALESCE(sum(tokens) OVER (PARTITION BY shard ORDER BY h ASC, doc_id ASC
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-       | FROM d)""".stripMargin
-  }
 
   /**
    * Gopher A1.1 rule CTE chain over `src`(doc_id, text): `${p}gq` →
@@ -2438,7 +582,7 @@ object SparkEntry {
    * to this corpus's vocabulary). Shared by the q133 oracle (src =
    * documents, no prefix) and the capstone funnel (src = pool, "c").
    */
-  private def gopherCtes(src: String, p: String): String =
+  private[graft] def gopherCtes(src: String, p: String): String =
     s"""${p}gq AS (
        | SELECT doc_id,
        |  CAST(len(string_split(text,' ')) AS BIGINT) AS wc,
@@ -2473,12 +617,12 @@ object SparkEntry {
     * the `gf` CTE), in [[graft.functions.Quality.gopherFlags]] order —
     * the q133 kept-condition and the q136 first-failure arms read the
     * SAME ordered list. */
-  private val GopherCondList: Seq[(String, String)] = Seq(
+  private[graft] val GopherCondList: Seq[(String, String)] = Seq(
     "r_word_count" -> "f1", "r_word_len" -> "f2", "r_symbol_ratio" -> "f3",
     "r_bullet_lines" -> "f4", "r_ellipsis_lines" -> "f5",
     "r_alpha_words" -> "f6", "r_stop_words" -> "f7")
 
-  private val GopherKeptCond: String = GopherCondList.map(_._2).mkString(" AND ")
+  private[graft] lazy val GopherKeptCond: String = GopherCondList.map(_._2).mkString(" AND ")
 
   /**
    * Gopher A1.2 repetition CTE chain over `src`(doc_id, text), ending in
@@ -2488,7 +632,7 @@ object SparkEntry {
    * covered positions, segment repeats via row_number > 1). Shared by
    * the q134 oracle and the capstone funnel.
    */
-  private def repetitionCtes(src: String, p: String): String =
+  private[graft] def repetitionCtes(src: String, p: String): String =
     s"""${p}tk AS (SELECT doc_id, string_split(text,' ') AS ws FROM $src),
        |${p}toklen AS (
        | SELECT doc_id, j, length(ws[j]) AS tl
@@ -2577,7 +721,7 @@ object SparkEntry {
     * canonical `RepetitionThresholds` as exact cross-multiplications
     * (empty denominator passes) — the q134 kept-condition and the q136
     * first-failure arms read the SAME ordered list. */
-  private val RepetitionCondList: Seq[(String, String)] = Seq(
+  private[graft] val RepetitionCondList: Seq[(String, String)] = Seq(
     "r_dup_line_frac"  -> "(total_lines = 0 OR 10*dup_lines <= 3*total_lines)",
     "r_dup_para_frac"  -> "(total_paras = 0 OR 10*dup_paras <= 3*total_paras)",
     "r_dup_line_chars" -> "(total_line_chars = 0 OR 5*dup_line_chars <= total_line_chars)",
@@ -2592,7 +736,7 @@ object SparkEntry {
     "r_dup9_chars"     -> "(total_chars = 0 OR 100*dup9_chars <= 11*total_chars)",
     "r_dup10_chars"    -> "(total_chars = 0 OR 10*dup10_chars <= total_chars)")
 
-  private val RepetitionKeptCond: String =
+  private[graft] lazy val RepetitionKeptCond: String =
     RepetitionCondList.map(_._2).mkString(" AND\n  ")
 
   /**
@@ -2623,239 +767,8 @@ object SparkEntry {
    * Semantics are identical; only `reach` (recursive, column-list head)
    * must stay plain.
    */
-  private def materializeCtes(ctes: String): String =
+  private[graft] def materializeCtes(ctes: String): String =
     ctes.replaceAll("(?m)^([a-z]\\w*) AS \\(", "$1 AS MATERIALIZED (")
-
-  private lazy val capstoneCtes: String = {
-    val p = Hashing.MersennePrime
-    val mins = (0 until 16).map { i =>
-      val (a, b) = Hashing.coeffs(i)
-      s"CAST(min(($a*(h%$p)+$b)%$p) AS BIGINT) AS mh_$i"
-    }.mkString(",\n ")
-    val bandSelects = (0 until 4).map { bi =>
-      val rs = (0 until 4).map(r => s"mh_${bi * 4 + r}")
-      s"SELECT id, $bi AS band, ${rs.zipWithIndex.map { case (c, j) => s"$c AS r$j" }.mkString(", ")} FROM sigx"
-    }.mkString("\n  UNION ALL ")
-    val splitHash = duckHash("CAST(doc_id AS VARCHAR)")
-    materializeCtes(s"""pool AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-       |ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-       |${gopherCtes("pool", "fq")},
-       |${repetitionCtes("pool", "fq")},
-       |fqgk AS (SELECT doc_id FROM fqgf WHERE $GopherKeptCond),
-       |fqrk AS (SELECT doc_id FROM fqwide WHERE $RepetitionKeptCond),
-       |cln AS (SELECT p.doc_id, p.text FROM pool p
-       |        JOIN fqgk USING (doc_id) JOIN fqrk USING (doc_id)
-       |        WHERE len(string_split(p.text,' ')) >= $CapMinTokens),
-       |nrm AS (SELECT doc_id, text,
-       |  trim(regexp_replace(regexp_replace(lower(text),'[^a-z0-9 ]',' ','g'),' +',' ','g')) AS n
-       |  FROM cln),
-       |ex AS (SELECT doc_id, text FROM (
-       |   SELECT doc_id, text, row_number() OVER (PARTITION BY n ORDER BY doc_id) AS rn
-       |   FROM nrm) WHERE rn = 1),
-       |shx AS (SELECT doc_id AS id, unnest(${duckShingleSet("text", 3)}) AS shingle FROM ex),
-       |hx AS (SELECT id, ${duckHash("shingle")} AS h FROM shx),
-       |sigx AS (SELECT id, $mins FROM hx GROUP BY id),
-       |bx AS ($bandSelects),
-       |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |         FROM bx x JOIN bx y USING (band, r0, r1, r2, r3) WHERE x.id < y.id),
-       |szx AS (SELECT id, count(*) AS n FROM shx GROUP BY id),
-       |pr AS (SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS BIGINT) AS shared
-       |       FROM shx a JOIN shx b USING (shingle) WHERE a.id < b.id GROUP BY a.id, b.id),
-       |np AS (SELECT p.id_a, p.id_b FROM pr p JOIN cand USING (id_a, id_b)
-       |       JOIN szx xa ON p.id_a = xa.id JOIN szx yb ON p.id_b = yb.id
-       |       WHERE CAST(shared AS DOUBLE)/CAST(xa.n + yb.n - shared AS DOUBLE) >= 0.5),
-       |edge AS (SELECT id_a AS src, id_b AS dst FROM np UNION SELECT id_b, id_a FROM np),
-       |vtx AS (SELECT DISTINCT src AS id FROM edge),
-       |reach(id, r) AS (
-       | SELECT id, id FROM vtx
-       | UNION
-       | SELECT edge.src, reach.r FROM edge JOIN reach ON edge.dst = reach.id),
-       |keepr AS (SELECT id, min(r) AS keep_id FROM reach GROUP BY id),
-       |nd AS (SELECT e2.doc_id, e2.text FROM ex e2 LEFT JOIN keepr k ON e2.doc_id = k.id
-       |       WHERE k.id IS NULL OR k.id = k.keep_id),
-       |she AS (SELECT doc_id AS id, unnest(${duckShingleSet("text", 3)}) AS shingle FROM ev),
-       |shd AS (SELECT doc_id AS id, unnest(${duckShingleSet("text", 3)}) AS shingle FROM nd),
-       |sze AS (SELECT id, count(*) AS n FROM she GROUP BY id),
-       |szd AS (SELECT id, count(*) AS n FROM shd GROUP BY id),
-       |csh AS (SELECT d.id AS did, e.id AS eid, CAST(count(*) AS BIGINT) AS shared
-       |        FROM shd d JOIN she e USING (shingle) GROUP BY d.id, e.id),
-       |dirty AS (SELECT DISTINCT did FROM csh
-       |          JOIN szd ON csh.did = szd.id JOIN sze ON csh.eid = sze.id
-       |          WHERE CAST(shared AS DOUBLE)/CAST(szd.n + sze.n - shared AS DOUBLE) >= 0.5),
-       |scr AS (SELECT doc_id, text FROM nd WHERE doc_id NOT IN (SELECT did FROM dirty)),
-       |${lmCteN(3, "scr", "fl")},
-       |flu AS (SELECT s.doc_id, s.text FROM scr s JOIN (
-       |  SELECT doc_id FROM flsc GROUP BY doc_id
-       |  HAVING $CapFluencyDen*sum(CASE WHEN matched_ord >= 2 THEN 1 ELSE 0 END)
-       |         >= $CapFluencyNum*count(*)
-       |) fk USING (doc_id)),
-       |corp AS (SELECT doc_id, text,
-       |         CASE WHEN h < 8 THEN 'train' WHEN h < 9 THEN 'val' ELSE 'test' END AS split
-       |         FROM (SELECT doc_id, text, $splitHash % 10 AS h FROM flu)),
-       |pk AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS tokens,
-       |        $splitHash AS h, $splitHash % 4 AS shard
-       |       FROM corp WHERE split = 'train'),
-       |po AS (SELECT doc_id, shard, tokens,
-       |  CAST(COALESCE(sum(tokens) OVER (PARTITION BY shard ORDER BY h ASC, doc_id ASC
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-       |  FROM pk),
-       |seqs AS (SELECT shard,
-       |  CAST(ceil(CAST(max(start_offset + tokens) AS DOUBLE)/512.0) AS BIGINT) AS s
-       |  FROM po GROUP BY shard)""".stripMargin)
-  }
-
-  /**
-   * DuckDB re-derivation of [[graft.functions.Subword.train]]'s BPE merge
-   * table (q130): the word-frequency table, then BpeMerges UNROLLED
-   * count-argmax-merge rounds (numMerges is a constant, so unrolling
-   * beats a recursive CTE — each round needs a global argmax over the
-   * working table, which the single-self-reference recursion rule can't
-   * express). Per round r over the segmented words w{r-1}:
-   *   p_r  adjacent-pair counts weighted by word frequency (overlapping
-   *        occurrences counted, the classic BPE census);
-   *   b_r  the merge choice — count desc, pair lexicographic (ASCII
-   *        corpus, so UTF-8 ORDER BY ≡ the Scala tuple order);
-   *   u_r/k_r/v_r/w_r  the greedy LEFT-TO-RIGHT NON-OVERLAPPING apply:
-   *        adjacent match positions chain only when a = b (s[i+1] must
-   *        equal both halves), so gaps-and-islands over match positions +
-   *        keep-odd-rank-in-chain reproduces the sequential scan; a
-   *        position is dropped iff its predecessor was a kept match.
-   * The working tables (wf/w0/b_r/w_r) are AS MATERIALIZED: DuckDB
-   * inlines CTEs by default, and with 2+ references per round the
-   * inlined tree grows EXPONENTIALLY in rounds (the un-materialized
-   * 12-round form tried to open the parquet file thousands of times).
-   */
-  /**
-   * DuckDB twin of Classifier.trainPerceptron at the gate config: the
-   * oracle first labels its own sample with the SHARED battery fragments
-   * (gopherCtes + repetitionCtes over the PcptSampleN-doc pool — the q133/q134/
-   * q136 formulations, not the Spark expressions), then unrolls the
-   * PcptSampleN·PcptEpochs update steps (q130's convention), each step
-   * one MATERIALIZED CTE carrying the sparse nonzero weight table
-   * (bias = bucket −1, HAVING <> 0 mirrors the Scala side's zero-weight
-   * drop). Step t visits sample doc ((t−1) mod N)+1 in doc_id order;
-   * margin = Σ w·cnt over the previous table (bias rides the join as the
-   * always-present count-1 feature); y·margin ≤ 0 triggers the additive
-   * update. Ends in CTE `wavg` = Σ_t w_t over all steps — the averaged
-   * perceptron's unscaled step-sum, matching the Scala accumulator.
-   */
-  private lazy val perceptronCtes: String = {
-    val steps = PcptSampleN * PcptEpochs
-    val stepCtes = (1 to steps).map { st =>
-      val o = (st - 1) % PcptSampleN + 1
-      s"""w$st AS MATERIALIZED (
-         |  SELECT bucket, CAST(sum(w) AS BIGINT) AS w FROM (
-         |    SELECT bucket, w FROM w${st - 1}
-         |    UNION ALL
-         |    SELECT f.bucket, f.y * f.cnt AS w FROM pf f
-         |    WHERE f.o = $o
-         |      AND f.y * (SELECT COALESCE(sum(p.w * g.cnt), 0)
-         |                 FROM w${st - 1} p JOIN pf g ON g.bucket = p.bucket
-         |                 WHERE g.o = $o) <= 0
-         |  ) GROUP BY bucket HAVING CAST(sum(w) AS BIGINT) <> 0)""".stripMargin
-    }.mkString(",\n")
-    val avgUnion = (1 to steps)
-      .map(t => s"SELECT bucket, w FROM w$t")
-      .mkString("\n    UNION ALL ")
-    val labelCtes = materializeCtes(
-      s"""pool AS (SELECT doc_id, text FROM documents
-         |         ORDER BY doc_id LIMIT $PcptSampleN),
-         |${gopherCtes("pool", "pc")},
-         |${repetitionCtes("pool", "pc")},
-         |lab AS (SELECT g.doc_id,
-         |  CASE WHEN wc >= $CapMinTokens AND $GopherKeptCond AND
-         |   $RepetitionKeptCond THEN 1 ELSE -1 END AS y
-         | FROM pcgq g JOIN pcgf USING (doc_id) JOIN pcwide USING (doc_id))""".stripMargin)
-    s"""$labelCtes,
-       |samp AS MATERIALIZED (
-       |  SELECT row_number() OVER (ORDER BY p.doc_id) AS o, l.y, p.doc_id, p.text
-       |  FROM pool p JOIN lab l ON l.doc_id = p.doc_id),
-       |${duckStatFeats("samp", "pc")},
-       |pf AS MATERIALIZED (
-       |  SELECT o, y, bucket, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |    SELECT o, y, ${duckHash("f")} % $FeatBuckets AS bucket
-       |    FROM (SELECT s.o, s.y, x.f FROM samp s
-       |          JOIN (${duckPcptFeatSelects("samp", "pc")}) x
-       |            ON x.doc_id = s.doc_id))
-       |  GROUP BY o, y, bucket
-       |  UNION ALL
-       |  SELECT o, y, CAST(-1 AS BIGINT) AS bucket, CAST(1 AS BIGINT) AS cnt
-       |  FROM samp),
-       |w0 AS (SELECT CAST(NULL AS BIGINT) AS bucket, CAST(NULL AS BIGINT) AS w
-       |       WHERE false),
-       |$stepCtes,
-       |wavg AS MATERIALIZED (
-       |  SELECT bucket, CAST(sum(w) AS BIGINT) AS w FROM (
-       |    $avgUnion
-       |  ) GROUP BY bucket HAVING CAST(sum(w) AS BIGINT) <> 0)""".stripMargin
-  }
-
-  /** q138's inference chain over the replayed model — bias/weight split,
-    * hashed doc features, per-doc integer score — ending in
-    * `sc(doc_id, score)`. ONE copy shared by q138 and the
-    * classifier-weighted PPS composition (q147), so the gate score and
-    * the sampling weight can never drift; q139 keeps its own
-    * "cq"-prefixed twin beside the battery fragments. */
-  private lazy val classifierScoreCtes: String = {
-    val wf = "wavg"
-    val docFeats = materializeCtes(
-      s"""${repetitionCtes("documents", "sf")},
-         |${duckStatFeats("documents", "sf")}""".stripMargin)
-    s"""$perceptronCtes,
-       |$docFeats,
-       |bc AS (SELECT CAST(COALESCE(sum(w), 0) AS BIGINT) AS bias
-       |       FROM $wf WHERE bucket = -1),
-       |wt AS (SELECT bucket, w FROM $wf WHERE bucket >= 0),
-       |df AS (SELECT doc_id, ${duckHash("f")} % $FeatBuckets AS bucket
-       |       FROM (${duckPcptFeatSelects("documents", "sf")})),
-       |sc AS (SELECT d.doc_id,
-       |        CAST(bc.bias + COALESCE(sum(w.w), 0) AS BIGINT) AS score
-       |       FROM documents d
-       |       CROSS JOIN bc
-       |       LEFT JOIN df ON df.doc_id = d.doc_id
-       |       LEFT JOIN wt w ON w.bucket = df.bucket
-       |       GROUP BY d.doc_id, bc.bias)""".stripMargin
-  }
-
-  private lazy val bpeMergesSql: String = {
-    val rounds = (1 to BpeMerges).map { r =>
-      val prev = s"w${r - 1}"
-      s"""p$r AS (SELECT s[i] AS a, s[i+1] AS b, CAST(sum(f) AS BIGINT) AS c
-         |  FROM (SELECT syms AS s, f, unnest(range(1, len(syms))) AS i FROM $prev)
-         |  GROUP BY s[i], s[i+1]),
-         |b$r AS MATERIALIZED (SELECT a, b FROM p$r ORDER BY c DESC, a ASC, b ASC LIMIT 1),
-         |u$r AS (SELECT word, f, i, s[i] AS sym,
-         |  CASE WHEN i < len(s) AND s[i] = (SELECT a FROM b$r)
-         |        AND s[i+1] = (SELECT b FROM b$r) THEN 1 ELSE 0 END AS m
-         |  FROM (SELECT word, f, syms AS s,
-         |        unnest(range(1, len(syms)+1)) AS i FROM $prev)),
-         |k$r AS (SELECT word, f, i, sym, m,
-         |  CASE WHEN m = 1 THEN row_number() OVER (PARTITION BY word, grp ORDER BY i)
-         |       ELSE 0 END AS rk
-         |  FROM (SELECT *, CASE WHEN m = 1
-         |          THEN i - row_number() OVER (PARTITION BY word, m ORDER BY i)
-         |          ELSE NULL END AS grp FROM u$r)),
-         |v$r AS (SELECT word, f, i, sym, keep,
-         |  COALESCE(lag(keep) OVER (PARTITION BY word ORDER BY i), false) AS consumed
-         |  FROM (SELECT word, f, i, sym, (m = 1 AND rk % 2 = 1) AS keep FROM k$r)),
-         |w$r AS MATERIALIZED (SELECT word, f,
-         |  list(CASE WHEN keep THEN (SELECT a FROM b$r) || (SELECT b FROM b$r)
-         |       ELSE sym END ORDER BY i) AS syms
-         |  FROM v$r WHERE NOT consumed GROUP BY word, f)""".stripMargin
-    }.mkString(",\n")
-    val table = (1 to BpeMerges).map(r =>
-      s"SELECT CAST($r AS INTEGER) AS rank, a, b, a || b AS merged FROM b$r")
-      .mkString("\n UNION ALL ")
-    s"""WITH wf AS MATERIALIZED (SELECT token AS word, CAST(count(*) AS BIGINT) AS f
-       |  FROM (SELECT unnest(string_split(text,' ')) AS token FROM documents)
-       |  WHERE token <> '' GROUP BY token
-       |  ORDER BY f DESC, word ASC LIMIT $BpeMaxWords),
-       |w0 AS MATERIALIZED (SELECT word, f,
-       |  list_transform(range(1, len(word)+1),
-       |    j -> substr(word, CAST(j AS INTEGER), 1)) AS syms FROM wf),
-       |$rounds
-       |$table""".stripMargin
-  }
 
   /**
    * DuckDB twin of NgramLm.lmCounts + scoreTokens at order `n` (Stupid
@@ -2875,8 +788,8 @@ object SparkEntry {
    * over its own post-screen CTE) — the token-grain result is
    * `<prefix>sc`.
    */
-  private def lmCteN(n: Int, table: String = "documents",
-                     prefix: String = ""): String = {
+  private[graft] def lmCteN(n: Int, table: String = "documents",
+                            prefix: String = ""): String = {
     val P = prefix
     val gramDefs = (2 to n).flatMap { k => Seq(
       s"CASE WHEN i >= $k THEN array_to_string(toks[i-${k - 1}:i-1],' ') END AS b${k - 1}",
@@ -2920,20 +833,14 @@ object SparkEntry {
        |  CASE $denCase ELSE (SELECT n_tokens FROM ${P}tot) END AS c_den
        |  FROM ${P}lk)""".stripMargin
   }
-  private lazy val lmCte: String = lmCteN(3)
 
-  /** q144's banding chain (trigram backoff census → order-≥2 match
-    * permille → row-grain tercile edges → value-vs-edge assignment),
-    * ending in `bd(doc_id, source, fluency_pm, band)` — ONE copy shared
-    * by q144 and the band-mixture composition (q146), so the banding
-    * gate and its downstream draw can never band differently. */
   /** Row-grain tercile edges + value-vs-edge band assignment over a
     * permille CTE `pmCte(..., fluency_pm)` — ONE copy of the banding
     * recipe read by every banding oracle (q144/q146/q148 partitioned by
     * source; q149 global). Emits `<p>rk`/`<p>th`/`<p>bd`; `<p>bd` is
     * pmCte's columns plus `band`. */
-  private def tercileBandSql(p: String, pmCte: String,
-                             grpCol: Option[String]): String = {
+  private[graft] def tercileBandSql(p: String, pmCte: String,
+                                    grpCol: Option[String]): String = {
     val gsel = grpCol.map(g => s"$g, ").getOrElse("")
     val part = grpCol.map(g => s"PARTITION BY $g ").getOrElse("")
     val cnt = grpCol.map(g => s"PARTITION BY $g").getOrElse("")
@@ -2954,2304 +861,4 @@ object SparkEntry {
        |       ELSE 'head' END AS band
        | FROM $pmCte p $join)""".stripMargin
   }
-
-  private lazy val fluencyBandCtes: String =
-    s"""$lmCte,
-       |cen AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sn,
-       |  CAST(sum(CASE WHEN matched_ord >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS hi
-       | FROM sc GROUP BY doc_id),
-       |pm AS (SELECT d.doc_id, d.source,
-       |  (c.hi * 1000) // c.sn AS fluency_pm
-       | FROM documents d JOIN cen c ON d.doc_id = c.doc_id),
-       |${tercileBandSql("", "pm", Some("source"))}""".stripMargin
-
-  /** q62's oracle — merged duplicated-span ranges; shared verbatim by
-    * q120 (the winnow-accelerated plan must reproduce it exactly). */
-  private lazy val spanRangesSql: String =
-    s"""WITH $spanCte,
-       |d AS (SELECT span FROM sp GROUP BY span HAVING count(DISTINCT doc_id) >= 2),
-       |m AS (SELECT sp.doc_id, sp.pos FROM sp JOIN d USING (span)),
-       |f AS (SELECT doc_id, pos,
-       |  CASE WHEN lag(pos) OVER w IS NULL OR pos > lag(pos) OVER w + $SpanWindow
-       |       THEN 1 ELSE 0 END AS nw
-       | FROM m WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-       |g AS (SELECT doc_id, pos, sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-       |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f)
-       |SELECT doc_id, min(pos) AS span_start,
-       | max(pos) + ${SpanWindow - 1} AS span_end,
-       | CAST(count(*) AS BIGINT) AS n_windows
-       |FROM g GROUP BY doc_id, grp""".stripMargin
-
-  private def spanCteW(w: Int): String =
-    s"""t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-       |ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks)-${w - 1})) AS i
-       |       FROM t WHERE len(toks) >= $w),
-       |sp AS (SELECT doc_id, CAST(i-1 AS BIGINT) AS pos,
-       |       array_to_string(toks[i:i+${w - 1}],' ') AS span FROM ix)""".stripMargin
-  private lazy val spanCte: String = spanCteW(SpanWindow)
-
-  /** DuckDB twin of Dedup.winnowedFingerprints (k-gram width k, winnow
-    * window w), ending in CTE `fp(doc_id, pos, h)`: explicit window-start
-    * enumeration + rightmost-min row_number — an INDEPENDENT formulation
-    * of the running frame-min(struct) the Scala side uses, so the gate
-    * cross-validates the selection rule itself, not just the hashing.
-    * Shares spanCteW's positional k-gram stream. */
-  private def winnowCte(k: Int, w: Int): String =
-    s"""${spanCteW(k)},
-       |hh AS (SELECT doc_id, pos, ${duckHash("span")} AS h FROM sp),
-       |nn AS (SELECT doc_id,
-       |  CAST(len(string_split(text,' ')) - ${k - 1} AS BIGINT) AS nk
-       |  FROM documents WHERE len(string_split(text,' ')) >= $k),
-       |ws AS (SELECT doc_id,
-       |  unnest(generate_series(0, greatest(nk - $w, 0))) AS p FROM nn),
-       |fp AS (SELECT DISTINCT doc_id, pos, h FROM (
-       |  SELECT ws.doc_id, hh.pos, hh.h,
-       |   row_number() OVER (PARTITION BY ws.doc_id, ws.p
-       |                      ORDER BY hh.h ASC, hh.pos DESC) AS rn
-       |  FROM ws JOIN hh ON hh.doc_id = ws.doc_id
-       |   AND hh.pos BETWEEN ws.p AND ws.p + ${w - 1}) WHERE rn = 1)""".stripMargin
-
-  /** Fixed hyperplanes for q34 (dim 64 embeddings, 16 bits, seed 42). */
-  private lazy val RpPlanes: Array[Array[Double]] =
-    graft.operators.Similarity.hyperplanes(dim = 64, bits = 16)
-
-  /** DuckDB twin of minhashSignatures(n=3, numHashes=16) — shared by q19,
-    * q20, q39. */
-  private lazy val minhashSigSql: String = {
-    val p = Hashing.MersennePrime
-    val mins = (0 until 16).map { i =>
-      val (a, b) = Hashing.coeffs(i)
-      s"CAST(min(($a*(h%$p)+$b)%$p) AS BIGINT) AS mh_$i"
-    }.mkString(",\n ")
-    s"""WITH sh AS (
-       | SELECT doc_id AS id, unnest(${duckShingleSet("text", 3)}) AS shingle FROM documents),
-       |h AS (SELECT id, ${duckHash("shingle")} AS h FROM sh)
-       |SELECT id, $mins FROM h GROUP BY id""".stripMargin
-  }
-
-  /** DuckDB twin of minhashLshCandidates(16 hashes, 4 bands × 4 rows):
-    * bucket on each band's 4-tuple, emit distinct co-bucketed pairs —
-    * shared by q20 and q39. */
-  private lazy val lshCandidatesSql: String = {
-    val bandSelects = (0 until 4).map { bi =>
-      val rs = (0 until 4).map(r => s"mh_${bi * 4 + r}")
-      s"SELECT id, $bi AS band, ${rs.zipWithIndex.map { case (c, j) => s"$c AS r$j" }.mkString(", ")} FROM sig"
-    }.mkString("\n UNION ALL ")
-    s"""WITH sig AS ($minhashSigSql),
-       |b AS ($bandSelects)
-       |SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |FROM b x JOIN b y USING (band, r0, r1, r2, r3)
-       |WHERE x.id < y.id""".stripMargin
-  }
-
-  /** DuckDB normalized-vector CTE prefix shared by the embedding oracles:
-    * views n (vectors with norms) over `embeddings`. */
-  private val vecNormCte =
-    """v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-      |n AS (SELECT vec_id, e,
-      |       sqrt(list_reduce(list_transform(e, x -> x*x), (a,b) -> a+b)) AS nrm FROM v)""".stripMargin
-
-  /** Dot/cosine between two normalized-CTE rows (same association order as
-    * VectorExprs.cosine: left-to-right pairwise product fold, then ÷ norms). */
-  private def duckCosine(a: String, b: String): String =
-    s"list_reduce(list_transform(list_zip($a.e, $b.e), z -> z[1]*z[2]), (x,y) -> x+y) / ($a.nrm * $b.nrm)"
-
-  /**
-   * DuckDB twin of assignToCentroids over `embeddings` with centroids
-   * vec_id % 50 = 0: row_number over (cosine DESC, centroid_id ASC) ≡ the
-   * Spark side's max_by(centroid_id, struct(ccos, −centroid_id)) /
-   * sorted-slice. Keeps rn so callers select rn=1 (nprobe 1) or rn<=2.
-   */
-  private val centroidAssignCte =
-    s"""cents AS (SELECT vec_id AS centroid_id, e, nrm FROM n WHERE vec_id % 50 = 0),
-       |assign AS (
-       | SELECT vec_id, e, nrm, centroid_id, rn FROM (
-       |  SELECT n.vec_id, n.e, n.nrm, c.centroid_id,
-       |   row_number() OVER (PARTITION BY n.vec_id
-       |                      ORDER BY ${duckCosine("n", "c")} DESC, c.centroid_id ASC) AS rn
-       |  FROM n CROSS JOIN cents c))""".stripMargin
-
-  /** DuckDB twin of embeddingNearDupPairs(centroids = vec_id%50=0,
-    * threshold 0.4, nprobe 2) — shared by q23 and q67's component oracle. */
-  private lazy val embNearDupPairsSql: String =
-    s"""WITH $vecNormCte,
-       |$centroidAssignCte
-       |SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-       | ${duckCosine("a", "b")} AS cosine
-       |FROM (SELECT * FROM assign WHERE rn <= 2) a
-       |JOIN (SELECT * FROM assign WHERE rn <= 2) b
-       |  ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-       |WHERE ${duckCosine("a", "b")} >= 0.4""".stripMargin
-
-  /** DuckDB twin of pqCodebooks+pqEncode over `embeddings` (m=PqM 16-dim
-    * subspaces, codewords = vec_id%50=0 rows, squared-L2 assignment with
-    * ties → smallest codeword id). Needs `v` from [[vecNormCte]]. Shared
-    * by q85 and q86. */
-  private lazy val pqCodeCte: String = {
-    val sub = 64 / PqM
-    s"""sub AS (SELECT vec_id, s, list_slice(e, s*$sub+1, s*$sub+$sub) AS sv
-       |       FROM v, (SELECT unnest(range($PqM)) AS s)),
-       |cw AS (SELECT vec_id AS cw_id, s, sv FROM sub WHERE vec_id % 50 = 0),
-       |code AS (SELECT vec_id, s, cw_id FROM (
-       | SELECT t.vec_id, t.s, c.cw_id,
-       |  row_number() OVER (PARTITION BY t.vec_id, t.s ORDER BY
-       |   list_reduce(list_transform(list_zip(t.sv, c.sv), z -> (z[1]-z[2])*(z[1]-z[2])), (x,y) -> x+y) ASC,
-       |   c.cw_id ASC) AS rn
-       | FROM sub t JOIN cw c USING (s)) WHERE rn = 1)""".stripMargin
-  }
-
-  /** PQ reconstructions with norms (views recon, rq) over [[pqCodeCte]]'s
-    * `code`/`cw` — the corpus side every asymmetric-distance oracle scores
-    * against. Shared by q86 and q87. */
-  private val pqReconCte: String =
-    """recon AS (SELECT co.vec_id, flatten(list(c.sv ORDER BY co.s)) AS e
-      |          FROM code co JOIN cw c ON co.s = c.s AND co.cw_id = c.cw_id
-      |          GROUP BY co.vec_id),
-      |rq AS (SELECT vec_id, e,
-      |        sqrt(list_reduce(list_transform(e, x -> x*x), (a,b) -> a+b)) AS nrm FROM recon)""".stripMargin
-
-  // -------------------------------------------------------------- oracleSql
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) AS sum_base_price,
-        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS sum_disc_price,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)/count(l_quantity) AS avg_qty,
-        | CAST(sum(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE)/count(l_discount) AS avg_disc,
-        | CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_revenue_by_nation" ->
-      """SELECT n_name,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-        | CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders JOIN customer ON o_custkey=c_custkey JOIN nation ON c_nationkey=n_nationkey
-        |GROUP BY n_name""".stripMargin,
-
-    "q03_top_customers" ->
-      """SELECT o_custkey, c_name, revenue, order_count FROM (
-        | SELECT o_custkey,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS order_count
-        | FROM orders GROUP BY o_custkey) r
-        |JOIN customer ON o_custkey=c_custkey
-        |ORDER BY revenue DESC, o_custkey ASC LIMIT 10""".stripMargin,
-
-    "q04_latest_event_per_user" ->
-      """SELECT user_id, event_id, event_type,
-        | CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch, value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-        |      FROM events) WHERE rn=1""".stripMargin,
-
-    "q05_mode_event_type" ->
-      """SELECT user_id, mode_event FROM (
-        | SELECT user_id, event_type AS mode_event,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY count(*) DESC, event_type ASC) rn
-        | FROM events GROUP BY user_id, event_type) WHERE rn=1""".stripMargin,
-
-    "q06_daily_event_summary" ->
-      """SELECT CAST(ts AS DATE) AS reading_date,
-        | CAST(count(*) AS BIGINT) AS event_count,
-        | CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)/count(value) AS avg_value,
-        | CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value,
-        | CAST(sum(CASE WHEN value>400.0 THEN 1 ELSE 0 END) AS BIGINT) AS high_count,
-        | CAST(sum(CASE WHEN value>400.0 THEN 1 ELSE 0 END) AS DOUBLE)*100.0/count(*) AS high_pct,
-        | CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_users
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q07_event_type_distribution" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-        | CAST(count(*) AS DOUBLE)*100.0/CAST(sum(count(*)) OVER () AS DOUBLE) AS pct
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q08_dedup_first_event" ->
-      """SELECT user_id, event_type, CAST(min(event_id) AS BIGINT) AS event_id
-        |FROM events GROUP BY user_id, event_type""".stripMargin,
-
-    "q09_anti_join_quiet_customers" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>300000.0)""".stripMargin,
-
-    "q10_union_tagged_events" ->
-      """SELECT user_id, event_id, 'high_purchase' AS tag FROM events
-        | WHERE event_type='purchase' AND value>450.0
-        |UNION ALL
-        |SELECT user_id, event_id, 'error' AS tag FROM events WHERE event_type='error'""".stripMargin,
-
-    "q11_weather_enrichment" -> enrichedSql,
-
-    "q12_alert_filter" ->
-      s"""SELECT event_id, alert_level, weather_severity, heat_index_celsius,
-         | precipitation_mm, wind_speed_kmh, visibility_km, uv_index
-         |FROM ($enrichedSql) WHERE alert_level IN ('WARNING','CRITICAL')""".stripMargin,
-
-    "q13_alert_distribution" ->
-      s"""SELECT alert_level, CAST(count(*) AS BIGINT) AS cnt,
-         | CAST(count(*) AS DOUBLE)*100.0/CAST(sum(count(*)) OVER () AS DOUBLE) AS pct
-         |FROM ($enrichedSql) GROUP BY alert_level""".stripMargin,
-
-    "q14_doc_token_stats" ->
-      """SELECT doc_id,
-        | CAST(len(string_split(text,' ')) AS INTEGER) AS token_count,
-        | (CAST(length(text) AS DOUBLE) - (CAST(len(string_split(text,' ')) AS DOUBLE)-1.0))
-        |   / CAST(len(string_split(text,' ')) AS DOUBLE) AS avg_token_len,
-        | CAST(len(list_filter(string_split(text,' '), x->x='the'))
-        |    + len(list_filter(string_split(text,' '), x->x='a'))
-        |    + len(list_filter(string_split(text,' '), x->x='of'))
-        |    + len(list_filter(string_split(text,' '), x->x='and'))
-        |    + len(list_filter(string_split(text,' '), x->x='to')) AS DOUBLE)
-        |   / CAST(len(string_split(text,' ')) AS DOUBLE) AS stopword_ratio
-        |FROM documents""".stripMargin,
-
-    "q15_doc_quality_langid" ->
-      s"""SELECT doc_id,
-         | $docQualitySql AS quality_score,
-         | $docLangSql AS lang_pred
-         |FROM ($docQualityBaseSql)""".stripMargin,
-
-    "q16_exact_text_dedup" ->
-      """SELECT md5(text) AS text_md5, CAST(min(doc_id) AS BIGINT) AS keep_id,
-        | CAST(count(*) AS BIGINT) AS dup_count
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-
-    "q48_tfidf_top_terms" ->
-      """WITH tf AS (
-        | SELECT doc_id AS id, token, CAST(count(*) AS BIGINT) AS tf
-        | FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
-        | GROUP BY doc_id, token),
-        |df AS (
-        | SELECT token, CAST(count(*) AS BIGINT) AS doc_freq
-        | FROM (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
-        | GROUP BY token),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |scored AS (
-        | SELECT id, token, CAST(tf * n_docs AS DOUBLE)/doc_freq AS score
-        | FROM tf JOIN df USING (token) CROSS JOIN n)
-        |SELECT id, CAST(rank AS INTEGER) AS rank, token, score FROM (
-        | SELECT *, row_number() OVER (PARTITION BY id ORDER BY score DESC, token ASC) AS rank
-        | FROM scored) WHERE rank <= 5""".stripMargin,
-
-    "q47_vocab_topk" ->
-      """WITH tf AS (
-        | SELECT token, CAST(count(*) AS BIGINT) AS occurrences
-        | FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        | GROUP BY token),
-        |df AS (
-        | SELECT token, CAST(count(*) AS BIGINT) AS doc_freq
-        | FROM (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
-        | GROUP BY token)
-        |SELECT token, occurrences, doc_freq
-        |FROM tf JOIN df USING (token)
-        |ORDER BY occurrences DESC, token ASC LIMIT 100""".stripMargin,
-
-    "q46_normalized_dedup" ->
-      """SELECT md5(n) AS text_md5, CAST(min(doc_id) AS BIGINT) AS keep_id,
-        | CAST(count(*) AS BIGINT) AS dup_count
-        |FROM (SELECT doc_id,
-        |        trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-        |             ' +', ' ', 'g')) AS n
-        |      FROM documents)
-        |GROUP BY md5(n)""".stripMargin,
-
-    "q17_doc_fingerprint" ->
-      s"""SELECT doc_id,
-         | list_reduce(
-         |   list_transform(string_split(text,' '), t -> ${duckHash("t")} % 1000000007),
-         |   (a, b) -> (a*31 + b) % 1000000007) AS fingerprint
-         |FROM documents""".stripMargin,
-
-    "q18_ngram_jaccard_pairs" -> jaccardPairsSql,
-
-    // Prefix-filtered join at its production threshold: q18's oracle
-    // parameterized to t=0.8.
-    "q117_jaccard_prefix" -> jaccardPairsSqlAt(0.8),
-
-    // ROLLUP census: GROUPING() carries the same leftmost-MSB bitmask
-    // convention on both engines.
-    "q118_rollup_census" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens,
-        | CAST(GROUPING(lang, source) AS BIGINT) AS lvl
-        |FROM documents GROUP BY ROLLUP(lang, source)""".stripMargin,
-
-    // CUBE census: DuckDB dayofweek is 0=Sunday, Spark is 1=Sunday — the
-    // +1 remap from the enrichment oracles; GROUPING() bitmask as q118.
-    "q121_cube_census" ->
-      """SELECT event_type, CAST(dayofweek(ts)+1 AS INTEGER) AS weekday,
-        | CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(CAST(floor(value*100.0+0.5) AS BIGINT)) AS BIGINT) AS cents_sum,
-        | CAST(GROUPING(event_type, CAST(dayofweek(ts)+1 AS INTEGER)) AS BIGINT) AS lvl
-        |FROM events
-        |GROUP BY CUBE(event_type, CAST(dayofweek(ts)+1 AS INTEGER))""".stripMargin,
-
-    // Trailing hour: RANGE frame over epoch seconds, exact cent sums.
-    "q119_trailing_hour" ->
-      """SELECT event_id, user_id,
-        | CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch,
-        | CAST(floor(value*100.0+0.5) AS BIGINT) AS cents,
-        | CAST(count(*) OVER w AS BIGINT) AS trail_n,
-        | CAST(sum(CAST(floor(value*100.0+0.5) AS BIGINT)) OVER w AS BIGINT) AS trail_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q19_minhash_signatures" -> minhashSigSql,
-
-    "q20_minhash_lsh_candidates" -> lshCandidatesSql,
-
-    // End-to-end minhash near-dup = (exact pairs ≥ threshold) ∩ (LSH
-    // candidates): both factors already proven individually (q18, q20).
-    "q39_minhash_neardup_pairs" ->
-      s"""SELECT j.id_a, j.id_b, j.jaccard
-         |FROM ($jaccardPairsSql) j
-         |JOIN ($lshCandidatesSql) c USING (id_a, id_b)""".stripMargin,
-
-    // q39 pairs labeled by the q43 hash split on each side; keep pairs whose
-    // sides disagree (split is a pure function of the id — no corpus join).
-    "q61_split_leakage" -> {
-      def sp(c: String) = {
-        val h = s"${duckHash(s"CAST($c AS VARCHAR)")} % 10"
-        s"CASE WHEN $h < 8 THEN 'train' WHEN $h < 9 THEN 'val' ELSE 'test' END"
-      }
-      s"""SELECT j.id_a, j.id_b, j.jaccard,
-         | ${sp("j.id_a")} AS split_a, ${sp("j.id_b")} AS split_b
-         |FROM ($jaccardPairsSql) j
-         |JOIN ($lshCandidatesSql) c USING (id_a, id_b)
-         |WHERE ${sp("j.id_a")} <> ${sp("j.id_b")}""".stripMargin
-    },
-
-    "q21_simhash_signatures" -> {
-      val bitSums = (0 until 32)
-        .map(j => s"sum(CASE WHEN ((h>>$j)&1)=1 THEN 1 ELSE -1 END) AS b_$j").mkString(",\n ")
-      val sig = (0 until 32)
-        .map(j => s"CASE WHEN b_$j>0 THEN ${1L << j}::BIGINT ELSE 0::BIGINT END")
-        .mkString("+")
-      s"""WITH toks AS (SELECT doc_id AS id, unnest(string_split(text,' ')) AS t FROM documents),
-         |h AS (SELECT id, ${duckHash("t")} AS h FROM toks),
-         |bits AS (SELECT id, $bitSums FROM h GROUP BY id)
-         |SELECT id, $sig AS simhash FROM bits""".stripMargin
-    },
-
-    "q22_knn_bruteforce" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |n AS (SELECT vec_id, e,
-        |       sqrt(list_reduce(list_transform(e, x -> x*x), (a,b) -> a+b)) AS nrm FROM v),
-        |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |       list_reduce(list_transform(list_zip(q.e, c.e), z -> z[1]*z[2]), (a,b) -> a+b)
-        |         / (q.nrm * c.nrm) AS cosine
-        |      FROM n q JOIN n c ON q.vec_id <> c.vec_id WHERE q.vec_id < 10)
-        |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine FROM (
-        | SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        | FROM s) WHERE rank <= 5""".stripMargin,
-
-    // Bucketed contract: cosine ≥ 0.4 among pairs sharing ≥1 of their top-2
-    // nearest centroids (same assignment tie-break as the Spark side).
-    "q23_embedding_neardup_pairs" -> embNearDupPairsSql,
-
-    // Semantic dedup groups: q23's pair contract closed into connected
-    // components (the q36 recursive-reachability oracle in embedding space).
-    "q67_semantic_groups" ->
-      s"""WITH RECURSIVE
-         |p AS (SELECT id_a, id_b FROM ($embNearDupPairsSql)),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT src AS id FROM e),
-         |reach(id, r) AS (
-         | SELECT id, id FROM nodes
-         | UNION
-         | SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-         |SELECT id, CAST(min(r) AS BIGINT) AS keep_id, (id = min(r)) AS is_keeper
-         |FROM reach GROUP BY id""".stripMargin,
-
-    // IVF (nprobe=1): both queries (vec_id<10) and corpus assigned to their
-    // nearest %50 centroid; search within the shared bucket only.
-    "q24_knn_ivf" ->
-      s"""WITH $vecNormCte,
-         |$centroidAssignCte,
-         |a1 AS (SELECT * FROM assign WHERE rn = 1),
-         |s AS (SELECT q.vec_id AS query_id, t.vec_id AS neighbor_id,
-         |       ${duckCosine("q", "t")} AS cosine
-         |      FROM a1 q JOIN a1 t
-         |        ON q.centroid_id = t.centroid_id AND q.vec_id <> t.vec_id
-         |      WHERE q.vec_id < 10)
-         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine FROM (
-         | SELECT *, row_number() OVER (PARTITION BY query_id
-         |                              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-         | FROM s) WHERE rank <= 5""".stripMargin,
-
-    // PQ codes: per-(vector, subspace) nearest codeword in squared L2.
-    "q85_pq_codes" ->
-      s"""WITH $vecNormCte,
-         |$pqCodeCte
-         |SELECT vec_id, CAST(s AS INTEGER) AS subspace, cw_id FROM code""".stripMargin,
-
-    // Asymmetric PQ top-k: true queries vs codeword reconstructions
-    // (flatten of the code's subvectors in subspace order).
-    "q86_pq_adc_topk" ->
-      s"""WITH $vecNormCte,
-         |$pqCodeCte,
-         |$pqReconCte,
-         |s2 AS (SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-         |        ${duckCosine("q", "r")} AS cosine
-         |       FROM (SELECT * FROM n WHERE vec_id < 10) q
-         |       JOIN rq r ON q.vec_id <> r.vec_id)
-         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine FROM (
-         | SELECT *, row_number() OVER (PARTITION BY query_id
-         |                              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-         | FROM s2) WHERE rank <= 5""".stripMargin,
-
-    // IVF-PQ: queries and corpus coarse-assigned to their nearest %50
-    // centroid (assign CTE); candidates = the query's bucket; scores = true
-    // query vs PQ reconstruction (asymmetric).
-    "q87_ivfpq_topk" ->
-      s"""WITH $vecNormCte,
-         |$centroidAssignCte,
-         |$pqCodeCte,
-         |$pqReconCte,
-         |a1 AS (SELECT vec_id, centroid_id FROM assign WHERE rn = 1),
-         |s2 AS (SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-         |        ${duckCosine("q", "r")} AS cosine
-         |       FROM (SELECT * FROM n WHERE vec_id < 10) q
-         |       JOIN a1 qa ON qa.vec_id = q.vec_id
-         |       JOIN a1 ca ON ca.centroid_id = qa.centroid_id
-         |       JOIN rq r ON r.vec_id = ca.vec_id AND r.vec_id <> q.vec_id)
-         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine FROM (
-         | SELECT *, row_number() OVER (PARTITION BY query_id
-         |                              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-         | FROM s2) WHERE rank <= 5""".stripMargin,
-
-    // Hard negatives: anchors probe their top-2 centroid buckets (rn<=2),
-    // corpus single-assigned (rn=1); candidates must carry a DIFFERENT
-    // non-null label; top-3 per anchor by cosine (ties → smallest id).
-    // Assignment is per-row (broadcast centroids), so label-filtering
-    // after assignment ≡ the Spark side's filter-then-assign.
-    "q88_hard_negatives" ->
-      s"""WITH $vecNormCte,
-         |$centroidAssignCte,
-         |lbl AS (SELECT vec_id, label FROM embeddings WHERE label IS NOT NULL),
-         |ap AS (SELECT a.* FROM assign a JOIN lbl USING (vec_id) WHERE rn <= 2),
-         |c1 AS (SELECT a.* FROM assign a JOIN lbl USING (vec_id) WHERE rn = 1),
-         |s2 AS (SELECT x.vec_id AS anchor_id, y.vec_id AS negative_id,
-         |        ${duckCosine("x", "y")} AS cosine
-         |       FROM ap x JOIN c1 y
-         |         ON x.centroid_id = y.centroid_id AND x.vec_id <> y.vec_id
-         |       JOIN lbl la ON la.vec_id = x.vec_id
-         |       JOIN lbl lb ON lb.vec_id = y.vec_id
-         |       WHERE la.label <> lb.label)
-         |SELECT anchor_id, CAST(rank AS INTEGER) AS rank, negative_id, cosine FROM (
-         | SELECT *, row_number() OVER (PARTITION BY anchor_id
-         |                              ORDER BY cosine DESC, negative_id ASC) AS rank
-         | FROM s2) WHERE rank <= 3""".stripMargin,
-
-    // Two-stage re-rank: q86's ADC scoring proposes top-RerankC, the TRUE
-    // vectors (CTE n) re-score exactly, final top-5 by exact cosine.
-    "q122_adc_rerank" ->
-      s"""WITH $vecNormCte,
-         |$pqCodeCte,
-         |$pqReconCte,
-         |s2 AS (SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-         |        ${duckCosine("q", "r")} AS cosine
-         |       FROM (SELECT * FROM n WHERE vec_id < 10) q
-         |       JOIN rq r ON q.vec_id <> r.vec_id),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
-         |  FROM s2) WHERE rank <= $RerankC),
-         |ex AS (SELECT c.query_id, c.neighbor_id, ${duckCosine("q", "v")} AS cosine
-         |       FROM cand c JOIN n q ON q.vec_id = c.query_id
-         |       JOIN n v ON v.vec_id = c.neighbor_id)
-         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine FROM (
-         | SELECT *, row_number() OVER (PARTITION BY query_id
-         |                              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-         | FROM ex) WHERE rank <= 5""".stripMargin,
-
-    // IVF-PQ + re-rank: q87's bucket-pruned ADC proposals, exact re-score.
-    "q123_ivfpq_rerank" ->
-      s"""WITH $vecNormCte,
-         |$centroidAssignCte,
-         |$pqCodeCte,
-         |$pqReconCte,
-         |a1 AS (SELECT vec_id, centroid_id FROM assign WHERE rn = 1),
-         |s2 AS (SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-         |        ${duckCosine("q", "r")} AS cosine
-         |       FROM (SELECT * FROM n WHERE vec_id < 10) q
-         |       JOIN a1 qa ON qa.vec_id = q.vec_id
-         |       JOIN a1 ca ON ca.centroid_id = qa.centroid_id
-         |       JOIN rq r ON r.vec_id = ca.vec_id AND r.vec_id <> q.vec_id),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
-         |  FROM s2) WHERE rank <= $RerankC),
-         |ex AS (SELECT c.query_id, c.neighbor_id, ${duckCosine("q", "v")} AS cosine
-         |       FROM cand c JOIN n q ON q.vec_id = c.query_id
-         |       JOIN n v ON v.vec_id = c.neighbor_id)
-         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine FROM (
-         | SELECT *, row_number() OVER (PARTITION BY query_id
-         |                              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-         | FROM ex) WHERE rank <= 5""".stripMargin,
-
-    // Arbitrary grouping sets: DuckDB's native GROUPING SETS, same
-    // GROUPING() bitmask convention as q118/q121.
-    "q124_grouping_sets" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens,
-        | CAST(GROUPING(lang, source) AS BIGINT) AS lvl
-        |FROM documents GROUP BY GROUPING SETS ((lang),(source),())""".stripMargin,
-
-    // Epoch stream (q112's CTEs verbatim) composed with q96's WFQ rank —
-    // the uid key (doc·8+epoch) reshuffles each epoch independently.
-    "q125_epoch_curriculum" ->
-      s"""WITH $epochPlanCte,
-         |pl AS (SELECT source, planned // avail AS full_epochs,
-         |        planned % avail AS remainder FROM ep),
-         |d AS (SELECT doc_id, source,
-         |   CAST(len(string_split(text,' ')) AS BIGINT) AS tokens
-         |  FROM documents WHERE source IS NOT NULL),
-         |fe AS (SELECT doc_id, d.source,
-         |   unnest(generate_series(1, full_epochs)) AS epoch, tokens
-         |  FROM d JOIN pl USING (source) WHERE full_epochs >= 1),
-         |r0 AS (SELECT d.*, full_epochs, remainder,
-         |   COALESCE(sum(tokens) OVER (PARTITION BY d.source
-         |     ORDER BY ${duckHash("'7 ' || CAST(doc_id AS VARCHAR)")} ASC, doc_id ASC
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-         |  FROM d JOIN pl USING (source)),
-         |es AS (SELECT doc_id, source, CAST(epoch AS BIGINT) AS epoch, tokens FROM fe
-         |  UNION ALL
-         |  SELECT doc_id, source, full_epochs + 1 AS epoch, tokens
-         |  FROM r0 WHERE bef < remainder),
-         |eu AS (SELECT *, doc_id * 8 + epoch AS uid FROM es
-         |  WHERE source IN ('src0','src1','src2')),
-         |kr AS (SELECT *, CAST(row_number() OVER (PARTITION BY source
-         |    ORDER BY ${duckHash("'7' || chr(0) || CAST(uid AS VARCHAR)")} ASC,
-         |             uid ASC) AS BIGINT) AS k FROM eu),
-         |v AS (SELECT *,
-         |  k * (CASE source WHEN 'src0' THEN 2 WHEN 'src1' THEN 3 ELSE 6 END) AS vt
-         |  FROM kr)
-         |SELECT CAST(row_number() OVER (ORDER BY vt, source, uid) AS BIGINT) AS position,
-         |  source, doc_id, epoch, tokens
-         |FROM v""".stripMargin,
-
-    // Dyadic-temperature mixture at τ = 3/4: the weight mirrors the Spark
-    // side's exact shape — sqrt(c)·sqrt(sqrt(c)), left-to-right, every op
-    // correctly rounded in IEEE-754, so the doubles (hence floors) agree.
-    "q126_tau_mixture" -> {
-      val h = duckHash("CAST(doc_id AS VARCHAR)")
-      s"""WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS c
-         |           FROM documents WHERE source IS NOT NULL GROUP BY source),
-         |w AS (SELECT source, c,
-         |       CAST(floor(sqrt(CAST(c AS DOUBLE)) * sqrt(sqrt(CAST(c AS DOUBLE)))) AS BIGINT) AS w
-         |      FROM c),
-         |q AS (SELECT source, least(c, (120 * w) // (SELECT sum(w) FROM w)) AS quota
-         |      FROM w),
-         |r AS (SELECT source, doc_id,
-         |       row_number() OVER (PARTITION BY source
-         |                          ORDER BY $h ASC NULLS LAST, doc_id ASC NULLS LAST) AS rn
-         |      FROM documents WHERE source IS NOT NULL)
-         |SELECT r.source, r.doc_id FROM r JOIN q USING (source) WHERE rn <= quota""".stripMargin
-    },
-
-    // DSIR feature table: hashed-bigram target/raw counts per bucket.
-    "q89_feature_table" ->
-      s"""WITH $featTableCte
-         |SELECT bucket, tgt_count, raw_count FROM ft""".stripMargin,
-
-    // Per-doc affinity masses over the feature table (featureless docs —
-    // none in this corpus, but the contract emits them — keep a zero row
-    // via the LEFT JOIN).
-    "q90_target_affinity" ->
-      s"""WITH $featTableCte,
-         |agg AS (SELECT doc_id, count(*) AS n_feats,
-         |         CAST(sum(ft.tgt_count) AS BIGINT) AS tgt_mass,
-         |         CAST(sum(ft.raw_count) AS BIGINT) AS raw_mass
-         |        FROM bu JOIN ft USING (bucket) GROUP BY doc_id)
-         |SELECT d.doc_id AS id, CAST(coalesce(a.n_feats, 0) AS BIGINT) AS n_feats,
-         |       CAST(coalesce(a.tgt_mass, 0) AS BIGINT) AS tgt_mass,
-         |       CAST(coalesce(a.raw_mass, 0) AS BIGINT) AS raw_mass
-         |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-    // Salted join ≡ plain join: the oracle is the UNSALTED equi-join —
-    // any salting artifact (dropped row, double-count from a bad
-    // replicate range) breaks the hash.
-    "q91_salted_join" ->
-      """SELECT p_brand,
-        | CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-        | CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem JOIN part ON l_partkey=p_partkey
-        |GROUP BY p_brand""".stripMargin,
-
-    // Deletion-neighborhood fuzzy pairs: the oracle blocks on the RAW
-    // deletion-variant strings (candidates complete for lev ≤ 1), then
-    // verifies — sub-quadratic in DuckDB too, no hash involved.
-    "q92_fuzzy_name_pairs" ->
-      """WITH v AS (SELECT c_custkey AS id, c_name AS s,
-        |  unnest(generate_series(0, len(c_name))) AS i FROM customer),
-        |d AS (SELECT id, s,
-        |  CASE WHEN i=0 THEN s ELSE substr(s,1,i-1) || substr(s,i+1) END AS v FROM v),
-        |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.s AS s_a, b.s AS s_b
-        |         FROM d a JOIN d b ON a.v = b.v AND a.id < b.id)
-        |SELECT id_a, id_b, CAST(levenshtein(s_a, s_b) AS INT) AS dist
-        |FROM cand WHERE levenshtein(s_a, s_b) <= 1""".stripMargin,
-
-    // Snapshot diff: digest full-outer join, same synthesized releases.
-    "q93_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id AS id,
-        |   md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v1' ELSE text END) AS old_md5
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |n AS (SELECT doc_id AS id, md5(text) AS new_md5
-        |  FROM documents WHERE doc_id % 13 <> 0)
-        |SELECT coalesce(o.id, n.id) AS id,
-        |  CASE WHEN o.id IS NULL THEN 'added'
-        |       WHEN n.id IS NULL THEN 'removed'
-        |       WHEN old_md5 = new_md5 THEN 'unchanged' ELSE 'changed' END AS status,
-        |  coalesce(old_md5, '') AS old_md5, coalesce(new_md5, '') AS new_md5
-        |FROM o FULL OUTER JOIN n ON o.id = n.id""".stripMargin,
-
-    // Frame-hash Jaccard near-dup: q28's frame CTE (byte windows of the
-    // UTF-8 payload), distinct per doc, then the q18 set-overlap shape —
-    // joined on raw md5 strings, independently validating the 60-bit
-    // hash path on the Spark side.
-    "q94_frame_neardup" ->
-      """WITH fr AS (SELECT DISTINCT doc_id,
-        |   md5(substr(text, f.frame_idx*100+1, 100)) AS fh
-        |  FROM documents,
-        |   LATERAL (SELECT unnest(range(0,
-        |     CAST(floor((octet_length(encode(text))-1)/100) AS BIGINT)+1)) AS frame_idx) f),
-        |sz AS (SELECT doc_id, count(*) AS n FROM fr GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |   CAST(count(*) AS BIGINT) AS shared
-        |  FROM fr a JOIN fr b USING (fh) WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        | CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) AS jaccard
-        |FROM pairs JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id
-        |WHERE CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) >= 0.5""".stripMargin,
-
-    // CMS sketch, bit-exact: same universal-hash rows (coefficients
-    // inlined from Hashing.coeffs) over the md5-derived base hash.
-    "q95_cms_sketch" -> {
-      val p = Hashing.MersennePrime
-      val coeffRows = (0 until 3).map { r =>
-        val (a, b) = Hashing.coeffs(r); s"($r, $a, $b)"
-      }.mkString(", ")
-      s"""WITH toks AS (SELECT unnest(string_split(text,' ')) AS t FROM documents),
-         |h AS (SELECT ${duckHash("t")} AS h FROM toks),
-         |rw(hash_row, a, b) AS (VALUES $coeffRows)
-         |SELECT hash_row, ((a * (h % $p) + b) % $p) % 64 AS slot,
-         |  CAST(count(*) AS BIGINT) AS cnt
-         |FROM h CROSS JOIN rw GROUP BY 1, 2""".stripMargin
-    },
-
-    // Curriculum interleave: within-source seeded-hash rank k, virtual
-    // time k·(6/w) (lcm(3,2,1)=6 → steps 2/3/6), global row_number over
-    // (vt, source, id) — all integer arithmetic.
-    "q96_curriculum_order" ->
-      s"""WITH d AS (SELECT doc_id, source FROM documents
-         |  WHERE source IN ('src0','src1','src2')),
-         |k AS (SELECT doc_id, source,
-         |  CAST(row_number() OVER (PARTITION BY source
-         |    ORDER BY ${duckHash("'7' || chr(0) || CAST(doc_id AS VARCHAR)")} ASC,
-         |             doc_id ASC) AS BIGINT) AS k FROM d),
-         |v AS (SELECT doc_id, source,
-         |  k * (CASE source WHEN 'src0' THEN 2 WHEN 'src1' THEN 3 ELSE 6 END) AS vt
-         |  FROM k)
-         |SELECT doc_id, source,
-         |  CAST(row_number() OVER (ORDER BY vt, source, doc_id) AS BIGINT) AS position
-         |FROM v""".stripMargin,
-
-    // HLL registers, bit-exact: bucket = low 6 bits of the md5-derived
-    // hash, register = max rank of the top 54 bits (55 − bitlength;
-    // bin() strips leading zeros, so length(bin(v)) IS bitlength).
-    "q97_hll_registers" ->
-      s"""WITH toks AS (SELECT lang, unnest(string_split(text,' ')) AS tok
-         |  FROM documents),
-         |h AS (SELECT lang, ${duckHash("tok")} AS h FROM toks)
-         |SELECT lang, h % 64 AS bucket,
-         |  CAST(max(CASE WHEN h // 64 = 0 THEN 55
-         |                ELSE 55 - length(bin(h // 64)) END) AS BIGINT) AS register
-         |FROM h GROUP BY 1, 2""".stripMargin,
-
-    // Markup strip: the same fixture construction and the same
-    // backreference-free regexes (DuckDB regexp_replace needs the 'g'
-    // flag — it is first-match-only by default, unlike Spark's).
-    "q98_markup_strip" -> {
-      val link = "<a href=\"https://example.com/x\">link</a>"
-      s"""WITH base AS (SELECT doc_id,
-         |  '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-         |  '</title><style type="text/css">p{margin:0}</style>' ||
-         |  '<script>var d=' || CAST(doc_id AS VARCHAR) ||
-         |  ';track(d);</script></head><body><!-- rendered -->' ||
-         |  '<h1 class="t">Doc ' || CAST(doc_id AS VARCHAR) ||
-         |  '</h1><p>' || text ||
-         |  '</p><p>Tags &amp; entities: &lt;b&gt;&nbsp;&quot;q&quot; &#39;s&#39;</p>' ||
-         |  CASE doc_id % 3 WHEN 1 THEN '$link'
-         |                  WHEN 2 THEN '$link$link' ELSE '' END ||
-         |  '</body></html>' AS html FROM documents),
-         |s1 AS (SELECT doc_id, html, regexp_replace(regexp_replace(regexp_replace(html,
-         |  '(?i)<script[^>]*>.*?</script>', ' ', 'g'),
-         |  '(?i)<style[^>]*>.*?</style>', ' ', 'g'),
-         |  '<!--.*?-->', ' ', 'g') AS t FROM base),
-         |s2 AS (SELECT doc_id, html,
-         |  regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s1),
-         |s3 AS (SELECT doc_id, html,
-         |  replace(replace(replace(replace(replace(replace(t,
-         |    '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-         |    '&#39;', chr(39)), '&amp;', '&') AS t FROM s2)
-         |SELECT doc_id, trim(regexp_replace(t, '\\s+', ' ', 'g')) AS clean_text,
-         |  (length(html) - length(replace(html, '<a ', ''))) // 3 AS n_links
-         |FROM s3""".stripMargin
-    },
-
-    // Key-skew report: hottest 20 keys, exact-integer numerators, single
-    // IEEE divisions — identical association order on both engines.
-    "q99_key_skew" ->
-      s"""WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1),
-         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total, count(*) AS n_keys
-         |      FROM c),
-         |r AS (SELECT user_id, cnt,
-         |  CAST(row_number() OVER (ORDER BY cnt DESC, user_id ASC) AS BIGINT)
-         |    AS rank FROM c)
-         |SELECT rank, user_id, cnt,
-         |  CAST(cnt AS DOUBLE)*100.0/total AS share_pct,
-         |  CAST(cnt*n_keys AS DOUBLE)/total AS skew_x
-         |FROM r CROSS JOIN t WHERE rank <= 20""".stripMargin,
-
-    // Source overlap: distinct (source, shingle) sets joined on RAW
-    // shingle strings (independently validating the hashed path, the q18
-    // convention); lexicographic source pair order = sort_array order.
-    "q100_source_overlap" ->
-      s"""WITH sh0 AS (
-         | SELECT source, unnest(${duckShingleSet("text", 3)}) AS shingle
-         | FROM documents),
-         |sh AS (SELECT DISTINCT source, shingle FROM sh0),
-         |sz AS (SELECT source, count(*) AS n FROM sh GROUP BY 1),
-         |p AS (SELECT a.source AS src_a, b.source AS src_b,
-         |   CAST(count(*) AS BIGINT) AS shared
-         | FROM sh a JOIN sh b USING (shingle) WHERE a.source < b.source
-         | GROUP BY 1, 2)
-         |SELECT src_a, src_b, shared, x.n AS size_a, y.n AS size_b,
-         | CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) AS jaccard,
-         | CAST(shared AS DOUBLE)/CAST(least(x.n, y.n) AS DOUBLE) AS overlap
-         |FROM p JOIN sz x ON src_a = x.source JOIN sz y ON src_b = y.source""".stripMargin,
-
-    // Length-bucket batches: the two-phase rank is invisible (prefix
-    // buckets are the hash's top bits) → plain per-bin row_number over
-    // (seeded hash, id).
-    "q101_length_batches" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens
-         | FROM documents),
-         |r AS (SELECT doc_id, n_tokens, n_tokens // 16 AS bin,
-         |  row_number() OVER (PARTITION BY n_tokens // 16
-         |    ORDER BY ${duckHash("'7' || chr(0) || CAST(doc_id AS VARCHAR)")} ASC,
-         |             doc_id ASC) AS rn
-         | FROM d)
-         |SELECT doc_id, n_tokens, bin,
-         | (rn - 1) // 8 AS batch_in_bin,
-         | CAST((rn - 1) % 8 AS BIGINT) AS pos_in_batch
-         |FROM r""".stripMargin,
-
-    // Two-view crops: both starts are seeded-hash mods of the slack —
-    // all BIGINT arithmetic; views re-sliced from the token list.
-    "q102_span_views" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text,' ') AS parts
-         |  FROM documents),
-         |e AS (SELECT doc_id, parts, CAST(len(parts) AS BIGINT) AS n_tokens
-         |  FROM d WHERE len(parts) >= 16),
-         |a AS (SELECT doc_id, parts, n_tokens,
-         |  ${duckHash("'7 a ' || CAST(doc_id AS VARCHAR)")} % (n_tokens - 15) AS a_start
-         | FROM e),
-         |b AS (SELECT doc_id, parts, n_tokens, a_start,
-         |  a_start + 8 + ${duckHash("'7 b ' || CAST(doc_id AS VARCHAR)")}
-         |    % (n_tokens - a_start - 15) AS b_start
-         | FROM a)
-         |SELECT doc_id, n_tokens, a_start, b_start,
-         | array_to_string(list_slice(parts, a_start + 1, a_start + 8), ' ') AS view_a,
-         | array_to_string(list_slice(parts, b_start + 1, b_start + 8), ' ') AS view_b
-         |FROM b""".stripMargin,
-
-    // Containment pairs: q18's raw-shingle-string join with the overlap
-    // coefficient (shared/min) filter and the full stats row.
-    "q103_containment" ->
-      s"""WITH sh AS (
-         | SELECT doc_id, unnest(${duckShingleSet("text", 3)}) AS shingle
-         | FROM documents),
-         |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |   CAST(count(*) AS BIGINT) AS shared
-         | FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id
-         | GROUP BY 1, 2)
-         |SELECT id_a, id_b, shared, x.n AS size_a, y.n AS size_b,
-         | CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) AS jaccard,
-         | CAST(shared AS DOUBLE)/CAST(least(x.n, y.n) AS DOUBLE) AS overlap
-         |FROM p JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id
-         |WHERE CAST(shared AS DOUBLE)/CAST(least(x.n, y.n) AS DOUBLE) >= 0.5""".stripMargin,
-
-    // Span corruption: same per-position Bernoulli hash, lag/run-id
-    // windows over the unique pos order, string_agg ORDER BY pos.
-    "q104_span_corruption" ->
-      s"""WITH t0 AS (SELECT doc_id AS id, string_split(text,' ') AS parts
-         |  FROM documents),
-         |t AS (SELECT id, unnest(parts) AS tok,
-         |  generate_subscripts(parts, 1) - 1 AS pos FROM t0),
-         |m AS (SELECT id, pos, tok,
-         |  (${duckHash("'7 m ' || CAST(id AS VARCHAR) || ' ' || CAST(pos AS VARCHAR)")} % 100) < 15
-         |    AS masked FROM t),
-         |r1 AS (SELECT *, masked AND NOT
-         |  coalesce(lag(masked) OVER (PARTITION BY id ORDER BY pos), false)
-         |    AS run_start FROM m),
-         |r AS (SELECT *, sum(CASE WHEN run_start THEN 1 ELSE 0 END)
-         |  OVER (PARTITION BY id ORDER BY pos) AS run_id FROM r1),
-         |inp AS (SELECT id, string_agg(CASE WHEN masked
-         |    THEN '<extra_id_' || CAST(run_id - 1 AS VARCHAR) || '>'
-         |    ELSE tok END, ' ' ORDER BY pos) AS input_text
-         |  FROM r WHERE NOT masked OR run_start GROUP BY id),
-         |tgt AS (SELECT id, string_agg(CASE WHEN run_start
-         |    THEN '<extra_id_' || CAST(run_id - 1 AS VARCHAR) || '> ' || tok
-         |    ELSE tok END, ' ' ORDER BY pos) AS target_core,
-         |  count(*) AS n_masked, CAST(max(run_id) AS BIGINT) AS n_spans
-         |  FROM r WHERE masked GROUP BY id)
-         |SELECT inp.id AS doc_id, input_text,
-         | coalesce(target_core || ' <extra_id_' || CAST(n_spans AS VARCHAR) || '>',
-         |          '<extra_id_0>') AS target_text,
-         | coalesce(n_masked, 0) AS n_masked,
-         | coalesce(n_spans, 0) AS n_spans
-         |FROM inp LEFT JOIN tgt USING (id)""".stripMargin,
-
-    // PPS sample: the exact-integer inclusion test in HUGEINT; prob and
-    // HT weight as single IEEE divisions of exact integers.
-    "q105_pps_sample" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  CAST(len(string_split(text,' ')) AS BIGINT) AS w FROM documents),
-         |wd AS (SELECT * FROM d WHERE w > 0),
-         |t AS (SELECT CAST(sum(w) AS BIGINT) AS total FROM wd)
-         |SELECT doc_id, w,
-         | least(CAST(1.0 AS DOUBLE), CAST(w AS DOUBLE) * 100.0 / total) AS incl_prob,
-         | 1.0 / least(CAST(1.0 AS DOUBLE), CAST(w AS DOUBLE) * 100.0 / total)
-         |   AS ht_weight
-         |FROM wd CROSS JOIN t
-         |WHERE CAST(${duckHash("'7 ' || CAST(doc_id AS VARCHAR)")} AS HUGEINT) * total
-         |   < CAST(100 AS HUGEINT) * w * 1152921504606846976""".stripMargin,
-
-    // JSONL lines: struct_pack preserves field order; both engines emit
-    // the RFC-8259 minimal escape set byte-for-byte.
-    "q106_jsonl" ->
-      s"""SELECT doc_id, to_json(struct_pack(doc_id := doc_id, lang := lang,
-         |  msg := text || chr(10) || '"quoted"' || chr(9) || '\\end'))
-         |    AS json_line
-         |FROM documents""".stripMargin,
-
-    // Winnowing fingerprints: rightmost-min per k-gram-hash window,
-    // deduplicated — window starts enumerated explicitly (vs Spark's
-    // running frame min), rightmost-min via (h ASC, pos DESC) rank.
-    "q107_winnow_fingerprints" ->
-      s"""WITH ${winnowCte(FpK, FpW)}
-         |SELECT doc_id, pos, h FROM fp""".stripMargin,
-
-    // Fingerprint-overlap pairs: plain hash join over the winnowed sets
-    // (the uncapped twin of the posting-list expansion), q103's stats row.
-    "q108_fingerprint_pairs" ->
-      s"""WITH ${winnowCte(FpK, FpW)},
-         |fs AS (SELECT DISTINCT doc_id, h FROM fp),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-         |       FROM fs GROUP BY doc_id),
-         |pr AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-         |   CAST(count(*) AS BIGINT) AS shared
-         |  FROM fs x JOIN fs y ON x.h = y.h AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, shared, sx.n AS size_a, sy.n AS size_b,
-         | CAST(shared AS DOUBLE)/CAST(sx.n + sy.n - shared AS DOUBLE) AS jaccard,
-         | CAST(shared AS DOUBLE)/CAST(least(sx.n, sy.n) AS DOUBLE) AS overlap
-         |FROM pr JOIN sz sx ON id_a = sx.doc_id JOIN sz sy ON id_b = sy.doc_id
-         |WHERE shared >= 2""".stripMargin,
-
-    // FIM: same seeded draws over the n+1 token boundaries; PSM rebuild
-    // via 1-based inclusive list slices (toks[1:lo] / [hi+1:n] / [lo+1:hi]).
-    "q109_fim" ->
-      s"""WITH d AS (SELECT doc_id, text, string_split(text,' ') AS toks,
-         |  CAST(len(string_split(text,' ')) AS BIGINT) AS n FROM documents),
-         |c AS (SELECT *,
-         |  (${duckHash("'7 f ' || CAST(doc_id AS VARCHAR)")} % 100) < 60 AS applied,
-         |  ${duckHash("'7 a ' || CAST(doc_id AS VARCHAR)")} % (n+1) AS c1,
-         |  ${duckHash("'7 b ' || CAST(doc_id AS VARCHAR)")} % (n+1) AS c2
-         | FROM d),
-         |s AS (SELECT doc_id, text, toks, n, applied,
-         |  least(c1, c2) AS lo, greatest(c1, c2) AS hi FROM c)
-         |SELECT doc_id, applied AS fim_applied,
-         | CASE WHEN applied THEN array_to_string(
-         |   ['<fim_prefix>'] || toks[1:CAST(lo AS INT)]
-         |   || ['<fim_suffix>'] || toks[CAST(hi+1 AS INT):CAST(n AS INT)]
-         |   || ['<fim_middle>'] || toks[CAST(lo+1 AS INT):CAST(hi AS INT)], ' ')
-         |  ELSE text END AS fim_text,
-         | CASE WHEN applied THEN lo END AS n_prefix,
-         | CASE WHEN applied THEN hi - lo END AS n_middle,
-         | CASE WHEN applied THEN n - hi END AS n_suffix
-         |FROM s""".stripMargin,
-
-    // Epoch plan: ⌊√avail⌋ weights, HUGEINT cross-multiply for the quota
-    // floor-division, cap at 4 epochs, integer div/mod decomposition.
-    "q110_epoch_plan" ->
-      s"""WITH $epochPlanCte
-         |SELECT source, avail AS avail_tokens, wt AS weight,
-         | quota AS quota_tokens, planned AS planned_tokens,
-         | planned // avail AS full_epochs, planned % avail AS remainder_tokens
-         |FROM ep""".stripMargin,
-
-    // Epoch stream: full passes via generate_series over the plan's
-    // epoch count, remainder = seeded-hash-ordered prefix whose BEFORE
-    // cumsum stays under remainder_tokens (crossed at most once).
-    "q112_epoch_stream" ->
-      s"""WITH $epochPlanCte,
-         |pl AS (SELECT source, planned // avail AS full_epochs,
-         |        planned % avail AS remainder FROM ep),
-         |d AS (SELECT doc_id, source,
-         |   CAST(len(string_split(text,' ')) AS BIGINT) AS tokens
-         |  FROM documents WHERE source IS NOT NULL),
-         |fe AS (SELECT doc_id, d.source,
-         |   unnest(generate_series(1, full_epochs)) AS epoch, tokens
-         |  FROM d JOIN pl USING (source) WHERE full_epochs >= 1),
-         |r0 AS (SELECT d.*, full_epochs, remainder,
-         |   COALESCE(sum(tokens) OVER (PARTITION BY d.source
-         |     ORDER BY ${duckHash("'7 ' || CAST(doc_id AS VARCHAR)")} ASC, doc_id ASC
-         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-         |  FROM d JOIN pl USING (source))
-         |SELECT doc_id, source, CAST(epoch AS BIGINT) AS epoch, tokens FROM fe
-         |UNION ALL
-         |SELECT doc_id, source, full_epochs + 1 AS epoch, tokens
-         |FROM r0 WHERE bef < remainder""".stripMargin,
-
-    // Interval overlap: the naive half-open overlap predicate over the
-    // same synthetic per-user segments — validates the bucketed plan's
-    // exactly-once max-start-bucket rule.
-    "q113_interval_overlap" ->
-      s"""WITH a AS (SELECT user_id AS k, event_id AS a_id,
-         |   (event_id * 37) % 2000 AS a_s,
-         |   (event_id * 37) % 2000 + 5 + (event_id % 50) AS a_e
-         |  FROM events WHERE event_id % 3 = 0),
-         |b AS (SELECT user_id AS k, event_id AS b_id,
-         |   (event_id * 53) % 2000 AS b_s,
-         |   (event_id * 53) % 2000 + 5 + (event_id % 30) AS b_e
-         |  FROM events WHERE event_id % 3 = 1)
-         |SELECT k, a_id, a_s, a_e, b_id, b_s, b_e
-         |FROM a JOIN b USING (k)
-         |WHERE a_s < b_e AND b_s < a_e""".stripMargin,
-
-    // Dedup sweep: q103's pair CTE unfiltered, crossed with the
-    // threshold list; LEFT joins keep zero-count thresholds.
-    "q114_dedup_sweep" ->
-      s"""WITH sh AS (
-         | SELECT doc_id, unnest(${duckShingleSet("text", 3)}) AS shingle
-         | FROM documents),
-         |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |   CAST(count(*) AS BIGINT) AS shared
-         | FROM sh a JOIN sh b USING (shingle) WHERE a.doc_id < b.doc_id
-         | GROUP BY 1, 2),
-         |pj AS (SELECT id_a, id_b,
-         |   CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) AS jaccard
-         |  FROM p JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id),
-         |t AS (SELECT unnest([0.25, 0.5, 0.75, 1.0]) AS threshold),
-         |f AS (SELECT threshold, id_a, id_b FROM pj CROSS JOIN t
-         |      WHERE jaccard >= threshold),
-         |np AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
-         |       FROM f GROUP BY threshold),
-         |nd AS (SELECT threshold, CAST(count(DISTINCT id) AS BIGINT) AS n_docs
-         |  FROM (SELECT threshold, id_a AS id FROM f
-         |        UNION ALL SELECT threshold, id_b FROM f)
-         |  GROUP BY threshold)
-         |SELECT t.threshold, coalesce(np.n_pairs, 0) AS n_pairs,
-         | coalesce(nd.n_docs, 0) AS n_docs_in_pairs
-         |FROM t LEFT JOIN np USING (threshold) LEFT JOIN nd USING (threshold)""".stripMargin,
-
-    // Stratified PPS: q105's HUGEINT inclusion with per-SOURCE totals and
-    // data-driven ⌊n/10⌋ targets; per-group HT weights.
-    "q115_group_pps" ->
-      s"""WITH d AS (SELECT doc_id, source,
-         |  CAST(len(string_split(text,' ')) AS BIGINT) AS w
-         | FROM documents WHERE len(string_split(text,' ')) > 0
-         |   AND source IS NOT NULL),
-         |tg AS (SELECT source, CAST(count(*) // 10 AS BIGINT) AS target
-         |       FROM d GROUP BY source),
-         |tot AS (SELECT source, CAST(sum(w) AS BIGINT) AS total
-         |        FROM d GROUP BY source)
-         |SELECT doc_id, source, w,
-         | least(CAST(1.0 AS DOUBLE),
-         |   CAST(w AS DOUBLE) * CAST(target AS DOUBLE) / total) AS incl_prob,
-         | 1.0 / least(CAST(1.0 AS DOUBLE),
-         |   CAST(w AS DOUBLE) * CAST(target AS DOUBLE) / total) AS ht_weight
-         |FROM d JOIN tg USING (source) JOIN tot USING (source)
-         |WHERE target > 0
-         |  AND CAST(${duckHash("'7 ' || CAST(doc_id AS VARCHAR)")} AS HUGEINT) * total
-         |    < CAST(target AS HUGEINT) * w * 1152921504606846976""".stripMargin,
-
-    // Scene boundaries: q28's frame enumeration + the same 60-bit hash,
-    // lag/bit_count(xor) screen, running boundary sum − 1 as scene id.
-    "q116_scene_bounds" ->
-      s"""WITH f AS (SELECT doc_id, CAST(fr.frame_idx AS INTEGER) AS frame_idx,
-         |  ${duckHash("substr(text, fr.frame_idx*100+1, 100)")} AS h
-         | FROM documents, LATERAL (SELECT unnest(range(0,
-         |   CAST(floor((octet_length(encode(text))-1)/100) AS BIGINT)+1)) AS frame_idx) fr),
-         |l AS (SELECT *, lag(h) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS prev
-         |      FROM f),
-         |b AS (SELECT doc_id, frame_idx,
-         |  (prev IS NULL OR bit_count(xor(h, prev)) > 29) AS is_boundary FROM l)
-         |SELECT doc_id, frame_idx, is_boundary,
-         | CAST(sum(CASE WHEN is_boundary THEN 1 ELSE 0 END)
-         |   OVER (PARTITION BY doc_id ORDER BY frame_idx) - 1 AS BIGINT) AS scene_id
-         |FROM b""".stripMargin,
-
-    // Token drift: full-outer unigram join of the parity halves, exact
-    // HUGEINT TV numerator cast to DECIMAL(38,0) (Spark's product type).
-    "q111_token_drift" ->
-      s"""WITH ca AS (SELECT unnest(string_split(text,' ')) AS token
-         |    FROM documents WHERE doc_id % 2 = 0),
-         |cb AS (SELECT unnest(string_split(text,' ')) AS token
-         |    FROM documents WHERE doc_id % 2 = 1),
-         |ga AS (SELECT token, CAST(count(*) AS BIGINT) AS count_a
-         |       FROM ca GROUP BY token),
-         |gb AS (SELECT token, CAST(count(*) AS BIGINT) AS count_b
-         |       FROM cb GROUP BY token),
-         |j AS (SELECT coalesce(ga.token, gb.token) AS token,
-         |    coalesce(count_a, 0) AS count_a, coalesce(count_b, 0) AS count_b
-         |  FROM ga FULL OUTER JOIN gb ON ga.token = gb.token),
-         |t AS (SELECT CAST((SELECT sum(count_a) FROM ga) AS BIGINT) AS total_a,
-         |             CAST((SELECT sum(count_b) FROM gb) AS BIGINT) AS total_b)
-         |SELECT token, count_a, count_b, total_a, total_b,
-         | CAST(abs(CAST(count_a AS HUGEINT)*total_b
-         |        - CAST(count_b AS HUGEINT)*total_a) AS BIGINT) AS drift_num
-         |FROM j CROSS JOIN t
-         |ORDER BY drift_num DESC, token ASC LIMIT 30""".stripMargin,
-
-    "q25_daily_weather_summary" -> {
-      // roundAt(c, 2) twin: floor(c*100.0+0.5)/100.0
-      def r2(c: String) = s"floor(($c)*100.0+0.5)/100.0"
-      def decAvg(c: String) = s"CAST(sum(CAST($c AS DECIMAL(28,6))) AS DOUBLE)/count($c)"
-      def cntIf(cond: String) = s"CAST(sum(CASE WHEN $cond THEN 1 ELSE 0 END) AS BIGINT)"
-      def modeCte(valueCol: String, as: String) =
-        s"""SELECT city, reading_date, $valueCol AS $as FROM (
-           |  SELECT city, reading_date, $valueCol,
-           |   row_number() OVER (PARTITION BY city, reading_date
-           |                      ORDER BY count(*) DESC, $valueCol ASC) AS rn
-           |  FROM e GROUP BY city, reading_date, $valueCol) WHERE rn=1""".stripMargin
-      s"""WITH e AS ($enrichedFullSql),
-         |num AS (
-         | SELECT city, reading_date,
-         |  ${r2(decAvg("temperature_celsius"))} AS avg_temperature,
-         |  min(temperature_celsius) AS min_temperature,
-         |  max(temperature_celsius) AS max_temperature,
-         |  ${r2(decAvg("heat_index_celsius"))} AS avg_heat_index,
-         |  ${r2(decAvg("humidity_percent"))} AS avg_humidity,
-         |  ${r2(decAvg("pressure_hpa"))} AS avg_pressure,
-         |  ${r2(decAvg("wind_speed_kmh"))} AS avg_wind_speed,
-         |  ${r2("CAST(sum(CAST(precipitation_mm AS DECIMAL(28,6))) AS DOUBLE)")} AS total_precipitation,
-         |  max(precipitation_mm) AS max_precipitation,
-         |  CAST(count(*) AS BIGINT) AS reading_count,
-         |  ${cntIf("alert_level='NORMAL'")} AS normal_count,
-         |  ${cntIf("alert_level='WATCH'")} AS watch_count,
-         |  ${cntIf("alert_level='WARNING'")} AS warning_count,
-         |  ${cntIf("alert_level='CRITICAL'")} AS critical_count,
-         |  ${r2("CAST(sum(CASE WHEN alert_level IN ('WARNING','CRITICAL') THEN 1 ELSE 0 END) AS DOUBLE)*100.0/count(*)")} AS alert_percentage,
-         |  ${r2(decAvg("data_quality_score"))} AS avg_quality_score
-         | FROM e GROUP BY city, reading_date),
-         |cm AS (${modeCte("comfort_level", "dominant_comfort")}),
-         |sv AS (${modeCte("weather_severity", "dominant_severity")})
-         |SELECT num.*, dominant_comfort, dominant_severity
-         |FROM num JOIN cm USING (city, reading_date) JOIN sv USING (city, reading_date)""".stripMargin
-    },
-
-    "q26_current_weather_status" ->
-      s"""SELECT city, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch,
-         | temperature_celsius, alert_level, comfort_level
-         |FROM (SELECT *, row_number() OVER (PARTITION BY city ORDER BY ts DESC, event_id DESC) AS rn
-         |      FROM ($enrichedFullSql)) WHERE rn=1""".stripMargin,
-
-    "q27_media_metadata" -> {
-      val h = duckHash("text") // md5(utf8 bytes of text) == md5 of the binary payload
-      s"""SELECT doc_id,
-         | CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
-         | md5(text) AS content_md5,
-         | CAST(64 + $h%448 AS INTEGER) AS width,
-         | CAST(64 + ($h>>9)%448 AS INTEGER) AS height,
-         | CAST(1 + ($h>>18)%30 AS INTEGER) AS n_frames
-         |FROM documents""".stripMargin
-    },
-
-    "q28_frame_sample" ->
-      """SELECT doc_id, CAST(f.frame_idx AS INTEGER) AS frame_idx,
-        | md5(substr(text, f.frame_idx*100+1, 100)) AS frame_md5
-        |FROM documents,
-        | LATERAL (SELECT unnest(range(0, CAST(floor((octet_length(encode(text))-1)/100) AS BIGINT)+1)) AS frame_idx) f""".stripMargin,
-
-    // Byte histogram, long shape: extract byte i as hex-pair → integer, bin
-    // by (byte*16)/256, left-join against the full 16-bin frame so
-    // zero-count bins appear (the Spark side emits all bins per doc).
-    "q29_media_features" ->
-      """WITH b AS (SELECT doc_id, hex(encode(text)) AS hx,
-        |                  octet_length(encode(text)) AS n FROM documents),
-        |bytes AS (SELECT doc_id, CAST(('0x' || substr(hx, 2*i+1, 2)) AS INTEGER) AS byte
-        |          FROM b, LATERAL (SELECT unnest(range(0, n)) AS i) t),
-        |cnt AS (SELECT doc_id, (byte*16)//256 AS bin, CAST(count(*) AS BIGINT) AS c
-        |        FROM bytes GROUP BY doc_id, (byte*16)//256)
-        |SELECT d.doc_id, CAST(bins.bin AS INTEGER) AS bin,
-        |       CAST(coalesce(c, 0) AS BIGINT) AS bin_count,
-        |       CASE WHEN d.n = 0 THEN 0.0
-        |            ELSE CAST(coalesce(c, 0) AS DOUBLE)/d.n END AS value
-        |FROM (SELECT doc_id, n FROM b) d
-        |CROSS JOIN (SELECT unnest(range(0, 16)) AS bin) bins
-        |LEFT JOIN cnt ON cnt.doc_id = d.doc_id AND cnt.bin = bins.bin""".stripMargin,
-
-    // 60-bit simhash brute-force Hamming oracle: the operator's pigeonhole
-    // chunk-bucket candidates are provably exhaustive at maxDist=3 with 4
-    // chunks, so the bucketed plan must equal the all-pairs answer.
-    "q40_simhash_neardup_pairs" -> {
-      val bitSums = (0 until 60)
-        .map(j => s"sum(CASE WHEN ((h>>$j)&1)=1 THEN 1 ELSE -1 END) AS b_$j").mkString(",\n ")
-      val sig = (0 until 60)
-        .map(j => s"CASE WHEN b_$j>0 THEN (${1L << j})::BIGINT ELSE 0::BIGINT END")
-        .mkString("+")
-      s"""WITH toks AS (SELECT doc_id AS id, unnest(string_split(text,' ')) AS t FROM documents),
-         |h AS (SELECT id, ${duckHash("t")} AS h FROM toks),
-         |bits AS (SELECT id, $bitSums FROM h GROUP BY id),
-         |sig AS (SELECT id, $sig AS simhash FROM bits)
-         |SELECT a.id AS id_a, b.id AS id_b,
-         | CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-         |FROM sig a JOIN sig b ON a.id < b.id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin
-    },
-
-    // Capped twin of q18: stop-shingles (posting list > 5 docs) dropped
-    // before pair expansion; set sizes stay uncapped, mirroring the Spark
-    // plan exactly.
-    "q41_ngram_jaccard_capped" ->
-      s"""WITH sh AS (
-         | SELECT doc_id, unnest(${duckShingleSet("text", 3)}) AS shingle FROM documents),
-         |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |ok AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 5),
-         |pairs AS (
-         | SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS shared
-         | FROM sh a JOIN sh b USING (shingle) JOIN ok USING (shingle)
-         | WHERE a.doc_id < b.doc_id
-         | GROUP BY a.doc_id, b.doc_id)
-         |SELECT id_a, id_b,
-         | CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) AS jaccard
-         |FROM pairs JOIN sz x ON id_a=x.doc_id JOIN sz y ON id_b=y.doc_id
-         |WHERE CAST(shared AS DOUBLE)/CAST(x.n + y.n - shared AS DOUBLE) >= 0.5""".stripMargin,
-
-    "q30_top_events_per_user" ->
-      """SELECT user_id, CAST(rank AS INTEGER) AS rank, event_id, value FROM (
-        | SELECT user_id, event_id, value,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id ASC) AS rank
-        | FROM events) WHERE rank <= 3""".stripMargin,
-
-    "q31_user_sessions" ->
-      """WITH gapped AS (
-        | SELECT user_id, ts,
-        |  CASE WHEN lag(ts) OVER w IS NULL THEN 1
-        |       WHEN floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 1800 THEN 1
-        |       ELSE 0 END AS new_session
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC)),
-        |s AS (
-        | SELECT user_id, ts,
-        |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        | FROM gapped)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        | CAST(count(*) AS BIGINT) AS event_count,
-        | CAST(min(floor(epoch(ts))) AS BIGINT) AS start_epoch,
-        | CAST(max(floor(epoch(ts))) AS BIGINT) AS end_epoch
-        |FROM s GROUP BY user_id, session_id""".stripMargin,
-
-    // As-of: union both sides, carry the last non-null payload per user in
-    // (time, side, tie) order — right rows precede left rows at equal time
-    // (inclusive), equal-time purchases resolve by largest event id.
-    "q42_asof_last_purchase" ->
-      """WITH l AS (SELECT user_id, ts, event_id, 1 AS side, 0::BIGINT AS tie,
-        |                  NULL::BIGINT AS p_event, NULL::DOUBLE AS p_value FROM events),
-        |r AS (SELECT user_id, ts, NULL::BIGINT AS event_id, 0 AS side, event_id AS tie,
-        |             event_id AS p_event, value AS p_value FROM events
-        |      WHERE event_type='purchase'),
-        |u AS (SELECT * FROM l UNION ALL SELECT * FROM r),
-        |c AS (SELECT user_id, ts, event_id, side,
-        |        last_value(p_event IGNORE NULLS) OVER w AS p_event,
-        |        last_value(p_value IGNORE NULLS) OVER w AS p_value
-        |      FROM u WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, side ASC, tie ASC
-        |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch, p_event, p_value
-        |FROM c WHERE side=1""".stripMargin,
-
-    // Range frame [−3600, −1] on epoch seconds: equal-epoch peers excluded
-    // by construction, so no peer-ordering ambiguity across engines.
-    "q44_rolling_user_features" ->
-      """SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch,
-        | CAST(count(*) OVER w AS BIGINT) AS prior_count,
-        | CAST(sum(CAST(value AS DECIMAL(28,6))) OVER w AS DOUBLE) AS prior_sum,
-        | max(value) OVER w AS prior_max
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        |             RANGE BETWEEN 3600 PRECEDING AND 1 PRECEDING)""".stripMargin,
-
-    // Range join: DuckDB plans the raw range predicate itself (IEJoin);
-    // the Spark side buckets — same pairs either way.
-    "q49_range_join_campaigns" ->
-      """WITH ev AS (SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch FROM events),
-        |b AS (SELECT user_id, min(ts_epoch) AS mn, max(ts_epoch) AS mx FROM ev GROUP BY user_id),
-        |iv AS (SELECT user_id, c AS campaign_id,
-        |        mn + c * ((mx - mn + 3) // 3) AS start_epoch,
-        |        LEAST(mn + (c + 2) * ((mx - mn + 3) // 3), mx + 1) AS end_epoch
-        |       FROM b CROSS JOIN (SELECT CAST(unnest(range(3)) AS BIGINT) AS c))
-        |SELECT ev.user_id, ev.event_id, ev.ts_epoch, iv.campaign_id, iv.start_epoch, iv.end_epoch
-        |FROM ev JOIN iv ON ev.user_id = iv.user_id
-        | AND ev.ts_epoch >= iv.start_epoch AND ev.ts_epoch < iv.end_epoch""".stripMargin,
-
-    "q51_repetition_stats" ->
-      s"""SELECT doc_id,
-         | CAST(GREATEST(len(string_split(text,' ')) - 2, 0) AS BIGINT) AS total_3grams,
-         | CAST(len(${duckShingleSet("text", 3)}) AS BIGINT) AS distinct_3grams,
-         | CASE WHEN GREATEST(len(string_split(text,' ')) - 2, 0) > 0
-         |  THEN 1.0 - CAST(len(${duckShingleSet("text", 3)}) AS DOUBLE)
-         |        / CAST(GREATEST(len(string_split(text,' ')) - 2, 0) AS DOUBLE)
-         |  ELSE 0.0 END AS repetition_ratio
-         |FROM documents""".stripMargin,
-
-    // Contamination: the oracle is the plain cross-join argmax (shared ≥ 1
-    // pairs only — matching the inverted index's reachable pairs); jaccard
-    // division uses identical integer operands, so doubles are bit-equal.
-    "q52_contamination" ->
-      s"""WITH tr AS (SELECT doc_id, ${duckShingleSet("text", 3)} AS sh
-         |            FROM documents WHERE doc_id % 10 <> 0),
-         |te AS (SELECT doc_id, ${duckShingleSet("text", 3)} AS sh
-         |       FROM documents WHERE doc_id % 10 = 0),
-         |pairs AS (SELECT te.doc_id AS test_id, tr.doc_id AS train_id,
-         |   len(list_intersect(te.sh, tr.sh)) AS shared,
-         |   len(te.sh) AS size_t, len(tr.sh) AS size_r
-         |  FROM te CROSS JOIN tr),
-         |scored AS (SELECT test_id, train_id,
-         |   CAST(shared AS DOUBLE) / CAST(size_t + size_r - shared AS DOUBLE) AS jaccard
-         |  FROM pairs WHERE shared >= 1)
-         |SELECT test_id, jaccard AS contamination, train_id AS matched_train_id
-         |FROM (SELECT *, row_number() OVER (PARTITION BY test_id
-         |        ORDER BY jaccard DESC, train_id ASC) AS rn FROM scored)
-         |WHERE rn = 1""".stripMargin,
-
-    // Packing: identical hash order, pmod shard, window cumsum, floor-div
-    // pack math (all-double floor division — exact below 2^53).
-    "q50_sequence_packing" ->
-      s"""WITH $packCte
-         |SELECT doc_id, shard, tokens, start_offset,
-         | CAST(floor(CAST(start_offset AS DOUBLE)/512.0) AS BIGINT) AS pack_id,
-         | CAST(floor((CAST(start_offset AS DOUBLE)+tokens-1.0)/512.0) AS BIGINT)
-         |  - CAST(floor(CAST(start_offset AS DOUBLE)/512.0) AS BIGINT) + 1 AS spans_packs
-         |FROM o""".stripMargin,
-
-    // Subword-budget packing: identical pack math as q50, with tokens from
-    // the inlined constant-trained word→units table (char-count fallback
-    // via the left join's coalesce — the Column path's exact rule).
-    "q69_subword_pack" -> {
-      val h = duckHash("CAST(doc_id AS VARCHAR)")
-      val values = SubwordGateVocab.wordUnits.toSeq.sortBy(_._1)
-        .map { case (w, u) => s"('$w', $u)" }.mkString(", ")
-      s"""WITH v(word, units) AS (VALUES $values),
-         |w AS (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents),
-         |cnt AS (SELECT w.doc_id,
-         |  CAST(sum(coalesce(v.units, len(w.word))) AS BIGINT) AS tokens
-         | FROM w LEFT JOIN v USING (word) GROUP BY w.doc_id),
-         |d AS (SELECT doc_id, tokens, $h AS h, $h % 4 AS shard FROM cnt),
-         |o AS (SELECT doc_id, shard, tokens,
-         |  CAST(COALESCE(sum(tokens) OVER (PARTITION BY shard ORDER BY h ASC, doc_id ASC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-         | FROM d)
-         |SELECT doc_id, shard, tokens, start_offset,
-         | CAST(floor(CAST(start_offset AS DOUBLE)/256.0) AS BIGINT) AS pack_id,
-         | CAST(floor((CAST(start_offset AS DOUBLE)+tokens-1.0)/256.0) AS BIGINT)
-         |  - CAST(floor(CAST(start_offset AS DOUBLE)/256.0) AS BIGINT) + 1 AS spans_packs
-         |FROM o""".stripMargin
-    },
-
-    "q135_subword_encode" -> {
-      val values = SubwordGateVocab.wordSegments.toSeq.sortBy(_._1)
-        .map { case (w, u) => s"('$w', '${u.mkString("|")}')" }.mkString(", ")
-      s"""WITH v(word, segs) AS (VALUES $values),
-         |tok AS (
-         | SELECT doc_id, i, ws[i] AS word
-         | FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i
-         |       FROM (SELECT doc_id, string_split(text,' ') AS ws FROM documents))),
-         |seg AS (
-         | SELECT tok.doc_id, tok.i,
-         |  CASE WHEN v.segs IS NULL THEN string_split(tok.word, '')
-         |       ELSE string_split(v.segs, '|') END AS units
-         | FROM tok LEFT JOIN v ON tok.word = v.word),
-         |u AS (SELECT doc_id, i, unnest(generate_series(1, len(units))) AS j, units FROM seg)
-         |SELECT doc_id,
-         | CAST(row_number() OVER (PARTITION BY doc_id ORDER BY i, j) - 1 AS INT) AS pos,
-         | units[j] AS unit
-         |FROM u""".stripMargin
-    },
-
-    "q45_class_balanced_sample" -> {
-      val h = duckHash("CAST(event_id AS VARCHAR)")
-      s"""SELECT event_type, event_id, user_id FROM (
-         | SELECT event_type, event_id, user_id,
-         |  row_number() OVER (PARTITION BY event_type
-         |                     ORDER BY $h ASC NULLS LAST, event_id ASC NULLS LAST) AS rn
-         | FROM events) WHERE rn <= 300""".stripMargin
-    },
-
-    "q43_train_split" -> {
-      val h = duckHash("CAST(event_id AS VARCHAR)")
-      s"""SELECT CASE WHEN h < 8 THEN 'train' WHEN h < 9 THEN 'val' ELSE 'test' END AS split,
-         | event_type,
-         | CAST(count(*) AS BIGINT) AS event_count,
-         | CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
-         |FROM (SELECT *, $h % 10 AS h FROM events)
-         |GROUP BY 1, event_type""".stripMargin
-    },
-
-    // PII redaction: message synthesis + regex patterns mirror the Scala
-    // exactly (portable regex subset; DuckDB needs the explicit 'g' flag —
-    // its regexp_replace defaults to first-match, Spark's to all).
-    "q53_pii_redaction" ->
-      s"""WITH m AS (SELECT c_custkey,
-         | concat_ws(' ', 'user', c_name, 'email',
-         |  lower(c_mktsegment) || '.' || CAST(c_custkey AS VARCHAR) || '@corp.example',
-         |  CASE WHEN c_custkey % 3 <> 0 THEN 'phone 555-' ||
-         |    lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0') END,
-         |  CASE WHEN c_custkey % 4 = 0 THEN 'ip 10.' ||
-         |    CAST(c_custkey % 223 AS VARCHAR) || '.' ||
-         |    CAST(c_nationkey % 250 AS VARCHAR) || '.' ||
-         |    CAST((c_custkey * 7) % 250 AS VARCHAR) END) AS msg
-         | FROM customer)
-         |SELECT c_custkey,
-         | md5(regexp_replace(regexp_replace(regexp_replace(msg,
-         |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '[EMAIL]', 'g'),
-         |   '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}', '[IP]', 'g'),
-         |   '[0-9]{3}-[0-9]{4}', '[PHONE]', 'g')) AS redacted_md5,
-         | CAST(len(regexp_extract_all(msg, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+')) AS BIGINT) AS n_emails,
-         | CAST(len(regexp_extract_all(msg, '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) AS BIGINT) AS n_ips,
-         | CAST(len(regexp_extract_all(msg, '[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phones,
-         | CAST(len(regexp_extract_all(msg, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_bpeish_tokens
-         |FROM m""".stripMargin,
-
-    // Chunking: identical integer-in-double chunk-count arithmetic;
-    // list_slice is 1-based inclusive and clamps, like Spark's slice.
-    "q54_doc_chunks" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text,' ') AS toks,
-         |  CAST(len(string_split(text,' ')) AS BIGINT) AS n FROM documents),
-         |c AS (SELECT doc_id, toks,
-         |  CASE WHEN n <= 32 THEN 1
-         |       ELSE CAST(floor((n - 32 + 24 - 1)/24.0) AS BIGINT) + 1 END AS nc FROM d),
-         |e AS (SELECT doc_id, toks, unnest(range(0, nc)) AS chunk_idx FROM c)
-         |SELECT doc_id, chunk_idx, chunk_idx*24 AS start_tok,
-         | CAST(len(list_slice(toks, chunk_idx*24+1, chunk_idx*24+32)) AS BIGINT) AS chunk_tokens,
-         | md5(array_to_string(list_slice(toks, chunk_idx*24+1, chunk_idx*24+32), ' ')) AS chunk_md5
-         |FROM e""".stripMargin,
-
-    // Deciles: quantile_cont shares percentile's interpolation formula
-    // bit-for-bit (q33 precedent); the bin comparison chain is unrolled in
-    // the same order as the Scala expression.
-    "q55_value_deciles" -> {
-      val probList = DecileProbs.mkString("[", ", ", "]")
-      val binChain = DecileProbs.indices
-        .map(i => s"(CASE WHEN value > bounds[${i + 1}] THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH b AS (SELECT quantile_cont(value, $probList) AS bounds FROM events),
-         |a AS (SELECT event_type, value,
-         |  $binChain + 1 AS bin
-         | FROM events, b)
-         |SELECT event_type, CAST(bin AS BIGINT) AS bin,
-         | CAST(count(*) AS BIGINT) AS n_events,
-         | min(value) AS min_value, max(value) AS max_value
-         |FROM a GROUP BY event_type, bin""".stripMargin
-    },
-
-    "q56_source_mixture" -> {
-      val h = duckHash("CAST(doc_id AS VARCHAR)")
-      val quotaCase = MixtureQuotas.toSeq.sortBy(_._1)
-        .map { case (g, q) => s"WHEN '$g' THEN $q" }.mkString(" ")
-      s"""SELECT source, doc_id FROM (
-         | SELECT source, doc_id,
-         |  row_number() OVER (PARTITION BY source
-         |                     ORDER BY $h ASC NULLS LAST, doc_id ASC NULLS LAST) AS rn
-         | FROM documents)
-         |WHERE rn <= CASE source $quotaCase ELSE 3 END""".stripMargin
-    },
-
-    "q57_oov_rate" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS token
-         |  FROM documents),
-         |tf AS (SELECT token, count(*) AS c FROM tok GROUP BY token),
-         |v AS (SELECT token, 1 AS in_vocab FROM tf
-         |      ORDER BY c DESC, token ASC LIMIT 20)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         | CAST(sum(CASE WHEN in_vocab IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS oov_count,
-         | CAST(sum(CASE WHEN in_vocab IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |   / CAST(count(*) AS DOUBLE) AS oov_rate
-         |FROM tok LEFT JOIN v USING (token) GROUP BY doc_id""".stripMargin,
-
-    // Quantization: scale = max|x|/127 with the same association order;
-    // round-half-up as explicit floor(x/scale + 0.5) on both engines
-    // (round() builtins disagree half-even vs half-away). Spark's
-    // transform index is 0-based (+1); generate_subscripts is 1-based.
-    "q58_embedding_quantize" ->
-      s"""WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-         |  generate_subscripts(embedding, 1) AS i FROM embeddings),
-         |s AS (SELECT vec_id, max(abs(x)) / 127.0 AS scale FROM e GROUP BY vec_id),
-         |q AS (SELECT e.vec_id, scale, i,
-         |  CASE WHEN scale = 0 THEN 0
-         |       ELSE CAST(floor(x / scale + 0.5) AS BIGINT) END AS qv
-         | FROM e JOIN s USING (vec_id))
-         |SELECT vec_id, scale, CAST(count(*) AS BIGINT) AS n_dims,
-         | CAST(sum(qv * i) AS BIGINT) AS checksum,
-         | CAST(min(qv) AS BIGINT) AS q_min, CAST(max(qv) AS BIGINT) AS q_max
-         |FROM q GROUP BY vec_id, scale""".stripMargin,
-
-    // Label margins: centroid means follow the exactAvg shape
-    // (decimal-sum → double → /count → float round); cosine is the q22
-    // left-fold list_reduce twin of the codegen expression.
-    "q60_label_margins" ->
-      s"""WITH x AS (SELECT label, generate_subscripts(embedding, 1) AS i,
-         |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-         |m AS (SELECT label, i,
-         |  CAST(CAST(sum(CAST(x AS DECIMAL(28,8))) AS DOUBLE)/count(x) AS FLOAT) AS m
-         | FROM x GROUP BY label, i),
-         |c AS (SELECT label AS c_label,
-         |  list(CAST(m AS DOUBLE) ORDER BY i) AS centroid FROM m GROUP BY label),
-         |v AS (SELECT vec_id, label,
-         |  list_transform(embedding, e -> CAST(e AS DOUBLE)) AS e FROM embeddings),
-         |s AS (SELECT vec_id, v.label, c_label,
-         |  list_reduce(list_transform(list_zip(e, centroid), z -> z[1]*z[2]), (a,b) -> a+b)
-         |  / (sqrt(list_reduce(list_transform(e, q -> q*q), (a,b) -> a+b))
-         |     * sqrt(list_reduce(list_transform(centroid, q -> q*q), (a,b) -> a+b))) AS cos
-         | FROM v, c),
-         |o AS (SELECT vec_id, label, c_label, cos,
-         |  row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, c_label ASC) AS rn
-         | FROM s WHERE c_label <> label)
-         |SELECT own.vec_id, own.label, own.cos AS own_cos,
-         | o.c_label AS nearest_other_label, o.cos AS other_cos,
-         | own.cos - o.cos AS margin
-         |FROM (SELECT vec_id, label, cos FROM s WHERE c_label = label) own
-         |JOIN o ON own.vec_id = o.vec_id AND o.rn = 1""".stripMargin,
-
-    // Funnel: first-failing-stage CASE chain in the exact stage order and
-    // with the same int-counts-cast-to-double ratio construction.
-    "q59_filter_funnel" ->
-      s"""WITH d AS (SELECT n_chars,
-         |  CAST(len(string_split(text,' ')) AS BIGINT) AS ntok,
-         |  CAST(len(list_filter(string_split(text,' '),
-         |    t -> t IN ('the','a','of','and','to'))) AS BIGINT) AS sw,
-         |  CAST(len(${duckShingleSet("text", 3)}) AS BIGINT) AS d3
-         | FROM documents),
-         |s AS (SELECT CASE
-         |  WHEN NOT (n_chars >= 120) THEN 0
-         |  WHEN NOT (ntok >= 25) THEN 1
-         |  WHEN NOT (CAST(sw AS DOUBLE)/CAST(ntok AS DOUBLE) > 0.02) THEN 2
-         |  WHEN NOT (CAST(d3 AS DOUBLE)/CAST(ntok - 2 AS DOUBLE) >= 0.97) THEN 3
-         |  ELSE 4 END AS idx FROM d)
-         |SELECT CAST(idx AS BIGINT) AS drop_stage_idx,
-         | CASE idx WHEN 0 THEN 'too_short' WHEN 1 THEN 'too_few_tokens'
-         |          WHEN 2 THEN 'low_stopword' WHEN 3 THEN 'high_repetition'
-         |          ELSE 'pass' END AS drop_stage,
-         | CAST(count(*) AS BIGINT) AS n_docs
-         |FROM s GROUP BY idx""".stripMargin,
-
-    "q38_city_trends" ->
-      s"""WITH daily AS (
-         | SELECT city, reading_date,
-         |  floor((CAST(sum(CAST(temperature_celsius AS DECIMAL(28,6))) AS DOUBLE)/count(temperature_celsius))*100.0+0.5)/100.0 AS avg_t
-         | FROM ($enrichedFullSql) GROUP BY city, reading_date)
-         |SELECT city, reading_date, avg_t,
-         | avg_t - lag(avg_t, 1) OVER w AS delta,
-         | (avg_t + coalesce(lag(avg_t, 1) OVER w, 0.0) + coalesce(lag(avg_t, 2) OVER w, 0.0))
-         |   / (1 + CAST(lag(avg_t, 1) OVER w IS NOT NULL AS INTEGER)
-         |        + CAST(lag(avg_t, 2) OVER w IS NOT NULL AS INTEGER)) AS ma3
-         |FROM daily WINDOW w AS (PARTITION BY city ORDER BY reading_date ASC)""".stripMargin,
-
-    "q37_quality_checks" ->
-      s"""WITH e AS ($enrichedSql),
-         |agg AS (
-         | SELECT
-         |  0::BIGINT AS null_station_id,
-         |  0::BIGINT AS null_timestamp,
-         |  CAST(sum(CASE WHEN NOT (temperature_celsius BETWEEN -50 AND 60) THEN 1 ELSE 0 END) AS BIGINT) AS temperature_out_of_range,
-         |  CAST(sum(CASE WHEN NOT (humidity_percent BETWEEN 0 AND 100) THEN 1 ELSE 0 END) AS BIGINT) AS humidity_out_of_range,
-         |  CAST(sum(CASE WHEN NOT (pressure_hpa BETWEEN 950 AND 1050) THEN 1 ELSE 0 END) AS BIGINT) AS pressure_out_of_range,
-         |  CAST(sum(CASE WHEN NOT (uv_index BETWEEN 0 AND 15) THEN 1 ELSE 0 END) AS BIGINT) AS uv_out_of_range,
-         |  CAST(count(*) AS BIGINT) AS total
-         | FROM e)
-         |SELECT c.check_name, c.violations, total, c.violations = 0 AS pass FROM agg,
-         | LATERAL (VALUES
-         |  ('null_station_id', null_station_id),
-         |  ('null_timestamp', null_timestamp),
-         |  ('temperature_out_of_range', temperature_out_of_range),
-         |  ('pressure_out_of_range', pressure_out_of_range),
-         |  ('humidity_out_of_range', humidity_out_of_range),
-         |  ('uv_out_of_range', uv_out_of_range)) AS c(check_name, violations)""".stripMargin,
-
-    "q36_dedup_groups" ->
-      s"""WITH RECURSIVE
-         |p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT src AS id FROM e),
-         |reach(id, r) AS (
-         | SELECT id, id FROM nodes
-         | UNION
-         | SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-         |SELECT id, CAST(min(r) AS BIGINT) AS keep_id, (id = min(r)) AS is_keeper
-         |FROM reach GROUP BY id""".stripMargin,
-
-    "q35_health_stats" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS reading_count,
-         | CAST(count(DISTINCT uv_index) AS BIGINT) AS distinct_uv_levels,
-         | max(event_id) AS latest_event_id,
-         | CAST(sum(CAST(data_quality_score AS DECIMAL(28,6))) AS DOUBLE)/count(data_quality_score) AS avg_quality,
-         | CAST(sum(CASE WHEN alert_level <> 'NORMAL' THEN 1 ELSE 0 END) AS BIGINT) AS alerting_count
-         |FROM ($enrichedSql)""".stripMargin,
-
-    "q33_value_percentiles" ->
-      """SELECT event_type,
-        | quantile_cont(value, 0.5) AS median_value,
-        | quantile_cont(value, 0.9) AS p90_value,
-        | CAST(count(*) AS BIGINT) AS event_count
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q34_rp_lsh_signatures" -> {
-      // same literal plane coefficients, same left-to-right association
-      val sig = RpPlanes.zipWithIndex.map { case (h, j) =>
-        val dot = h.zipWithIndex
-          .map { case (c, i) => s"CAST(embedding[${i + 1}] AS DOUBLE)*($c)" }
-          .mkString("+")
-        s"CASE WHEN $dot > 0.0 THEN ${1L << j}::BIGINT ELSE 0::BIGINT END"
-      }.mkString("+")
-      s"SELECT vec_id, $sig AS rp_sig FROM embeddings"
-    },
-
-    "q32_props_json_stats" ->
-      """SELECT event_type,
-        | CAST(sum(CAST(CAST(CAST(json_extract_string(props,'$.k') AS INTEGER) AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-        |   / count(CAST(json_extract_string(props,'$.k') AS INTEGER)) AS avg_k,
-        | CAST(sum(CASE WHEN CAST(json_extract_string(props,'$.k') AS INTEGER) > 50 THEN 1 ELSE 0 END) AS BIGINT) AS high_k_count,
-        | CAST(count(*) AS BIGINT) AS event_count
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // Span dedup: duplicated windows marked by a cross-doc HAVING, then the
-    // textbook gaps-and-islands interval merge — same lag/running-sum
-    // construction as the Spark window chain.
-    "q62_dup_span_ranges" -> spanRangesSql,
-
-    // Sparse span dedup: the restricted run is EXACTLY the full run when
-    // fpK+fpW-1 <= window (winnowing guarantee) — q62's oracle gates the
-    // two-stage plan unchanged.
-    "q120_span_ranges_sparse" -> spanRangesSql,
-
-    // Amortized sparse span dedup (stored fingerprint table): same
-    // exactness argument, same oracle.
-    "q129_span_sparse_amortized" -> spanRangesSql,
-
-    // Corpus-trained BPE merge table, re-derived round by round.
-    "q130_bpe_merges" -> bpeMergesSql,
-
-    // Stupid Backoff token grain: the oracle re-derives the pruned count
-    // tables per order and the per-token candidate lookup independently
-    // (explicit per-slot LEFT JOINs vs the Spark side's single unpivoted
-    // candidate join + re-group).
-    "q131_lm_token_scores" ->
-      s"""WITH $lmCte
-         |SELECT doc_id, pos, matched_ord, backoffs, c_num, c_den FROM sc""".stripMargin,
-
-    // Same cross-validation at the CCNet production order: five pruned
-    // count tables, nine lookup slots, the full 5→1 backoff chain.
-    "q143_lm5_token_scores" ->
-      s"""WITH ${lmCteN(5)}
-         |SELECT doc_id, pos, matched_ord, backoffs, c_num, c_den FROM sc""".stripMargin,
-
-    // CCNet banding: the oracle recomposes the fluency permille from the
-    // lmCte census fragments, then derives the per-source band edges the
-    // ROW-GRAIN way (row_number at ⌊(n−1)·k/3⌋+1 — the q141 convention,
-    // a genuinely different computation than the engine's histogram) and
-    // assigns bands by the same value-vs-edge comparison.
-    "q144_fluency_bands" ->
-      s"""WITH $fluencyBandCtes
-         |SELECT doc_id, source, fluency_pm, band FROM bd""".stripMargin,
-
-    // Band-preferential rate admission: the shared banding chain + the
-    // per-band hash-threshold test (hash mod denom < num), both CASEs
-    // built from the same shared BandRates.
-    "q148_band_rate_sample" -> {
-      // '0 ' = the draw's seed domain (hashSampleByGroup's default seed
-      // prefix — domain-separated from the split hash by construction)
-      val h = duckHash("'0 ' || CAST(doc_id AS VARCHAR)")
-      s"""WITH $fluencyBandCtes
-         |SELECT doc_id, source, fluency_pm, band FROM bd
-         |WHERE CAST($h AS HUGEINT) % ${bandRateCaseSql(_._2, 1)}
-         |    < ${bandRateCaseSql(_._1, 0)}""".stripMargin
-    },
-
-    // Banded capstone admission: the composed capstone chain (ending in
-    // the fluent pool `flu`), a SECOND census over flu under flu's own
-    // self-trained model ("fb"-prefixed lmCteN — the capstone's "fl"
-    // chain censuses scr under scr's model, a different artifact), the
-    // global row-grain tercile edges, and the q148 hash-threshold draw.
-    "q149_capstone_banded" -> {
-      val h = duckHash("'0 ' || CAST(doc_id AS VARCHAR)")
-      s"""WITH RECURSIVE
-         |$capstoneCtes,
-         |${lmCteN(3, "flu", "fb")},
-         |${materializeCtes(
-          s"""bcen AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sn,
-             |  CAST(sum(CASE WHEN matched_ord >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS hi
-             | FROM fbsc GROUP BY doc_id),
-             |bpm AS (SELECT doc_id, (hi * 1000) // sn AS fluency_pm FROM bcen),
-             |${tercileBandSql("b", "bpm", None)}""".stripMargin)}
-         |SELECT doc_id, fluency_pm, band FROM bbd
-         |WHERE CAST($h AS HUGEINT) % ${bandRateCaseSql(_._2, 1)}
-         |    < ${bandRateCaseSql(_._1, 0)}""".stripMargin
-    },
-
-    // Per-source banded capstone admission: q149's chain with the
-    // second census joined back to each doc's source and the tercile
-    // edges computed PER SOURCE (the tercileBandSql grouped form q144
-    // uses on the raw corpus) — the multilingual CCNet shape over the
-    // composed capstone pool. Same '0 '-seeded draw domain as q148/q149.
-    "q150_capstone_banded_by_source" -> {
-      val h = duckHash("'0 ' || CAST(doc_id AS VARCHAR)")
-      s"""WITH RECURSIVE
-         |$capstoneCtes,
-         |${lmCteN(3, "flu", "fb")},
-         |${materializeCtes(
-          s"""bcen AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sn,
-             |  CAST(sum(CASE WHEN matched_ord >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS hi
-             | FROM fbsc GROUP BY doc_id),
-             |bpm AS (SELECT c.doc_id, d.source, (c.hi * 1000) // c.sn AS fluency_pm
-             | FROM bcen c JOIN documents d ON c.doc_id = d.doc_id),
-             |${tercileBandSql("b", "bpm", Some("source"))}""".stripMargin)}
-         |SELECT doc_id, source, fluency_pm, band FROM bbd
-         |WHERE CAST($h AS HUGEINT) % ${bandRateCaseSql(_._2, 1)}
-         |    < ${bandRateCaseSql(_._1, 0)}""".stripMargin
-    },
-
-    // Band-preferential mixture: the shared banding chain + the q56
-    // hash-rank quota draw, partitioned by band.
-    "q146_band_mixture" -> {
-      val h = duckHash("CAST(doc_id AS VARCHAR)")
-      val quotaCase = BandQuotas.toSeq.sortBy(_._1)
-        .map { case (g, q) => s"WHEN '$g' THEN $q" }.mkString(" ")
-      s"""WITH $fluencyBandCtes,
-         |mr AS (SELECT doc_id, source, fluency_pm, band,
-         |  row_number() OVER (PARTITION BY band
-         |                     ORDER BY $h ASC NULLS LAST, doc_id ASC NULLS LAST) AS rn
-         | FROM bd)
-         |SELECT doc_id, source, fluency_pm, band FROM mr
-         |WHERE rn <= CASE band $quotaCase ELSE 0 END""".stripMargin
-    },
-
-    // Backoff census at the production order — the generalized o5..o1
-    // bucket columns over the 9-slot lookup chain.
-    "q145_lm5_backoff_census" ->
-      s"""WITH ${lmCteN(5)}
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS scored_tokens,
-         | CAST(sum(CASE WHEN matched_ord = 5 THEN 1 ELSE 0 END) AS BIGINT) AS o5,
-         | CAST(sum(CASE WHEN matched_ord = 4 THEN 1 ELSE 0 END) AS BIGINT) AS o4,
-         | CAST(sum(CASE WHEN matched_ord = 3 THEN 1 ELSE 0 END) AS BIGINT) AS o3,
-         | CAST(sum(CASE WHEN matched_ord = 2 THEN 1 ELSE 0 END) AS BIGINT) AS o2,
-         | CAST(sum(CASE WHEN matched_ord = 1 THEN 1 ELSE 0 END) AS BIGINT) AS o1,
-         | CAST(sum(CASE WHEN matched_ord = 0 THEN 1 ELSE 0 END) AS BIGINT) AS oov,
-         | CAST(sum(backoffs) AS BIGINT) AS total_backoffs
-         |FROM sc GROUP BY doc_id""".stripMargin,
-
-    // Per-document backoff census over the same token grain.
-    "q132_lm_backoff_census" ->
-      s"""WITH $lmCte
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS scored_tokens,
-         | CAST(sum(CASE WHEN matched_ord = 3 THEN 1 ELSE 0 END) AS BIGINT) AS o3,
-         | CAST(sum(CASE WHEN matched_ord = 2 THEN 1 ELSE 0 END) AS BIGINT) AS o2,
-         | CAST(sum(CASE WHEN matched_ord = 1 THEN 1 ELSE 0 END) AS BIGINT) AS o1,
-         | CAST(sum(CASE WHEN matched_ord = 0 THEN 1 ELSE 0 END) AS BIGINT) AS oov,
-         | CAST(sum(backoffs) AS BIGINT) AS total_backoffs
-         |FROM sc GROUP BY doc_id""".stripMargin,
-
-    // Gopher rule flags: identical exact-integer threshold arithmetic;
-    // substring counts via the same replace-length trick. The CTE chain
-    // is the shared gopherCtes fragment — the capstone oracle reuses it
-    // over the train pool.
-    "q133_gopher_flags" ->
-      s"""WITH ${gopherCtes("documents", "")}
-         |SELECT doc_id,
-         | CAST(f1 AS INT) AS r_word_count, CAST(f2 AS INT) AS r_word_len,
-         | CAST(f3 AS INT) AS r_symbol_ratio, CAST(f4 AS INT) AS r_bullet_lines,
-         | CAST(f5 AS INT) AS r_ellipsis_lines, CAST(f6 AS INT) AS r_alpha_words,
-         | CAST(f7 AS INT) AS r_stop_words,
-         | CAST($GopherKeptCond AS INT) AS kept
-         |FROM gf""".stripMargin,
-
-    // Repetition screens: the oracle rebuilds every metric from first
-    // principles — window counts over an exploded (doc, n, shingle
-    // position) grid, top n-gram via max-count-then-max-mass, coverage
-    // via DISTINCT covered positions joined to token lengths (the mask
-    // semantics), line/paragraph repeats via row_number > 1. The CTE
-    // chain is the shared repetitionCtes fragment — the capstone oracle
-    // reuses it over the train pool.
-    "q134_repetition_screens" ->
-      s"""WITH ${repetitionCtes("documents", "")}
-         |SELECT *, CAST($RepetitionKeptCond AS INT) AS kept
-         |FROM wide""".stripMargin,
-
-    // Funnel attribution: the same ordered condition lists the q133/q134
-    // kept-columns read, re-assembled as a FIRST-failure CASE chain over
-    // the train pool — every document charged to the first stage that
-    // rejects it (or 'pass'), counts summing to the pool size. CTE heads
-    // materialized (fan-out via the flag/metric joins).
-    "q136_funnel_attribution" -> {
-      // flag/metric columns resolve unqualified through the USING joins
-      val stages: Seq[(String, String)] =
-        Seq("min_tokens" -> s"wc >= $CapMinTokens") ++
-          GopherCondList ++ RepetitionCondList
-      val idxArms = stages.zipWithIndex.map { case ((_, cond), i) =>
-        s"WHEN NOT ($cond) THEN $i" }.mkString("\n  ")
-      val nameArms = stages.map { case (n, cond) =>
-        s"WHEN NOT ($cond) THEN '$n'" }.mkString("\n  ")
-      val ctes = materializeCtes(
-        s"""pool AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-           |${gopherCtes("pool", "fq")},
-           |${repetitionCtes("pool", "fq")}""".stripMargin)
-      s"""WITH $ctes,
-         |st AS (SELECT g.doc_id,
-         |  CASE $idxArms ELSE ${stages.size} END AS drop_stage_idx,
-         |  CASE $nameArms ELSE 'pass' END AS drop_stage
-         | FROM fqgq g JOIN fqgf USING (doc_id) JOIN fqwide USING (doc_id))
-         |SELECT CAST(drop_stage_idx AS BIGINT) AS drop_stage_idx, drop_stage,
-         |       count(*) AS n_docs
-         |FROM st GROUP BY 1, 2""".stripMargin
-    },
-
-    // Perceptron model: the oracle replays every training step from
-    // scratch (unrolled CTE chain) — agreement means the two engines ran
-    // the identical integer recurrence, not that one copied the other's
-    // output.
-    "q137_perceptron_model" ->
-      s"""WITH $perceptronCtes
-         |SELECT bucket, w FROM wavg""".stripMargin,
-
-    // Classifier inference over the full corpus from the replayed model:
-    // bias + matched-occurrence weight sum per doc (LEFT joins keep
-    // featureless docs at the bare bias, as training scored them).
-    "q138_classifier_scores" ->
-      s"""WITH $classifierScoreCtes
-         |SELECT doc_id, score, score > 0 AS keep FROM sc""".stripMargin,
-
-    // Classifier-weighted PPS: the shared score chain feeding q105's
-    // exact-HUGEINT inclusion test with weight = score (positive scores
-    // only — the same keep rule as q138).
-    "q147_classifier_pps" ->
-      s"""WITH $classifierScoreCtes,
-         |wd AS (SELECT doc_id, score AS w FROM sc WHERE score > 0),
-         |tt AS (SELECT CAST(sum(w) AS BIGINT) AS total FROM wd)
-         |SELECT doc_id, w,
-         | least(CAST(1.0 AS DOUBLE), CAST(w AS DOUBLE) * $ClsPpsTarget.0 / total)
-         |   AS incl_prob,
-         | 1.0 / least(CAST(1.0 AS DOUBLE), CAST(w AS DOUBLE) * $ClsPpsTarget.0 / total)
-         |   AS ht_weight
-         |FROM wd CROSS JOIN tt
-         |WHERE CAST(${duckHash(s"'$ClsPpsSeed ' || CAST(doc_id AS VARCHAR)")} AS HUGEINT) * total
-         |   < CAST($ClsPpsTarget AS HUGEINT) * w * 1152921504606846976""".stripMargin,
-
-    // Distillation census: the q138 score chain joined to the battery
-    // verdict (the q133/q134 shared fragments over the FULL documents
-    // table — "cq"-prefixed so they cannot collide with the trainer's
-    // "pc" sample fragments), collapsed to the four confusion cells.
-    "q139_classifier_census" -> {
-      val battery = materializeCtes(
-        s"""${gopherCtes("documents", "cq")},
-           |${repetitionCtes("documents", "cq")},
-           |tpass AS (SELECT g.doc_id,
-           |  (wc >= $CapMinTokens AND $GopherKeptCond AND
-           |   $RepetitionKeptCond) AS teacher_pass
-           | FROM cqgq g JOIN cqgf USING (doc_id) JOIN cqwide USING (doc_id))""".stripMargin)
-      s"""WITH $perceptronCtes,
-         |$battery,
-         |bc AS (SELECT CAST(COALESCE(sum(w), 0) AS BIGINT) AS bias
-         |       FROM wavg WHERE bucket = -1),
-         |wt AS (SELECT bucket, w FROM wavg WHERE bucket >= 0),
-         |${duckStatFeats("documents", "cq")},
-         |df AS (SELECT doc_id, ${duckHash("f")} % $FeatBuckets AS bucket
-         |       FROM (${duckPcptFeatSelects("documents", "cq")})),
-         |sc AS (SELECT d.doc_id,
-         |        CAST(bc.bias + COALESCE(sum(w.w), 0) AS BIGINT) AS score
-         |       FROM documents d
-         |       CROSS JOIN bc
-         |       LEFT JOIN df ON df.doc_id = d.doc_id
-         |       LEFT JOIN wt w ON w.bucket = df.bucket
-         |       GROUP BY d.doc_id, bc.bias)
-         |SELECT sc.score > 0 AS pred_keep, tpass.teacher_pass,
-         |       count(*) AS n_docs
-         |FROM sc JOIN tpass USING (doc_id)
-         |GROUP BY 1, 2""".stripMargin
-    },
-
-    // Bottom-k sketch: the oracle re-derives the retained set (k smallest
-    // (hash, value) pairs per source — ties on the full pair collapse to
-    // the same multiset, so row_number is safe) and reads the identical
-    // nearest-rank-lower positions ⌊(m−1)·num/den⌋+1 with DuckDB's exact
-    // integer // division.
-    "q140_sketch_quantiles" -> {
-      val h = duckHash("CAST(doc_id AS VARCHAR)")
-      s"""WITH hs AS (SELECT source, n_chars,
-         |  row_number() OVER (PARTITION BY source
-         |                     ORDER BY $h ASC, n_chars ASC) AS hr
-         | FROM documents),
-         |km AS (SELECT source, n_chars,
-         |  row_number() OVER (PARTITION BY source ORDER BY n_chars ASC) AS vr,
-         |  count(*) OVER (PARTITION BY source) AS m
-         | FROM hs WHERE hr <= $SketchK)
-         |SELECT source,
-         | max(CASE WHEN vr = (m-1)*1//4+1 THEN n_chars END) AS p25,
-         | max(CASE WHEN vr = (m-1)*1//2+1 THEN n_chars END) AS p50,
-         | max(CASE WHEN vr = (m-1)*3//4+1 THEN n_chars END) AS p75,
-         | max(CASE WHEN vr = (m-1)*9//10+1 THEN n_chars END) AS p90,
-         | CAST(max(m) AS BIGINT) AS sample_n
-         |FROM km GROUP BY source""".stripMargin
-    },
-
-    // Exact quantiles: the oracle ranks every ROW (row_number over all
-    // rows per source) where the engine cumulates a value HISTOGRAM —
-    // independent formulations of the same nearest-rank-lower contract.
-    "q141_exact_quantiles" ->
-      s"""WITH rk AS (SELECT source, n_chars,
-         |  row_number() OVER (PARTITION BY source ORDER BY n_chars ASC) AS vr,
-         |  count(*) OVER (PARTITION BY source) AS n
-         | FROM documents)
-         |SELECT source,
-         | max(CASE WHEN vr = (n-1)*1//4+1 THEN n_chars END) AS p25,
-         | max(CASE WHEN vr = (n-1)*1//2+1 THEN n_chars END) AS p50,
-         | max(CASE WHEN vr = (n-1)*3//4+1 THEN n_chars END) AS p75,
-         | max(CASE WHEN vr = (n-1)*9//10+1 THEN n_chars END) AS p90,
-         | CAST(max(n) AS BIGINT) AS n
-         |FROM rk GROUP BY source""".stripMargin,
-
-    // Weighted quantiles: the oracle literally expands each doc into
-    // `token count` rows (unnest(range(w))) and ranks the expansion —
-    // the engine's cumulative-weight histogram must land on the same
-    // values at the same ⌊(W−1)·num/den⌋+1 positions.
-    "q142_weighted_quantiles" ->
-      s"""WITH ex AS (SELECT source, n_chars FROM (
-         |  SELECT source, n_chars,
-         |    unnest(range(CAST(len(string_split(text,' ')) AS BIGINT))) AS r
-         |  FROM documents)),
-         |rk AS (SELECT source, n_chars,
-         |  row_number() OVER (PARTITION BY source ORDER BY n_chars ASC) AS vr,
-         |  count(*) OVER (PARTITION BY source) AS n
-         | FROM ex)
-         |SELECT source,
-         | max(CASE WHEN vr = (n-1)*1//4+1 THEN n_chars END) AS p25,
-         | max(CASE WHEN vr = (n-1)*1//2+1 THEN n_chars END) AS p50,
-         | max(CASE WHEN vr = (n-1)*3//4+1 THEN n_chars END) AS p75,
-         | max(CASE WHEN vr = (n-1)*9//10+1 THEN n_chars END) AS p90,
-         | CAST(max(n) AS BIGINT) AS n
-         |FROM rk GROUP BY source""".stripMargin,
-
-    // Span pairs: the oracle may self-join on the span string (reference
-    // semantics — the Spark plan is the single-pass bucket expansion);
-    // aligned runs via the same diagonal gaps-and-islands row_number trick.
-    "q63_dup_span_pairs" ->
-      s"""WITH $spanCte,
-         |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.span,
-         |        a.pos AS pa, b.pos AS pb
-         |       FROM sp a JOIN sp b ON a.span = b.span AND a.doc_id < b.doc_id),
-         |sh AS (SELECT id_a, id_b, CAST(count(DISTINCT span) AS BIGINT) AS shared_spans
-         |       FROM pr GROUP BY 1, 2),
-         |ru AS (SELECT id_a, id_b, pa, pa - pb AS diag,
-         |        pa - row_number() OVER (PARTITION BY id_a, id_b, pa - pb ORDER BY pa) AS isl
-         |       FROM pr),
-         |rc AS (SELECT id_a, id_b, count(*) AS run FROM ru GROUP BY id_a, id_b, diag, isl),
-         |mx AS (SELECT id_a, id_b, CAST(max(run) + ${SpanWindow - 1} AS BIGINT) AS longest_token_run
-         |       FROM rc GROUP BY 1, 2)
-         |SELECT sh.id_a, sh.id_b, sh.shared_spans, mx.longest_token_run
-         |FROM sh JOIN mx USING (id_a, id_b)
-         |WHERE shared_spans >= 1""".stripMargin,
-
-    // Negative sampling: dense hash-ordered index, per-anchor hash draws
-    // with the self-draw stepped to the next index — concat format and
-    // tie-breaks mirror the Scala exactly.
-    "q64_negative_samples" ->
-      s"""WITH ids AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id IS NOT NULL),
-         |ord AS (SELECT id,
-         |  row_number() OVER (ORDER BY ${duckHash("CAST(id AS VARCHAR)")} ASC, id ASC) - 1 AS idx
-         | FROM ids),
-         |c AS (SELECT count(*) AS n FROM ord),
-         |dr AS (SELECT id AS anchor, idx AS aidx,
-         |        unnest(generate_series(0, 2)) AS neg_rank FROM ord),
-         |d2 AS (SELECT anchor, neg_rank, aidx, n,
-         |  ${duckHash("'7:' || CAST(anchor AS VARCHAR) || ':' || CAST(neg_rank AS VARCHAR)")} % n AS draw
-         | FROM dr, c),
-         |d3 AS (SELECT anchor, neg_rank,
-         |  CASE WHEN draw = aidx THEN (draw + 1) % n ELSE draw END AS nidx FROM d2)
-         |SELECT d3.anchor, CAST(d3.neg_rank AS BIGINT) AS neg_rank, o.id AS negative
-         |FROM d3 JOIN ord o ON o.idx = d3.nidx""".stripMargin,
-
-    // Deterministic shuffle: rank = row number in (hash(seed ∥ NUL ∥ key),
-    // key) order — the NUL separator byte is chr(0) in DuckDB.
-    "q65_corpus_shuffle" ->
-      s"""SELECT doc_id,
-         | CAST(row_number() OVER (
-         |   ORDER BY ${duckHash("'42' || chr(0) || CAST(doc_id AS VARCHAR)")} ASC, doc_id ASC)
-         |  AS BIGINT) AS shuffle_rank
-         |FROM documents""".stripMargin,
-
-    // Sentence chunking: same synthesized message, same split pattern,
-    // cumulative token offsets via the identical lag-free window, chunk
-    // membership by offset floor-division; sentences re-join in sent_idx
-    // order for the md5.
-    "q68_sentence_chunks" ->
-      s"""WITH m AS (SELECT c_custkey,
-         |  'customer ' || c_name || ' ranks high. segment ' || lower(c_mktsegment) ||
-         |  ' moves ' || trim(substr('very very very very ', 1,
-         |    CAST(5*(1 + c_custkey % 4) AS INTEGER))) ||
-         |  ' fast! account ' || CAST(c_custkey AS VARCHAR) || ' closes. bye' AS msg
-         | FROM customer),
-         |s0 AS (SELECT c_custkey,
-         |  list_filter(regexp_split_to_array(msg, '[.!?]+\\s*'), x -> len(x) > 0) AS sents
-         | FROM m),
-         |se AS (SELECT c_custkey, generate_subscripts(sents, 1) - 1 AS sent_idx,
-         |        unnest(sents) AS sentence FROM s0),
-         |tok AS (SELECT c_custkey, sent_idx, sentence,
-         |        CAST(len(string_split(sentence, ' ')) AS BIGINT) AS sent_tokens FROM se),
-         |off AS (SELECT *, coalesce(sum(sent_tokens) OVER (PARTITION BY c_custkey
-         |        ORDER BY sent_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |        AS start_offset FROM tok),
-         |ch AS (SELECT c_custkey, CAST(floor(start_offset / 6.0) AS BIGINT) AS chunk_idx,
-         |        sent_idx, sentence, sent_tokens FROM off)
-         |SELECT c_custkey, chunk_idx,
-         | CAST(count(*) AS BIGINT) AS n_sentences,
-         | CAST(sum(sent_tokens) AS BIGINT) AS chunk_tokens,
-         | md5(string_agg(sentence, ' ' ORDER BY sent_idx)) AS sentences_md5
-         |FROM ch GROUP BY c_custkey, chunk_idx""".stripMargin,
-
-    // Numeric profile: one row per measure column, UNION ALL per-column
-    // aggregates with the exactAvg DECIMAL mean.
-    "q71_table_profile" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS column_name,
-           | CAST(count($c) AS BIGINT) AS n_values,
-           | CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           | CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           | CAST(min($c) AS DOUBLE) AS min_value,
-           | CAST(max($c) AS DOUBLE) AS max_value,
-           | CAST(sum(CAST(CAST($c AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)/count($c) AS avg_value
-           |FROM lineitem""".stripMargin
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map(one).mkString("\nUNION ALL\n")
-    },
-
-    // Bigram novelty: non-distinct positional bigrams (the spanCte shape
-    // at width 2), corpus counts joined back, exactAvg mean.
-    "q70_bigram_novelty" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         |ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks)-1)) AS i
-         |       FROM t WHERE len(toks) >= 2),
-         |bg AS (SELECT doc_id, array_to_string(toks[i:i+1],' ') AS bigram FROM ix),
-         |c AS (SELECT bigram, CAST(count(*) AS BIGINT) AS c FROM bg GROUP BY bigram)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         | CAST(sum(CASE WHEN c.c <= 1 THEN 1 ELSE 0 END) AS DOUBLE)
-         |   / CAST(count(*) AS DOUBLE) AS rare_rate,
-         | CAST(sum(CAST(c.c AS DECIMAL(28,6))) AS DOUBLE) / count(*) AS mean_bigram_count
-         |FROM bg JOIN c USING (bigram) GROUP BY doc_id""".stripMargin,
-
-    // Mean pooling: per-(label, position) DECIMAL(28,6) sums → double ÷
-    // count → float, the exactAvg construction element-wise.
-    "q66_mean_pool" ->
-      s"""WITH x AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
-         |  CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings)
-         |SELECT label, CAST(pos AS BIGINT) AS pos,
-         | CAST(CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE)/count(x) AS FLOAT) AS m
-         |FROM x GROUP BY label, pos""".stripMargin,
-
-    // Temperature mixture: integer √-count weights, integer floor-division
-    // quotas (// — DuckDB's exact integral div, like Spark's `div`), then
-    // the q56 hash-rank draw. Quota stays internal (HUGEINT-safe).
-    "q72_temperature_mixture" -> {
-      val h = duckHash("CAST(doc_id AS VARCHAR)")
-      s"""WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS c
-         |           FROM documents WHERE source IS NOT NULL GROUP BY source),
-         |w AS (SELECT source, c, CAST(floor(sqrt(c)) AS BIGINT) AS w FROM c),
-         |q AS (SELECT source, least(c, (100 * w) // (SELECT sum(w) FROM w)) AS quota
-         |      FROM w),
-         |r AS (SELECT source, doc_id,
-         |       row_number() OVER (PARTITION BY source
-         |                          ORDER BY $h ASC NULLS LAST, doc_id ASC NULLS LAST) AS rn
-         |      FROM documents WHERE source IS NOT NULL)
-         |SELECT r.source, r.doc_id FROM r JOIN q USING (source) WHERE rn <= quota""".stripMargin
-    },
-
-    // Span cut: q62's range CTEs, then tokens anti-joined against the
-    // intervals and re-joined in position order; fully-cut docs come back
-    // as '' via the outer join.
-    "q73_span_cut_docs" ->
-      s"""WITH $spanCte,
-         |d AS (SELECT span FROM sp GROUP BY span HAVING count(DISTINCT doc_id) >= 2),
-         |m AS (SELECT sp.doc_id, sp.pos FROM sp JOIN d USING (span)),
-         |f AS (SELECT doc_id, pos,
-         |  CASE WHEN lag(pos) OVER w IS NULL OR pos > lag(pos) OVER w + $SpanWindow
-         |       THEN 1 ELSE 0 END AS nw
-         | FROM m WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         |g AS (SELECT doc_id, pos, sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f),
-         |rng AS (SELECT doc_id, min(pos) AS s, max(pos) + ${SpanWindow - 1} AS e
-         |        FROM g GROUP BY doc_id, grp),
-         |tk AS (SELECT doc_id, unnest(toks) AS tok,
-         |        generate_subscripts(toks, 1) - 1 AS i FROM t),
-         |keep AS (SELECT tk.doc_id, tk.tok, tk.i FROM tk
-         |         LEFT JOIN rng ON tk.doc_id = rng.doc_id AND tk.i BETWEEN rng.s AND rng.e
-         |         WHERE rng.doc_id IS NULL),
-         |cut AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS text
-         |        FROM keep GROUP BY doc_id)
-         |SELECT dd.doc_id, coalesce(cut.text, '') AS text
-         |FROM documents dd LEFT JOIN cut USING (doc_id)""".stripMargin,
-
-    // Pack segments: q50's window cumsum + a generate_series explode over
-    // the packs each doc overlaps, then pure in-sequence range arithmetic.
-    "q74_pack_segments" ->
-      s"""WITH $packCte,
-         |p AS (SELECT doc_id, shard, tokens, start_offset,
-         |  CAST(floor(CAST(start_offset AS DOUBLE)/512.0) AS BIGINT) AS p0,
-         |  CAST(floor((CAST(start_offset AS DOUBLE)+tokens-1.0)/512.0) AS BIGINT) AS p1
-         | FROM o WHERE tokens > 0),
-         |e AS (SELECT doc_id, shard, tokens, start_offset,
-         |  unnest(generate_series(p0, p1)) AS seq_id FROM p)
-         |SELECT shard, seq_id, doc_id,
-         | CAST(greatest(0, start_offset - seq_id*512) AS BIGINT) AS seg_start,
-         | CAST(least(seq_id*512 + 511, start_offset + tokens - 1) - seq_id*512 AS BIGINT) AS seg_end
-         |FROM e""".stripMargin,
-
-    // Cross-set span ranges: the eval side's DISTINCT spans semi-join the
-    // train span stream (plain JOIN against a DISTINCT set ≡ left-semi),
-    // then the q62 gaps-and-islands merge at the q75 window.
-    "q75_eval_span_ranges" ->
-      s"""WITH ${spanCteW(EvalSpanWindow)},
-         |ev AS (SELECT DISTINCT span FROM sp WHERE doc_id % 10 = 0),
-         |m AS (SELECT sp.doc_id, sp.pos FROM sp JOIN ev USING (span)
-         |      WHERE sp.doc_id % 10 <> 0),
-         |f AS (SELECT doc_id, pos,
-         |  CASE WHEN lag(pos) OVER w IS NULL OR pos > lag(pos) OVER w + $EvalSpanWindow
-         |       THEN 1 ELSE 0 END AS nw
-         | FROM m WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         |g AS (SELECT doc_id, pos, sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f)
-         |SELECT doc_id, min(pos) AS span_start,
-         | max(pos) + ${EvalSpanWindow - 1} AS span_end,
-         | CAST(count(*) AS BIGINT) AS n_windows
-         |FROM g GROUP BY doc_id, grp""".stripMargin,
-
-    // Surgical decontamination: q75's ranges cut out of the TRAIN docs,
-    // q73's token anti-join + position-ordered rebuild over the train
-    // subset.
-    "q76_decontaminated_docs" ->
-      s"""WITH ${spanCteW(EvalSpanWindow)},
-         |ev AS (SELECT DISTINCT span FROM sp WHERE doc_id % 10 = 0),
-         |m AS (SELECT sp.doc_id, sp.pos FROM sp JOIN ev USING (span)
-         |      WHERE sp.doc_id % 10 <> 0),
-         |f AS (SELECT doc_id, pos,
-         |  CASE WHEN lag(pos) OVER w IS NULL OR pos > lag(pos) OVER w + $EvalSpanWindow
-         |       THEN 1 ELSE 0 END AS nw
-         | FROM m WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         |g AS (SELECT doc_id, pos, sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f),
-         |rng AS (SELECT doc_id, min(pos) AS s, max(pos) + ${EvalSpanWindow - 1} AS e
-         |        FROM g GROUP BY doc_id, grp),
-         |tk AS (SELECT doc_id, unnest(toks) AS tok,
-         |        generate_subscripts(toks, 1) - 1 AS i FROM t WHERE doc_id % 10 <> 0),
-         |keep AS (SELECT tk.doc_id, tk.tok, tk.i FROM tk
-         |         LEFT JOIN rng ON tk.doc_id = rng.doc_id AND tk.i BETWEEN rng.s AND rng.e
-         |         WHERE rng.doc_id IS NULL),
-         |cut AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS text
-         |        FROM keep GROUP BY doc_id)
-         |SELECT dd.doc_id, coalesce(cut.text, '') AS text
-         |FROM documents dd LEFT JOIN cut USING (doc_id)
-         |WHERE dd.doc_id % 10 <> 0""".stripMargin,
-
-    // Self-repetition: occurrences after the first of each (doc, span)
-    // marked via a min-over window, then the q62 gaps-and-islands merge.
-    "q77_self_repeat_ranges" ->
-      s"""WITH ${spanCteW(SelfRepeatWindow)},
-         |m AS (SELECT doc_id, pos FROM (
-         |  SELECT doc_id, pos, min(pos) OVER (PARTITION BY doc_id, span) AS first
-         |  FROM sp) WHERE pos > first),
-         |f AS (SELECT doc_id, pos,
-         |  CASE WHEN lag(pos) OVER w IS NULL OR pos > lag(pos) OVER w + $SelfRepeatWindow
-         |       THEN 1 ELSE 0 END AS nw
-         | FROM m WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         |g AS (SELECT doc_id, pos, sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f)
-         |SELECT doc_id, min(pos) AS span_start,
-         | max(pos) + ${SelfRepeatWindow - 1} AS span_end,
-         | CAST(count(*) AS BIGINT) AS n_windows
-         |FROM g GROUP BY doc_id, grp""".stripMargin,
-
-    // Line dedup: the synthesized fixture mirrored, frequent lines via a
-    // distinct-doc HAVING, survivors re-joined in position order; docs
-    // losing every line come back '' via the outer join.
-    "q78_line_dedup_docs" ->
-      s"""WITH base AS (SELECT doc_id,
-         |  concat_ws(chr(10), 'subscribe to our newsletter',
-         |    lang || ' language section', text,
-         |    'copyright ' || source || ' all rights reserved',
-         |    CASE WHEN doc_id % 7 = 0 THEN 'share this article' END) AS text
-         | FROM documents),
-         |ls AS (SELECT doc_id, string_split(text, chr(10)) AS parts FROM base),
-         |ln AS (SELECT doc_id, unnest(parts) AS line,
-         |       generate_subscripts(parts, 1) - 1 AS pos FROM ls),
-         |fq AS (SELECT line FROM ln WHERE line <> ''
-         |       GROUP BY line HAVING count(DISTINCT doc_id) >= 5),
-         |keep AS (SELECT ln.doc_id, ln.line, ln.pos FROM ln
-         |         LEFT JOIN fq ON ln.line = fq.line WHERE fq.line IS NULL),
-         |cut AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
-         |        FROM keep GROUP BY doc_id)
-         |SELECT b.doc_id, coalesce(cut.text, '') AS text
-         |FROM base b LEFT JOIN cut USING (doc_id)""".stripMargin,
-
-    // Stratified split: per-stratum rank in (hash(seed ∥ NUL ∥ id), id)
-    // order vs integer-exact cumulative-floor quota bounds.
-    "q79_stratified_split" ->
-      s"""WITH r AS (SELECT doc_id, lang,
-         |  row_number() OVER (PARTITION BY lang
-         |    ORDER BY ${duckHash("'7' || chr(0) || CAST(doc_id AS VARCHAR)")} ASC,
-         |             doc_id ASC) AS rn,
-         |  count(*) OVER (PARTITION BY lang) AS n
-         | FROM documents)
-         |SELECT doc_id, lang,
-         | CASE WHEN rn <= (n * 10) // 100 THEN 'test'
-         |      WHEN rn <= (n * 20) // 100 THEN 'val'
-         |      ELSE 'train' END AS split
-         |FROM r""".stripMargin,
-
-    // Best-per-group representative: q36's reachability groups joined to
-    // the q15 quality score, winner = first in (score DESC, id ASC).
-    "q80_dedup_best_rep" ->
-      s"""WITH RECURSIVE
-         |p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT src AS id FROM e),
-         |reach(id, r) AS (
-         | SELECT id, id FROM nodes
-         | UNION
-         | SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-         |g AS (SELECT id, CAST(min(r) AS BIGINT) AS group_id FROM reach GROUP BY id),
-         |q AS (SELECT doc_id, $docQualitySql AS score FROM ($docQualityBaseSql)),
-         |m AS (SELECT g.id AS doc_id, g.group_id, q.score,
-         |  first_value(g.id) OVER (PARTITION BY g.group_id
-         |    ORDER BY q.score DESC, g.id ASC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS rep_id
-         | FROM g JOIN q ON g.id = q.doc_id)
-         |SELECT doc_id, group_id, score, rep_id, (doc_id = rep_id) AS is_rep
-         |FROM m""".stripMargin,
-
-    // Corpus data card: one-row release summary; decimal-sum means,
-    // deterministic top-lang tie-break, q17's fingerprint for dup rate.
-    "q81_corpus_datacard" ->
-      s"""WITH d AS (
-         | SELECT doc_id,
-         |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-         |  list_reduce(
-         |    list_transform(string_split(text,' '), t -> ${duckHash("t")} % 1000000007),
-         |    (a, b) -> (a*31 + b) % 1000000007) AS fp,
-         |  $docLangSql AS lang,
-         |  $docQualitySql AS quality
-         | FROM ($docQualityBaseSql)),
-         |lt AS (SELECT lang AS top_lang FROM d GROUP BY lang
-         |       ORDER BY count(*) DESC, lang ASC LIMIT 1)
-         |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         | CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-         | CAST(sum(CAST(n_tokens AS DECIMAL(28,6))) AS DOUBLE)/count(n_tokens) AS avg_tokens,
-         | quantile_cont(n_tokens, 0.5) AS p50_tokens,
-         | max(n_tokens) AS max_tokens,
-         | CAST(count(DISTINCT fp) AS BIGINT) AS distinct_fingerprints,
-         | CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         | CAST(sum(CAST(quality AS DECIMAL(28,6))) AS DOUBLE)/count(quality) AS avg_quality,
-         | CAST(count(*) - count(DISTINCT fp) AS DOUBLE)/CAST(count(*) AS DOUBLE) AS dup_rate,
-         | (SELECT top_lang FROM lt) AS top_lang
-         |FROM d""".stripMargin,
-
-    // Group-aware split: q36's group label (own id for singletons)
-    // hashed through the q43 split rule.
-    "q82_group_split" ->
-      s"""WITH RECURSIVE
-         |p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-         |nodes AS (SELECT DISTINCT src AS id FROM e),
-         |reach(id, r) AS (
-         | SELECT id, id FROM nodes
-         | UNION
-         | SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-         |g AS (SELECT id, CAST(min(r) AS BIGINT) AS grp FROM reach GROUP BY id),
-         |k AS (SELECT d.doc_id,
-         |        ${duckHash("CAST(COALESCE(g.grp, d.doc_id) AS VARCHAR)")} % 10 AS h
-         |      FROM documents d LEFT JOIN g ON d.doc_id = g.id)
-         |SELECT doc_id,
-         | CASE WHEN h < 8 THEN 'train' WHEN h < 9 THEN 'val' ELSE 'test' END AS split
-         |FROM k""".stripMargin,
-
-    // Packing efficiency: q50's pack CTE aggregated per shard; the q50
-    // floor-div span formula decides boundary crossings.
-    "q83_packing_efficiency" ->
-      s"""WITH $packCte,
-         |s AS (SELECT shard,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(tokens) AS BIGINT) AS n_tokens,
-         |  CAST(floor((CAST(max(start_offset + tokens) AS DOUBLE)-1.0)/512.0) AS BIGINT)
-         |    + 1 AS n_sequences,
-         |  CAST(sum(CASE WHEN
-         |    CAST(floor((CAST(start_offset AS DOUBLE)+tokens-1.0)/512.0) AS BIGINT)
-         |    - CAST(floor(CAST(start_offset AS DOUBLE)/512.0) AS BIGINT) + 1 > 1
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_spanning_docs
-         | FROM o GROUP BY shard)
-         |SELECT shard, n_docs, n_tokens, n_sequences, n_spanning_docs,
-         | CASE WHEN n_sequences > 0
-         |      THEN CAST(n_tokens AS DOUBLE)/CAST(n_sequences*512 AS DOUBLE)
-         |      ELSE 0.0 END AS utilization
-         |FROM s""".stripMargin,
-
-    // Semantic screen: plain cross-join argmax over the normalized-vector
-    // CTE; row_number (cosine DESC, eval_id ASC) ≡ the Spark side's
-    // argmax-set min-id tie-break given bit-identical cosines.
-    "q84_semantic_screen" ->
-      s"""WITH $vecNormCte,
-         |tr AS (SELECT * FROM n WHERE vec_id % 20 <> 0),
-         |ev AS (SELECT * FROM n WHERE vec_id % 20 = 0),
-         |s AS (SELECT t.vec_id AS train_id, x.vec_id AS eval_id,
-         |       ${duckCosine("t", "x")} AS c,
-         |       row_number() OVER (PARTITION BY t.vec_id
-         |                          ORDER BY ${duckCosine("t", "x")} DESC,
-         |                                   x.vec_id ASC) AS rn
-         |      FROM tr t CROSS JOIN ev x)
-         |SELECT train_id, eval_id AS nearest_eval_id, c AS eval_cos,
-         |       (c >= 0.45) AS flagged
-         |FROM s WHERE rn = 1""".stripMargin,
-
-    // Capstone census: every count the Spark Report carries, recomputed
-    // by the composed stage chain. The inner union is BIGINT except the
-    // packed-sequence sum (HUGEINT) — the outer CAST normalizes.
-    "q127_pipeline_capstone" ->
-      s"""WITH RECURSIVE
-         |$capstoneCtes
-         |SELECT stage, CAST(n AS BIGINT) AS n FROM (
-         | SELECT 'input' AS stage, count(*) AS n FROM pool
-         | UNION ALL SELECT 'cleaned', count(*) FROM cln
-         | UNION ALL SELECT 'after_exact_dedup', count(*) FROM ex
-         | UNION ALL SELECT 'after_near_dedup', count(*) FROM nd
-         | UNION ALL SELECT 'contaminated',
-         |   (SELECT count(*) FROM nd) - (SELECT count(*) FROM scr)
-         | UNION ALL SELECT 'fluency_filtered',
-         |   (SELECT count(*) FROM scr) - (SELECT count(*) FROM flu)
-         | UNION ALL SELECT 'after_fluency', count(*) FROM flu
-         | UNION ALL SELECT 'corpus', count(*) FROM flu
-         | UNION ALL SELECT 'split_train', count(*) FROM corp WHERE split = 'train'
-         | UNION ALL SELECT 'split_val', count(*) FROM corp WHERE split = 'val'
-         | UNION ALL SELECT 'split_test', count(*) FROM corp WHERE split = 'test'
-         | UNION ALL SELECT 'train_sequences',
-         |   COALESCE((SELECT sum(s) FROM seqs), 0))""".stripMargin,
-
-    // Capstone membership: which documents survive the whole composed
-    // pipeline and which split each lands in.
-    "q128_pipeline_membership" ->
-      s"""WITH RECURSIVE
-         |$capstoneCtes
-         |SELECT doc_id, split FROM corp""".stripMargin
-  )
 }

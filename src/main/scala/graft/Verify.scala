@@ -16,9 +16,9 @@ object Verify {
     // Local-iteration subset (unset in driver runs): only dump queries
     // matching this regex — selfcheck.py then gates just those.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    SparkEntry.queries
+    val ran = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-      .foreach { case (name, fn) =>
+    ran.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -37,7 +37,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // oracles of the gates this run attempted, failed ones included:
+    // selfcheck.py counts a gate with an oracle but no dump as MISSING
+    val json = SparkEntry.oracleSql.iterator
+      .filter { case (k, _) => ran.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     SparkEntry.releaseStaged(spark) // past the last consumer — drop staging cache

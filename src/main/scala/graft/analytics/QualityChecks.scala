@@ -96,8 +96,4 @@ object QualityChecks {
       .select("column_name", "n_values", "n_nulls", "n_distinct",
         "min_value", "max_value", "avg_value")
   }
-
-  /** Duplicate-key count (needs its own aggregation — key-level, not row-level). */
-  def duplicateKeyCount(df: DataFrame, keys: Seq[String]): Long =
-    df.groupBy(keys.map(col): _*).count().where(col("count") > 1).count()
 }

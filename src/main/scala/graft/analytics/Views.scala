@@ -22,7 +22,4 @@ object Views {
   def currentStatus(enriched: DataFrame, cityCol: String = "city", tsCol: String = "ts",
                     tieBreak: String = "station_id"): DataFrame =
     Aggregates.latestPerGroup(enriched, Seq(cityCol), tsCol, tieBreak)
-
-  def alertDistribution(enriched: DataFrame): DataFrame =
-    Aggregates.distributionWithPct(enriched, "alert_level")
 }

@@ -64,11 +64,6 @@ object Text {
     (length(text).cast("double") - (n - 1.0)) / n
   }
 
-  /** Ratio of [a-z ] characters — printable-English heuristic. */
-  def alphaSpaceRatio(text: Column): Column =
-    length(regexp_replace(text, "[^a-z ]", "")).cast("double") /
-      length(text).cast("double")
-
   /** Stopword ratio over a fixed marker list. */
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to")
 

@@ -359,51 +359,6 @@ object CorpusStats {
         exactAvg(col("c")).as("mean_bigram_count"))
   }
 
-  /**
-   * Top-k collocations by pointwise mutual information, in exact-ratio form
-   * — the phrase-mining pass (multi-word expressions, named entities,
-   * boilerplate fragments) a corpus team runs before tokenizer training or
-   * phrase-aware dedup. PMI = log p(xy)/(p(x)p(y)); the log is a monotone
-   * transform that cannot change any ranking (same argument as
-   * [[tfIdfTopTerms]]' idf), so the score is the raw ratio
-   * c_xy·N²/(N_bi·c_x·c_y) evaluated in one fixed association order —
-   * bit-identical across engines, no libm anywhere. `minCount` drops the
-   * singleton noise PMI is notorious for (a pair seen once between two
-   * hapaxes scores astronomically).
-   *
-   * Scale shape: unigram and bigram counts are each ONE hash aggregation
-   * with map-side combine (aggregated vocabulary cardinality out); the
-   * word-count lookups join the FILTERED bigram table (≥ minCount — the
-   * join input is collocation-candidate-sized, not vocabulary-sized); the
-   * corpus totals ride a one-row broadcast; top-k is a TakeOrdered over
-   * the scored candidates — never a global sort.
-   */
-  def pmiTopPairs(docs: DataFrame, textCol: String, minCount: Long, k: Int): DataFrame = {
-    val uni = tokenFrequencies(docs, textCol)
-    val bi = docs.select(explode(Text.shingles(col(textCol), 2)).as("bigram"))
-      .groupBy("bigram").agg(count(lit(1)).as("pair_count"))
-      .where(col("pair_count") >= minCount)
-      .withColumn("w1", split(col("bigram"), " ").getItem(0))
-      .withColumn("w2", split(col("bigram"), " ").getItem(1))
-    val tok = Text.tokenCount(col(textCol)).cast("long")
-    val totals = docs.agg(
-      sum(tok).as("n_tokens"),
-      sum(greatest(tok - 1L, lit(0L))).as("n_bigrams"))
-    bi
-      .join(uni.select(col("token").as("w1"), col("occurrences").as("c_left")), Seq("w1"))
-      .join(uni.select(col("token").as("w2"), col("occurrences").as("c_right")), Seq("w2"))
-      .crossJoin(broadcast(totals))
-      // fixed left-to-right association — the DuckDB twin writes the same
-      // chain, so every double matches bit-for-bit
-      .withColumn("pmi_ratio",
-        col("pair_count").cast("double") * col("n_tokens").cast("double") /
-          col("n_bigrams").cast("double") * col("n_tokens").cast("double") /
-          col("c_left").cast("double") / col("c_right").cast("double"))
-      .orderBy(col("pmi_ratio").desc, col("w1").asc, col("w2").asc)
-      .limit(k)
-      .select("w1", "w2", "pair_count", "c_left", "c_right", "pmi_ratio")
-  }
-
   def oovStats(docs: DataFrame, idCol: String, textCol: String, vocabSize: Int): DataFrame = {
     // rank by occurrence count only — topVocabulary's doc-frequency join
     // would cost a second corpus scan + aggregation without changing the

@@ -843,14 +843,9 @@ object Dedup {
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           maxDist: Int = 3, bits: Int = 60): DataFrame =
     // signatures via the compiled per-document pass (see
-    // [[simhashSignatures]]) — the bucket/verify tail is shared, so the
-    // docs-level and hashed-stream entry points can never pair differently
+    // [[simhashSignatures]])
     simhashNearDupPairsFromSigs(simhashSignatures(docs, idCol, textCol, bits),
       maxDist, bits)
-
-  /** simhash near-dup over a (possibly pre-staged) hashed token stream. */
-  def simhashNearDupPairsFromHashed(toks: DataFrame, maxDist: Int, bits: Int): DataFrame =
-    simhashNearDupPairsFromSigs(simhashFromHashed(toks, bits), maxDist, bits)
 
   /** The candidate/verify tail over an (id, simhash) signature frame. */
   private def simhashNearDupPairsFromSigs(sigs: DataFrame, maxDist: Int,
@@ -1118,8 +1113,9 @@ object Dedup {
 
   /** Exact verification tail of [[jaccardPairsPrefix]]: candidate pairs
     * already carrying their set arrays score by array_intersect and keep
-    * jaccard ≥ t. Split out (with [[prefixStages]]) so the candidate
-    * funnel can be measured stage by stage without forking the logic. */
+    * jaccard ≥ t. Split out (with [[prefixStagesFromHashed]]) so the
+    * candidate funnel can be measured stage by stage without forking the
+    * logic. */
   private[graft] def verifyPrefixCandidates(withSets: DataFrame,
                                             threshold: Double): DataFrame =
     withSets
@@ -1134,15 +1130,10 @@ object Dedup {
     * round 6 the candidate path is [[prefixCandidatePairsPos]] — the
     * length AND positional filters run on the (pos, size) metadata the
     * index already carries, BEFORE the two doc-sized set-array fetches
-    * (measured by PrefixFunnel at t=0.8/sf0.1: set-fetch join input
-    * 221,519 raw → 80,725 length-only (the r5 shape) → 29,923 with the
-    * positional filter, for 256 true pairs; at t=0.9, 20,849 → 7,719). */
-  private[graft] def prefixStages(docs: DataFrame, idCol: String,
-                                  textCol: String, n: Int, threshold: Double,
-                                  maxBucket: Int): (DataFrame, DataFrame) =
-    prefixStagesFromHashed(hashedShingles(docs, idCol, textCol, n),
-      threshold, maxBucket)
-
+    * (measured at t=0.8/sf0.1: set-fetch join input 221,519 raw →
+    * 80,725 length-only (the r5 shape) → 29,923 with the positional
+    * filter, for 256 true pairs; at t=0.9, 20,849 → 7,719 — NOTES.md
+    * "PPJoin positional filter", SCALE.md "PPJoin's POSITIONAL filter"). */
   private[graft] def prefixStagesFromHashed(sh: DataFrame, threshold: Double,
                                             maxBucket: Int): (DataFrame, DataFrame) = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0,1]")
@@ -1253,20 +1244,6 @@ object Dedup {
       else math.max(0L, math.floor(threshold * 1e9).toLong - 1L)
     val g = gcd(math.max(num, 1L), 1000000000L)
     (num / g, 1000000000L / g)
-  }
-
-  /** Raw prefix-index candidate pairs (pre length filter, pre verify)
-    * over the per-doc sorted set frame. */
-  private[graft] def prefixCandidatePairs(sets: DataFrame, threshold: Double,
-                                          maxBucket: Int): DataFrame = {
-    val prefixLen = (col("__sz") - ceil(col("__sz") * threshold) + 1).cast("int")
-    sets
-      .select(col("id"), explode(slice(col("__hs"), lit(1), prefixLen)).as("h"))
-      .groupBy("h").agg(sort_array(collect_set(col("id"))).as("ids"))
-      .where(size(col("ids")).between(2, maxBucket))
-      .select(explode(pairsFromSorted(col("ids"))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
   }
 
   /**

@@ -17,11 +17,6 @@ object Tabular {
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** Header CSV scan reading everything as string (raw staging shape) —
-    * pair with `cleanse` to coerce. */
-  def readCsvRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
-
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.option("header", "true").mode("overwrite").csv(path)
 

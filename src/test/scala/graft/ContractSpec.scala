@@ -5,16 +5,20 @@ import org.apache.spark.sql.SparkSession
 /** Guards on the driver contract itself. */
 class ContractSpec extends SparkSpec {
 
-  test("every oracleSql key names an existing query") {
-    val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"oracleSql keys without queries: $unknown")
+  // queries/oracleSql are Maps built from the registry: a duplicate name
+  // there would silently drop a gate, so the registry itself is checked
+  test("the gate registry holds 150 gates under distinct names") {
+    val names = SparkEntry.gates.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"duplicate gate names: $dups")
+    assert(names.size == 150, s"expected 150 gates, got ${names.size}")
   }
 
-  test("every gate query carries a DuckDB oracle (no rows-only checks)") {
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"unexpected rows-only set: $rowsOnly")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  test("gate qNN prefixes are unique (Bench's short metric keys)") {
+    val prefixes = SparkEntry.gates.map(_.name.takeWhile(_ != '_'))
+    assert(prefixes.forall(_.matches("q[0-9]+")), s"malformed: $prefixes")
+    val dups = prefixes.diff(prefixes.distinct)
+    assert(dups.isEmpty, s"qNN prefixes shared by several gates: $dups")
   }
 
   test("entry() returns rows on the smoke scale factor") {

@@ -2,8 +2,10 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB against the sf tables, load the Spark parquet dump, sort columns by
 name and rows by value, and compare exactly (with a parallel tolerant pass
-to distinguish 'float epsilon' from 'wrong answer')."""
-import sys, json, glob
+to distinguish 'float epsilon' from 'wrong answer'). Every gate named in
+oracle_sql.json is checked; one whose Spark dump is absent (Verify logs the
+failure and carries on) counts as MISSING."""
+import os, sys, json, glob
 import duckdb
 import pandas as pd
 import numpy as np
@@ -24,12 +26,13 @@ def canon(df):
     return df
 
 fails = 0
-for qdir in sorted(glob.glob(f"{outdir}/q*")):
-    name = qdir.split("/")[-1]
-    spark = pd.read_parquet(qdir)
-    if name not in oracle:
-        print(f"{name:32s} rows-only: {len(spark)} rows {'OK' if len(spark)>0 else 'EMPTY!'}")
+for name in sorted(oracle):
+    qdir = f"{outdir}/{name}"
+    if not os.path.isdir(qdir):
+        print(f"{name:32s} MISSING (no Spark output)")
+        fails += 1
         continue
+    spark = pd.read_parquet(qdir)
     try:
         duck = con.sql(oracle[name]).df()
     except Exception as e:
