@@ -95,22 +95,7 @@ object DiskScale {
       // manual SPARK_GRAFT_SHUFFLE_PARTITIONS pin wins (diagnosis).
       val corpusBytes = GraftSession.bytesOnDisk(spark, s"$workdir/docsh_$n")
       val width = GraftSession.sizeShuffleFor(spark, corpusBytes)
-      // Per-op width hint (VERDICT r9 ask 1) — measured BOTH ways in
-      // round 10 and OFF by default (SPARK_GRAFT_OP_WIDTH=on opts in for
-      // diagnosis): the 4 MiB charge on the gram-count builds won at 5M
-      // (lm5_build −17%, lm_build −9.5%, scoring flat) but INVERTED at
-      // 15M (width 725: lm_build +97%, lm5_build +10% vs the session's
-      // 182) — the 16 MiB session rule already clears the spill point
-      // there and extra width is pure fan-out tax. A width rule that
-      // helps at one size and hurts at 3× is not a law; the session's
-      // size-derived single width stays the shipped default (SCALE.md
-      // round 10).
-      val opWidthOn = sys.env.get("SPARK_GRAFT_OP_WIDTH").contains("on")
-      val blowW = GraftSession.blowupWidthFor(corpusBytes, cpus)
-      def hinted[T](f: => T): T =
-        if (opWidthOn) GraftSession.withShuffleWidth(spark, blowW)(f) else f
-      System.err.println(s"[diskscale] n=$n shuffle width=$width " +
-        s"gram-agg width=${if (opWidthOn) blowW.toString else "off"}")
+      System.err.println(s"[diskscale] n=$n shuffle width=$width")
       lazy val docs = writeOnce(ScaleProbe.synthDocs(spark, n), spark, s"$workdir/docs_$n")
       val pairId = expr("doc_id div 2")
       val block = concat_ws(" ", transform(sequence(lit(0), lit(23)),
@@ -181,11 +166,11 @@ object DiskScale {
       // scoreTokens' default (explicit broadcast — the round-8 fix; the
       // planner's size-estimate choice was the measured 13× cliff,
       // SCALE.md).
-      lazy val lmTbl = hinted(writeOnce(
+      lazy val lmTbl = writeOnce(
         graft.operators.NgramLm.lmCounts(docsH, "text", n = 3, minCount = 5),
-        spark, s"$workdir/lm_$n"))
-      row("lm_build")(hinted(noop(
-        graft.operators.NgramLm.lmCounts(docsH, "text", n = 3, minCount = 5))))
+        spark, s"$workdir/lm_$n")
+      row("lm_build")(noop(
+        graft.operators.NgramLm.lmCounts(docsH, "text", n = 3, minCount = 5)))
       lazy val totalsH = graft.operators.NgramLm.lmTotals(docsH, "text")
       row("lm_score")(noop(
         graft.operators.NgramLm.scoreTokens(docsH, lmTbl, totalsH,
@@ -196,11 +181,11 @@ object DiskScale {
       // per-token fan-out in the repo. The "two shuffles at any order"
       // contract is only meaningful if this row stays linear with the
       // same broadcast-lookup law as the trigram row.
-      lazy val lm5Tbl = hinted(writeOnce(
+      lazy val lm5Tbl = writeOnce(
         graft.operators.NgramLm.lmCounts(docsH, "text", n = 5, minCount = 5),
-        spark, s"$workdir/lm5_$n"))
-      row("lm5_build")(hinted(noop(
-        graft.operators.NgramLm.lmCounts(docsH, "text", n = 5, minCount = 5))))
+        spark, s"$workdir/lm5_$n")
+      row("lm5_build")(noop(
+        graft.operators.NgramLm.lmCounts(docsH, "text", n = 5, minCount = 5)))
       row("lm5_score")(noop(
         graft.operators.NgramLm.scoreTokens(docsH, lm5Tbl, totalsH,
           "doc_id", "text", n = 5)))
@@ -282,13 +267,6 @@ object DiskScale {
       lazy val capStages = qualStages.filterNot(_._1 == "r_stop_words")
       if (want("cap")) {
         rows("cap") = time {
-          // NO gramWidth here — measured round 10 (same-day 5M A/B): the
-          // pipeline's fused stage-4a build is LAZY inside one query, so
-          // scoping a width forces a localCheckpoint whose model store
-          // pass costs more than the non-spilling exchange win
-          // (cap 736.7 → 844.3 s, +15%). The hint pays only where the
-          // model materializes anyway (the standalone artifact builds
-          // above, −9.5%/−17% same day).
           val (corpusOut, rep) = graft.pipeline.CorpusPipeline.run(
             capCorpus, capEval, "doc_id", "text",
             stages = capStages,
@@ -308,7 +286,7 @@ object DiskScale {
             stages = capStages,
             fluencyMin = Some(49 -> 50),
             bandRates = Some(Map("head" -> ((9, 10)), "middle" -> ((1, 2)),
-              "tail" -> ((1, 10))))) // no gramWidth — see the cap row
+              "tail" -> ((1, 10)))))
           noop(corpusOut)
           System.err.println(s"[diskscale] cap_banded@$n report: $rep")
         }
@@ -323,8 +301,7 @@ object DiskScale {
           "__len", Seq(("p50", 1, 2), ("p90", 9, 10)))))
 
       println((Seq(s""""n":$n""", s""""jac_vocab":$vocabH""",
-        s""""width":$width""",
-        s""""op_width":${if (opWidthOn) blowW else 0}""") ++
+        s""""width":$width""") ++
         rows.map { case (k, v) => s""""$k":${f2(v)}""" })
         .mkString("{", ",", "}"))
     }

@@ -64,9 +64,9 @@ object GraftSession {
   def initialPartitionsFor(cores: Int): Int = 4 * cores
 
   /**
-   * Size-derived shuffle width: one partition per `bytesPerPartition`
-   * of INPUT data, floored at the core count and capped at `maxParts`.
-   * The default charges 16 MiB of input per partition: compressed
+   * Size-derived shuffle width: one partition per 16 MiB of INPUT
+   * data, floored at the core count and capped at `maxParts`. The
+   * 16 MiB charge: compressed
    * parquet text decodes ~4× and the engine's widest hot paths (gram /
    * shingle streams) then expand the row count again, so 16 MiB of
    * input is roughly one healthy post-shuffle partition at the widest
@@ -79,10 +79,9 @@ object GraftSession {
    * overhead taxed every non-spilling op (+77% on the broadcast LM
    * scorer, +12% on the capstone) for one win on the worst spiller.
    */
-  def shuffleWidthFor(inputBytes: Long, cores: Int,
-                      bytesPerPartition: Long = 16L << 20,
-                      maxParts: Int = 4096): Int = {
-    require(bytesPerPartition > 0 && cores > 0 && maxParts >= cores)
+  def shuffleWidthFor(inputBytes: Long, cores: Int, maxParts: Int = 4096): Int = {
+    require(cores > 0 && maxParts >= cores)
+    val bytesPerPartition = 16L << 20
     val byData = (inputBytes + bytesPerPartition - 1) / bytesPerPartition
     math.min(math.max(byData, cores.toLong), maxParts.toLong).toInt
   }
@@ -104,64 +103,6 @@ object GraftSession {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       width.toString)
     width
-  }
-
-  /**
-   * PER-OPERATOR width for the known row-blowup aggregations — the gram
-   * streams ([[graft.operators.NgramLm.lmCounts]]: ~n× the token stream
-   * before aggregating) and the shingle posting lists — a DIAGNOSIS
-   * tool, not a shipped default. The evidence, all same-day flag-flip
-   * A/Bs (SCALE.md rounds 9-10): session-global the 4 MiB charge
-   * rescued the worst spiller but taxed every non-spilling op (round
-   * 9); scoped through [[withShuffleWidth]] it won at 5M (lm5_build
-   * −17%, lm_build −9.5%, scoring flat) but INVERTED at 15M (lm_build
-   * +97%, lm5_build +10% vs the session's width-182) — at that size
-   * the 16 MiB session rule already clears the spill point and extra
-   * width is pure fan-out tax. A charge that helps at one size and
-   * hurts at 3× is not a law, so nothing applies this automatically;
-   * it exists for A/Bs against the session width when a specific
-   * build's spill is diagnosed.
-   */
-  def blowupWidthFor(inputBytes: Long, cores: Int): Int =
-    shuffleWidthFor(inputBytes, cores, bytesPerPartition = 4L << 20)
-
-  /**
-   * Scoped shuffle width: run `f` with BOTH width knobs (shuffle floor +
-   * AQE pre-coalesce ceiling) set to `width`, restoring the session
-   * values after — the per-operator form of [[sizeShuffleFor]]. The
-   * width binds at ACTION time, so `f` must MATERIALIZE the frame whose
-   * exchanges it means to widen (write / count / localCheckpoint inside
-   * the block); a lazy frame escaping the block picks up whatever the
-   * session width is when it finally executes. A manual
-   * SPARK_GRAFT_SHUFFLE_PARTITIONS pin wins, as everywhere — a
-   * diagnosis run must measure the width it asked for.
-   *
-   * SINGLE-THREADED-DRIVER assumption (ADVICE r10): the two conf knobs
-   * are session-global runtime conf, so a concurrent query on the same
-   * SparkSession would silently inherit the scoped width, and two
-   * overlapping scoped blocks could restore a stale value. Every current
-   * call site (DiskScale, CorpusPipeline.buildLm) drives the session
-   * from one thread; a future multi-threaded driver must either clone
-   * the session (`spark.newSession()` — per-session conf) or serialize
-   * scoped blocks externally.
-   */
-  def withShuffleWidth[T](spark: SparkSession, width: Int)(f: => T): T = {
-    if (sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS")) f
-    else {
-      val floorKey = "spark.sql.shuffle.partitions"
-      val ceilKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-      val oldFloor = spark.conf.get(floorKey)
-      val oldCeil = spark.conf.getOption(ceilKey)
-      spark.conf.set(floorKey, width.toString)
-      spark.conf.set(ceilKey, width.toString)
-      try f finally {
-        spark.conf.set(floorKey, oldFloor)
-        oldCeil match {
-          case Some(v) => spark.conf.set(ceilKey, v)
-          case None    => spark.conf.unset(ceilKey)
-        }
-      }
-    }
   }
 
   /** Bytes on disk under `path` (parquet dir or file) — the input-size

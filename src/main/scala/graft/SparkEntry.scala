@@ -1,7 +1,7 @@
 package graft
 
 import graft.gates._
-import graft.functions.{Enrich, Text, TimeFeatures}
+import graft.functions.{Enrich, Text}
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,7 +62,8 @@ object SparkEntry {
    * reference's 16-field reading (SURVEY §1.2) onto the driver's test tables
    * so every enrichment family (P6-P17) is exercised across all its branches
    * (value spans 0.01..490 → temp −5..44 °C, precip 0..61 mm, wind 0..98
-   * km/h, vis 0..10 km, uv 0..12).
+   * km/h, vis 0..10 km, uv 0..12). The heat index, which a station
+   * reports, is derived here; the rest is the shared enrichment chain.
    */
   private def syntheticWeather(events: DataFrame): DataFrame =
     events.select(
@@ -79,6 +80,8 @@ object SparkEntry {
       (col("value") / 8.0).as("precipitation_mm"),
       (col("value") / 49.0).as("visibility_km"),
       floor(col("value") / 40.0).cast("int").as("uv_index"))
+      .withColumn("heat_index_celsius",
+        Enrich.heatIndex(col("temperature_celsius"), col("humidity_percent")))
 
   /** Per-session memo of the shared artifacts, keyed by (session,
     * sf-dir, artifact key): the staged frames, the capstone run and the
@@ -181,7 +184,7 @@ object SparkEntry {
   }
 
   private[graft] def enrichedFullShared(s: SparkSession, dir: String): DataFrame =
-    staged(s, dir, "enriched")(enrichedFull(t(s, dir, "events")))
+    staged(s, dir, "enriched")(Enrich.chain(syntheticWeather(t(s, dir, "events")), "ts"))
   private[graft] def enrichedShared(s: SparkSession, dir: String): DataFrame =
     enrichedFullShared(s, dir).drop("ts", "city")
 
@@ -394,31 +397,6 @@ object SparkEntry {
     * CapMinTokens "live data at every SF" principle. */
   private[graft] val CapFluencyNum = 49
   private[graft] val CapFluencyDen = 50
-
-  /** Enrichment keeping the event-time and city columns (for the analytics
-    * layer: daily summary, current-status view). */
-  private def enrichedFull(events: DataFrame): DataFrame =
-    syntheticWeather(events)
-      .withColumn("temperature_fahrenheit", Enrich.celsiusToFahrenheit(col("temperature_celsius")))
-      .withColumn("temperature_kelvin", Enrich.celsiusToKelvin(col("temperature_celsius")))
-      .withColumn("heat_index_celsius", Enrich.heatIndex(col("temperature_celsius"), col("humidity_percent")))
-      .withColumn("comfort_level", Enrich.comfortLevel(col("heat_index_celsius")))
-      .withColumn("weather_severity", Enrich.weatherSeverity(
-        col("precipitation_mm"), col("wind_speed_kmh"), col("visibility_km"), col("uv_index")))
-      .withColumn("alert_level", Enrich.alertLevel(
-        col("heat_index_celsius"), col("precipitation_mm"), col("wind_speed_kmh"),
-        col("visibility_km"), col("uv_index")))
-      .withColumn("hour_of_day", TimeFeatures.hourOfDay(col("ts")))
-      .withColumn("day_of_week", TimeFeatures.dayOfWeek(col("ts")))
-      .withColumn("is_weekend", TimeFeatures.isWeekend(col("ts")))
-      .withColumn("time_of_day", TimeFeatures.timeOfDay(col("ts")))
-      .withColumn("season", TimeFeatures.season(col("ts")))
-      .withColumn("reading_date", TimeFeatures.readingDate(col("ts")))
-      .withColumn("is_valid_temperature", Enrich.validIn(col("temperature_celsius"), -50, 60))
-      .withColumn("is_valid_humidity", Enrich.validIn(col("humidity_percent"), 0, 100))
-      .withColumn("is_valid_pressure", Enrich.validIn(col("pressure_hpa"), 950, 1050))
-      .withColumn("data_quality_score", Enrich.qualityScore(
-        col("is_valid_temperature"), col("is_valid_humidity"), col("is_valid_pressure")))
 
   // --------------------------------------------------- oracle SQL fragments
 

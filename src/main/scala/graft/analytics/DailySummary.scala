@@ -44,7 +44,7 @@ object DailySummary {
       countIf(col("alert_level") === "WATCH").as("watch_count"),
       countIf(col("alert_level") === "WARNING").as("warning_count"),
       countIf(col("alert_level") === "CRITICAL").as("critical_count"),
-      r2(pctIf(col("alert_level").isin("WARNING", "CRITICAL"))).as("alert_percentage"),
+      r2(pctIf(Enrich.isAlert(col("alert_level")))).as("alert_percentage"),
       r2(exactAvg(col("data_quality_score"))).as("avg_quality_score"),
       modeOf("comfort_level").as("dominant_comfort"),
       modeOf("weather_severity").as("dominant_severity"))

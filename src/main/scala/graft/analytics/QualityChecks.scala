@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.functions.Enrich
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,13 +16,11 @@ object QualityChecks {
   final case class Check(name: String, violation: org.apache.spark.sql.Column)
 
   /** The reference's checks for an enriched readings table. */
-  def weatherChecks(df: DataFrame): Seq[Check] = Seq(
-    Check("null_station_id", col("station_id").isNull),
-    Check("null_timestamp", col("timestamp").isNull),
-    Check("temperature_out_of_range", !col("temperature_celsius").between(-50, 60)),
-    Check("humidity_out_of_range", !col("humidity_percent").between(0, 100)),
-    Check("pressure_out_of_range", !col("pressure_hpa").between(950, 1050)),
-    Check("uv_out_of_range", !col("uv_index").between(0, 15)))
+  def weatherChecks(df: DataFrame): Seq[Check] =
+    Seq(Check("null_station_id", col("station_id").isNull),
+      Check("null_timestamp", col("timestamp").isNull)) ++
+      Enrich.ValidRanges.map(r => Check(s"${r.name}_out_of_range", !r.holds)) :+
+      Check("uv_out_of_range", !col("uv_index").between(0, 15))
 
   /** Run checks in ONE aggregation pass; returns (check, violations, total, pass). */
   def run(df: DataFrame, checks: Seq[Check]): DataFrame = {

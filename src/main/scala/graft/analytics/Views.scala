@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.functions.Enrich
 import graft.operators.Aggregates
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,7 +17,7 @@ object Views {
 
   def recentAlerts(enriched: DataFrame, tsCol: String = "ts"): DataFrame =
     enriched
-      .filter(col("alert_level").isin("WARNING", "CRITICAL"))
+      .filter(Enrich.isAlert(col("alert_level")))
       .orderBy(col(tsCol).desc)
 
   def currentStatus(enriched: DataFrame, cityCol: String = "city", tsCol: String = "ts",

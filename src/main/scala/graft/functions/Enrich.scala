@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -101,8 +101,25 @@ object Enrich {
       .when(heatC > 32.0 || precipMm > 10.0 || windKmh > 40.0 || uv > 8.0, "WATCH")
       .otherwise("NORMAL")
 
-  /** Range-validity predicate (reference checks: temp −50..60, humidity 0..100, pressure 950..1050). */
-  def validIn(c: Column, lo: Double, hi: Double): Column = c.between(lo, hi)
+  /** The alerting tiers: the alerts sink, the recent-alerts view, the
+    * daily alert percentage and the alert streaks all count exactly
+    * these levels. */
+  val AlertTiers: Seq[String] = Seq("WARNING", "CRITICAL")
+
+  def isAlert(alertLevel: Column): Column = alertLevel.isin(AlertTiers: _*)
+
+  /** One reference CHECK range (sql/create_tables.sql:70-72): `column`
+    * is valid when it lies in [lo, hi]. */
+  final case class ValidRange(name: String, column: String, lo: Double, hi: Double) {
+    def holds: Column = col(column).between(lo, hi)
+  }
+
+  /** The reference's CHECK ranges — read by the `is_valid_<name>` flags
+    * below and by `QualityChecks.weatherChecks`. */
+  val ValidRanges: Seq[ValidRange] = Seq(
+    ValidRange("temperature", "temperature_celsius", -50, 60),
+    ValidRange("humidity", "humidity_percent", 0, 100),
+    ValidRange("pressure", "pressure_hpa", 950, 1050))
 
   /**
    * Data-quality score: share of passing validity checks × 100 →
@@ -111,5 +128,35 @@ object Enrich {
   def qualityScore(checks: Column*): Column = {
     val total = checks.map(_.cast("int")).reduce(_ + _)
     total.cast("double") / checks.size.toDouble * 100.0
+  }
+
+  /**
+   * The six enrichment families as one DataFrame → DataFrame transform —
+   * the lineage the stream, the daily batch and the weather gates all
+   * run. `readings` carries the reference reading columns (including
+   * `heat_index_celsius`); `eventTime` names its timestamp column, from
+   * which the time features and `reading_date` derive.
+   */
+  def chain(readings: DataFrame, eventTime: String): DataFrame = {
+    val ts = col(eventTime)
+    val featured = readings
+      .withColumn("temperature_fahrenheit", Enrich.celsiusToFahrenheit(col("temperature_celsius")))
+      .withColumn("temperature_kelvin", Enrich.celsiusToKelvin(col("temperature_celsius")))
+      .withColumn("comfort_level", Enrich.comfortLevel(col("heat_index_celsius")))
+      .withColumn("weather_severity", Enrich.weatherSeverity(
+        col("precipitation_mm"), col("wind_speed_kmh"), col("visibility_km"), col("uv_index")))
+      .withColumn("alert_level", Enrich.alertLevel(
+        col("heat_index_celsius"), col("precipitation_mm"), col("wind_speed_kmh"),
+        col("visibility_km"), col("uv_index")))
+      .withColumn("hour_of_day", TimeFeatures.hourOfDay(ts))
+      .withColumn("day_of_week", TimeFeatures.dayOfWeek(ts))
+      .withColumn("is_weekend", TimeFeatures.isWeekend(ts))
+      .withColumn("time_of_day", TimeFeatures.timeOfDay(ts))
+      .withColumn("season", TimeFeatures.season(ts))
+      .withColumn("reading_date", TimeFeatures.readingDate(ts))
+    val flags = ValidRanges.map(r => s"is_valid_${r.name}")
+    ValidRanges.zip(flags)
+      .foldLeft(featured) { case (df, (r, flag)) => df.withColumn(flag, r.holds) }
+      .withColumn("data_quality_score", Enrich.qualityScore(flags.map(col): _*))
   }
 }

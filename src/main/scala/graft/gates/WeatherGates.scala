@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
 /** Weather enrichment and analytics gates: the six enrichment families
   * over the synthetic reading, the alert filter and distribution, the
   * daily summary, current-status view, city trends, quality checks and
-  * health stats. The DuckDB twin of the enrichment chain lives here. */
+  * health stats. The engine side runs the shared enrichment chain
+  * (`Enrich.chain`, the stream's and the daily batch's lineage); its
+  * DuckDB twin lives here. */
 object WeatherGates {
 
   val gates: Seq[Gate] = Seq(
@@ -18,7 +20,7 @@ object WeatherGates {
     // P4/P5: alert filter + column-subset projection.
     Gate("q12_alert_filter")((s, dir) =>
       enrichedShared(s, dir)
-        .filter(col("alert_level").isin("WARNING", "CRITICAL"))
+        .filter(Enrich.isAlert(col("alert_level")))
         .select("event_id", "alert_level", "weather_severity", "heat_index_celsius",
           "precipitation_mm", "wind_speed_kmh", "visibility_km", "uv_index")) {
       s"""SELECT event_id, alert_level, weather_severity, heat_index_celsius,

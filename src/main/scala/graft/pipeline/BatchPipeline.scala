@@ -30,17 +30,17 @@ object BatchPipeline {
 
   def run(spark: SparkSession, rawDir: String, storeDir: String, summaryDir: String,
           minQuality: Double = 80.0): Result = {
-    // 1. load + enrich (same lineage the streaming job uses — EP1 ≡ EP2 logic).
-    // persist: the pipeline runs several actions (count, store append, three
-    // summary aggregations, validation) over this lineage — without caching,
-    // each re-reads and re-enriches the raw JSON.
-    // typed ingestion boundary (SURVEY §1.4): schema mismatches fail at the
-    // encoder, not deep inside the enrichment lineage
-    val raw = JsonEnvelope.readTyped(spark, s"$rawDir/*/*/*/*").toDF()
-    val enriched = EnrichStream.enrich(raw)
-      .withColumn("reading_date", to_date(col("timestamp_parsed")))
-      .persist()
-    val loaded = enriched.count()
+    // 1. load + enrich (the lineage the streaming job runs — EP1 ≡ EP2).
+    // persist: the pipeline runs several actions (store append, summary,
+    // validation) over this lineage — without caching, each re-reads and
+    // re-enriches the raw JSON.
+    val enriched = EnrichStream.enrich(JsonEnvelope.readBatch(spark, s"$rawDir/*/*/*/*")).persist()
+    // the load statistics in one pass (it also fills the cache)
+    val stats = enriched.agg(count(lit(1)), avg(col("data_quality_score")),
+      countDistinct(col("city"))).head()
+    val loaded = stats.getLong(0)
+    val avgQuality = if (stats.isNullAt(1)) Double.NaN else stats.getDouble(1)
+    val cities = stats.getLong(2)
 
     // 2. dedup-append (D1 + D2): unique on (station_id, timestamp)
     val withParts = PartitionedStore.withTimePartitions(enriched, "timestamp_parsed")
@@ -49,15 +49,16 @@ object BatchPipeline {
       keys = Seq("station_id", "timestamp"),
       partitionCols = Seq("year", "month", "day", "hour"))
 
-    // 3. daily summary (A1-A5) + upsert-as-overwrite (D3)
+    // 3. daily summary (A1-A5) + upsert-as-overwrite (D3). The read-back
+    // states the schema: a load with no readings leaves no summary file
+    // to infer it from.
     val summary = DailySummary.compute(enriched, "city", "reading_date")
     PartitionedStore.overwriteGroups(summary, summaryDir, Seq("reading_date"))
-    val summaryStored = spark.read.parquet(summaryDir)
+    val summaryStored = spark.read.schema(summary.schema).parquet(summaryDir)
+    val summaryRows = summaryStored.count()
 
     // 4. validate (X2: counts > 0, avg quality >= threshold, all stations seen)
-    val avgQuality = enriched.agg(avg(col("data_quality_score"))).head().getDouble(0)
-    val cities = enriched.select(countDistinct(col("city"))).head().getLong(0)
-    val ok = loaded > 0 && avgQuality >= minQuality && summaryStored.count() > 0
+    val ok = loaded > 0 && avgQuality >= minQuality && summaryRows > 0
 
     // 5. report (X3)
     val lines = summaryStored
@@ -71,7 +72,7 @@ object BatchPipeline {
          |  avgQuality=$avgQuality validation=${if (ok) "PASSED" else "FAILED"}
          |${lines.mkString("\n")}""".stripMargin
 
-    val result = Result(loaded, storedNew, summaryStored.count(), avgQuality, ok, report)
+    val result = Result(loaded, storedNew, summaryRows, avgQuality, ok, report)
     enriched.unpersist()
     result
   }

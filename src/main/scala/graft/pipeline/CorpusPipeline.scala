@@ -404,19 +404,9 @@ object CorpusPipeline {
 
   /** Shared trigram-model build for the fluency/banding/ppl screens — the
     * pipeline's one row-BLOWUP aggregation (the gram stream is ~3× the
-    * token stream before it aggregates). `gramWidth` is the per-op width
-    * hint measured and REJECTED as a default in round 10 (see run()'s
-    * parameter doc); None keeps the lazy fused build. */
-  private def buildLm(trainDocs: DataFrame, textCol: String, lmMinCount: Long,
-                      gramWidth: Option[Int]): DataFrame = gramWidth match {
-    case Some(w) =>
-      graft.GraftSession.withShuffleWidth(trainDocs.sparkSession, w) {
-        graft.operators.NgramLm.lmCounts(trainDocs, textCol, n = 3, lmMinCount)
-          .localCheckpoint()
-      }
-    case None =>
-      graft.operators.NgramLm.lmCounts(trainDocs, textCol, n = 3, lmMinCount)
-  }
+    * token stream before it aggregates), kept lazy inside the fused plan. */
+  private def buildLm(trainDocs: DataFrame, textCol: String, lmMinCount: Long): DataFrame =
+    graft.operators.NgramLm.lmCounts(trainDocs, textCol, n = 3, lmMinCount)
 
   /**
    * Stage 4a as one job: the INTEGER fluency screen — self-trained (or
@@ -427,15 +417,14 @@ object CorpusPipeline {
    */
   def phaseFluency(screened: DataFrame, idCol: String, textCol: String,
                    num: Int, den: Int, lmMinCount: Long = 2L,
-                   lmTrainDocs: Option[DataFrame] = None,
-                   gramWidth: Option[Int] = None): (DataFrame, Long, Long) = {
+                   lmTrainDocs: Option[DataFrame] = None): (DataFrame, Long, Long) = {
     require(num >= 0 && den > 0, s"fluencyMin must be a non-negative " +
       s"rational with positive denominator, got $num/$den")
     val base = screened.localCheckpoint() // census + scoring + keep join
     val nb = base.count()
     val trainDocs = lmTrainDocs.getOrElse(base)
     val kept = graft.operators.NgramLm.fluencyThresholdFilter(base,
-        buildLm(trainDocs, textCol, lmMinCount, gramWidth),
+        buildLm(trainDocs, textCol, lmMinCount),
         graft.operators.NgramLm.lmTotals(trainDocs, textCol),
         idCol, textCol, num, den).localCheckpoint()
     (kept, nb, kept.count())
@@ -452,11 +441,10 @@ object CorpusPipeline {
   def fluencyScoreFile(pool: DataFrame, idCol: String, textCol: String,
                        bandGroupCol: Option[String] = None,
                        lmMinCount: Long = 2L,
-                       lmTrainDocs: Option[DataFrame] = None,
-                       gramWidth: Option[Int] = None): DataFrame = {
+                       lmTrainDocs: Option[DataFrame] = None): DataFrame = {
     val trainDocs = lmTrainDocs.getOrElse(pool)
     graft.operators.NgramLm.fluencyPermille(pool,
-      buildLm(trainDocs, textCol, lmMinCount, gramWidth),
+      buildLm(trainDocs, textCol, lmMinCount),
       graft.operators.NgramLm.lmTotals(trainDocs, textCol),
       idCol, textCol, bandGroupCol)
   }
@@ -556,8 +544,7 @@ object CorpusPipeline {
           lmTrainDocs: Option[DataFrame] = None,
           tokenBudgetDocs: Option[Long] = None,
           budgetSeed: Long = 0L,
-          emitJsonlPath: Option[String] = None,
-          gramWidth: Option[Int] = None): (DataFrame, Report) = {
+          emitJsonlPath: Option[String] = None): (DataFrame, Report) = {
     // Argument-only checks fail BEFORE any cluster work — stage 5's
     // quota math must not be the first place a bad weight list surfaces.
     if (stratifyBy.isDefined)
@@ -606,26 +593,11 @@ object CorpusPipeline {
     // parity). The stage IS that operator applied to the self-trained
     // (or lmTrainDocs) model — one decision rule, one implementation.
     // The trigram-model builds for stages 4a/4a''/4a' share [[buildLm]].
-    // With `gramWidth` stated (the per-op hint, VERDICT r9 ask 1:
-    // GraftSession.blowupWidthFor's 4 MiB charge from the bytes the
-    // CALLER read off disk), the model materializes INSIDE the
-    // scoped-width block so only ITS exchanges widen; scoring and every
-    // other stage keep the session width — the measured round-9 A/B
-    // showed the 4 MiB rule applied session-globally rescues the build
-    // but taxes every non-spilling op. CAVEAT (measured round 10, two
-    // same-day A/Bs): the scoped width requires materializing a model
-    // the fused lazy plan never stores, and that store pass cost MORE
-    // than the exchange win at 5M (cap 736.7 → 844.3 s, +15%); at 15M
-    // even the standalone builds showed the 4 MiB width itself
-    // inverting (lm_build +97% vs the session width). NO measured size
-    // profits yet — state a width only on a DIAGNOSED spill whose cost
-    // exceeds one model store pass; the default None keeps the lazy
-    // fused build — gates unchanged.
     val (fluent, nScreenedPreFluency, nFluent) = fluencyMin match {
       case None => (screened, -1L, -1L)
       case Some((num, den)) =>
         phaseFluency(screened, idCol, textCol, num, den, lmMinCount,
-          lmTrainDocs, gramWidth)
+          lmTrainDocs)
     }
 
     // 4a'' (optional): CCNet banded-sampling admission — the §4.3 recipe
@@ -656,7 +628,7 @@ object CorpusPipeline {
         // while the staged run shares every line of the decision rule
         val admitted = graft.operators.NgramLm.bandRateFromScores(
             fluencyScoreFile(base, idCol, textCol, bandGroupCol, lmMinCount,
-              lmTrainDocs, gramWidth),
+              lmTrainDocs),
             rates, seed = bandSeed)
           .select(col("id").as(idCol))
         val kept = base.join(admitted, Seq(idCol), "leftsemi").localCheckpoint()
@@ -684,7 +656,7 @@ object CorpusPipeline {
           else base.count()
         val trainDocs = lmTrainDocs.getOrElse(base)
         val scoredToks = graft.operators.NgramLm.scoreTokens(base,
-          buildLm(trainDocs, textCol, lmMinCount, gramWidth),
+          buildLm(trainDocs, textCol, lmMinCount),
           graft.operators.NgramLm.lmTotals(trainDocs, textCol), idCol, textCol)
         val kept = graft.operators.NgramLm
           .pplBandFilter(base, scoredToks, idCol, from, to, lmAlpha)

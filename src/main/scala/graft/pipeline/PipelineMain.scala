@@ -1,7 +1,7 @@
 package graft.pipeline
 
+import graft.GraftSession
 import graft.gen.WeatherGenerator
-import org.apache.spark.sql.SparkSession
 import java.time.LocalDateTime
 
 /** CLI for EP2/EP3: generate seeded fixtures (unless the raw dir exists)
@@ -13,12 +13,7 @@ object PipelineMain {
     val batches = if (args.length > 1) args(1).toInt else 12
     val seed = if (args.length > 2) args(2).toLong else 42L
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
     if (!new java.io.File(s"$work/raw").exists()) {

@@ -1,14 +1,15 @@
 package graft.streaming
 
-import graft.functions.{Enrich, TimeFeatures}
+import graft.functions.Enrich
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * The reference's core streaming path (EP1, glue_weather_etl.py:540-595):
- * envelope stream → parse/flatten → six enrichment families → dual Parquet
- * fan-out (full processed + filtered alerts), event-time partitioned.
+ * envelope stream → parse/flatten → six enrichment families
+ * ([[graft.functions.Enrich.chain]]) → dual Parquet fan-out (full
+ * processed + filtered alerts), event-time partitioned.
  *
  * Differences from the reference, deliberate:
  *  - one lineage, BOTH sinks written per micro-batch via foreachBatch —
@@ -20,34 +21,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  */
 object EnrichStream {
 
-  /** The six enrichment families as one pure DataFrame→DataFrame transform —
-    * identical lineage batch or streaming (Structured Streaming's promise). */
+  /** The shared enrichment chain over the envelope readings, keyed on
+    * the parsed `timestamp` — identical lineage batch or streaming
+    * (Structured Streaming's promise). */
   def enrich(readings: DataFrame): DataFrame =
-    readings
-      .withColumn("temperature_fahrenheit", Enrich.celsiusToFahrenheit(col("temperature_celsius")))
-      .withColumn("temperature_kelvin", Enrich.celsiusToKelvin(col("temperature_celsius")))
-      .withColumn("comfort_level", Enrich.comfortLevel(col("heat_index_celsius")))
-      .withColumn("weather_severity", Enrich.weatherSeverity(
-        col("precipitation_mm"), col("wind_speed_kmh"), col("visibility_km"), col("uv_index")))
-      .withColumn("alert_level", Enrich.alertLevel(
-        col("heat_index_celsius"), col("precipitation_mm"), col("wind_speed_kmh"),
-        col("visibility_km"), col("uv_index")))
-      .withColumn("timestamp_parsed", to_timestamp(col("timestamp")))
-      .withColumn("hour_of_day", TimeFeatures.hourOfDay(col("timestamp_parsed")))
-      .withColumn("day_of_week", TimeFeatures.dayOfWeek(col("timestamp_parsed")))
-      .withColumn("is_weekend", TimeFeatures.isWeekend(col("timestamp_parsed")))
-      .withColumn("time_of_day", TimeFeatures.timeOfDay(col("timestamp_parsed")))
-      .withColumn("season", TimeFeatures.season(col("timestamp_parsed")))
-      .withColumn("is_valid_temperature", Enrich.validIn(col("temperature_celsius"), -50, 60))
-      .withColumn("is_valid_humidity", Enrich.validIn(col("humidity_percent"), 0, 100))
-      .withColumn("is_valid_pressure", Enrich.validIn(col("pressure_hpa"), 950, 1050))
-      .withColumn("data_quality_score", Enrich.qualityScore(
-        col("is_valid_temperature"), col("is_valid_humidity"), col("is_valid_pressure")))
-
-  val AlertLevels: Seq[String] = Seq("WARNING", "CRITICAL")
+    Enrich.chain(readings.withColumn("timestamp_parsed", to_timestamp(col("timestamp"))),
+      "timestamp_parsed")
 
   def alertsOnly(enriched: DataFrame): DataFrame =
-    enriched.filter(col("alert_level").isin(AlertLevels: _*))
+    enriched.filter(Enrich.isAlert(col("alert_level")))
 
   /**
    * Start the dual-sink job: single pass per micro-batch, processed +

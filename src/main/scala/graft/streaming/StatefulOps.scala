@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Enrich
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -270,7 +271,7 @@ object StatefulOps {
       val sorted = rows.toSeq.sortBy(_.eventTime.getTime)
       var s = Option(state.get()).getOrElse(StreakState(0, 0))
       sorted.foreach { e =>
-        val cur = if (e.alertLevel == "WARNING" || e.alertLevel == "CRITICAL") s.current + 1 else 0
+        val cur = if (Enrich.AlertTiers.contains(e.alertLevel)) s.current + 1 else 0
         s = StreakState(cur, math.max(s.longest, cur))
       }
       state.update(s)
@@ -299,7 +300,7 @@ object StatefulOps {
             val sorted = rows.toSeq.sortBy(_.eventTime.getTime)
             var s = state.getOption.getOrElse(StreakState(0, 0))
             sorted.foreach { e =>
-              val cur = if (e.alertLevel == "WARNING" || e.alertLevel == "CRITICAL") s.current + 1 else 0
+              val cur = if (Enrich.AlertTiers.contains(e.alertLevel)) s.current + 1 else 0
               s = StreakState(cur, math.max(s.longest, cur))
             }
             state.update(s)

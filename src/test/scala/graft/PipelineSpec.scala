@@ -50,6 +50,18 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/store").count() == 30)
   }
 
+  test("batch pipeline on envelopes with no readings fails validation without throwing") {
+    val root = Files.createTempDirectory("graft-pipeline-empty").toString
+    val hour = java.nio.file.Paths.get(root, "raw", "year=2026", "month=08", "day=12", "hour=10")
+    Files.createDirectories(hour)
+    Files.writeString(hour.resolve("batch_20260812_100000_0.json"), """{"readings": []}""")
+
+    val r = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+    assert(r.loadedRows == 0 && r.storedNew == 0 && r.summaryRows == 0)
+    assert(!r.validationPassed, r.report)
+    assert(r.report.contains("validation=FAILED"))
+  }
+
   test("corpus pipeline: clean -> dedup -> decontaminate -> split -> pack, deterministic") {
     import graft.pipeline.CorpusPipeline
     import graft.functions.Text
@@ -508,28 +520,6 @@ class PipelineSpec extends SparkSpec {
       "text", stages, fluencyMin = Some(49 -> 50))
     assert(kept2.select("doc_id").collect().map(_.getLong(0)).toSet == got)
     assert(r2.fluencyFiltered == r1.fluencyFiltered)
-  }
-
-  test("corpus pipeline gramWidth hint: decisions identical, session width restored") {
-    // the per-op width hint (VERDICT r9 ask 1) may only change WHERE the
-    // model-build exchanges land, never a single admission decision —
-    // the kept set, the stage attribution and the session width must all
-    // be untouched by any stated width
-    import graft.pipeline.CorpusPipeline
-    import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val noEval = docs.where(lit(false)).select(col("doc_id"), col("text"))
-    val stages = Seq("nonempty" -> (length(col("text")) > 0))
-    val widthBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    val (kept, r1) = CorpusPipeline.run(docs, noEval, "doc_id", "text", stages,
-      fluencyMin = Some(49 -> 50))
-    val (keptW, r2) = CorpusPipeline.run(docs, noEval, "doc_id", "text", stages,
-      fluencyMin = Some(49 -> 50), gramWidth = Some(97))
-    assert(keptW.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      kept.select("doc_id").collect().map(_.getLong(0)).toSet)
-    assert(r2.fluencyFiltered == r1.fluencyFiltered && r2.corpus == r1.corpus)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == widthBefore,
-      "the scoped width leaked out of the model build")
   }
 
   test("corpus pipeline banded-sampling stage (4a''): run-with-bandRates " +

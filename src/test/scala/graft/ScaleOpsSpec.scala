@@ -64,41 +64,6 @@ class ScaleOpsSpec extends SparkSpec {
     }
   }
 
-  test("withShuffleWidth scopes both width knobs and restores the session values") {
-    assume(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").isEmpty,
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS pin active — scoped-width assertions skipped")
-    val floorKey = "spark.sql.shuffle.partitions"
-    val ceilKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val before = spark.conf.get(floorKey)
-    val beforeCeil = spark.conf.getOption(ceilKey)
-    val seen = GraftSession.withShuffleWidth(spark, 321) {
-      (spark.conf.get(floorKey), spark.conf.get(ceilKey))
-    }
-    assert(seen == (("321", "321")), "both knobs must carry the scoped width")
-    assert(spark.conf.get(floorKey) == before)
-    assert(spark.conf.getOption(ceilKey) == beforeCeil)
-    // restore must survive a throwing block — a failed probe row must not
-    // leak the wide width into every later row of the same JVM
-    intercept[RuntimeException] {
-      GraftSession.withShuffleWidth[Unit](spark, 321) {
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(spark.conf.get(floorKey) == before)
-    assert(spark.conf.getOption(ceilKey) == beforeCeil)
-    // the per-op 4 MiB blowup charge rides the same floor/cap law as the
-    // 16 MiB global rule. The input here is PURE ARITHMETIC, not a corpus
-    // claim: parquet bytes for the same logical corpus drift ~1% across
-    // builds with task layout, so the 5M docsh corpus measured 938 MiB
-    // in round 9 (width 235) but ~931 MiB when rebuilt for the round-10
-    // A/B (the table's width 233) — each width is quoted WITH its own
-    // build's bytes (SCALE.md round 10), never compared across builds.
-    // Empty input collapses to the core floor.
-    assert(GraftSession.blowupWidthFor(938L << 20, 32) == 235)
-    assert(GraftSession.blowupWidthFor(931L << 20, 32) == 233)
-    assert(GraftSession.blowupWidthFor(0L, 32) == 32)
-  }
-
   test("sizeShuffleFor moves the live floor and keeps the AQE ceiling wide") {
     // the diagnosis pin deliberately overrides sizeShuffleFor, so this
     // test is only meaningful when the pin is absent (ADVICE r9)
