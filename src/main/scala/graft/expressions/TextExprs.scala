@@ -339,9 +339,11 @@ case class SpanCorrupt(text: Expression, idStr: Expression,
 }
 
 object SpanCorrupt {
-  /** One-pass corruption; called from generated code. */
+  /** One-pass corruption; called from generated code, so it returns
+    * `InternalRow`, the Java type janino assigns the struct result to
+    * (an `Any` result fails to compile and the stage runs interpreted). */
   def compute(text: UTF8String, id: UTF8String,
-              noisePct: Int, seed: Long): Any = {
+              noisePct: Int, seed: Long): org.apache.spark.sql.catalyst.InternalRow = {
     val toks = text.toString.split(" ", -1)
     val prefix = seed.toString + " m " + id.toString + " "
     val in = new java.lang.StringBuilder

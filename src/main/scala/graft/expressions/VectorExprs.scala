@@ -303,8 +303,9 @@ object NearestEval {
   private def cmp(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
 
-  /** One-pass arg-max; called from generated code. */
-  def compute(emb: ArrayData, evals: ArrayData): Any = {
+  /** One-pass arg-max; called from generated code, so it returns
+    * `InternalRow` (see [[SpanCorrupt.compute]]). */
+  def compute(emb: ArrayData, evals: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
     val n = evals.numElements()
     val m = emb.numElements()
     val cos = new Array[Double](n)

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.analytics.DailySummary
 import graft.sources.{JsonEnvelope, PartitionedStore}
 import graft.streaming.EnrichStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -30,42 +30,52 @@ object BatchPipeline {
 
   def run(spark: SparkSession, rawDir: String, storeDir: String, summaryDir: String,
           minQuality: Double = 80.0): Result = {
-    // 1. load + enrich (the lineage the streaming job runs — EP1 ≡ EP2).
-    // persist: the pipeline runs several actions (store append, summary,
-    // validation) over this lineage — without caching, each re-reads and
-    // re-enriches the raw JSON.
-    val enriched = EnrichStream.enrich(JsonEnvelope.readBatch(spark, s"$rawDir/*/*/*/*")).persist()
-    // the load statistics in one pass (it also fills the cache)
-    val stats = enriched.agg(count(lit(1)), avg(col("data_quality_score")),
-      countDistinct(col("city"))).head()
-    val loaded = stats.getLong(0)
-    val avgQuality = if (stats.isNullAt(1)) Double.NaN else stats.getDouble(1)
-    val cities = stats.getLong(2)
+    // Every number in the Result is observed on an execution that does the
+    // work anyway (the store write, the summary write, the report): no
+    // Spark job of the run only counts.
+    //
+    // 1. load + enrich (the lineage the streaming job runs — EP1 ≡ EP2),
+    // read from the archive root. persist: the store write fills the cache,
+    // the summary reads it.
+    val enriched = EnrichStream.enrich(JsonEnvelope.readBatch(spark, rawDir)).persist()
 
-    // 2. dedup-append (D1 + D2): unique on (station_id, timestamp)
-    val withParts = PartitionedStore.withTimePartitions(enriched, "timestamp_parsed")
+    // 2. dedup-append (D1 + D2): unique on (station_id, timestamp); the load
+    // statistics ride on the same execution
+    val load = Observation()
+    val withParts = PartitionedStore.withTimePartitions(
+      enriched.observe(load, count(lit(1)).as("rows"), avg(col("data_quality_score")).as("quality")),
+      "timestamp_parsed")
     val storedNew = PartitionedStore.appendIfAbsent(
       spark, withParts, storeDir,
       keys = Seq("station_id", "timestamp"),
       partitionCols = Seq("year", "month", "day", "hour"))
+    val loaded = load.get("rows").asInstanceOf[Long]
+    val avgQuality = Option(load.get("quality")).fold(Double.NaN)(_.asInstanceOf[Double])
 
-    // 3. daily summary (A1-A5) + upsert-as-overwrite (D3). The read-back
-    // states the schema: a load with no readings leaves no summary file
-    // to infer it from.
+    // 3. daily summary (A1-A5) + upsert-as-overwrite (D3). Cities are
+    // observed on the summary rows (at most cities × days of them):
+    // observations take no distinct aggregate.
     val summary = DailySummary.compute(enriched, "city", "reading_date")
-    PartitionedStore.overwriteGroups(summary, summaryDir, Seq("reading_date"))
-    val summaryStored = spark.read.schema(summary.schema).parquet(summaryDir)
-    val summaryRows = summaryStored.count()
+    val seen = Observation()
+    PartitionedStore.overwriteGroups(
+      summary.observe(seen, size(collect_set(col("city"))).as("cities")),
+      summaryDir, Seq("reading_date"))
+    val cities = seen.get("cities").asInstanceOf[Int]
 
-    // 4. validate (X2: counts > 0, avg quality >= threshold, all stations seen)
-    val ok = loaded > 0 && avgQuality >= minQuality && summaryRows > 0
-
-    // 5. report (X3)
-    val lines = summaryStored
+    // 4. report (X3), which also counts the stored summary. The read states
+    // the schema: a load with no readings leaves no summary file to infer it
+    // from.
+    val stored = Observation()
+    val lines = spark.read.schema(summary.schema).parquet(summaryDir)
+      .observe(stored, count(lit(1)).as("rows"))
       .orderBy(col("reading_date").desc, col("city"))
       .select("city", "reading_date", "avg_temperature", "reading_count", "alert_percentage")
       .limit(20).collect()
       .map(r => f"${r.getString(0)}%-10s ${r.get(1)} avg=${r.getDouble(2)}%.2f n=${r.getLong(3)} alerts=${r.getDouble(4)}%.1f%%")
+    val summaryRows = stored.get("rows").asInstanceOf[Long]
+
+    // 5. validate (X2: counts > 0, avg quality >= threshold, all stations seen)
+    val ok = loaded > 0 && avgQuality >= minQuality && summaryRows > 0
     val report =
       s"""Weather batch pipeline
          |  loaded=$loaded storedNew=$storedNew cities=$cities

@@ -41,10 +41,17 @@ object JsonEnvelope {
 
   /** Batch read of envelope JSON files → one flat row per reading.
     * `multiLine` for pretty-printed one-document-per-file envelopes (the
-    * reference's raw archiver writes indent=2); default is JSON-lines. */
+    * reference's raw archiver writes indent=2); default is JSON-lines.
+    * `path` may be the archive root: every file beneath it is read, its
+    * `year=/month=/day=/hour=` directories taken as plain directories, not
+    * partition columns. One root is listed serially while planning; a glob
+    * over its hour directories lists each as a root, and past Spark's
+    * parallel listing threshold (32 paths) that costs a listing job per
+    * read. */
   def readBatch(spark: SparkSession, path: String, reading: StructType = readingSchema,
                 multiLine: Boolean = false): DataFrame =
     flatten(spark.read.schema(envelopeSchema(reading))
+      .option("recursiveFileLookup", "true")
       .option("multiLine", multiLine.toString).json(path))
 
   /** Typed ingestion boundary (SURVEY §1.4): same read, compile-time schema. */

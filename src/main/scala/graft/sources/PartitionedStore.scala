@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Warehouse-table maintenance without a mutable store (SURVEY.md §7.4.1):
@@ -29,7 +30,11 @@ object PartitionedStore {
   /** Append only rows whose key is not already present (ON CONFLICT DO
     * NOTHING). The existing side is reduced to its key columns before the
     * anti join — reads key columns only (Parquet column pruning), and the
-    * join shuffles keys, not payloads. */
+    * join shuffles keys, not payloads. One Spark execution: the appended
+    * count is observed on the write itself, not counted by a second run of
+    * the anti join and the dedup. So a zero-row append still writes: to a
+    * partitioned table it adds no file, to an unpartitioned one it adds one
+    * empty Parquet file that carries the schema. */
   def appendIfAbsent(spark: SparkSession, incoming: DataFrame, table: String,
                      keys: Seq[String], partitionCols: Seq[String]): Long = {
     // Resolve through the Hadoop FileSystem of the table's URI — a bare
@@ -41,7 +46,11 @@ object PartitionedStore {
     val fresh =
       if (isFirstWrite) incoming
       else {
-        val existingKeys = spark.read.parquet(table).select(keys.map(col): _*)
+        // the key columns' schema, stated: no footer-inference job, and a
+        // table whose first append had no rows (a directory without data
+        // files) reads as empty instead of failing to infer a schema
+        val keySchema = StructType(keys.map(incoming.schema(_)))
+        val existingKeys = spark.read.schema(keySchema).parquet(table).select(keys.map(col): _*)
         incoming.join(existingKeys, keys, "left_anti")
       }
     // within-batch dup keys: deterministic winner = smallest payload tuple
@@ -50,10 +59,10 @@ object PartitionedStore {
     val payloadCols = incoming.columns.filterNot(keys.contains).toSeq
     val deduped = graft.operators.Dedup.keepFirstBy(fresh, keys,
       if (payloadCols.nonEmpty) payloadCols else Seq(keys.head))
-    val n = deduped.count()
-    if (n > 0)
-      deduped.write.mode("append").partitionBy(partitionCols: _*).parquet(table)
-    n
+    val appended = Observation()
+    deduped.observe(appended, count(lit(1)).as("rows"))
+      .write.mode("append").partitionBy(partitionCols: _*).parquet(table)
+    appended.get("rows").asInstanceOf[Long]
   }
 
   /**

@@ -34,7 +34,10 @@ object EnrichStream {
   /**
    * Start the dual-sink job: single pass per micro-batch, processed +
    * alerts written from the same enriched batch (persist → two writes →
-   * unpersist), exactly-once via the checkpoint.
+   * unpersist). At-least-once: the checkpoint replays a micro-batch that
+   * failed before its offsets were committed, and both sinks are plain
+   * appends that do not deduplicate by batch id, so a replayed batch's
+   * rows can land twice (ROADMAP item F).
    */
   def start(readings: DataFrame, processedPath: String, alertsPath: String,
             checkpointPath: String, trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {

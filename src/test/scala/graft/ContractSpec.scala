@@ -32,6 +32,17 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("q84 and q104 compile under strict codegen (no interpreted fallback)") {
+    // q84 (NearestEval) and q104 (SpanCorrupt) assign a struct returned by
+    // a Scala call in generated code; with the fallback off, code janino
+    // rejects throws here instead of running the stage interpreted
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try Seq("q84_semantic_screen", "q104_span_corruption").foreach { name =>
+      // collect, not count: every output column is computed
+      withClue(name)(assert(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").collect().nonEmpty))
+    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+  }
+
   test("hashSample / hashSampleByGroup reject malformed rates and drop NULL keys") {
     import org.apache.spark.sql.functions._
     import graft.operators.Sampling

@@ -2,8 +2,13 @@ package graft
 
 import graft.gen.WeatherGenerator
 import graft.pipeline.BatchPipeline
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDateTime
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+import org.scalatest.concurrent.TimeLimits.failAfter
+import org.scalatest.time.SpanSugar._
 
 /** EP3 → EP2 end-to-end: seeded generator → raw envelopes → batch pipeline
   * (enrich, dedup-append, daily summary, validate, report). */
@@ -30,36 +35,114 @@ class PipelineSpec extends SparkSpec {
     assert(engine == gen)
   }
 
+  /** Writes one envelope with no readings under `raw`'s first hour. */
+  private def writeEmptyEnvelope(raw: String): Unit = {
+    val hour = Paths.get(raw, "year=2026", "month=08", "day=12", "hour=10")
+    Files.createDirectories(hour)
+    Files.writeString(hour.resolve("batch_20260812_100000_empty.json"), """{"readings": []}""")
+  }
+
+  /** The Parquet data files under a table directory. */
+  private def dataFiles(table: String): Set[Path] = {
+    val files = Files.walk(Paths.get(table))
+    try files.filter(_.toString.endsWith(".parquet")).toArray.map(_.asInstanceOf[Path]).toSet
+    finally files.close()
+  }
+
+  // Result values are observations on the pipeline's own writes: the
+  // time limit interrupts a run waiting on an observation that never
+  // arrives, so it fails instead of hanging the suite.
+  private implicit val signaler: Signaler = ThreadSignaler
+
   test("full batch pipeline: load -> enrich -> store -> summarize -> validate") {
     val root = Files.createTempDirectory("graft-pipeline").toString
     // 2 hours of readings, one batch per 20 virtual minutes
     WeatherGenerator.writeBatches(s"$root/raw",
       LocalDateTime.of(2026, 8, 12, 10, 0), batches = 6, intervalSeconds = 1200, seed = 42)
 
-    val r1 = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
-    assert(r1.loadedRows == 30)      // 6 batches x 5 stations
-    assert(r1.storedNew == 30)
-    assert(r1.summaryRows == 5)      // one per city, single day
-    assert(r1.validationPassed, r1.report)
-    assert(r1.avgQuality == 100.0)   // generator ranges are all in-bounds
+    def summary() = spark.read.parquet(s"$root/summary").collect().map(_.toString).sorted.toSeq
+    failAfter(4.minutes) {
+      val r1 = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+      assert(r1.loadedRows == 30)      // 6 batches x 5 stations
+      assert(r1.storedNew == 30)
+      assert(r1.summaryRows == 5)      // one per city, single day
+      assert(r1.validationPassed, r1.report)
+      assert(r1.avgQuality == 100.0)   // generator ranges are all in-bounds
+      val (summaryBefore, filesBefore) = (summary(), dataFiles(s"$root/store"))
 
-    // re-run on the same raw data: idempotent (no new rows, same summary)
-    val r2 = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
-    assert(r2.storedNew == 0)
-    assert(r2.summaryRows == 5)
-    assert(spark.read.parquet(s"$root/store").count() == 30)
+      // a retry after success on the same raw data: idempotent (no new
+      // rows, no new store file, same summary) and still PASSED
+      val r2 = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+      assert(r2.loadedRows == 30 && r2.storedNew == 0 && r2.summaryRows == 5)
+      assert(r2.avgQuality == r1.avgQuality)
+      assert(r2.validationPassed, r2.report)
+      assert(r2.report.contains("cities=5"), r2.report)
+      assert(summary() == summaryBefore)
+      assert(dataFiles(s"$root/store") == filesBefore)
+      assert(spark.read.parquet(s"$root/store").count() == 30)
+    }
   }
 
   test("batch pipeline on envelopes with no readings fails validation without throwing") {
     val root = Files.createTempDirectory("graft-pipeline-empty").toString
-    val hour = java.nio.file.Paths.get(root, "raw", "year=2026", "month=08", "day=12", "hour=10")
-    Files.createDirectories(hour)
-    Files.writeString(hour.resolve("batch_20260812_100000_0.json"), """{"readings": []}""")
+    writeEmptyEnvelope(s"$root/raw")
 
-    val r = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+    val r = failAfter(2.minutes)(BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary"))
     assert(r.loadedRows == 0 && r.storedNew == 0 && r.summaryRows == 0)
     assert(!r.validationPassed, r.report)
     assert(r.report.contains("validation=FAILED"))
+  }
+
+  test("batch pipeline after a no-readings run stores every row of the next run") {
+    val root = Files.createTempDirectory("graft-pipeline-empty-first").toString
+    writeEmptyEnvelope(s"$root/raw")
+    failAfter(4.minutes) {
+      val empty = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+      assert(empty.storedNew == 0)
+      // the empty first append leaves a store directory without data files
+      assert(Files.isDirectory(Paths.get(root, "store")) && dataFiles(s"$root/store").isEmpty)
+
+      WeatherGenerator.writeBatches(s"$root/raw",
+        LocalDateTime.of(2026, 8, 12, 10, 0), batches = 6, intervalSeconds = 1200, seed = 42)
+      val r = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+      assert(r.loadedRows == 30 && r.storedNew == 30 && r.summaryRows == 5)
+      assert(r.validationPassed, r.report)
+      assert(spark.read.parquet(s"$root/store").count() == 30)
+    }
+  }
+
+  test("batch pipeline: one store execution per append, no listing job over > 32 hour directories") {
+    val root = Files.createTempDirectory("graft-pipeline-pass").toString
+    // 36 hourly batches: 36 hour directories, above Spark's parallel
+    // listing threshold of 32 paths
+    WeatherGenerator.writeBatches(s"$root/raw",
+      LocalDateTime.of(2026, 8, 12, 10, 0), batches = 36, intervalSeconds = 3600, seed = 7)
+    val appendExecutions = new java.util.concurrent.atomic.AtomicInteger
+    val listingJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files")))
+          listingJobs.incrementAndGet()
+      // a root execution whose first engine frame is appendIfAbsent
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+          val site = s.details.split("\n").map(_.trim).find(_.startsWith("graft."))
+          if (site.exists(_.startsWith("graft.sources.PartitionedStore$.appendIfAbsent(")))
+            appendExecutions.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try failAfter(4.minutes) {
+      // the first write, then a replay against the existing store
+      val load = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+      val replay = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+      assert(load.storedNew == 180 && replay.storedNew == 0)
+      org.apache.spark.ListenerBus.drain(spark.sparkContext)
+      // (root executions in appendIfAbsent, listing jobs): one per call, none
+      assert((appendExecutions.get, listingJobs.get) == ((2, 0)))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("corpus pipeline: clean -> dedup -> decontaminate -> split -> pack, deterministic") {
