@@ -129,9 +129,9 @@ object Bench {
       def f4(v: Double): String =
         String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
       // np4 is the probe setting that clears 0.6 recall on this corpus
-      // (RecallProbe sweep: np2 0.37, np4 0.75, np6 0.93) — nprobe is the
-      // recall/cost dial on isotropic embeddings, and the default a 100 TB
-      // deployment would ship. (np2 row retired in r6 for line budget; its
+      // (SCALE.md "ANN recall & data geometry": np2 0.37, np4 0.75, np6
+      // 0.93) — nprobe is the recall/cost dial on isotropic embeddings, and
+      // the default a 100 TB deployment would ship. (np2 row retired in r6 for line budget; its
       // staged pair frame is still gated by q23/q67.)
       val naiveCents = em.where(col("vec_id") % 50 === 0)
       val np4Pairs = graft.operators.Similarity
@@ -170,8 +170,9 @@ object Bench {
         .select("query_id", "neighbor_id").intersect(brute).count() / bruteN
       // the shipped IVF-PQ operating point (r7): trained coarse + trained
       // codebooks + exact re-rank at the DEFAULT np8 × C200 — the knee of
-      // the RecallProbe sweep (np1 0.22 either C; np4 0.38/0.42;
-      // np8 0.46/0.60) on this worst-case near-isotropic corpus. The key
+      // the STACK sweep in SCALE.md "Product quantization & IVF-PQ" (np1
+      // 0.22 either C; np4 0.38/0.42; np8 0.46/0.60) on this worst-case
+      // near-isotropic corpus (SCALE.md "ANN recall & data geometry"). The key
       // carries the dial so the number can't be mistaken for a cheaper
       // config's.
       val pqCbT = graft.operators.Similarity

@@ -142,10 +142,8 @@ object GraftSession {
     // negligible cost (one System.gc per 5 min); on a cluster the same
     // contract keeps executor scratch disks from paging dead shuffles.
     // Bench-tier receipt (round 11, same-day flag-flip sf0.1 pair): free
-    // — see NOTES. SPARK_GRAFT_PERIODIC_GC overrides for exactly such
-    // A/Bs (a diagnosis knob, same convention as the width pin).
-    .config("spark.cleaner.periodicGC.interval",
-      sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "5min"))
+    // — see NOTES (30min 178.1 s, 5min 155.1 s).
+    .config("spark.cleaner.periodicGC.interval", "5min")
     // events.ts test data is nanosecond parquet (see SparkEntry.t)
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.adaptive.enabled", "true")

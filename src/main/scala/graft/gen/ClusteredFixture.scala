@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * "the trainer is broken" from "the data has no clusters to find".
  *
  * The driver-generated `embeddings.parquet` tables are near-isotropic
- * (RecallProbe: intra-centroid and inter-centroid cosine spreads are
- * statistically identical — see SCALE.md "ANN recall & data geometry"), so
+ * (intra-centroid and inter-centroid cosine spreads are statistically
+ * identical — SCALE.md "ANN recall & data geometry"), so
  * trained IVF centroids cannot beat naive modulo bucketing on them: there
  * is no structure to recover, and recall is bought by nprobe alone. This
  * fixture plants the structure real embedding corpora have: `clusters`

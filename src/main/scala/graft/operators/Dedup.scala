@@ -646,26 +646,14 @@ object Dedup {
       evalSpanHashes(evalDocs, idCol, textCol, window).localCheckpoint(),
       idCol, textCol, window, maxRounds)
 
-  /** The fixpoint loop over a PRECOMPUTED (checkpointed) eval hash set —
+  /** The eval fixpoint over a PRECOMPUTED (checkpointed) eval hash set —
     * shared by [[cutEvalPassagesToFixpoint]] and the streaming screen,
     * which computes the static hash set once for the whole stream. */
   private[graft] def cutEvalFixpointFromHashes(train: DataFrame, evalHashes: DataFrame,
                                                idCol: String, textCol: String,
-                                               window: Int, maxRounds: Int): DataFrame = {
-    var cur = train.localCheckpoint()
-    var rounds = 0
-    var done = false
-    while (rounds < maxRounds && !done) {
-      val ranges = crossSetSpanRangesFromHashes(cur, evalHashes, idCol, textCol,
-        window).localCheckpoint()
-      if (ranges.isEmpty) done = true
-      else {
-        cur = cutSpanRangesFrom(cur, idCol, textCol, ranges).localCheckpoint()
-        rounds += 1
-      }
-    }
-    cur
-  }
+                                               window: Int, maxRounds: Int): DataFrame =
+    cutToFixpoint(train.localCheckpoint(), idCol, textCol, maxRounds)(
+      crossSetSpanRangesFromHashes(_, evalHashes, idCol, textCol, window))
 
   /**
    * [[cutDuplicatedSpans]] iterated to a FIXPOINT: one cut pass can
@@ -680,21 +668,24 @@ object Dedup {
    */
   def cutDuplicatedSpansToFixpoint(docs: DataFrame, idCol: String, textCol: String,
                                    window: Int, maxBucket: Int = 10000,
-                                   maxRounds: Int = 3): DataFrame = {
-    var cur = docs.localCheckpoint()
-    var rounds = 0
-    var done = false
-    while (rounds < maxRounds && !done) {
-      val ranges = duplicatedSpanRanges(cur, idCol, textCol, window, maxBucket)
-        .localCheckpoint()
-      if (ranges.isEmpty) done = true
-      else {
-        cur = cutSpanRangesFrom(cur, idCol, textCol, ranges).localCheckpoint()
-        rounds += 1
-      }
+                                   maxRounds: Int = 3): DataFrame =
+    cutToFixpoint(docs.localCheckpoint(), idCol, textCol, maxRounds)(
+      duplicatedSpanRanges(_, idCol, textCol, window, maxBucket))
+
+  /** The one fixpoint loop of both span cuts: `detect` the ranges of the
+    * current (checkpointed) frame, cut them, repeat until a round detects
+    * nothing or `roundsLeft` cuts ran. The detector is the only
+    * difference between the eval cut and the in-set cut. */
+  @annotation.tailrec
+  private def cutToFixpoint(cur: DataFrame, idCol: String, textCol: String,
+                            roundsLeft: Int)(detect: DataFrame => DataFrame): DataFrame =
+    if (roundsLeft <= 0) cur
+    else {
+      val ranges = detect(cur).localCheckpoint()
+      if (ranges.isEmpty) cur
+      else cutToFixpoint(cutSpanRangesFrom(cur, idCol, textCol, ranges).localCheckpoint(),
+        idCol, textCol, roundsLeft - 1)(detect)
     }
-    cur
-  }
 
   /** The edit half of [[cutDuplicatedSpans]], over PRECOMPUTED ranges
     * (an (id, span_start, span_end, …) frame) — callers that also need

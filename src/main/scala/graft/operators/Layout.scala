@@ -285,12 +285,16 @@ object Layout {
    * where the caller says; `bucketBy` requires the catalog (`saveAsTable`)
    * because bucket metadata travels in the table definition, not the
    * files. Read back with `spark.table(name)` — `spark.read.parquet(path)`
-   * sees the data but not the bucketing and will shuffle again.
+   * sees the data but not the bucketing and will shuffle again. The
+   * repartition on the keys first keeps one file per bucket (without it,
+   * every task writes a file per bucket it touches — at 1000 tasks × 64
+   * buckets that is 64k small files).
    */
   def writeBucketed(df: DataFrame, name: String, path: String,
                     buckets: Int, keys: Seq[String]): Unit = {
     require(buckets > 0 && keys.nonEmpty, "need buckets > 0 and >= 1 key")
-    df.write.mode("overwrite").format("parquet")
+    df.repartition(buckets, keys.map(col): _*)
+      .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .option("path", path)

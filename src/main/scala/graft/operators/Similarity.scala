@@ -645,8 +645,8 @@ object Similarity {
     * — the shippable PQ search. `vectors` is the original float table the
     * codes were encoded from. Default candC = 200: C must cover the ADC
     * tie sets quantization creates (the C-vs-tie-set law, SCALE.md) —
-    * measured on the near-isotropic sf0.1 corpus (RecallProbe PQSTACK,
-    * trained codebooks), recall@5 vs brute force is 0.46 at C = 50 vs
+    * measured on the near-isotropic sf0.1 corpus (SCALE.md "ANN recall &
+    * data geometry", trained codebooks), recall@5 vs brute force is 0.46 at C = 50 vs
     * 0.80 at C = 200; the re-rank touches only queries·C candidate rows
     * either way, so the wider C is cheap. */
   def pqAdcKnnReranked(codes: DataFrame, codebooks: DataFrame, vectors: DataFrame,

@@ -588,8 +588,8 @@ object CorpusPipeline {
     // CCNet order) so duplicated or leaked text never inflates its own
     // n-gram counts. Note: the self-trained model is a global artifact,
     // so this stage is batch-shaped; the streamable twin is the same
-    // operator under a FROZEN model (NgramLm.fluencyThresholdFilter via
-    // IncrementalDedup.attachFluencyScreen — StatefulOpsSpec pins the
+    // operator under a FROZEN model (NgramLm.fluencyThresholdFilter
+    // through IncrementalDedup.attach — StatefulOpsSpec pins the
     // parity). The stage IS that operator applied to the self-trained
     // (or lmTrainDocs) model — one decision rule, one implementation.
     // The trigram-model builds for stages 4a/4a''/4a' share [[buildLm]].

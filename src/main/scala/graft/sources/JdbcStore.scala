@@ -38,7 +38,8 @@ object JdbcStore {
   }
 
   /** Append only rows whose key is absent from the remote table (ON
-    * CONFLICT DO NOTHING); returns the number of rows written.
+    * CONFLICT DO NOTHING, the [[PartitionedStore.absentRows]] rule);
+    * returns the number of rows written.
     *
     * `columnTypes` is the serving-table DDL for first-write table creation
     * (Spark's `createTableColumnTypes` option) — declare key strings as
@@ -47,16 +48,10 @@ object JdbcStore {
   def appendIfAbsent(spark: SparkSession, incoming: DataFrame, url: String, table: String,
                      keys: Seq[String], props: Properties = new Properties,
                      columnTypes: String = ""): Long = {
-    val fresh =
-      if (!tableExists(url, table, props)) incoming
-      else {
-        val existingKeys = spark.read.jdbc(url, table, props).select(keys.map(col): _*)
-        incoming.join(existingKeys, keys, "left_anti")
-      }
-    // within-batch dup keys: deterministic winner = smallest payload tuple
-    val payloadCols = incoming.columns.filterNot(keys.contains).toSeq
-    val deduped = graft.operators.Dedup.keepFirstBy(fresh, keys,
-        if (payloadCols.nonEmpty) payloadCols else Seq(keys.head))
+    val existingKeys =
+      if (!tableExists(url, table, props)) None
+      else Some(spark.read.jdbc(url, table, props).select(keys.map(col): _*))
+    val deduped = PartitionedStore.absentRows(incoming, existingKeys, keys)
       .localCheckpoint() // one computation serves both the count and the write
     val n = deduped.count()
     if (n > 0) {

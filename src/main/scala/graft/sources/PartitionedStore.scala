@@ -27,14 +27,27 @@ object PartitionedStore {
       .withColumn("day", dayofmonth(col(tsCol)))
       .withColumn("hour", hour(col(tsCol)))
 
+  /** The absent-rows rule of every insert-if-absent store (this one and
+    * [[JdbcStore.appendIfAbsent]]): `incoming` rows whose key is not among
+    * `existingKeys` (a left-anti join on the keys, so only keys shuffle),
+    * and within the batch one row per key — the smallest payload tuple,
+    * a deterministic winner (a key column as tie-break would be constant
+    * per window, so the winner would be partitioning luck). */
+  private[sources] def absentRows(incoming: DataFrame, existingKeys: Option[DataFrame],
+                                  keys: Seq[String]): DataFrame = {
+    val fresh = existingKeys.fold(incoming)(incoming.join(_, keys, "left_anti"))
+    val payloadCols = incoming.columns.filterNot(keys.contains).toSeq
+    graft.operators.Dedup.keepFirstBy(fresh, keys,
+      if (payloadCols.nonEmpty) payloadCols else Seq(keys.head))
+  }
+
   /** Append only rows whose key is not already present (ON CONFLICT DO
-    * NOTHING). The existing side is reduced to its key columns before the
-    * anti join — reads key columns only (Parquet column pruning), and the
-    * join shuffles keys, not payloads. One Spark execution: the appended
-    * count is observed on the write itself, not counted by a second run of
-    * the anti join and the dedup. So a zero-row append still writes: to a
-    * partitioned table it adds no file, to an unpartitioned one it adds one
-    * empty Parquet file that carries the schema. */
+    * NOTHING), by [[absentRows]]. The existing side is read as its key
+    * columns only (Parquet column pruning). A zero-row append adds no
+    * data file. A partitioned append is one Spark execution: the appended
+    * count is observed on the write itself. An unpartitioned write always
+    * writes a file from its first task, empty or not, so there the rows
+    * are staged and counted first, and written only when there are any. */
   def appendIfAbsent(spark: SparkSession, incoming: DataFrame, table: String,
                      keys: Seq[String], partitionCols: Seq[String]): Long = {
     // Resolve through the Hadoop FileSystem of the table's URI — a bare
@@ -42,27 +55,24 @@ object PartitionedStore {
     // which would skip the anti-join and append duplicates.
     val path = new org.apache.hadoop.fs.Path(table)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isFirstWrite = !fs.exists(path)
-    val fresh =
-      if (isFirstWrite) incoming
-      else {
-        // the key columns' schema, stated: no footer-inference job, and a
-        // table whose first append had no rows (a directory without data
-        // files) reads as empty instead of failing to infer a schema
-        val keySchema = StructType(keys.map(incoming.schema(_)))
-        val existingKeys = spark.read.schema(keySchema).parquet(table).select(keys.map(col): _*)
-        incoming.join(existingKeys, keys, "left_anti")
-      }
-    // within-batch dup keys: deterministic winner = smallest payload tuple
-    // (a key column as tie-break would be constant per window — the winner
-    // would be partitioning luck)
-    val payloadCols = incoming.columns.filterNot(keys.contains).toSeq
-    val deduped = graft.operators.Dedup.keepFirstBy(fresh, keys,
-      if (payloadCols.nonEmpty) payloadCols else Seq(keys.head))
-    val appended = Observation()
-    deduped.observe(appended, count(lit(1)).as("rows"))
-      .write.mode("append").partitionBy(partitionCols: _*).parquet(table)
-    appended.get("rows").asInstanceOf[Long]
+    // the key columns' schema, stated: no footer-inference job, and a
+    // table whose first append had no rows (a directory without data
+    // files) reads as empty instead of failing to infer a schema
+    val existingKeys = if (!fs.exists(path)) None else Some(
+      spark.read.schema(StructType(keys.map(incoming.schema(_)))).parquet(table)
+        .select(keys.map(col): _*))
+    val rows = absentRows(incoming, existingKeys, keys)
+    if (partitionCols.isEmpty) {
+      val staged = rows.localCheckpoint()
+      val n = staged.count()
+      if (n > 0) staged.write.mode("append").parquet(table) else fs.mkdirs(path)
+      n
+    } else {
+      val appended = Observation()
+      rows.observe(appended, count(lit(1)).as("rows"))
+        .write.mode("append").partitionBy(partitionCols: _*).parquet(table)
+      appended.get("rows").asInstanceOf[Long]
+    }
   }
 
   /**
@@ -105,21 +115,4 @@ object PartitionedStore {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(table)
-
-  /**
-   * Bucketed managed table for co-located joins: two tables bucketed on
-   * the same key with the same bucket count join WITHOUT a shuffle — the
-   * exchange both sides would pay is prepaid once at write time. The
-   * repartition before the write keeps one file per bucket (without it,
-   * every task writes a file per bucket it touches — at 1000 tasks × 64
-   * buckets that is 64k small files).
-   */
-  def writeBucketed(df: DataFrame, tableName: String, bucketCol: String, buckets: Int): Unit =
-    df.repartition(buckets, col(bucketCol))
-      .write
-      .mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(tableName)
 }

@@ -40,10 +40,11 @@ object IncrementalDedup {
       .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(path))
 
-  /** Idempotent store write: the batch's rows land in (at least) the
-    * `batch=<tag>` partition, REPLACING any prior attempt's rows there
-    * (dynamic overwrite touches only the partitions present in the data —
-    * other batches' partitions are untouched). */
+  /** Idempotent tagged write (every store, and [[attach]]'s log): the
+    * batch's rows land in (at least) the `batch=<tag>` partition,
+    * REPLACING any prior attempt's rows there (dynamic overwrite touches
+    * only the partitions present in the data — other batches' partitions
+    * are untouched). */
   private def writeTagged(rows: DataFrame, tag: String, path: String,
                           partitionCols: String*): Unit =
     rows.withColumn("batch", org.apache.spark.sql.functions.lit(tag))
@@ -51,6 +52,22 @@ object IncrementalDedup {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch" +: partitionCols: _*)
       .parquet(path)
+
+  /** The store rows a pruned step can match: the cells `fresh` touches
+    * (its distinct `cells` values, driver-collected: bounded by the cell
+    * count) minus this tag's own partition, so a replay matches what its
+    * first attempt saw. An OR-chain of partition-column equalities prunes
+    * the other cells at the file listing. None while the store is absent
+    * or the batch touches no cell. */
+  private def touchedCells(fresh: DataFrame, storePath: String, batchTag: String,
+                           cells: String*): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val touched = fresh.select(cells.map(col): _*).distinct().collect()
+    if (touched.isEmpty || !fsExists(fresh, storePath)) None
+    else Some(fresh.sparkSession.read.parquet(storePath).where(touched.map(r =>
+        cells.indices.map(i => col(cells(i)) === lit(r.get(i))).reduce(_ && _))
+      .reduce(_ || _) && col("batch") =!= lit(batchTag)))
+  }
 
   /**
    * One ingestion step: candidates for `batch` against (store ∪ batch),
@@ -63,13 +80,12 @@ object IncrementalDedup {
            batchTag: String, n: Int = 3, numHashes: Int = 16, bands: Int = 4,
            maxBucket: Int = 10000): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val spark = batch.sparkSession
     // two consumers (candidate generation + store write): eager checkpoint
     val newSigs = Dedup.minhashSignatures(batch, idCol, textCol, n, numHashes)
       .localCheckpoint()
     val oldSigs =
       if (fsExists(batch, storePath))
-        spark.read.parquet(storePath)
+        batch.sparkSession.read.parquet(storePath)
           .where(col("batch") =!= lit(batchTag)) // replay: skip own partition
           .drop("batch")
       else newSigs.limit(0)
@@ -102,25 +118,12 @@ object IncrementalDedup {
                     numHashes: Int = 16, bands: Int = 4, maxBucket: Int = 10000,
                     pfxMod: Int = 64): DataFrame = {
     import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
     val newBands = Dedup.explodedBandKeys(
         Dedup.minhashSignatures(batch, idCol, textCol, n, numHashes), numHashes, bands)
       .withColumn("pfx", pmod(graft.functions.Hashing.stableHash60(col("sig")), lit(pfxMod)))
       .localCheckpoint() // consumed by touched-cells, candidates AND the write
-    // touched partition cells: bounded by bands·pfxMod, driver-safe
-    val touched = newBands.select("band", "pfx").distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val old =
-      if (touched.nonEmpty && fsExists(batch, storePath)) {
-        // OR-chain over partition-column equalities → partition pruning at
-        // the scan (an expression OVER the partition columns would not prune)
-        val pred = touched.map { case (b, p) =>
-          col("band") === b && col("pfx") === p
-        }.reduce(_ || _)
-        spark.read.parquet(storePath)
-          .where(pred && col("batch") =!= lit(batchTag))
-          .select("id", "band", "sig")
-      } else newBands.select("id", "band", "sig").limit(0)
+    val old = touchedCells(newBands, storePath, batchTag, "band", "pfx")
+      .getOrElse(newBands.limit(0)).select("id", "band", "sig")
     val cands = Dedup.incrementalLshCandidatesFromBands(
       newBands.select("id", "band", "sig"), old, maxBucket)
       .localCheckpoint() // materialize BEFORE the store gains the batch
@@ -156,18 +159,11 @@ object IncrementalDedup {
     import org.apache.spark.sql.functions.{array_distinct, col, explode,
       filter, lit, pmod, size, transform}
     import graft.expressions.BoundedCollectAgg
-    val spark = batch.sparkSession
     val newSpans = Dedup.spanHashes(batch, idCol, textCol, window)
       .withColumn("pfx", pmod(col("h"), lit(pfxMod.toLong)))
       .localCheckpoint() // consumed by touched-cells, the mark AND the write
-    val touched = newSpans.select("pfx").distinct().collect().map(_.getLong(0))
-    val old =
-      if (touched.nonEmpty && fsExists(batch, storePath))
-        spark.read.parquet(storePath)
-          .where(col("pfx").isin(touched.map(Long.box).toIndexedSeq: _*) &&
-            col("batch") =!= lit(batchTag))
-          .select("id", "pos", "h")
-      else newSpans.select("id", "pos", "h").limit(0)
+    val old = touchedCells(newSpans, storePath, batchTag, "pfx")
+      .getOrElse(newSpans.limit(0)).select("id", "pos", "h")
     val marked = old.withColumn("is_new", lit(0))
       .unionByName(newSpans.select("id", "pos", "h").withColumn("is_new", lit(1)))
       .groupBy("h")
@@ -187,117 +183,25 @@ object IncrementalDedup {
   }
 
   /**
-   * Attach the loop to a streaming document source: per micro-batch, run
-   * [[step]] tagged with the batch id and append the candidate pairs to
-   * `outPath`. The store side is replay-idempotent (a restarted batch
-   * overwrites its own partition and recomputes IDENTICAL candidates —
-   * the old side excludes its own tag); the candidate log at `outPath`
-   * is still an append-only log, so a replay can append the same pairs
-   * twice — downstream consumers treat the pair table as a set (distinct
-   * on read), the usual convention for candidate logs.
+   * Attach a per-batch screen to a streaming document source: `perBatch`
+   * gets each micro-batch with its tag `b<batchId>` and returns the rows to
+   * log, which land in `outPath` through [[writeTagged]] under that tag.
+   * So the log is replay-exact like the stores: a micro-batch that Spark
+   * re-runs after a crash (written, not yet committed) replaces its own
+   * rows instead of appending them twice. A stateful step hands the tag to
+   * its store ([[step]], [[stepSpans]], [[stepLines]]); a frozen screen
+   * (the eval cut, the LM and fluency filters) ignores it, and its caller
+   * checkpoints the static side once, before attaching.
    */
-  def attach(docs: DataFrame, idCol: String, textCol: String, storePath: String,
-             outPath: String, checkpointPath: String,
-             n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-             maxBucket: Int = 10000): StreamingQuery =
+  def attach(docs: DataFrame, outPath: String, checkpointPath: String)(
+      perBatch: (DataFrame, String) => DataFrame): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        step(batch, idCol, textCol, storePath, s"b$batchId", n, numHashes, bands,
-          maxBucket)
-          .write.mode("append").parquet(outPath)
+        val tag = s"b$batchId"
+        writeTagged(perBatch(batch, tag), tag, outPath)
       }
       .start()
-
-  /** Streaming SURGICAL decontamination — the stateless member of the
-    * ingest-screen family: per micro-batch, the eval-passage FIXPOINT cut
-    * (seam-created leaks re-cut until none remain) against the STATIC
-    * eval set. The eval span-hash set is computed and checkpointed ONCE
-    * for the whole stream — not once per batch — and there is no store,
-    * no tag, and no replay concern beyond the append-only output log.
-    * Crawl admission runs this BEFORE the stateful span screen, so text
-    * still matching an eval span after `maxRounds` cuts is the only leak
-    * that can reach the span store. */
-  def attachEvalCut(docs: DataFrame, evalDocs: DataFrame, idCol: String,
-                    textCol: String, outPath: String, checkpointPath: String,
-                    window: Int, maxRounds: Int = 3): StreamingQuery = {
-    val evalHashes = Dedup.evalSpanHashes(evalDocs, idCol, textCol, window)
-      .localCheckpoint() // static for the stream's lifetime
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Dedup.cutEvalFixpointFromHashes(batch, evalHashes, idCol, textCol,
-            window, maxRounds)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-  }
-
-  /** [[attach]] for the SPAN screen: per micro-batch, [[stepSpans]] tagged
-    * with the batch id, duplicated-passage ranges appended to `outPath`.
-    * Same idempotence story as attach: the span store is replay-exact,
-    * the range log is append-only (distinct on read). */
-  def attachSpans(docs: DataFrame, idCol: String, textCol: String,
-                  storePath: String, outPath: String, checkpointPath: String,
-                  window: Int, maxBucket: Int = 10000,
-                  pfxMod: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stepSpans(batch, idCol, textCol, storePath, s"b$batchId", window,
-          maxBucket, pfxMod)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** Ingest-time LM fluency screen — the streaming form of the CCNet
-    * band (stage 4a): per micro-batch, admit documents whose perplexity
-    * under a FROZEN calibration model clears the FROZEN threshold
-    * (`NgramLm.pplThresholdFilter`). The decision is a pure per-document
-    * function of the frozen state — no store, no rank over the stream —
-    * so batch and streaming replays agree exactly (StatefulOpsSpec pins
-    * the parity). Calibrate with `NgramLm.pplQuantile`; the band filter
-    * itself is NOT streamable (it ranks the whole corpus). */
-  def attachLmScreen(docs: DataFrame, lm: DataFrame, totals: DataFrame,
-                     idCol: String, textCol: String, maxPpl: Double,
-                     outPath: String, checkpointPath: String,
-                     alpha: Double = 0.4): StreamingQuery = {
-    val lmFrozen = lm.localCheckpoint() // static for the stream's lifetime
-    val totFrozen = totals.localCheckpoint()
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.NgramLm.pplThresholdFilter(batch, lmFrozen, totFrozen,
-            idCol, textCol, maxPpl, alpha)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-  }
-
-  /** Ingest-time INTEGER-grain fluency screen — the streaming twin of the
-    * capstone's gated stage 4a (CorpusPipeline `fluencyMin`): per
-    * micro-batch, admit documents whose token mass the FROZEN calibration
-    * model matches at order ≥ 2 for at least num/den of their scored
-    * tokens (`NgramLm.fluencyThresholdFilter` — exact cross-multiplied
-    * integers, no floats). Pure per-document function of the frozen
-    * state, so batch and streaming replays agree BIT-FOR-BIT — unlike
-    * [[attachLmScreen]]'s float perplexity cut, this twin carries the
-    * oracle-exact decision the batch gate (q127/q128) runs. */
-  def attachFluencyScreen(docs: DataFrame, lm: DataFrame, totals: DataFrame,
-                          idCol: String, textCol: String, num: Int, den: Int,
-                          outPath: String, checkpointPath: String,
-                          n: Int = 3): StreamingQuery = {
-    val lmFrozen = lm.localCheckpoint() // static for the stream's lifetime
-    val totFrozen = totals.localCheckpoint()
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.NgramLm.fluencyThresholdFilter(batch, lmFrozen,
-            totFrozen, idCol, textCol, num, den, n)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-  }
 
   /**
    * Ingest-time LINE-frequency screen — the streaming twin of
@@ -320,7 +224,6 @@ object IncrementalDedup {
                 storePath: String, batchTag: String, sep: String,
                 minDocs: Long, pfxMod: Int = 64): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, countDistinct, length, lit, pmod}
-    val spark = batch.sparkSession
     // One tokenization per batch: the line stream (with positions) is
     // micro-batch-sized, so checkpointing it and deriving the store
     // write, the census AND the edit from it is the cheap side of the
@@ -332,22 +235,14 @@ object IncrementalDedup {
       .select(col("id"), col("line_h")).distinct()
       .withColumn("pfx", pmod(col("line_h"), lit(pfxMod.toLong)))
       .localCheckpoint() // consumed by touched-cells, the census AND the write
-    val touched = newLines.select("pfx").distinct().collect().map(_.getLong(0))
-    val old =
-      if (touched.nonEmpty && fsExists(batch, storePath))
-        spark.read.parquet(storePath)
-          .where(col("pfx").isin(touched.map(Long.box).toIndexedSeq: _*) &&
-            col("batch") =!= lit(batchTag))
-          // Census rows are only CONSUMED for hashes present in this
-          // batch (the edit left-semi-joins the batch's lines against
-          // freq), so the store read prunes to them: per-step cost
-          // tracks the batch's lines' corpus frequency, not the
-          // accumulated store size (pfx cells saturate at ~pfxMod
-          // distinct batch lines; this prune does not).
-          .join(broadcast(newLines.select("line_h").distinct()),
-            Seq("line_h"), "left_semi")
-          .select("id", "line_h")
-      else newLines.select("id", "line_h").limit(0)
+    val old = touchedCells(newLines, storePath, batchTag, "pfx")
+      // Census rows are only CONSUMED for hashes present in this batch
+      // (the edit left-semi-joins the batch's lines against freq), so the
+      // store read prunes to them: per-step cost tracks the batch's lines'
+      // corpus frequency, not the accumulated store size (pfx cells
+      // saturate at ~pfxMod distinct batch lines; this prune does not).
+      .map(_.join(broadcast(newLines.select("line_h").distinct()), Seq("line_h"), "left_semi"))
+      .getOrElse(newLines.limit(0)).select("id", "line_h")
     val freq = old.unionByName(newLines.select("id", "line_h"))
       .groupBy("line_h")
       .agg(countDistinct(col("id")).as("n_docs"))
@@ -358,20 +253,4 @@ object IncrementalDedup {
     writeTagged(newLines, batchTag, storePath, "pfx")
     edited
   }
-
-  /** [[stepLines]] on a streaming source: per micro-batch, edit against
-    * the store-so-far and append the admitted (edited) docs to `outPath`.
-    * Same replay story as [[attach]]: the store write is idempotent per
-    * tag; the output log is append-only (consumers read it as a set). */
-  def attachLines(docs: DataFrame, idCol: String, textCol: String,
-                  storePath: String, outPath: String, checkpointPath: String,
-                  sep: String, minDocs: Long, pfxMod: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stepLines(batch, idCol, textCol, storePath, s"b$batchId", sep,
-          minDocs, pfxMod)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
 }

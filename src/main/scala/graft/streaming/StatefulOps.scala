@@ -243,15 +243,17 @@ object StatefulOps {
   }
 
   final case class AlertEvent(stationId: String, alertLevel: String, eventTime: java.sql.Timestamp)
-  final case class StreakState(current: Int, longest: Int)
+  final case class StreakState(current: Int, longest: Int) {
+    /** The state after one station's batch of events, taken in event-time
+      * order (the group is small: one station, one micro-batch). */
+    def advance(events: Iterator[AlertEvent]): StreakState =
+      events.toSeq.sortBy(_.eventTime.getTime).foldLeft(this) { (s, e) =>
+        val cur = if (Enrich.AlertTiers.contains(e.alertLevel)) s.current + 1 else 0
+        StreakState(cur, math.max(s.longest, cur))
+      }
+  }
   final case class StreakUpdate(stationId: String, currentStreak: Int, longestStreak: Int)
 
-  /**
-   * Arbitrary stateful processing (flatMapGroupsWithState): track per
-   * station the current and longest run of consecutive alerting readings
-   * (WARNING/CRITICAL). Emits an update whenever a group sees data;
-   * processing-time timeout expires idle stations' state.
-   */
   /**
    * The same streak tracker on Spark 4's transformWithState API — state
    * lives in named, TTL-capable state variables (RocksDB-backed provider
@@ -268,12 +270,7 @@ object StatefulOps {
 
     override def handleInputRows(station: String, rows: Iterator[AlertEvent],
                                  timerValues: TimerValues): Iterator[StreakUpdate] = {
-      val sorted = rows.toSeq.sortBy(_.eventTime.getTime)
-      var s = Option(state.get()).getOrElse(StreakState(0, 0))
-      sorted.foreach { e =>
-        val cur = if (Enrich.AlertTiers.contains(e.alertLevel)) s.current + 1 else 0
-        s = StreakState(cur, math.max(s.longest, cur))
-      }
+      val s = Option(state.get()).getOrElse(StreakState(0, 0)).advance(rows)
       state.update(s)
       Iterator.single(StreakUpdate(station, s.current, s.longest))
     }
@@ -285,6 +282,12 @@ object StatefulOps {
       .transformWithState(new StreakProcessor, TimeMode.None(), OutputMode.Append())
   }
 
+  /**
+   * Arbitrary stateful processing (flatMapGroupsWithState): track per
+   * station the current and longest run of consecutive alerting readings
+   * (WARNING/CRITICAL). Emits an update whenever a group sees data;
+   * processing-time timeout expires idle stations' state.
+   */
   def alertStreaks(events: Dataset[AlertEvent],
                    timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout()): Dataset[StreakUpdate] = {
     import events.sparkSession.implicits._
@@ -296,13 +299,7 @@ object StatefulOps {
             state.remove()
             Iterator.empty
           } else {
-            // per-station order within a batch: sort the (small) group by time
-            val sorted = rows.toSeq.sortBy(_.eventTime.getTime)
-            var s = state.getOption.getOrElse(StreakState(0, 0))
-            sorted.foreach { e =>
-              val cur = if (Enrich.AlertTiers.contains(e.alertLevel)) s.current + 1 else 0
-              s = StreakState(cur, math.max(s.longest, cur))
-            }
+            val s = state.getOption.getOrElse(StreakState(0, 0)).advance(rows)
             state.update(s)
             if (timeout != GroupStateTimeout.NoTimeout())
               state.setTimeoutDuration("1 hour")

@@ -14,6 +14,16 @@ class ContractSpec extends SparkSpec {
     assert(names.size == 150, s"expected 150 gates, got ${names.size}")
   }
 
+  // a public src/main definition that only specs reach must be ruled in
+  // tools/reach_rulings.tsv by the change that adds it
+  test("the reach audit finds no unruled spec-only definition and no stale ruling") {
+    val out = new StringBuilder
+    val log = scala.sys.process.ProcessLogger(l => out.append(l).append('\n'),
+      l => out.append(l).append('\n'))
+    val exit = scala.sys.process.Process(Seq("python3", "tools/reach_audit.py")).!(log)
+    assert(exit == 0, s"tools/reach_audit.py exited $exit:\n$out")
+  }
+
   test("gate qNN prefixes are unique (Bench's short metric keys)") {
     val prefixes = SparkEntry.gates.map(_.name.takeWhile(_ != '_'))
     assert(prefixes.forall(_.matches("q[0-9]+")), s"malformed: $prefixes")

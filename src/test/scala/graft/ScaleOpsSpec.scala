@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Aggregates, Skew}
-import graft.sources.{JsonEnvelope, PartitionedStore}
+import graft.sources.JsonEnvelope
 import graft.streaming.StatefulOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -116,11 +116,11 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle") {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val dir = Files.createTempDirectory("graft-bucketed").toString
     val facts = (1L to 1000L).map(i => (i % 50, i, i * 2.0)).toDF("key", "id", "v")
     val dims = (0L until 50L).map(i => (i, s"dim_$i")).toDF("key", "name")
-    PartitionedStore.writeBucketed(facts, "graft_facts_b", "key", 8)
-    PartitionedStore.writeBucketed(dims, "graft_dims_b", "key", 8)
+    graft.operators.Layout.writeBucketed(facts, "graft_facts_b", s"$dir/graft_facts_b", 8, Seq("key"))
+    graft.operators.Layout.writeBucketed(dims, "graft_dims_b", s"$dir/graft_dims_b", 8, Seq("key"))
     try {
       // disable auto-broadcast so the join would otherwise shuffle both sides
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

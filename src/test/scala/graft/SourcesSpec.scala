@@ -73,6 +73,18 @@ class SourcesSpec extends SparkSpec {
     assert(stored.where(col("station_id") === "WS001").head.getAs[Double]("temp") == 30.0)
   }
 
+  test("appendIfAbsent adds no data file for a zero-row append to an unpartitioned table") {
+    val table = tmp() + "/flat"
+    val batch = Seq(("WS001", 30.0), ("WS002", 31.0)).toDF("station_id", "temp")
+    val appended = (1 to 3).map(_ =>
+      PartitionedStore.appendIfAbsent(spark, batch, table, Seq("station_id"), Seq.empty))
+    assert(appended == Seq(2L, 0L, 0L))
+    val dataFiles = new java.io.File(table).listFiles
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(dataFiles == 1)
+    assert(spark.read.parquet(table).count() == 2)
+  }
+
   test("appendIfAbsent resolves scheme-qualified URIs through the Hadoop FileSystem") {
     // a java.io.File existence check silently reports "absent" for any
     // URI-form path (file://, s3://, hdfs://) — the anti-join would be

@@ -181,8 +181,9 @@ class StatefulOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = IncrementalDedup.attach(input.toDS().toDF("doc_id", "text"),
-      "doc_id", "text", storePath = s"$root/store", outPath = s"$root/cands",
-      checkpointPath = s"$root/ckpt")
+        outPath = s"$root/cands", checkpointPath = s"$root/ckpt") { (batch, tag) =>
+      IncrementalDedup.step(batch, "doc_id", "text", s"$root/store", tag)
+    }
     // three days of ingestion as three micro-batches
     docs.grouped(50).foreach { day => input.addData(day.toSeq); q.processAllAvailable() }
     q.stop()
@@ -222,6 +223,48 @@ class StatefulOpsSpec extends SparkSpec {
     assert(replayed == firstRun)
     assert(spark.read.parquet(s"$root2/store").count() == before,
       "a replayed batch must not grow the signature store")
+  }
+
+  test("attach's candidate log is replay-exact: a batch re-run after a crash " +
+    "replaces its rows instead of appending them again") {
+    import graft.streaming.IncrementalDedup
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val root = Files.createTempDirectory("graft-attachreplay").toString
+    val days = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+      .where(col("doc_id") < 150)
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+      .grouped(75).toSeq
+    def start(input: MemoryStream[(Long, String)]) =
+      IncrementalDedup.attach(input.toDS().toDF("doc_id", "text"),
+          s"$root/cands", s"$root/ckpt") { (batch, tag) =>
+        IncrementalDedup.step(batch, "doc_id", "text", s"$root/store", tag)
+      }
+    val first = MemoryStream[(Long, String)]
+    val q = start(first)
+    days.foreach { day => first.addData(day.toSeq); q.processAllAvailable() }
+    q.stop()
+    def pairs() = spark.read.parquet(s"$root/cands").select("id_a", "id_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val logged = pairs()
+    assert(logged.nonEmpty && logged.distinct.size == logged.size)
+    // a crash after batch 1's write and before its commit (no commit
+    // file, no checksum beside it): Spark re-runs batch 1 on restart,
+    // same batch id, same offsets
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(root, "ckpt", "commits", f)))
+    val again = MemoryStream[(Long, String)]
+    days.foreach(day => again.addData(day.toSeq))
+    val q2 = start(again)
+    q2.processAllAvailable()
+    q2.stop()
+    assert(Files.exists(java.nio.file.Paths.get(root, "ckpt", "commits", "1")),
+      "the restart must re-run batch 1")
+    val replayed = pairs()
+    assert(replayed.size == replayed.distinct.size, "a replayed batch logged its pairs twice")
+    assert(replayed.toSet == logged.toSet)
+    assert(spark.read.parquet(s"$root/store").count() == 150)
   }
 
   test("incremental dedup union is invariant to batch boundaries and " +
@@ -326,13 +369,14 @@ class StatefulOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val root2 = Files.createTempDirectory("graft-spanattach").toString
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = IncrementalDedup.attachSpans(input.toDS().toDF("doc_id", "text"),
-      "doc_id", "text", s"$root2/spans", s"$root2/ranges", s"$root2/ckpt",
-      window = 20)
+    val q = IncrementalDedup.attach(input.toDS().toDF("doc_id", "text"),
+        s"$root2/ranges", s"$root2/ckpt") { (batch, tag) =>
+      IncrementalDedup.stepSpans(batch, "doc_id", "text", s"$root2/spans", tag, window = 20)
+    }
     all.grouped(50).foreach { day => input.addData(day.toSeq); q.processAllAvailable() }
     q.stop()
     val streamedAll = spark.read.parquet(s"$root2/ranges")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      .select("id", "span_start", "span_end", "n_windows").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val expected = all.grouped(50).zipWithIndex.flatMap { case (day, i) =>
       // replay the same days against a THIRD store to get the per-day truth
       IncrementalDedup.stepSpans(day.toSeq.toDF("doc_id", "text"),
@@ -354,12 +398,18 @@ class StatefulOpsSpec extends SparkSpec {
     val rows = all.where(col("doc_id") % 10 =!= 0)
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = IncrementalDedup.attachEvalCut(input.toDS().toDF("doc_id", "text"),
-      eval, "doc_id", "text", s"$root/out", s"$root/ckpt", window = 12)
+    // the eval side is static: its span hashes are checkpointed once per stream
+    val evalHashes = Dedup.evalSpanHashes(eval, "doc_id", "text", window = 12)
+      .localCheckpoint()
+    val q = IncrementalDedup.attach(input.toDS().toDF("doc_id", "text"),
+        s"$root/out", s"$root/ckpt") { (batch, _) =>
+      Dedup.cutEvalFixpointFromHashes(batch, evalHashes, "doc_id", "text",
+        window = 12, maxRounds = 3)
+    }
     rows.grouped(50).foreach { day => input.addData(day.toSeq); q.processAllAvailable() }
     q.stop()
     val streamed = spark.read.parquet(s"$root/out")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      .select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val batch = Dedup.cutEvalPassagesToFixpoint(rows.toSeq.toDF("doc_id", "text"),
         eval, "doc_id", "text", window = 12)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -382,8 +432,10 @@ class StatefulOpsSpec extends SparkSpec {
     val maxPpl = NgramLm.pplQuantile(calib, lm, tot, "doc_id", "text", q = 0.8)
     val rows = all.collect().map(r => (r.getLong(0), r.getString(1)))
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = IncrementalDedup.attachLmScreen(input.toDS().toDF("doc_id", "text"),
-      lm, tot, "doc_id", "text", maxPpl, s"$root/out", s"$root/ckpt")
+    val q = IncrementalDedup.attach(input.toDS().toDF("doc_id", "text"),
+        s"$root/out", s"$root/ckpt") { (batch, _) =>
+      NgramLm.pplThresholdFilter(batch, lm, tot, "doc_id", "text", maxPpl)
+    }
     rows.grouped(60).foreach { day => input.addData(day.toSeq); q.processAllAvailable() }
     q.stop()
     val streamed = spark.read.parquet(s"$root/out")
@@ -412,8 +464,10 @@ class StatefulOpsSpec extends SparkSpec {
     val (num, den) = (14, 15) // ≈0.933 — the frozen model’s ~p10 match ratio
     val rows = all.collect().map(r => (r.getLong(0), r.getString(1)))
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = IncrementalDedup.attachFluencyScreen(input.toDS().toDF("doc_id", "text"),
-      lm, tot, "doc_id", "text", num, den, s"$root/out", s"$root/ckpt")
+    val q = IncrementalDedup.attach(input.toDS().toDF("doc_id", "text"),
+        s"$root/out", s"$root/ckpt") { (batch, _) =>
+      NgramLm.fluencyThresholdFilter(batch, lm, tot, "doc_id", "text", num, den)
+    }
     rows.grouped(60).foreach { day => input.addData(day.toSeq); q.processAllAvailable() }
     q.stop()
     val streamed = spark.read.parquet(s"$root/out")
@@ -602,13 +656,15 @@ class StatefulOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val root2 = Files.createTempDirectory("graft-lineattach").toString
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = IncrementalDedup.attachLines(input.toDS().toDF("doc_id", "text"),
-      "doc_id", "text", s"$root2/lines", s"$root2/out", s"$root2/ckpt",
-      sep = "\n", minDocs = 10L)
+    val q = IncrementalDedup.attach(input.toDS().toDF("doc_id", "text"),
+        s"$root2/out", s"$root2/ckpt") { (batch, tag) =>
+      IncrementalDedup.stepLines(batch, "doc_id", "text", s"$root2/lines", tag,
+        sep = "\n", minDocs = 10L)
+    }
     all.grouped(8).foreach { day => input.addData(day.toSeq); q.processAllAvailable() }
     q.stop()
     val streamedAll = spark.read.parquet(s"$root2/out")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val expected = all.grouped(8).zipWithIndex.flatMap { case (day, i) =>
       IncrementalDedup.stepLines(day.toSeq.toDF("doc_id", "text"),
         "doc_id", "text", s"$root2/manual", s"day$i", "\n", 10L)
