@@ -13,15 +13,25 @@ object Bench {
     val wanted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => args.isEmpty || args.exists(n.startsWith) }
 
+    // every (name, phase) that threw: a failed gate keeps its row in the
+    // metric line (the line's format is the contract), and the diag
+    // sidecar lists it, so a failure cannot lower the total unseen
+    val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def fail(name: String, phase: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $name failed in $phase: $e")
+      failed += name -> phase
+    }
+
     // untimed warmup: JIT/codegen/parquet-reader initialization otherwise
     // lands entirely on whichever query happens to run first (~3s skew) —
     // warm the first query that will actually be TIMED (incl. under a
     // prefix filter) so its measurement is steady-state
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      wanted.headOption.foreach(_._2(spark, sfDir)
-        .write.format("noop").mode("overwrite").save())
-    } catch { case _: Throwable => () }
+    try spark.range(1000000).selectExpr("sum(id)").collect()
+    catch { case e: Throwable => fail("range", "warmup", e) }
+    wanted.headOption.foreach { case (n, fn) =>
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => fail(n, "warmup", e) }
+    }
 
     // noop sink: forces FULL evaluation of every output column (count() would
     // let Catalyst prune the computed columns away and time an empty scan).
@@ -41,10 +51,10 @@ object Bench {
     //  3. Queries whose two passes disagree by >2× get a THIRD pass (min
     //     of 3) — a 121-query run is long enough to span load spikes, and
     //     one spike per pass on the same query survived min-of-2 twice.
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (String, Double) = {
+    def timeOne(phase: String, name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (String, Double) = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+      catch { case e: Throwable => fail(name, phase, e) }
       name -> (System.nanoTime() - t0) / 1e9
     }
     // phase wall clocks (diagnostics only — the metric line is unchanged):
@@ -54,17 +64,17 @@ object Bench {
     val wall0 = System.nanoTime()
     def wallSec(since: Long): Double = (System.nanoTime() - since) / 1e9
     val stages = try SparkEntry.stageTimings(spark, sfDir)
-      catch { case e: Throwable => System.err.println(s"[bench] staging failed: $e"); Nil }
+      catch { case e: Throwable => fail("stg", "staging", e); Nil }
     val wallStages = wallSec(wall0)
-    def onePass(): Seq[(String, Double)] = wanted.map((timeOne _).tupled)
-    val wp1 = System.nanoTime(); val pass1 = onePass(); val wallPass1 = wallSec(wp1)
-    val wp2 = System.nanoTime(); val pass2 = onePass(); val wallPass2 = wallSec(wp2)
+    def onePass(phase: String): Seq[(String, Double)] = wanted.map { case (n, fn) => timeOne(phase, n, fn) }
+    val wp1 = System.nanoTime(); val pass1 = onePass("pass1"); val wallPass1 = wallSec(wp1)
+    val wp2 = System.nanoTime(); val pass2 = onePass("pass2"); val wallPass2 = wallSec(wp2)
     val twoPass = pass1.zip(pass2)
     val retry = twoPass.collect {
       case ((n, a), (_, b)) if math.max(a, b) > 2 * math.min(a, b) => n
     }.toSet
     val wp3 = System.nanoTime()
-    val pass3 = wanted.filter { case (n, _) => retry(n) }.map((timeOne _).tupled).toMap
+    val pass3 = wanted.filter { case (n, _) => retry(n) }.map { case (n, fn) => timeOne("pass3", n, fn) }.toMap
     val wallPass3 = wallSec(wp3)
     val results = twoPass.map { case ((n, a), (_, b)) =>
       n -> math.min(math.min(a, b), pass3.getOrElse(n, Double.MaxValue))
@@ -223,7 +233,7 @@ object Bench {
         s""","recall_pq_rr_at5":${f4(pqRr)}""" +
         s""","recall_ivfpq_rr_np8c200_at5":${f4(ivfPqRrDefault)}""" +
         s""","recall_ivfpq_fx_rr_at5":${f4(fxIvfPqRr)}"""
-    } catch { case e: Throwable => System.err.println(s"[bench] recall failed: $e"); "" }
+    } catch { case e: Throwable => fail("recalls", "recalls", e); "" }
     val wallRecalls = wallSec(wr)
 
     // line budget: the driver's 2000-char stdout tail minus sbt's trailing
@@ -273,13 +283,16 @@ object Bench {
     try {
       def block(rows: Seq[(String, Double)]): String =
         rows.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+      val failedJson = failed.map { case (n, p) => s"""{"name":"$n","phase":"$p"}""" }
+        .mkString("[", ",", "]")
       val diag =
         s"""{"cpus":${cpus},"sf":"$sfName","total":${f3(total)},
            |"wall_sec":{"stages":${f3(wallStages)},"pass1":${f3(wallPass1)},"pass2":${f3(wallPass2)},"pass3":${f3(wallPass3)},"recalls":${f3(wallRecalls)}},
            |"stg":${block(stages)},
            |"pass1":${block(pass1)},
            |"pass2":${block(pass2)},
-           |"pass3":${block(pass3.toSeq.sortBy(_._1))}}
+           |"pass3":${block(pass3.toSeq.sortBy(_._1))},
+           |"failed":$failedJson}
            |""".stripMargin
       java.nio.file.Files.writeString(java.nio.file.Paths.get(diagOut), diag)
       // stderr courtesy copy of the stage rows — visible in any captured

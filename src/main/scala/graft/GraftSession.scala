@@ -21,6 +21,19 @@ import org.apache.spark.sql.SparkSession
  * skew-join and coalesce flags below are what keep 100 TB shuffles
  * healthy; they are on by default in Spark 4 but pinned here as part
  * of the engine contract.
+ *
+ * Local sessions also never launch a distributed file listing
+ * ([[localBuilder]]). A file-stream micro-batch hands the files its
+ * source has just listed back to Spark as one root path each, and past
+ * 32 roots Spark lists them with a job of one task per path. Locally
+ * that job is the driver's own JVM scheduling one task per path to
+ * re-check files whose status is a microsecond lookup: a 150-file
+ * `weather_stream` drain ran 160 tasks, 150 of them this job. Listed on
+ * the driver it runs 10, its executor CPU goes 2.60 → 2.01 s (one
+ * traced pair) and its `load_s` 4.77 → 3.35 s (medians of 10
+ * alternating pairs; 4-core host, NOTES.md).
+ * [[configure]], the cluster contract, keeps Spark's threshold: on an
+ * object store a distributed stat of thousands of files still pays.
  */
 object GraftSession {
 
@@ -36,8 +49,7 @@ object GraftSession {
     val pinned = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     val shuffleParts = pinned.getOrElse(cores.toString)
     val initialParts = pinned.getOrElse(initialPartitionsFor(cores).toString)
-    val spark = configure(SparkSession.builder()
-      .master(s"local[$cores]")
+    val spark = configure(localBuilder(cores)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shuffleParts)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
@@ -46,6 +58,17 @@ object GraftSession {
     GraftExtensions.registerInto(spark) // graft_cosine/graft_dot/graft_shingles in SQL
     spark
   }
+
+  /**
+   * `local[cores]` with the rules that hold only where the executors are
+   * the driver's JVM, beside the core-count shuffle floor that [[local]]
+   * sets: file listing stays on the driver whatever the number of root
+   * paths (the reason and its numbers are in the header). The spec
+   * session starts from here too.
+   */
+  def localBuilder(cores: Int): SparkSession.Builder = SparkSession.builder()
+    .master(s"local[$cores]")
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
 
   /**
    * Default AQE pre-coalesce fan-out for a session that has NOT told us

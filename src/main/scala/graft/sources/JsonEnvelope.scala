@@ -45,9 +45,10 @@ object JsonEnvelope {
     * `path` may be the archive root: every file beneath it is read, its
     * `year=/month=/day=/hour=` directories taken as plain directories, not
     * partition columns. One root is listed serially while planning; a glob
-    * over its hour directories lists each as a root, and past Spark's
-    * parallel listing threshold (32 paths) that costs a listing job per
-    * read. */
+    * over its hour directories lists each as a root. A local session
+    * (`GraftSession.localBuilder`) lists any number of roots on the
+    * driver; a cluster session keeps Spark's parallel listing threshold,
+    * so past 32 roots it pays a distributed listing job per read. */
   def readBatch(spark: SparkSession, path: String, reading: StructType = readingSchema,
                 multiLine: Boolean = false): DataFrame =
     flatten(spark.read.schema(envelopeSchema(reading))

@@ -30,7 +30,17 @@ object StreamMain {
       JsonEnvelope.readStream(spark, s"$work/raw"),
       s"$work/processed", s"$work/alerts", s"$work/ckpt",
       trigger = Trigger.AvailableNow())
-    query.awaitTermination(120000)
+    // sinks of a drain still running are partial: stop, say so, report none
+    if (!query.awaitTermination(120000)) {
+      val status = query.status.message
+      val last = Option(query.lastProgress)
+        .fold("no micro-batch completed")(p => s"last completed micro-batch ${p.batchId}")
+      query.stop()
+      System.err.println(s"drain of $work/raw did not finish within 120 s " +
+        s"($last; still: $status); stopped, sinks under $work left partial")
+      spark.stop()
+      sys.exit(1)
+    }
 
     val processed = spark.read.parquet(s"$work/processed")
     val alerts = spark.read.parquet(s"$work/alerts")

@@ -4,7 +4,7 @@ import graft.gen.WeatherGenerator
 import graft.pipeline.BatchPipeline
 import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDateTime
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.concurrent.{Signaler, ThreadSignaler}
 import org.scalatest.concurrent.TimeLimits.failAfter
@@ -118,12 +118,7 @@ class PipelineSpec extends SparkSpec {
     WeatherGenerator.writeBatches(s"$root/raw",
       LocalDateTime.of(2026, 8, 12, 10, 0), batches = 36, intervalSeconds = 3600, seed = 7)
     val appendExecutions = new java.util.concurrent.atomic.AtomicInteger
-    val listingJobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-            .exists(_.startsWith("Listing leaf files")))
-          listingJobs.incrementAndGet()
       // a root execution whose first engine frame is appendIfAbsent
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
@@ -133,16 +128,26 @@ class PipelineSpec extends SparkSpec {
         case _ =>
       }
     }
+    // a cluster session's listing threshold (Spark's default of 32 roots):
+    // a local session lists any number of roots on the driver, which would
+    // hide a read that lists each hour directory as a root
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val local = spark.conf.get(threshold)
+    spark.conf.set(threshold, "32")
     spark.sparkContext.addSparkListener(listener)
     try failAfter(4.minutes) {
-      // the first write, then a replay against the existing store
-      val load = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
-      val replay = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
-      assert(load.storedNew == 180 && replay.storedNew == 0)
-      org.apache.spark.ListenerBus.drain(spark.sparkContext)
+      val listingJobs = listingJobsDuring {
+        // the first write, then a replay against the existing store
+        val load = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+        val replay = BatchPipeline.run(spark, s"$root/raw", s"$root/store", s"$root/summary")
+        assert(load.storedNew == 180 && replay.storedNew == 0)
+      }
       // (root executions in appendIfAbsent, listing jobs): one per call, none
-      assert((appendExecutions.get, listingJobs.get) == ((2, 0)))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert((appendExecutions.get, listingJobs) == ((2, 0)))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(threshold, local)
+    }
   }
 
   test("corpus pipeline: clean -> dedup -> decontaminate -> split -> pack, deterministic") {

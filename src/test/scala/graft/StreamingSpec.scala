@@ -115,4 +115,33 @@ class StreamingSpec extends SparkSpec {
     assert(Seq("HEAT", "VIS", "UV", "CALM").map(byStation(_).getAs[Double]("data_quality_score")) ==
       Seq(2.0, 2.0, 2.0, 3.0).map(_ / 3.0 * 100.0))
   }
+
+  test("a micro-batch of more than 32 files is read without a listing job") {
+    val root = Files.createTempDirectory("graft-stream-wide").toString
+    val raw = s"$root/raw"; Files.createDirectories(java.nio.file.Paths.get(raw))
+    // 48 envelope files, past Spark's parallel listing threshold of 32
+    // root paths; each holds one benign and one WARNING reading (precip 30)
+    val files = 48
+    (0 until files).foreach { i =>
+      Files.writeString(java.nio.file.Paths.get(raw, f"batch_$i%03d.json"),
+        s"""{"readings": [${reading(s"C$i", 25.0, 0.0)}, ${reading(s"W$i", 30.0, 30.0)}]}""")
+    }
+    val listingJobs = listingJobsDuring {
+      val q = EnrichStream.start(JsonEnvelope.readStream(spark, raw),
+        s"$root/processed", s"$root/alerts", s"$root/ckpt", trigger = Trigger.AvailableNow())
+      assert(q.awaitTermination(120000), "the drain did not finish")
+      // one micro-batch read every file (an input row is one envelope)
+      assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq == Seq(files.toLong))
+    }
+    assert(listingJobs == 0)
+
+    val batch = EnrichStream.enrich(JsonEnvelope.readBatch(spark, raw))
+    val cols = batch.columns.toSeq.map(col)
+    val processed = spark.read.parquet(s"$root/processed").select(cols: _*)
+    assert(processed.count() == 2L * files)
+    assert(processed.collect().toSet == batch.collect().toSet)
+    val alerts = spark.read.parquet(s"$root/alerts").select(cols: _*).collect()
+    assert(alerts.length == files)
+    assert(alerts.toSet == EnrichStream.alertsOnly(batch).collect().toSet)
+  }
 }
