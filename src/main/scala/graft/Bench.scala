@@ -1,6 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** Seconds (or a ratio) as a JSON number: centisecond precision, fixed
+    * notation. The driver parses the metric line out of a bounded tail of
+    * captured stdout (2000 chars incl. sbt's ~71-char trailing [success]
+    * line → ≈1928 usable); full-precision doubles pushed round 3's line to
+    * 2078 chars and its HEAD fell out of the window → parsed:null. Two
+    * decimals keeps the query rows under the window with margin; finer
+    * timing than 10 ms is machine noise at this scale anyway. Locale.ROOT:
+    * under a comma-decimal host locale the default-locale format would
+    * emit {"q01":0,86,...} — unparseable. */
+  def f2(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -32,6 +45,10 @@ object Bench {
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => fail(n, "warmup", e) }
     }
+    // a warm-up query that reads a staged frame (a filtered run's first
+    // query, e.g. q127) filled its memo entry: drop it, so the stage rows
+    // below build every frame from scratch instead of timing a memo hit
+    SparkEntry.releaseStaged(spark)
 
     // noop sink: forces FULL evaluation of every output column (count() would
     // let Catalyst prune the computed columns away and time an empty scan).
@@ -79,22 +96,12 @@ object Bench {
     val results = twoPass.map { case ((n, a), (_, b)) =>
       n -> math.min(math.min(a, b), pass3.getOrElse(n, Double.MaxValue))
     }
-    // centisecond precision, fixed notation: the driver parses the metric
-    // line out of a bounded tail of captured stdout (2000 chars incl. sbt's
-    // ~71-char trailing [success] line → ≈1928 usable); full-precision
-    // doubles pushed round 3's line to 2078 chars and its HEAD fell out of
-    // the window → parsed:null. Two decimals keeps the query rows under the
-    // window with margin; finer timing than 10 ms is machine noise at this
-    // scale anyway. Locale.ROOT: under a comma-decimal host locale the
-    // default-locale format would emit {"q01":0,86,...} — unparseable.
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     // short keys (q18, not q18_ngram_jaccard_pairs): the descriptive suffix
     // cost ~15 chars/query and left the 61-gate line ~23 chars from
     // overflowing the driver's tail window. The qNN prefix is unique by
     // construction (names are assigned qNN_*); full names stay in
     // CORRECTNESS_r*.json via Verify.
-    val qs = results.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + f3(v) }
+    val qs = results.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + f2(v) }
       .mkString("{", ",", "}")
     // headline total keeps r5 semantics (staging WAS inside first-consumer
     // rows): steady-state query mins + the once-per-deployment stage builds
@@ -133,11 +140,9 @@ object Bench {
       // omit the key entirely when the baseline is empty — 0/0 printed as
       // 0.0 would read as total bucketing failure instead of "nothing to
       // recall at this threshold on this corpus"
-      // %.2f (r6; was %.4f): the recall denominators are 50-460 pairs, so
+      // f2 (r6; was %.4f): the recall denominators are 50-460 pairs, so
       // the measurement quantum is ≥0.002 and two decimals lose nothing —
       // the 12 recall rows cost 24 fewer chars of the driver tail budget
-      def f4(v: Double): String =
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
       // np4 is the probe setting that clears 0.6 recall on this corpus
       // (SCALE.md "ANN recall & data geometry": np2 0.37, np4 0.75, np6
       // 0.93) — nprobe is the recall/cost dial on isotropic embeddings, and
@@ -149,7 +154,7 @@ object Bench {
         .select("id_a", "id_b")
       val pairRecall =
         if (exactN == 0) ""
-        else s""","recall_neardup_np4":${f4(np4Pairs.intersect(exactPairs).count().toDouble / exactN)}"""
+        else s""","recall_neardup_np4":${f2(np4Pairs.intersect(exactPairs).count().toDouble / exactN)}"""
       // clusterable fixture (gen.ClusteredFixture): the real embeddings are
       // near-isotropic, so trained centroids CANNOT beat naive bucketing on
       // them (SCALE.md "ANN recall & data geometry"); the fixture carries
@@ -227,12 +232,12 @@ object Bench {
       // recall_ivfpq_fx_at5: rr >= raw is spec-pinned, the deltas live in
       // SCALE.md), paying for q127-q129 + the cap stg row + the widened
       // default-operating-point key.
-      s""","recall_ivf_at5":${f4(r24)}""" +
-        s""","recall_ivf_trained_np4_at5":${f4(recallOf(4))}""" + pairRecall +
-        s""","recall_fx_naive_at5":${f4(fxNaive)},"recall_fx_trained_at5":${f4(fxTrained)}""" +
-        s""","recall_pq_rr_at5":${f4(pqRr)}""" +
-        s""","recall_ivfpq_rr_np8c200_at5":${f4(ivfPqRrDefault)}""" +
-        s""","recall_ivfpq_fx_rr_at5":${f4(fxIvfPqRr)}"""
+      s""","recall_ivf_at5":${f2(r24)}""" +
+        s""","recall_ivf_trained_np4_at5":${f2(recallOf(4))}""" + pairRecall +
+        s""","recall_fx_naive_at5":${f2(fxNaive)},"recall_fx_trained_at5":${f2(fxTrained)}""" +
+        s""","recall_pq_rr_at5":${f2(pqRr)}""" +
+        s""","recall_ivfpq_rr_np8c200_at5":${f2(ivfPqRrDefault)}""" +
+        s""","recall_ivfpq_fx_rr_at5":${f2(fxIvfPqRr)}"""
     } catch { case e: Throwable => fail("recalls", "recalls", e); "" }
     val wallRecalls = wallSec(wr)
 
@@ -243,12 +248,12 @@ object Bench {
     // it (passes, full sf path, stage-key legend) live in NOTES.md.
     val stg =
       if (stages.isEmpty) ""
-      else stages.map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      else stages.map { case (k, v) => "\"" + k + "\":" + f2(v) }
         .mkString(""","stg":{""", ",", "}")
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
     def assemble(withStg: Boolean) = {
       val sg = if (withStg) stg else ""
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs$sg$recalls,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs$sg$recalls,"sf":"$sfName"}"""
     }
     // budget fallback: a heavily contended run can push enough queries to
     // double-digit seconds to overflow the driver's ~1928-char stdout
@@ -282,12 +287,12 @@ object Bench {
     val diagOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIAG", "BENCH_DIAG.json")
     try {
       def block(rows: Seq[(String, Double)]): String =
-        rows.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+        rows.map { case (k, v) => "\"" + k + "\":" + f2(v) }.mkString("{", ",", "}")
       val failedJson = failed.map { case (n, p) => s"""{"name":"$n","phase":"$p"}""" }
         .mkString("[", ",", "]")
       val diag =
-        s"""{"cpus":${cpus},"sf":"$sfName","total":${f3(total)},
-           |"wall_sec":{"stages":${f3(wallStages)},"pass1":${f3(wallPass1)},"pass2":${f3(wallPass2)},"pass3":${f3(wallPass3)},"recalls":${f3(wallRecalls)}},
+        s"""{"cpus":${cpus},"sf":"$sfName","total":${f2(total)},
+           |"wall_sec":{"stages":${f2(wallStages)},"pass1":${f2(wallPass1)},"pass2":${f2(wallPass2)},"pass3":${f2(wallPass3)},"recalls":${f2(wallRecalls)}},
            |"stg":${block(stages)},
            |"pass1":${block(pass1)},
            |"pass2":${block(pass2)},

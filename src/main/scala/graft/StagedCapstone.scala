@@ -46,9 +46,6 @@ import org.apache.spark.sql.SparkSession
  */
 object StagedCapstone {
 
-  private def f2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.getOrElse("15000000").toLong
     val workdir = args.drop(1).headOption.getOrElse("/tmp/graft-diskscale")
@@ -61,7 +58,6 @@ object StagedCapstone {
     def want(j: String): Boolean = wanted("all") || wanted(j)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val stageDir = s"$workdir/staged_$n"
-    val docshPath = s"$workdir/docsh_$n"
 
     /** Runs `f` in its own session: a job's scratch dies with it. */
     def inSession(job: String)(f: SparkSession => Unit): Unit = {
@@ -71,17 +67,9 @@ object StagedCapstone {
       try f(spark) finally spark.stop()
     }
 
-    // corpus build (or reuse) — identical to DiskScale's docsh generator:
-    // Heaps-scaled vocabulary (vocab ∝ ∛n anchored at 400 words / 80k
-    // docs) keeps 3-gram bucket occupancy constant across sizes
-    inSession("corpus") { spark =>
-      val p = new org.apache.hadoop.fs.Path(docshPath, "_SUCCESS")
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-        val vocabH = math.max(400L,
-          math.round(400.0 * math.cbrt(n / 80000.0)))
-        ScaleProbe.synthDocs(spark, n, vocabH).write.parquet(docshPath)
-      }
-    }
+    // corpus build (or reuse): DiskScale's Heaps corpus artifact, the
+    // one every job reads
+    inSession("corpus")(new DiskScale.Corpora(_, workdir, n))
 
     allJobs.zipWithIndex.filter { case (job, _) => want(job) }.foreach { case (job, i) =>
       inSession(job) { spark =>
@@ -89,17 +77,17 @@ object StagedCapstone {
         if (staged.committed(spark, job).isDefined)
           System.err.println(s"[staged] $job: committed, skipped")
         else {
+          val corpora = new DiskScale.Corpora(spark, workdir, n)
           // width derived from the job's own input listing — the rule a
           // cluster job applies
           val input = allJobs.take(i).lastOption
-            .flatMap(staged.committed(spark, _)).fold(docshPath)(_.frame)
+            .flatMap(staged.committed(spark, _)).fold(corpora.path("docsh"))(_.frame)
           val width = GraftSession.sizeShuffleFor(spark,
             GraftSession.bytesOnDisk(spark, input))
           System.err.println(s"[staged] job=$job input=$input width=$width")
-          DiskScale.capstone(spark.read.parquet(docshPath), banded = true,
-            Some(staged))
+          DiskScale.capstone(corpora.docsH, banded = true, Some(staged))
           staged.committed(spark, job).foreach(c =>
-            println(s"""{"job":"$job","sec":${f2(c.sec)}}"""))
+            println(s"""{"job":"$job","sec":${Bench.f2(c.sec)}}"""))
         }
       }
     }
@@ -114,7 +102,7 @@ object StagedCapstone {
         val splitStr = r.splitCounts.toSeq.sortBy(_._1)
           .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
         val secStr = done
-          .map { case (j, c) => s""""$j":${f2(c.sec)}""" }.mkString("{", ",", "}")
+          .map { case (j, c) => s""""$j":${Bench.f2(c.sec)}""" }.mkString("{", ",", "}")
         println(s"""{"staged_cap_banded":$n,"input":${r.input},""" +
           s""""cleaned":${r.cleaned},"after_exact":${r.afterExactDedup},""" +
           s""""after_near":${r.afterNearDedup},"contaminated":${r.contaminated},""" +
@@ -122,7 +110,7 @@ object StagedCapstone {
           s""""band_rate_filtered":${r.bandRateFiltered},""" +
           s""""after_band_rate":${r.afterBandRate},"corpus":${r.corpus},""" +
           s""""splits":$splitStr,"train_sequences":${r.trainSequences},""" +
-          s""""job_sec":$secStr,"total_sec":${f2(done.map(_._2.sec).sum)}}""")
+          s""""job_sec":$secStr,"total_sec":${Bench.f2(done.map(_._2.sec).sum)}}""")
       }
     }
   }

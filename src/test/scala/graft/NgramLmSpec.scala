@@ -1,5 +1,6 @@
 package graft
 
+import graft.gen.SynthCorpus
 import graft.operators.NgramLm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -65,7 +66,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("pruning consistency on a generated corpus: a matched gram always has its context") {
-    val docs = ScaleProbe.synthDocs(spark, 300)
+    val docs = SynthCorpus.synthDocs(spark, 300)
     val sc = NgramLm.scoreTokens(docs,
       NgramLm.lmCounts(docs, "text", n = 3, minCount = 3L),
       NgramLm.lmTotals(docs, "text"), "doc_id", "text")
@@ -115,7 +116,7 @@ class NgramLmSpec extends SparkSpec {
 
   test("scoreTokens equals the plain-Scala twin at orders 1, 2, 4 and 5 " +
     "(generalized slot builder, incl. the CCNet 5-gram regime)") {
-    val docs = ScaleProbe.synthDocs(spark, 150)
+    val docs = SynthCorpus.synthDocs(spark, 150)
     val train = docs.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     // held-out doc exercises never-seen tokens at every context length
@@ -145,7 +146,7 @@ class NgramLmSpec extends SparkSpec {
     // duplicate the corpus so 5-grams survive minCount=2 (random synth
     // text is hapax at high orders) — order-5 matches must EXIST for the
     // census and the contract guard to be exercised
-    val base = ScaleProbe.synthDocs(spark, 120)
+    val base = SynthCorpus.synthDocs(spark, 120)
     val docs = base.unionByName(
       base.withColumn("doc_id", col("doc_id") + 1000L))
     val sc5 = NgramLm.scoreTokens(docs,
@@ -194,7 +195,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("pplBandFilter keeps the requested band deterministically on any partitioning") {
-    val docs = ScaleProbe.synthDocs(spark, 200)
+    val docs = SynthCorpus.synthDocs(spark, 200)
     val lm = NgramLm.lmCounts(docs, "text", n = 3, minCount = 2L)
     val sc = NgramLm.scoreTokens(docs, lm, NgramLm.lmTotals(docs, "text"),
       "doc_id", "text")
@@ -213,7 +214,7 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("quantile path above exactRankLimit keeps a comparable band") {
-    val docs = ScaleProbe.synthDocs(spark, 200)
+    val docs = SynthCorpus.synthDocs(spark, 200)
     val lm = NgramLm.lmCounts(docs, "text", n = 3, minCount = 2L)
     val sc = NgramLm.scoreTokens(docs, lm, NgramLm.lmTotals(docs, "text"),
       "doc_id", "text")

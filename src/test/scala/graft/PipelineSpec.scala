@@ -1,6 +1,6 @@
 package graft
 
-import graft.gen.WeatherGenerator
+import graft.gen.{SynthCorpus, WeatherGenerator}
 import graft.pipeline.BatchPipeline
 import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDateTime
@@ -726,7 +726,7 @@ class PipelineSpec extends SparkSpec {
     // docs the bigram occupancy 20,000 docs have at 400 words, so the
     // 49/50 fluency screen drops some docs, not all
     import graft.pipeline.CorpusPipeline
-    val docs = ScaleProbe.synthDocs(spark, 3000, vocab = 150)
+    val docs = SynthCorpus.synthDocs(spark, 3000, vocab = 150)
     val (_, fr) = DiskScale.capstone(docs, banded = true)
     val dir = java.nio.file.Files.createTempDirectory("graft-staged-crash").toString
     val all = CorpusPipeline.StagedJobs.map(_._1).toSet
